@@ -17,9 +17,13 @@ conditional-aggregation job::
 
 which Catalyst executes as a single whole-stage-codegen scan with
 map-side partial aggregation — one scan regardless of constraint
-count, at any scale. Sample rows for error messages are fetched
-lazily (``filter(~expr).limit(k)``) only for constraints that
-actually violated. The returned DataFrame is a pure lazy
+count, at any scale. Constraints compile to ``Column``s once per
+validator and are analysed in one batched ``select`` per input
+schema. Sample rows (``filter(~expr).limit(k)``) are fetched only for
+constraints that actually violated: in strict mode one sample before
+raising; with ``show_violations`` all samples at once, as concurrent
+jobs that run while the caller goes on (``last_violations`` waits for
+them). The returned DataFrame is a pure lazy
 transformation (cast/select + filters) that fuses into downstream
 plans: filters combine, casts fold into the parquet scan's projection,
 and predicate pushdown applies when constraints reference scan
@@ -32,19 +36,25 @@ rows already removed (reference polars.py:229). Kept rows are
 identical except in one pathological corner: a constraint whose every
 violating row is also rejected by an earlier constraint is still
 applied here (dropping its null-valued rows) but skipped by the
-reference.
+reference. The same null rule sets ``validate_lazy`` apart from
+``validate(strict=False)``: a row whose predicate is null for a
+*violated* constraint is dropped by ``validate`` (the constraint is
+applied as a filter) but kept by ``validate_lazy`` (true-or-null), and
+it is counted in neither.
 """
 
 from __future__ import annotations
 
 import inspect
 import logging
-from functools import reduce
+from concurrent.futures import Future, ThreadPoolExecutor
+from functools import cache, reduce
 from typing import TYPE_CHECKING, Any
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.util import inheritable_thread_target
 
 from ..fields import _MISSING
 from ..validators import ValidatorResult
@@ -53,6 +63,16 @@ if TYPE_CHECKING:  # pragma: no cover
     from ..base import Schema
 
 logger = logging.getLogger(__name__)
+
+#: one compiled constraint: (declaration index, Column, message)
+_Compiled = tuple[int, Column, str]
+
+
+@cache
+def _sample_pool() -> ThreadPoolExecutor:
+    """Driver threads for ``show_violations`` sample fetches; each
+    blocks on one small Spark job, so they overlap on the cluster."""
+    return ThreadPoolExecutor(thread_name_prefix="flycatcher-samples")
 
 
 class SparkValidator:
@@ -74,9 +94,10 @@ class SparkValidator:
         self.fields = schema_cls.fields()
         self._struct_type = schema_cls.to_spark_schema()
         self._constraints = self._build_constraints()
-        #: diagnostics from the most recent non-strict validate() call:
-        #: list of {"constraint": msg, "count": n, "rows": [Row] | None}
-        self.last_violations: list[dict[str, Any]] = []
+        self._compiled: list[_Compiled] | None = None
+        self._usable: dict[T.StructType, list[_Compiled]] = {}
+        self._violations: list[dict[str, Any]] = []
+        self._sample_fetches: list[Future] = []
 
     # ------------------------------------------------------------------
     # plan build (driver-side, lazy)
@@ -161,7 +182,7 @@ class SparkValidator:
         """
         df = self._coerce(df, fill_nulls=fill_nulls)
         null_checks = self._null_check_fields(fill_nulls)
-        usable = self._analyzable_constraints(df)
+        usable = self._usable_constraints(df)
 
         # --- single-pass conditional aggregation (one scan) ----------
         ok = self._not_null_condition(null_checks)
@@ -170,7 +191,7 @@ class SparkValidator:
             aggs.append(
                 F.sum(F.when(F.col(name).isNull(), 1).otherwise(0)).alias(f"__null_{name}")
             )
-        for i, (expr, _msg) in usable:
+        for i, expr, _msg in usable:
             violated = ~expr if ok is None else ok & ~expr
             aggs.append(F.sum(F.when(violated, 1).otherwise(0)).alias(f"__viol_{i}"))
 
@@ -188,15 +209,15 @@ class SparkValidator:
                     f"Column '{name}' has {null_count} null values "
                     f"but is not nullable"
                 )
-        if null_checks:
+        if ok is not None:
             # Non-strict (and clean strict) path: drop rows with nulls in
             # non-nullable columns. One fused filter for all columns.
-            df = df.filter(self._not_null_condition(null_checks))
+            df = df.filter(ok)
 
         # --- V5/V6: constraints --------------------------------------
-        self.last_violations = []
+        self._violations, self._sample_fetches = [], []
         applied: list[Column] = []
-        for i, (expr, msg) in usable:
+        for i, expr, msg in usable:
             violation_count = counts.get(f"__viol_{i}", 0) or 0
             if violation_count == 0:
                 continue
@@ -208,34 +229,40 @@ class SparkValidator:
                     f"Found {violation_count} violations.\n"
                     f"Sample violations:\n{sample_str}"
                 )
-            violation = {
-                "constraint": msg,
-                "count": violation_count,
-                "rows": None,
-            }
-            if show_violations:
-                violation["rows"] = df.filter(~expr).limit(10).collect()
-            self.last_violations.append(violation)
+            self._violations.append(
+                {"constraint": msg, "count": violation_count, "rows": None}
+            )
             applied.append(expr)
 
+        if show_violations and applied:
+            self._sample_fetches = self._fetch_samples(df, applied)
         if applied:
             df = df.filter(reduce(lambda a, b: a & b, applied))
-
-        if show_violations:
-            for violation in self.last_violations:
-                logger.warning("Constraint violation: %s", violation["constraint"])
-                logger.warning("Count: %s", violation["count"])
-                logger.warning("Rows: %s", violation["rows"])
-                logger.warning("-" * 80)
         return df
+
+    @property
+    def last_violations(self) -> list[dict[str, Any]]:
+        """Diagnostics from the most recent non-strict ``validate()``:
+        ``[{"constraint": msg, "count": n, "rows": [Row] | None}]``.
+
+        Counts are exact and ready when ``validate`` returns. With
+        ``show_violations=True`` the sample ``rows`` are fetched by
+        concurrent jobs after it returns; reading this property waits
+        for them, and raises the error of a fetch that failed.
+        """
+        for fetch in self._sample_fetches:
+            fetch.result()
+        return self._violations
 
     def validate_lazy(self, df: DataFrame, fill_nulls: bool = False) -> DataFrame:
         """Zero-job validation: pure transformation, no driver actions.
 
-        The 100 TB fast path. Returns the same kept rows as
-        ``validate(strict=False)`` without running any counting jobs:
-        rows are kept when every non-nullable column is present and
-        every constraint is true-or-null. Because the result is a
+        The 100 TB fast path. Runs no counting jobs: rows are kept
+        when every non-nullable column is present and every constraint
+        is true-or-null. That is the row set of ``validate(strict=False)``
+        except where a constraint is violated somewhere and null on
+        some row: ``validate`` applies that constraint as a filter and
+        drops the null row, this keeps it. Because the result is a
         single lazy ``filter``, Catalyst fuses it with downstream
         operators and pushes eligible predicates into the scan.
         Violation diagnostics are not collected — use ``validate()``
@@ -246,7 +273,7 @@ class SparkValidator:
         nn = self._not_null_condition(self._null_check_fields(fill_nulls))
         if nn is not None:
             conditions.append(nn)
-        for _i, (expr, _msg) in self._analyzable_constraints(df):
+        for _i, expr, _msg in self._usable_constraints(df):
             # true-or-null keeps the "nulls are not violations" semantic
             conditions.append(expr.isNull() | expr)
         if conditions:
@@ -273,7 +300,7 @@ class SparkValidator:
                     F.lit(f"{name} must not be null"),
                 )
             )
-        for _i, (expr, msg) in self._analyzable_constraints(df):
+        for _i, expr, msg in self._usable_constraints(df):
             flags.append(F.when(~expr, F.lit(msg)))
         if not flags:
             return df.withColumn("_violations", F.array().cast("array<string>"))
@@ -332,27 +359,36 @@ class SparkValidator:
         required = {
             name for name, field in self.fields.items() if field.default is _MISSING
         }
-        missing = required - set(df.columns)
+        present = set(df.columns)
+        missing = required - present
         if missing:
             raise ValueError(f"Missing required columns: {missing}")
 
-        # V2: inject missing defaulted columns.
-        for name, field in self.fields.items():
-            if name not in df.columns and field.default is not _MISSING:
-                dtype = field.get_spark_dtype()
-                df = df.withColumn(name, F.lit(field.default).cast(dtype))
-                logger.info(
-                    "Added column '%s' with default value: %s", name, field.default
-                )
+        # V2: inject missing defaulted columns; afterwards every field
+        # is present.
+        defaults = {
+            name: F.lit(field.default).cast(field.get_spark_dtype())
+            for name, field in self.fields.items()
+            if name not in present
+        }
+        for name in defaults:
+            logger.info(
+                "Added column '%s' with default value: %s",
+                name,
+                self.fields[name].default,
+            )
 
         # V3: cast + project + reorder to schema order; lossy casts
         # become null (try_cast — independent of spark.sql.ansi.enabled),
         # extra input columns are dropped.
         df = df.select(
             *[
-                F.col(name).try_cast(field.get_spark_dtype()).alias(name)
+                (
+                    defaults[name]
+                    if name in defaults
+                    else F.col(name).try_cast(field.get_spark_dtype())
+                ).alias(name)
                 for name, field in self.fields.items()
-                if name in df.columns
             ]
         )
 
@@ -363,7 +399,7 @@ class SparkValidator:
                     F.col(name), F.lit(field.default).cast(field.get_spark_dtype())
                 )
                 for name, field in self.fields.items()
-                if field.default is not _MISSING and name in df.columns
+                if field.default is not _MISSING
             }
             if fills:
                 df = df.withColumns(fills)
@@ -384,38 +420,86 @@ class SparkValidator:
             return None
         return reduce(lambda a, b: a & b, [F.col(n).isNotNull() for n in names])
 
-    def _analyzable_constraints(
-        self, df: DataFrame
-    ) -> list[tuple[int, tuple[Column, str]]]:
-        """Compile constraints; V7: drop ones that fail, with a warning.
+    def _usable_constraints(self, df: DataFrame) -> list[_Compiled]:
+        """The constraints that resolve against the coerced frame ``df``.
 
-        Compiles each DSL node to a Column and checks it resolves
-        against the frame. A constraint that cannot be compiled or
-        resolved (e.g. references a column outside the schema, or a
-        type-invalid operation) is demoted to a warning and skipped,
-        mirroring the reference's error-tolerant evaluation
-        (polars.py:230-246). Analysis is driver-side only — no job
-        runs.
+        Analysis is driver-side only — no job runs — and is cached per
+        frame schema, so ``validate``, ``validate_lazy`` and
+        ``flag_violations`` on the same input analyse once between
+        them. All constraints are analysed in one batched ``select``;
+        only if that fails is each analysed alone, so that V7 drops just
+        the constraints that cannot resolve (e.g. a column outside the
+        schema, or a type-invalid operation), with a warning, mirroring
+        the reference's error-tolerant evaluation (polars.py:230-246).
         """
-        usable: list[tuple[int, tuple[Column, str]]] = []
-        for i, (raw, msg) in enumerate(self._constraints):
+        key = df.schema
+        if key not in self._usable:
+            usable = self._compile()
             try:
-                # isinstance first: Column.__getattr__ would satisfy
-                # hasattr(raw, "to_spark") via struct-field access.
-                expr = raw if isinstance(raw, Column) else raw.to_spark()
-                df.select(expr.cast("boolean"))
-            except Exception as e:
-                logger.warning("Could not evaluate constraint '%s': %s", msg, e)
-                continue
-            usable.append((i, (expr, msg)))
-        return usable
+                if usable:
+                    df.select(*[expr.cast("boolean") for _i, expr, _msg in usable])
+            except Exception:
+                usable = [c for c in usable if self._resolves(df, c)]
+            self._usable[key] = usable
+        return self._usable[key]
+
+    def _compile(self) -> list[_Compiled]:
+        """DSL nodes -> Columns, once per validator (needs a session)."""
+        if self._compiled is None:
+            self._compiled = []
+            for i, (raw, msg) in enumerate(self._constraints):
+                try:
+                    # isinstance first: Column.__getattr__ would satisfy
+                    # hasattr(raw, "to_spark") via struct-field access.
+                    expr = raw if isinstance(raw, Column) else raw.to_spark()
+                except Exception as e:
+                    logger.warning("Could not evaluate constraint '%s': %s", msg, e)
+                    continue
+                self._compiled.append((i, expr, msg))
+        return self._compiled
+
+    @staticmethod
+    def _resolves(df: DataFrame, constraint: _Compiled) -> bool:
+        _i, expr, msg = constraint
+        try:
+            df.select(expr.cast("boolean"))
+        except Exception as e:
+            logger.warning("Could not evaluate constraint '%s': %s", msg, e)
+            return False
+        return True
+
+    def _fetch_samples(self, df: DataFrame, applied: list[Column]) -> list[Future]:
+        """Submit one ``limit(10)`` sample job per violated constraint,
+        all at once; each builds its plan off the caller's thread, fills
+        its ``last_violations`` entry's ``rows`` and logs it. The calling
+        thread's job description and local properties carry over to the
+        fetch threads."""
+        session = df.sparkSession
+        # outside pinned-thread mode this returns the session itself
+        inherit = inheritable_thread_target(session)
+        fetches = []
+        for violation, expr in zip(self._violations, applied):
+
+            def fetch(violation=violation, expr=expr) -> None:
+                violation["rows"] = df.filter(~expr).limit(10).collect()
+                logger.warning(
+                    "Constraint violation: %s\nCount: %s\nRows: %s\n%s",
+                    violation["constraint"],
+                    violation["count"],
+                    violation["rows"],
+                    "-" * 80,
+                )
+
+            target = fetch if inherit is session else inherit(fetch)
+            fetches.append(_sample_pool().submit(target))
+        return fetches
 
     def _run_count_job(
         self,
         df: DataFrame,
         aggs: list[Column],
         null_checks: list[str],
-        usable: list[tuple[int, tuple[Column, str]]],
+        usable: list[_Compiled],
         ok: Column | None,
     ) -> dict[str, int]:
         """Execute the merged count aggregation; fall back per-constraint.
@@ -444,7 +528,7 @@ class SparkValidator:
                 counts[f"__null_{name}"] = c or 0
             except Exception as e:  # pragma: no cover - error path
                 logger.warning("Could not count nulls for '%s': %s", name, e)
-        for i, (expr, msg) in usable:
+        for i, expr, msg in usable:
             violated = ~expr if ok is None else ok & ~expr
             try:
                 c = df.agg(F.sum(F.when(violated, 1).otherwise(0))).collect()[0][0]

@@ -1238,6 +1238,7 @@ def connected_components(
     # LAZY checkpoint + count: the convergence count is the round's
     # first action, so it materializes the checkpoint as a side
     # effect — one job per round (r11), now one per TWO steps.
+    checkpoint = labels
     steps_left = max_iter
     while steps_left > 0:
         u1 = _step(labels)
@@ -1251,6 +1252,8 @@ def connected_components(
         changed = updated.where(
             F.col("new_component") != F.col("component")
         ).count()
+        _release_checkpoint(checkpoint)
+        checkpoint = updated
         labels = updated.select(
             "node", F.col("new_component").alias("component")
         )
@@ -1258,6 +1261,12 @@ def connected_components(
             break
     edges.unpersist()
     return labels
+
+
+def _release_checkpoint(df: DataFrame) -> None:
+    """Unpersist the blocks behind a ``localCheckpoint()``ed frame (the
+    checkpoint's plan is a ``LogicalRDD`` over the persisted RDD)."""
+    df._jdf.logicalPlan().rdd().unpersist(False)
 
 
 def minhash_dedup_transitive(

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import subprocess
 import sys
+import tempfile
 from pathlib import Path
 
 import pytest
@@ -26,25 +27,28 @@ _CHECKED = [
 
 @pytest.fixture(scope="module")
 def example_results():
-    procs = {
-        name: subprocess.Popen(
-            [sys.executable, str(EXAMPLES / name)],
-            stdout=subprocess.PIPE,
-            stderr=subprocess.PIPE,
-            text=True,
+    # Output goes to temporary files, not pipes: a pipe nobody drains
+    # while another example is awaited fills up and stalls its writer.
+    runs = {}
+    for name in _CHECKED:
+        out, err = tempfile.TemporaryFile("w+"), tempfile.TemporaryFile("w+")
+        proc = subprocess.Popen(
+            [sys.executable, str(EXAMPLES / name)], stdout=out, stderr=err, text=True
         )
-        for name in _CHECKED
-    }
+        runs[name] = (proc, out, err)
     results = {}
-    for name, proc in procs.items():
+    for name, (proc, out, err) in runs.items():
+        note = ""
         try:
-            stdout, stderr = proc.communicate(timeout=300)
+            rc = proc.wait(timeout=300)
         except subprocess.TimeoutExpired:
             proc.kill()
-            stdout, stderr = proc.communicate()
-            results[name] = (-1, stdout, stderr + "\nTIMEOUT")
-            continue
-        results[name] = (proc.returncode, stdout, stderr)
+            proc.wait()
+            rc, note = -1, "\nTIMEOUT"
+        with out, err:
+            out.seek(0)
+            err.seek(0)
+            results[name] = (rc, out.read(), err.read() + note)
     return results
 
 

@@ -1497,6 +1497,18 @@ class TestConnectedComponents:
         }
         assert got == {(3, 3), (7, 3), (9, 3)}
 
+    def test_superseded_checkpoints_released(self, spark):
+        # a 12-edge chain needs 12 steps, i.e. 6 rounds of checkpoints
+        pairs = spark.createDataFrame(
+            [(i, i + 1) for i in range(12)], "doc_id_a long, doc_id_b long"
+        )
+        jsc = spark.sparkContext._jsc
+        before = set(jsc.getPersistentRDDs().keySet())
+        labels = dedup.connected_components(pairs)
+        left = set(jsc.getPersistentRDDs().keySet()) - before
+        assert len(left) <= 1
+        assert {r.component for r in labels.collect()} == {0}
+
     def test_transitive_dedup_keeps_one_per_cluster(self, spark):
         rows = [
             (1, "alpha beta gamma delta epsilon zeta"),

@@ -180,6 +180,48 @@ class TestConstraints:
         v.validate(constrained_invalid_df, strict=False, show_violations=True)
         assert all(x["rows"] is not None for x in v.last_violations)
 
+    def test_show_violations_samples_fail_their_constraint(self, spark):
+        class S(Schema):
+            id: int = Field(ge=1)
+            age: int = Field(le=120)
+
+        rows = (
+            [(i, 30) for i in range(1, 21)]
+            + [(-i, 30) for i in range(12)]
+            + [(100 + i, 200 + i) for i in range(3)]
+        )
+        df = spark.createDataFrame(rows, ["id", "age"])
+        fails = {
+            "id must be >= 1": lambda r: r.id < 1,
+            "age must be <= 120": lambda r: r.age > 120,
+        }
+        v = S.to_spark_validator()
+        v.validate(df, strict=False)
+        plain = [(x["constraint"], x["count"]) for x in v.last_violations]
+        v.validate(df, strict=False, show_violations=True)
+        shown = v.last_violations
+        assert [(x["constraint"], x["count"]) for x in shown] == plain
+        assert dict(plain) == {"id must be >= 1": 12, "age must be <= 120": 3}
+        for x in shown:
+            assert len(x["rows"]) == min(10, x["count"])
+            assert all(fails[x["constraint"]](r) for r in x["rows"])
+
+    def test_failed_sample_fetch_raises_on_read(self, spark):
+        """Counting never brings rows to Python; a sample fetch does, and
+        a date beyond year 9999 cannot become a Python ``date``."""
+
+        class S(Schema):
+            id: int = Field(le=0)
+            d: date
+
+        far = F.expr("date_add(DATE'2000-01-01', CAST(id AS INT) * 3000000)")
+        df = spark.range(3).select("id", far.alias("d"))
+        v = S.to_spark_validator()
+        out = v.validate(df, strict=False, show_violations=True)
+        assert out.count() == 1
+        with pytest.raises(ValueError, match="out of range"):
+            v.last_violations
+
     def test_valid_passes_constraints_strict(self, spark, constrained_valid_df):
         v = ConstrainedSchema.to_spark_validator()
         assert v.validate(constrained_valid_df, strict=True).count() == 2
@@ -296,6 +338,24 @@ class TestScaleFastPaths:
         assert sorted(r["id"] for r in eager.collect()) == sorted(
             r["id"] for r in lazy.collect()
         )
+
+    def test_validate_lazy_keeps_null_rows_of_violated_constraint(self, spark):
+        """A null predicate of a violated constraint: ``validate`` applies
+        the constraint as a filter and drops the row, ``validate_lazy``
+        keeps it (true-or-null); neither counts it."""
+
+        class S(Schema):
+            id: int
+            age: int | None = Field(le=120)
+
+        df = spark.createDataFrame([(1, 30), (2, None), (3, 200)], "id long, age long")
+        v = S.to_spark_validator()
+        eager = v.validate(df, strict=False)
+        assert [(x["constraint"], x["count"]) for x in v.last_violations] == [
+            ("age must be <= 120", 1)
+        ]
+        assert sorted(r.id for r in eager.collect()) == [1]
+        assert sorted(r.id for r in v.validate_lazy(df).collect()) == [1, 2]
 
     def test_validate_lazy_runs_no_jobs(self, spark, constrained_valid_df):
         v = ConstrainedSchema.to_spark_validator()
