@@ -353,6 +353,8 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
+    from flycatcher_spark.session import CODEGEN_CACHE_ENTRIES
+
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(max(int(cpus) * 2, 8)))
@@ -360,6 +362,7 @@ def main() -> None:
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", "16g")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .appName("flycatcher_spark_bench")
         .getOrCreate()
     )

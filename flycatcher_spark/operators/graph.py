@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import caching
+from .dedup import _release_checkpoint
 
 __all__ = ["hits", "out_degrees", "pagerank"]
 
@@ -186,6 +187,18 @@ def pagerank(
                 ).persist()
             )
         ranks = nodes.withColumn("rank", init)
+        live: DataFrame | None = None
+
+        def checkpoint(df: DataFrame) -> DataFrame:
+            # ``df`` reads the live checkpoint; once its own eager
+            # checkpoint exists nothing does, so release the old one
+            nonlocal live
+            new = df.localCheckpoint(eager=True)
+            if live is not None:
+                _release_checkpoint(live)
+            live = new
+            return new
+
         for it in range(iterations):
             extra = None
             dmass_df = None
@@ -193,7 +206,7 @@ def pagerank(
                 # two consumers read this iteration's ranks (the
                 # dangling-mass aggregate and the contribution join):
                 # materialize once instead of recomputing the lineage
-                ranks = ranks.localCheckpoint(eager=True)
+                ranks = checkpoint(ranks)
                 # The dangling mass D stays PLAN-side: a 1-row
                 # aggregate cross-joined (broadcast) into the update
                 # projection instead of a per-iteration driver
@@ -245,8 +258,8 @@ def pagerank(
             if checkpoint_every and (it + 1) % checkpoint_every == 0 and (
                 it + 1
             ) < iterations:
-                ranks = ranks.localCheckpoint(eager=True)
-        return ranks.localCheckpoint(eager=True)
+                ranks = checkpoint(ranks)
+        return checkpoint(ranks)
 
 
 def hits(

@@ -5,6 +5,31 @@ knobs that matter on a real cluster: AQE (runtime re-planning +
 skew-join handling), Arrow for the pandas-UDF paths, and a UTC
 session timezone so timestamp semantics are stable across
 driver/executor environments (SURVEY.md §7.4 item 7).
+
+Generated-code cache
+--------------------
+Spark keeps each class it generates and compiles (whole-stage
+pipelines, projections, predicates, orderings) in an LRU cache keyed
+by the full generated source, ``spark.sql.codegen.cache.maxEntries``
+entries long (default 100). The cache holds compiled operator code
+only, never data or results, so its size cannot change an answer. It
+does change what a repeated pipeline costs: one run of the curation
+chain (dedup → MinHash → verify → split → gate → PQ → BM25 → RRF)
+generates about 210–240 distinct classes and one bulk validation run
+about 40. At 100 entries the chain evicts its own classes, so every
+later run in the same session recompiles all of them with Janino
+(~10–15 ms each) and the JIT compiles the new bytecode again. Measured
+on 4 cores, that was ~210 compilations and ~6 of ~27 CPU-s per run. Sized
+at :data:`CODEGEN_CACHE_ENTRIES` (1000: the chain plus validation
+plus headroom), later runs compile almost nothing. One entry costs
+about 7 KB of source key plus 2.7 KB of bytecode, so a full cache is
+~10 MB of driver heap. The first run still compiles everything.
+
+The size is a static conf, read when the JVM's code generator first
+compiles. A session that already exists before :func:`get_spark`
+runs (a ``getOrCreate`` hit on a session built elsewhere) keeps the
+size it was built with, Spark's default of 100 unless its builder set
+it.
 """
 
 from __future__ import annotations
@@ -12,6 +37,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+#: Entries in Spark's generated-code class cache; see the module
+#: docstring for how it is sized.
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def get_spark(
@@ -48,6 +77,7 @@ def get_spark(
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     if default_parallelism is not None:
         builder = builder.config(

@@ -159,6 +159,21 @@ class TestPagerank:
         }
         assert plain == ckpt == _py_pagerank(EDGES, iterations=5)
 
+    def test_superseded_checkpoints_released(self, spark):
+        # redistribute checkpoints the ranks every iteration and
+        # checkpoint_every=2 adds more; only the result's may stay
+        e = spark.createDataFrame(EDGES, ["src", "dst"])
+        jsc = spark.sparkContext._jsc
+        before = set(jsc.getPersistentRDDs().keySet())
+        ranks = graph.pagerank(
+            e, iterations=6, checkpoint_every=2, dangling="redistribute"
+        )
+        left = set(jsc.getPersistentRDDs().keySet()) - before
+        assert len(left) <= 1
+        assert {r.node: r.rank for r in ranks.collect()} == _py_pagerank(
+            EDGES, iterations=6, dangling="redistribute"
+        )
+
     def test_well_linked_node_outranks_periphery(self, spark):
         e = spark.createDataFrame(EDGES, ["src", "dst"])
         got = {r.node: r.rank for r in graph.pagerank(e, iterations=4).collect()}

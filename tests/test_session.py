@@ -1,0 +1,47 @@
+"""Session factory: what ``get_spark``'s confs buy a long-lived session."""
+
+from __future__ import annotations
+
+from flycatcher_spark.operators import dedup, quality, retrieval
+
+DOCS = [
+    (1, "the quick brown fox jumps over the lazy dog near the river bank"),
+    (2, "the quick brown fox jumps over the lazy dog near the river bank"),
+    (3, "the quick brown fox jumps over the lazy dog near the river shore"),
+    (4, "a slow green turtle walks under the busy bridge at dawn today"),
+    (5, "a slow green turtle walks under the busy bridge at dusk today"),
+    (6, "completely different words about spark codegen and class caches"),
+]
+QUERIES = [(0, "brown fox river"), (1, "green turtle bridge")]
+
+
+def _compilations(spark) -> int:
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def _curate(spark):
+    docs = spark.createDataFrame(DOCS, "doc_id long, text string")
+    queries = spark.createDataFrame(QUERIES, "query_id long, query string")
+    kept = dedup.exact_dedup(docs, subset=["text"]).localCheckpoint()
+    cands = dedup.minhash_lsh_pairs(kept, threshold=0.3).localCheckpoint()
+    pairs = dedup.verify_pairs_jaccard(cands, kept, hashed=True, threshold=0.3)
+    split = quality.leakage_safe_split(kept, pairs)
+    hits = retrieval.bm25_topk(kept, queries, k=3)
+    return (
+        sorted(tuple(r) for r in split.collect()),
+        sorted(tuple(r) for r in hits.collect()),
+    )
+
+
+def test_repeated_chain_reuses_generated_code(spark):
+    # The chain generates ~160 classes, more than Spark's default cache
+    # of 100 holds; at that size every run recompiles ~150 of them. The
+    # few a warm run still compiles are whole-stage classes renumbered
+    # because adaptive execution planned their stages in another order.
+    first = _curate(spark)
+    start = _compilations(spark)
+    second = _curate(spark)
+    compiled = _compilations(spark) - start
+    assert second == first
+    assert compiled <= 40, f"second run compiled {compiled} classes"

@@ -29,6 +29,8 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
+    from flycatcher_spark.session import CODEGEN_CACHE_ENTRIES
+
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(max(int(cpus) * 2, 8)))
@@ -40,6 +42,7 @@ def main() -> int:
         .config("spark.eventLog.rolling.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", "16g")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .appName("profile_queries")
         .getOrCreate()
     )
