@@ -2,7 +2,8 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
 ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...} plus the noise-proofing fields
-described below.
+described below. The session comes from ``session.get_spark``, which
+uses every available core when $SPARK_GRAFT_CPUS is unset.
 
 Each query is forced with a **noop-sink write** (r4 change): the query
 fully executes — every output column materialized — without result
@@ -32,7 +33,8 @@ protect the recorded numbers:
 2. **A per-run external-load sentinel.** Around every timed run the
    harness reads host CPU busy jiffies (/proc/stat, steal included)
    and subtracts the CPU consumed by this process tree (driver +
-   JVM + Python workers, via a /proc walk); the remainder divided by
+   JVM + Python workers, reaped ones included, via
+   ``perfbench.meter.tree_cpu_seconds``); the remainder divided by
    wall time is the average number of EXTERNAL busy cores during the
    run. A run with external cores > $SPARK_GRAFT_BENCH_EXT_CORES
    (default 1.5) is marked dirty and excluded from the min. A query
@@ -80,6 +82,8 @@ import time
 import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from perfbench import meter, run  # noqa: E402
 
 HEADLINE = [
     "validate_lineitem",
@@ -197,39 +201,6 @@ def _host_busy_seconds() -> float | None:
     return busy / _CLK_TCK
 
 
-def _tree_cpu_seconds() -> float | None:
-    """CPU-seconds consumed so far by this process and every live
-    descendant (the Spark JVM and its Python workers are children,
-    not reaped, so getrusage(RUSAGE_CHILDREN) misses them)."""
-    try:
-        entries = {}
-        for d in os.listdir("/proc"):
-            if not d.isdigit():
-                continue
-            try:
-                with open(f"/proc/{d}/stat") as f:
-                    raw = f.read()
-            except OSError:
-                continue
-            fields = raw.rsplit(")", 1)[1].split()
-            # post-comm fields: 0=state 1=ppid ... 11=utime 12=stime
-            entries[int(d)] = (int(fields[1]), int(fields[11]) + int(fields[12]))
-    except OSError:
-        return None
-    kids: dict[int, list[int]] = {}
-    for pid, (ppid, _) in entries.items():
-        kids.setdefault(ppid, []).append(pid)
-    total, frontier = 0, [os.getpid()]
-    while frontier:
-        pid = frontier.pop()
-        ent = entries.get(pid)
-        if ent is None:
-            continue
-        total += ent[1]
-        frontier.extend(kids.get(pid, []))
-    return total / _CLK_TCK
-
-
 def _loadavg() -> list[float] | None:
     try:
         return [round(x, 2) for x in os.getloadavg()]
@@ -298,17 +269,17 @@ class _RunMeter:
 
     def __enter__(self):
         self.h0 = _host_busy_seconds()
-        self.t0 = _tree_cpu_seconds()
+        self.t0 = meter.tree_cpu_seconds()
         self.io0 = _io_stall_us()
         self.w0 = time.time()
         return self
 
     def __exit__(self, *exc):
         self.wall = time.time() - self.w0
-        h1, t1 = _host_busy_seconds(), _tree_cpu_seconds()
+        h1, t1 = _host_busy_seconds(), meter.tree_cpu_seconds()
         io1 = _io_stall_us()
         self.ext_cores = None
-        if None not in (self.h0, self.t0, h1, t1) and self.wall > 0:
+        if self.h0 is not None and h1 is not None and self.wall > 0:
             ext = (h1 - self.h0) - (t1 - self.t0)
             self.ext_cores = max(0.0, round(ext / self.wall, 2))
         self.io_stall = None
@@ -323,7 +294,6 @@ class _RunMeter:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
     n_passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "2"))
     ext_thresh = float(os.environ.get("SPARK_GRAFT_BENCH_EXT_CORES", "1.5"))
@@ -351,22 +321,11 @@ def main() -> None:
     else:
         headline = HEADLINE
 
-    from pyspark.sql import SparkSession
+    from flycatcher_spark.session import get_spark
 
-    from flycatcher_spark.session import CODEGEN_CACHE_ENTRIES
-
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus) * 2, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
-        .appName("flycatcher_spark_bench")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="flycatcher_spark_bench")
     spark.sparkContext.setLogLevel("ERROR")
+    cpus = spark.sparkContext.defaultParallelism
 
     import __spark_entry__ as E
 
@@ -390,22 +349,12 @@ def main() -> None:
     def _warm(s: pd.Series) -> pd.Series:
         return s
 
-    spark.range(1000).repartition(int(cpus)).select(_warm(F.col("id"))).count()
+    spark.range(1000).repartition(cpus).select(_warm(F.col("id"))).count()
 
     def run_full(df) -> None:
         # noop sink: full execution of every output column, no driver
         # transfer, no count-only plan pruning
         df.write.format("noop").mode("overwrite").save()
-
-    def drop_all_storage() -> None:
-        # clearCache() drops cached TABLES but not localCheckpoint
-        # RDDs (pagerank/hits/connected-components materialize
-        # results through checkpoints); in a 51-query session those
-        # accumulate until driver GC notices, so drop them explicitly
-        # — every run must start from the same empty storage state.
-        spark.catalog.clearCache()
-        for r in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
-            r.unpersist(False)
 
     warm_sf = "/root/testdata/sf0.001"
     if os.path.isdir(warm_sf) and warm_sf != sf_dir:
@@ -414,7 +363,7 @@ def main() -> None:
                 run_full(qs[name](spark, warm_sf))
             except Exception as e:  # warm-up must never fail the bench
                 print(f"# warmup {name} failed: {e}", file=sys.stderr)
-        drop_all_storage()  # warmup checkpoints must not leak into timing
+        run.drop_storage(spark)  # warmup checkpoints must not leak into timing
 
     load_start = _loadavg()
 
@@ -428,7 +377,7 @@ def main() -> None:
         # headline set — drop them so every run starts from the same
         # storage state. The drop is outside the meter: it is harness
         # bookkeeping, not query cost.
-        drop_all_storage()
+        run.drop_storage(spark)
         return m.wall, m.ext_cores, m.io_stall
 
     # runs[name] -> list of (seconds, ext_cores, io_stall); detail[name]
@@ -452,7 +401,7 @@ def main() -> None:
                     run_full(qs[name](spark, sf_dir))
                 except Exception as e:
                     print(f"# target-sf warmup {name} failed: {e}", file=sys.stderr)
-                drop_all_storage()
+                run.drop_storage(spark)
             for _ in range(n_runs):
                 runs[name].append(timed_run(name))
             if p == n_passes - 1:
@@ -558,7 +507,7 @@ def main() -> None:
         "clean": not dirty_queries,
         "machine": {
             "cpus": os.cpu_count(),
-            "spark_cpus": int(cpus),
+            "spark_cpus": cpus,
             "host_calibration_sec": _host_calibration(),
             "loadavg_start": load_start,
             "loadavg_end": _loadavg(),

@@ -51,6 +51,10 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults.
 
+    The session runs on ``$SPARK_GRAFT_CPUS`` local cores, else on
+    every CPU this process may run on, and ``shuffle_partitions``
+    defaults to that same count.
+
     ``default_parallelism`` caps ``spark.default.parallelism`` — the
     partition count of ``parallelize``/``createDataFrame``-from-local
     sources, NOT DataFrame shuffles (``shuffle_partitions``) and NOT
@@ -61,7 +65,7 @@ def get_spark(
     the whole suite's per-action tax. Leave unset for real inputs
     (parquet scans ignore it) and for the bench, whose widening
     guards read ``sparkContext.defaultParallelism``."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
@@ -70,10 +74,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or os.environ.get("SPARK_GRAFT_CPUS", 32)),
-        )
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

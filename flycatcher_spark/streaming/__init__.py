@@ -22,7 +22,7 @@ from .pipeline import (
     validate_stream,
     windowed_quality,
 )
-from .tws import timeout_sessions, timeout_sessions_tws
+from .tws import timeout_sessions
 
 __all__ = [
     "flag_violations_stream",
@@ -36,7 +36,6 @@ __all__ = [
     "read_stream",
     "session_windows",
     "timeout_sessions",
-    "timeout_sessions_tws",
     "validate_stream",
     "windowed_quality",
 ]

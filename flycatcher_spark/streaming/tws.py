@@ -1,20 +1,11 @@
 """Inactivity-timeout sessionization: emit a session when its key
 goes quiet — a moment with, by definition, no input rows for the key.
 
-Two implementations of the same semantics:
-
-- :func:`timeout_sessions` (default) — ``applyInPandasWithState``
-  with ``GroupStateTimeout.EventTimeTimeout``: the state store calls
-  the function with ``state.hasTimedOut`` once the watermark passes
-  ``setTimeoutTimestamp`` — no protobuf dependency, runs everywhere
-  PySpark runs.
-- :func:`timeout_sessions_tws` — the same operator on Spark 4's
-  ``transformWithStateInPandas`` with explicit event-time timers
-  (``registerTimer`` / ``handleExpiredTimer``). The newer API also
-  offers list/map state and multiple timers per key; its Python
-  worker protocol requires the ``protobuf`` package, so this variant
-  raises a clear error when that is missing (as in this container —
-  tests skip it) and is otherwise drop-in equivalent.
+:func:`timeout_sessions` runs on ``applyInPandasWithState`` with
+``GroupStateTimeout.EventTimeTimeout``: the state store calls the
+function with ``state.hasTimedOut`` once the watermark passes
+``setTimeoutTimestamp``. It needs no protobuf dependency and runs
+everywhere PySpark runs.
 
 Scale notes:
 - Session state is 4 scalars per PENDING SEGMENT (no event
@@ -33,7 +24,7 @@ scale-extension surface.
 
 from __future__ import annotations
 
-from typing import Any, Iterator
+from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -48,7 +39,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-__all__ = ["timeout_sessions", "timeout_sessions_tws"]
+__all__ = ["timeout_sessions"]
 
 
 def _out_schema(sdf: DataFrame, key_cols: list[str]) -> StructType:
@@ -234,98 +225,3 @@ def timeout_sessions(
         )
     )
 
-
-def timeout_sessions_tws(
-    sdf: DataFrame,
-    key_cols: list[str],
-    ts_col: str,
-    value_col: str,
-    gap_seconds: int = 300,
-    watermark_delay: str = "10 seconds",
-) -> DataFrame:
-    """:func:`timeout_sessions` on ``transformWithStateInPandas``
-    (explicit timers). Requires the ``protobuf`` package for the
-    transformWithState worker protocol; raises ``RuntimeError`` with
-    that explanation if missing."""
-    try:
-        import google.protobuf  # noqa: F401  (worker-side requirement)
-    except ImportError as exc:  # pragma: no cover - env without protobuf
-        raise RuntimeError(
-            "transformWithStateInPandas needs the 'protobuf' package "
-            "(pyspark's state-server protocol); install protobuf or use "
-            "timeout_sessions() which has no such dependency"
-        ) from exc
-
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    gap_ms = gap_seconds * 1000
-    key_names = list(key_cols)
-    state_ddl = (
-        "starts array<long>, lasts array<long>, "
-        "ns array<long>, totals array<double>"
-    )
-
-    class _SessionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._state = handle.getValueState("session", state_ddl)
-
-        def handleInputRows(
-            self, key: Any, rows: Iterator[pd.DataFrame], timerValues
-        ) -> Iterator[pd.DataFrame]:
-            wm = timerValues.getCurrentWatermarkInMs()
-            stored = (
-                _decode(self._state.get()) if self._state.exists() else []
-            )
-            segs = _fold_segments(rows, ts_col, value_col, gap_ms, stored)
-            safe, pending = _split_safe(segs, gap_ms, wm)
-            if pending:
-                self._state.update(_encode(pending))
-                # one live timer per key: replace the old deadline
-                for t in self._handle.listTimers():
-                    self._handle.deleteTimer(t)
-                self._handle.registerTimer(
-                    max(min(s[1] for s in pending) + gap_ms, wm + 1)
-                )
-            elif self._state.exists():
-                self._state.clear()
-            if not safe:
-                return iter([])
-            return iter([pd.DataFrame(_seg_rows(key_names, key, safe))])
-
-        def handleExpiredTimer(
-            self, key: Any, timerValues, expiredTimerInfo
-        ) -> Iterator[pd.DataFrame]:
-            if not self._state.exists():
-                return
-            wm = timerValues.getCurrentWatermarkInMs()
-            safe, pending = _split_safe(
-                _decode(self._state.get()), gap_ms, wm
-            )
-            if pending:
-                self._state.update(_encode(pending))
-                self._handle.registerTimer(
-                    max(min(s[1] for s in pending) + gap_ms, wm + 1)
-                )
-            else:
-                self._state.clear()
-            if safe:
-                yield pd.DataFrame(_seg_rows(key_names, key, safe))
-
-        def close(self) -> None:
-            pass
-
-    out_ddl = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in _out_schema(sdf, key_cols).fields
-    )
-    return (
-        sdf.withWatermark(ts_col, watermark_delay)
-        .groupBy(*key_cols)
-        .transformWithStateInPandas(
-            statefulProcessor=_SessionProcessor(),
-            outputStructType=out_ddl,
-            outputMode="Append",
-            timeMode="EventTime",
-        )
-    )

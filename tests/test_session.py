@@ -2,7 +2,14 @@
 
 from __future__ import annotations
 
+import os
+import subprocess
+
+import pytest
+
 from flycatcher_spark.operators import dedup, quality, retrieval
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 DOCS = [
     (1, "the quick brown fox jumps over the lazy dog near the river bank"),
@@ -45,3 +52,24 @@ def test_repeated_chain_reuses_generated_code(spark):
     compiled = _compilations(spark) - start
     assert second == first
     assert compiled <= 40, f"second run compiled {compiled} classes"
+
+
+def test_only_the_factory_builds_sessions():
+    # every session outside session.py goes through get_spark, so the
+    # bench, the tools and the library run under the same confs
+    try:
+        tracked = subprocess.run(
+            ["git", "ls-files", "*.py"],
+            cwd=ROOT, capture_output=True, text=True, check=True,
+        ).stdout.split()
+    except (OSError, subprocess.CalledProcessError):
+        pytest.skip("not a git checkout")
+    needle = "SparkSession" + ".builder"
+    found = []
+    for rel in tracked:
+        path = os.path.join(ROOT, rel)
+        if rel != "flycatcher_spark/session.py" and os.path.exists(path):
+            with open(path, encoding="utf-8") as f:
+                if needle in f.read():
+                    found.append(rel)
+    assert found == []

@@ -9,7 +9,7 @@ from datetime import datetime
 
 import pytest
 
-from flycatcher_spark.streaming import timeout_sessions, timeout_sessions_tws
+from flycatcher_spark.streaming import timeout_sessions
 
 
 def _write_batch(spark, d, rows):
@@ -120,28 +120,6 @@ def test_activity_extends_session(spark, src_dir, tmp_path):
         )
     finally:
         q.stop()
-
-
-def test_tws_variant_gated_without_protobuf(spark, src_dir):
-    """The transformWithState variant needs protobuf; without it the
-    error must be immediate and explanatory (not a mid-query crash)."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        has_protobuf = True
-    except ImportError:
-        has_protobuf = False
-    _write_batch(spark, src_dir, [("a", _ts("2024-01-01 10:00:00"), 1.0)])
-    sdf = spark.readStream.schema("user string, ts timestamp, v double").parquet(
-        src_dir
-    )
-    if has_protobuf:
-        # construction must at least produce a streaming plan
-        out = timeout_sessions_tws(sdf, ["user"], "ts", "v", gap_seconds=60)
-        assert out.isStreaming
-    else:
-        with pytest.raises(RuntimeError, match="protobuf"):
-            timeout_sessions_tws(sdf, ["user"], "ts", "v", gap_seconds=60)
 
 
 def test_in_batch_void_bridged_by_late_event(spark, src_dir, tmp_path):

@@ -12,12 +12,13 @@ Usage: python tools/check_oracle.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -82,17 +83,9 @@ def main():
     sf_dir = args.pop(0) if args and args[0].startswith("/") else "/root/testdata/sf0.01"
     only = set(args)
 
-    from pyspark.sql import SparkSession
+    from flycatcher_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "8g")
-        .appName("check_oracle")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="check_oracle")
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()

@@ -13,10 +13,11 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-OUT_DIR = os.environ.get("SPARK_GRAFT_PLANS_DIR", "/root/repo/plans/r12")
+OUT_DIR = os.environ.get("SPARK_GRAFT_PLANS_DIR", os.path.join(REPO, "plans", "r12"))
 
 
 def main() -> int:
@@ -26,19 +27,11 @@ def main() -> int:
     suffix = args.pop(0)
     only = set(args)
 
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as E
     import bench
+    from flycatcher_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .appName("dump_plans")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="dump_plans")
     spark.sparkContext.setLogLevel("ERROR")
 
     os.makedirs(OUT_DIR, exist_ok=True)

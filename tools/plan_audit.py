@@ -12,10 +12,12 @@ Usage: python tools/plan_audit.py [--write] [query ...]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -51,19 +53,11 @@ KNOWN_BNLJ = {
 
 
 def audit():
-    from pyspark.sql import SparkSession
-
     from flycatcher_spark import plans
+    from flycatcher_spark.session import get_spark
     import __spark_entry__ as E
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .appName("plan_audit")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="plan_audit")
     spark.sparkContext.setLogLevel("ERROR")
 
     only = {a for a in sys.argv[1:] if not a.startswith("-")}
@@ -133,7 +127,7 @@ def main() -> int:
     out = "\n".join(lines) + "\n"
     print(out)
     if "--write" in sys.argv:
-        with open("/root/repo/PLANS.md", "w") as f:
+        with open(os.path.join(REPO, "PLANS.md"), "w") as f:
             f.write(out)
         print(f"wrote PLANS.md ({bad} flagged)")
     return 0
