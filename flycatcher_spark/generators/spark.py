@@ -186,18 +186,16 @@ class SparkValidator:
 
         # --- single-pass conditional aggregation (one scan) ----------
         ok = self._not_null_condition(null_checks)
-        aggs: list[Column] = []
+        aggs: dict[str, Column] = {}
         for name in null_checks:
-            aggs.append(
-                F.sum(F.when(F.col(name).isNull(), 1).otherwise(0)).alias(f"__null_{name}")
-            )
+            aggs[f"__null_{name}"] = F.sum(F.when(F.col(name).isNull(), 1).otherwise(0))
         for i, expr, _msg in usable:
             violated = ~expr if ok is None else ok & ~expr
-            aggs.append(F.sum(F.when(violated, 1).otherwise(0)).alias(f"__viol_{i}"))
+            aggs[f"__viol_{i}"] = F.sum(F.when(violated, 1).otherwise(0))
 
         counts: dict[str, int] = {}
         if aggs:
-            counts = self._run_count_job(df, aggs, null_checks, usable, ok)
+            counts = self._run_count_job(df, aggs)
 
         # --- V4: null handling ---------------------------------------
         for name in null_checks:
@@ -495,46 +493,36 @@ class SparkValidator:
         return fetches
 
     def _run_count_job(
-        self,
-        df: DataFrame,
-        aggs: list[Column],
-        null_checks: list[str],
-        usable: list[_Compiled],
-        ok: Column | None,
+        self, df: DataFrame, aggs: dict[str, Column]
     ) -> dict[str, int]:
-        """Execute the merged count aggregation; fall back per-constraint.
+        """Execute the merged count aggregation; fall back per-aggregate.
 
-        The merged job is the fast path (one scan). If it fails at
-        runtime (a constraint whose expression errors on real data),
-        fall back to evaluating each aggregate separately so the
-        failing constraint alone is skipped with a warning — the
-        reference's per-constraint error tolerance, paid only on the
-        error path.
+        ``aggs`` maps each result alias to its count aggregate. The
+        merged job is the fast path (one scan). If it fails at runtime
+        (a constraint whose expression errors on real data), each
+        aggregate runs on its own so the failing one alone is skipped
+        with a warning — the reference's per-constraint error
+        tolerance, paid only on the error path.
         """
         try:
-            row = df.agg(*aggs).collect()[0]
+            row = df.agg(*(c.alias(a) for a, c in aggs.items())).collect()[0]
             return row.asDict()
-        except Exception as merged_err:  # pragma: no cover - error path
+        except Exception as merged_err:
             logger.warning(
                 "Merged validation aggregate failed (%s); retrying per-constraint",
                 merged_err,
             )
+        messages = {f"__viol_{i}": msg for i, _expr, msg in self._compile()}
         counts: dict[str, int] = {}
-        for name in null_checks:
+        for alias, agg in aggs.items():
             try:
-                c = df.agg(
-                    F.sum(F.when(F.col(name).isNull(), 1).otherwise(0))
-                ).collect()[0][0]
-                counts[f"__null_{name}"] = c or 0
-            except Exception as e:  # pragma: no cover - error path
-                logger.warning("Could not count nulls for '%s': %s", name, e)
-        for i, expr, msg in usable:
-            violated = ~expr if ok is None else ok & ~expr
-            try:
-                c = df.agg(F.sum(F.when(violated, 1).otherwise(0))).collect()[0][0]
-                counts[f"__viol_{i}"] = c or 0
+                counts[alias] = df.agg(agg).collect()[0][0] or 0
             except Exception as e:
-                logger.warning("Could not evaluate constraint '%s': %s", msg, e)
+                logger.warning(
+                    "Could not evaluate constraint '%s': %s",
+                    messages.get(alias, alias),
+                    e,
+                )
         return counts
 
     @staticmethod

@@ -30,6 +30,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from ._payload import build_payloads, map_payloads
+
 #: Metadata schema produced by the decode stage, appended to the
 #: pass-through key column.
 META_FIELDS = [
@@ -129,15 +131,6 @@ def embed_payload(
     Map-only: at 100 TB this runs at scan speed beside the decode
     stage, and the output feeds ``operators.similarity`` unchanged.
     """
-    import numpy as np
-    import pandas as pd
-
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.DoubleType())),
-        ]
-    )
 
     def default_embed(payload: Any, d: int) -> list | None:
         if payload is None:
@@ -148,19 +141,13 @@ def embed_payload(
         return [float(x) for x in v]
 
     embed = embed_fn or default_embed
-
-    def process(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "embedding": [
-                        embed(p, dim) for p in pdf[payload_col]
-                    ],
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(process, schema=out_schema)
+    return map_payloads(
+        df,
+        id_col,
+        payload_col,
+        [T.StructField("embedding", T.ArrayType(T.DoubleType()))],
+        lambda p: [(embed(p, dim),)],
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -744,47 +731,28 @@ def decode_image_meta(
     a composed query (e.g. WebDataset sample decode) then needs NO
     join back to its source, so an expensive upstream (shard build +
     tar walk) evaluates exactly once."""
-    import pandas as pd
 
-    passthrough = [c for c in (passthrough or []) if c != id_col]
-    pass_fields = [df.schema[c] for c in passthrough]
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), *pass_fields, *IMAGE_META_FIELDS]
-    )
-
-    def process(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for p in pdf[payload_col]:
-                meta = parse_image(p)
-                if meta is None:
-                    rows.append((None,) * 7)
-                else:
-                    px = meta["pixels"]
-                    rows.append(
-                        (
-                            meta["fmt"],
-                            meta["width"],
-                            meta["height"],
-                            meta["maxval"],
-                            meta["n_channels"],
-                            int(px.size),
-                            # full precision (exact: integer sums stay
-                            # below 2^53); consumers round engine-side
-                            float(px.mean()) if px.size else None,
-                        )
-                    )
-            out = pd.DataFrame(
-                rows,
-                columns=[f.name for f in IMAGE_META_FIELDS],
+    def rows_of(p: Any) -> list[tuple] | None:
+        meta = parse_image(p)
+        if meta is None:
+            return None
+        px = meta["pixels"]
+        return [
+            (
+                meta["fmt"],
+                meta["width"],
+                meta["height"],
+                meta["maxval"],
+                meta["n_channels"],
+                int(px.size),
+                # full precision (exact: integer sums stay
+                # below 2^53); consumers round engine-side
+                float(px.mean()) if px.size else None,
             )
-            for i, c in enumerate(passthrough):
-                out.insert(i, c, pdf[c].values)
-            out.insert(0, id_col, pdf[id_col].values)
-            yield out
+        ]
 
-    return df.select(id_col, *passthrough, payload_col).mapInPandas(
-        process, schema=out_schema
+    return map_payloads(
+        df, id_col, payload_col, IMAGE_META_FIELDS, rows_of, passthrough
     )
 
 
@@ -793,43 +761,27 @@ def decode_wav_meta(
 ) -> DataFrame:
     """REAL audio decode over a binary column: parse the RIFF/WAVE
     container, emit true rate/channels/duration and sample RMS."""
-    import numpy as np
-    import pandas as pd
 
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), *WAV_META_FIELDS]
+    def rows_of(p: Any) -> list[tuple] | None:
+        meta = parse_wav(p)
+        return None if meta is None else [_audio_stats(meta)]
+
+    return map_payloads(df, id_col, payload_col, WAV_META_FIELDS, rows_of)
+
+
+def _audio_stats(meta: dict) -> tuple:
+    """One :data:`WAV_META_FIELDS` row for a decoded clip."""
+    s = meta["samples"]
+    return (
+        meta["sample_rate"],
+        meta["n_channels"],
+        meta["bits_per_sample"],
+        meta["n_frames"],
+        meta["n_frames"] / meta["sample_rate"],
+        # exact integer sum of squares / n, then one
+        # sqrt — reproducible bit-for-bit in SQL
+        float(np.sqrt(np.mean(np.square(s)))) if s.size else None,
     )
-
-    def process(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for p in pdf[payload_col]:
-                meta = parse_wav(p)
-                if meta is None:
-                    rows.append((None,) * 6)
-                else:
-                    s = meta["samples"]
-                    rows.append(
-                        (
-                            meta["sample_rate"],
-                            meta["n_channels"],
-                            meta["bits_per_sample"],
-                            meta["n_frames"],
-                            meta["n_frames"] / meta["sample_rate"],
-                            # exact integer sum of squares / n, then one
-                            # sqrt — reproducible bit-for-bit in SQL
-                            float(np.sqrt(np.mean(np.square(s))))
-                            if s.size
-                            else None,
-                        )
-                    )
-            out = pd.DataFrame(
-                rows, columns=[f.name for f in WAV_META_FIELDS]
-            )
-            out.insert(0, id_col, pdf[id_col].values)
-            yield out
-
-    return df.select(id_col, payload_col).mapInPandas(process, schema=out_schema)
 
 
 def image_pixel_embedding(payload: bytes, dim: int) -> list | None:
@@ -890,22 +842,14 @@ def make_pnm_payload(
     """
     magic, n_ch = (b"P6", 3) if fmt == "ppm" else (b"P5", 1)
 
-    @pandas_udf("binary")
-    def _build(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            if i is None:
-                out.append(None)
-                continue
-            i = int(i)
-            w, h = 4 + i % 13, 3 + i % 7
-            header = magic + b"\n# synthetic\n%d %d\n255\n" % (w, h)
-            n = w * h * n_ch
-            px = (i * 7 + np.arange(n, dtype=np.int64) * 13) % 256
-            out.append(header + px.astype(np.uint8).tobytes())
-        return pd.Series(out)
+    def build_one(i: int) -> bytes:
+        w, h = 4 + i % 13, 3 + i % 7
+        header = magic + b"\n# synthetic\n%d %d\n255\n" % (w, h)
+        n = w * h * n_ch
+        px = (i * 7 + np.arange(n, dtype=np.int64) * 13) % 256
+        return header + px.astype(np.uint8).tobytes()
 
-    return df.withColumn(payload_col, _build(F.col(id_col)))
+    return build_payloads(df, id_col, payload_col, build_one)
 
 
 def make_png_payload(
@@ -951,55 +895,47 @@ def make_png_payload(
             + struct.pack(">I", zlib.crc32(tag + body))
         )
 
-    @pandas_udf("binary")
-    def _build(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            if i is None:
-                out.append(None)
-                continue
-            i = int(i)
-            w, h = 4 + i % 13, 3 + i % 7
-            n = w * h * n_ch
-            px = (
-                ((i * 7 + np.arange(n, dtype=np.int64) * 13) % 256)
-                .astype(np.uint8)
-                .reshape(h, w * n_ch)
-            )
-            raw = bytearray()
-            if i % 4 == 3:
-                # Adam7 interlaced arm (r8): the SAME raster stored as
-                # 7 reduced images (filter 0) — decoded statistics,
-                # and therefore the oracle, are unchanged
-                interlace = 1
-                cube = px.reshape(h, w, n_ch)
-                for rs, cs, ri, ci in _ADAM7:
-                    sub = cube[rs::ri, cs::ci]
-                    if sub.shape[0] == 0 or sub.shape[1] == 0:
-                        continue
-                    for row in sub:
-                        raw += b"\x00" + row.astype(np.uint8).tobytes()
-            else:
-                interlace = 0
-                prev = np.zeros(w * n_ch, dtype=np.uint8)
-                for y in range(h):
-                    if y % 2 == 0:
-                        raw += b"\x00" + px[y].tobytes()
-                    else:  # Up filter: store line - prev (mod 256)
-                        raw += b"\x02" + ((px[y] - prev) & 0xFF).astype(
-                            np.uint8
-                        ).tobytes()
-                    prev = px[y]
-            ihdr = struct.pack(">IIBBBBB", w, h, 8, ctype, 0, 0, interlace)
-            out.append(
-                _PNG_SIG
-                + _chunk(b"IHDR", ihdr)
-                + _chunk(b"IDAT", zlib.compress(bytes(raw)))
-                + _chunk(b"IEND", b"")
-            )
-        return pd.Series(out)
+    def build_one(i: int) -> bytes:
+        w, h = 4 + i % 13, 3 + i % 7
+        n = w * h * n_ch
+        px = (
+            ((i * 7 + np.arange(n, dtype=np.int64) * 13) % 256)
+            .astype(np.uint8)
+            .reshape(h, w * n_ch)
+        )
+        raw = bytearray()
+        if i % 4 == 3:
+            # Adam7 interlaced arm (r8): the SAME raster stored as
+            # 7 reduced images (filter 0) — decoded statistics,
+            # and therefore the oracle, are unchanged
+            interlace = 1
+            cube = px.reshape(h, w, n_ch)
+            for rs, cs, ri, ci in _ADAM7:
+                sub = cube[rs::ri, cs::ci]
+                if sub.shape[0] == 0 or sub.shape[1] == 0:
+                    continue
+                for row in sub:
+                    raw += b"\x00" + row.astype(np.uint8).tobytes()
+        else:
+            interlace = 0
+            prev = np.zeros(w * n_ch, dtype=np.uint8)
+            for y in range(h):
+                if y % 2 == 0:
+                    raw += b"\x00" + px[y].tobytes()
+                else:  # Up filter: store line - prev (mod 256)
+                    raw += b"\x02" + ((px[y] - prev) & 0xFF).astype(
+                        np.uint8
+                    ).tobytes()
+                prev = px[y]
+        ihdr = struct.pack(">IIBBBBB", w, h, 8, ctype, 0, 0, interlace)
+        return (
+            _PNG_SIG
+            + _chunk(b"IHDR", ihdr)
+            + _chunk(b"IDAT", zlib.compress(bytes(raw)))
+            + _chunk(b"IEND", b"")
+        )
 
-    return df.withColumn(payload_col, _build(F.col(id_col)))
+    return build_payloads(df, id_col, payload_col, build_one)
 
 
 def make_gif_payload(
@@ -1022,26 +958,16 @@ def make_gif_payload(
     pal = [((j * 37) % 256, (j * 59) % 256, (j * 83) % 256)
            for j in range(8)]
 
-    @pandas_udf("binary")
-    def _build(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            if i is None:
-                out.append(None)
-                continue
-            i = int(i)
-            w, h = 4 + i % 13, 3 + i % 7
-            idx = [(i * 5 + k * 11) % 8 for k in range(w * h)]
-            out.append(
-                encode_gif(
-                    w, h, idx, pal,
-                    interlaced=(i % 4 == 3),
-                    animated_copies=2 if i % 5 == 0 else 1,
-                )
-            )
-        return pd.Series(out)
+    def build_one(i: int) -> bytes:
+        w, h = 4 + i % 13, 3 + i % 7
+        idx = [(i * 5 + k * 11) % 8 for k in range(w * h)]
+        return encode_gif(
+            w, h, idx, pal,
+            interlaced=(i % 4 == 3),
+            animated_copies=2 if i % 5 == 0 else 1,
+        )
 
-    return df.withColumn(payload_col, _build(F.col(id_col)))
+    return build_payloads(df, id_col, payload_col, build_one)
 
 
 GIF_FRAME_FIELDS = [
@@ -1075,42 +1001,23 @@ def gif_frames(
         raise ValueError("every_n must be >= 1")
     from .gif import parse_gif_frames
 
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), *GIF_FRAME_FIELDS]
-    )
-
-    def process(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids = []
-            rows = []
-            for i, p in zip(pdf[id_col], pdf[payload_col]):
-                meta = parse_gif_frames(p, every_n=every_n)
-                if meta is None:
-                    ids.append(i)
-                    rows.append((None,) * 6)
-                    continue
-                for fr in meta["frames"]:
-                    px = fr["pixels"]
-                    ids.append(i)
-                    rows.append(
-                        (
-                            fr["frame_idx"],
-                            meta["n_frames"],
-                            fr["delay_cs"],
-                            meta["screen_width"],
-                            meta["screen_height"],
-                            float(px.mean()) if px.size else None,
-                        )
-                    )
-            out = pd.DataFrame(
-                rows, columns=[f.name for f in GIF_FRAME_FIELDS]
+    def rows_of(p: Any) -> list[tuple] | None:
+        meta = parse_gif_frames(p, every_n=every_n)
+        if meta is None:
+            return None
+        return [
+            (
+                fr["frame_idx"],
+                meta["n_frames"],
+                fr["delay_cs"],
+                meta["screen_width"],
+                meta["screen_height"],
+                float(fr["pixels"].mean()) if fr["pixels"].size else None,
             )
-            out.insert(0, id_col, pd.Series(ids, dtype="object"))
-            yield out
+            for fr in meta["frames"]
+        ]
 
-    return df.select(id_col, payload_col).mapInPandas(
-        process, schema=out_schema
-    )
+    return map_payloads(df, id_col, payload_col, GIF_FRAME_FIELDS, rows_of)
 
 
 MEDIA_FRAME_FIELDS = [
@@ -1146,96 +1053,37 @@ def media_frames(
     if every_n < 1:
         raise ValueError("every_n must be >= 1")
     from .gif import parse_gif_frames
-    from .jpeg import parse_jpeg
-    from .video import parse_avi_frames
+    from .video import _avi_frame_rows
     from .webp import parse_webp_frames
 
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), *MEDIA_FRAME_FIELDS]
-    )
-
-    def process(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids, rows = [], []
-            for i, p in zip(pdf[id_col], pdf[payload_col]):
-                head = b"" if p is None else bytes(p[:12])
-                if head[:4] == b"RIFF" and head[8:12] == b"WEBP":
-                    meta = parse_webp_frames(p, every_n=every_n)
-                    if meta is None:
-                        ids.append(i)
-                        rows.append((None,) * 6)
-                        continue
-                    for fr in meta["frames"]:
-                        px = fr["pixels"]
-                        ids.append(i)
-                        rows.append(
-                            (
-                                "webp",
-                                fr["frame_idx"],
-                                meta["n_frames"],
-                                meta["canvas_width"],
-                                meta["canvas_height"],
-                                float(px.mean()) if px.size else None,
-                            )
-                        )
-                    continue
-                if head[:4] == b"RIFF" and head[8:12] == b"AVI ":
-                    frames = parse_avi_frames(p)
-                    if frames is None:
-                        ids.append(i)
-                        rows.append((None,) * 6)
-                        continue
-                    for fi in range(0, len(frames), every_n):
-                        img = parse_jpeg(frames[fi])
-                        ids.append(i)
-                        if img is None:
-                            rows.append(
-                                ("avi", fi, len(frames), None, None, None)
-                            )
-                        else:
-                            px = img["pixels"]
-                            rows.append(
-                                (
-                                    "avi",
-                                    fi,
-                                    len(frames),
-                                    img["width"],
-                                    img["height"],
-                                    float(px.mean()) if px.size else None,
-                                )
-                            )
-                    continue
-                meta = (
-                    parse_gif_frames(p, every_n=every_n)
-                    if head[:4] == b"GIF8"
-                    else None
-                )
-                if meta is None:
-                    ids.append(i)
-                    rows.append((None,) * 6)
-                    continue
-                for fr in meta["frames"]:
-                    px = fr["pixels"]
-                    ids.append(i)
-                    rows.append(
-                        (
-                            "gif",
-                            fr["frame_idx"],
-                            meta["n_frames"],
-                            meta["screen_width"],
-                            meta["screen_height"],
-                            float(px.mean()) if px.size else None,
-                        )
-                    )
-            out = pd.DataFrame(
-                rows, columns=[f.name for f in MEDIA_FRAME_FIELDS]
+    def rows_of(p: Any) -> list[tuple] | None:
+        head = b"" if p is None else bytes(p[:12])
+        if head[:4] == b"RIFF" and head[8:12] == b"AVI ":
+            rows = _avi_frame_rows(p, every_n)
+            return None if rows is None else [("avi", *r) for r in rows]
+        if head[:4] == b"RIFF" and head[8:12] == b"WEBP":
+            fmt, dims = "webp", ("canvas_width", "canvas_height")
+            meta = parse_webp_frames(p, every_n=every_n)
+        elif head[:4] == b"GIF8":
+            fmt, dims = "gif", ("screen_width", "screen_height")
+            meta = parse_gif_frames(p, every_n=every_n)
+        else:
+            return None
+        if meta is None:
+            return None
+        return [
+            (
+                fmt,
+                fr["frame_idx"],
+                meta["n_frames"],
+                meta[dims[0]],
+                meta[dims[1]],
+                float(fr["pixels"].mean()) if fr["pixels"].size else None,
             )
-            out.insert(0, id_col, pd.Series(ids, dtype="object"))
-            yield out
+            for fr in meta["frames"]
+        ]
 
-    return df.select(id_col, payload_col).mapInPandas(
-        process, schema=out_schema
-    )
+    return map_payloads(df, id_col, payload_col, MEDIA_FRAME_FIELDS, rows_of)
 
 
 def make_animated_gif_payload(
@@ -1271,44 +1119,36 @@ def make_animated_gif_payload(
     pal = [((j * 37) % 256, (j * 59) % 256, (j * 83) % 256)
            for j in range(8)]
 
-    @pandas_udf("binary")
-    def _build(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            if i is None:
-                out.append(None)
-                continue
-            i = int(i)
-            w, h = 4 + i % 13, 3 + i % 7
-            c = 1 + i % 7
-            frames = [
-                dict(
-                    width=w, height=h,
-                    indices=[(i * 5 + k * 11) % 8 for k in range(w * h)],
-                    disposal=1, delay_cs=10 + i % 5,
-                ),
-                dict(
-                    left=1, top=1, width=w - 2, height=h - 2,
-                    indices=[7] * ((w - 2) * (h - 2)),
-                    disposal=3, delay_cs=20,
-                ),
-                dict(
-                    width=2, height=2,
-                    indices=[
-                        c if (2 * r + col) % 2 == 0 else 0
-                        for r in range(2) for col in range(2)
-                    ],
-                    transparent_index=0, disposal=2, delay_cs=30,
-                ),
-                dict(
-                    width=w, height=h, indices=[0] * (w * h),
-                    delay_cs=40,
-                ),
-            ]
-            out.append(encode_gif_animation(w, h, frames, pal))
-        return pd.Series(out)
+    def build_one(i: int) -> bytes:
+        w, h = 4 + i % 13, 3 + i % 7
+        c = 1 + i % 7
+        frames = [
+            dict(
+                width=w, height=h,
+                indices=[(i * 5 + k * 11) % 8 for k in range(w * h)],
+                disposal=1, delay_cs=10 + i % 5,
+            ),
+            dict(
+                left=1, top=1, width=w - 2, height=h - 2,
+                indices=[7] * ((w - 2) * (h - 2)),
+                disposal=3, delay_cs=20,
+            ),
+            dict(
+                width=2, height=2,
+                indices=[
+                    c if (2 * r + col) % 2 == 0 else 0
+                    for r in range(2) for col in range(2)
+                ],
+                transparent_index=0, disposal=2, delay_cs=30,
+            ),
+            dict(
+                width=w, height=h, indices=[0] * (w * h),
+                delay_cs=40,
+            ),
+        ]
+        return encode_gif_animation(w, h, frames, pal)
 
-    return df.withColumn(payload_col, _build(F.col(id_col)))
+    return build_payloads(df, id_col, payload_col, build_one)
 
 
 def make_wav_payload(
@@ -1323,34 +1163,26 @@ def make_wav_payload(
     ``((id*31 + i*17) % 4096) - 2048``."""
     import struct
 
-    @pandas_udf("binary")
-    def _build(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            if i is None:
-                out.append(None)
-                continue
-            i = int(i)
-            n_channels = 1 + i % 2
-            n_frames = 50 + i % 100
-            n_samples = n_frames * n_channels
-            samples = (
-                (i * 31 + np.arange(n_samples, dtype=np.int64) * 17) % 4096
-            ) - 2048
-            data = samples.astype("<i2").tobytes()
-            byte_rate = sample_rate * n_channels * 2
-            fmt_chunk = struct.pack(
-                "<HHIIHH", 1, n_channels, sample_rate, byte_rate, n_channels * 2, 16
-            )
-            body = (
-                b"WAVE"
-                + b"fmt " + struct.pack("<I", len(fmt_chunk)) + fmt_chunk
-                + b"data" + struct.pack("<I", len(data)) + data
-            )
-            out.append(b"RIFF" + struct.pack("<I", len(body)) + body)
-        return pd.Series(out)
+    def build_one(i: int) -> bytes:
+        n_channels = 1 + i % 2
+        n_frames = 50 + i % 100
+        n_samples = n_frames * n_channels
+        samples = (
+            (i * 31 + np.arange(n_samples, dtype=np.int64) * 17) % 4096
+        ) - 2048
+        data = samples.astype("<i2").tobytes()
+        byte_rate = sample_rate * n_channels * 2
+        fmt_chunk = struct.pack(
+            "<HHIIHH", 1, n_channels, sample_rate, byte_rate, n_channels * 2, 16
+        )
+        body = (
+            b"WAVE"
+            + b"fmt " + struct.pack("<I", len(fmt_chunk)) + fmt_chunk
+            + b"data" + struct.pack("<I", len(data)) + data
+        )
+        return b"RIFF" + struct.pack("<I", len(body)) + body
 
-    return df.withColumn(payload_col, _build(F.col(id_col)))
+    return build_payloads(df, id_col, payload_col, build_one)
 
 
 def frame_sample_plan(
@@ -1417,39 +1249,12 @@ def decode_audio_meta(
     the RMS of a FLAC clip equals the RMS of the PCM it encodes,
     which is what lets the ``flac_decode`` oracle replay the sample
     formula in closed form."""
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), *AUDIO_META_FIELDS]
-    )
 
-    def process(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for p in pdf[payload_col]:
-                meta = parse_audio(p)
-                if meta is None:
-                    rows.append((None,) * 7)
-                else:
-                    s = meta["samples"]
-                    rows.append(
-                        (
-                            meta["fmt"],
-                            meta["sample_rate"],
-                            meta["n_channels"],
-                            meta["bits_per_sample"],
-                            meta["n_frames"],
-                            meta["n_frames"] / meta["sample_rate"],
-                            float(np.sqrt(np.mean(np.square(s))))
-                            if s.size
-                            else None,
-                        )
-                    )
-            out = pd.DataFrame(
-                rows, columns=[f.name for f in AUDIO_META_FIELDS]
-            )
-            out.insert(0, id_col, pdf[id_col].values)
-            yield out
+    def rows_of(p: Any) -> list[tuple] | None:
+        meta = parse_audio(p)
+        return None if meta is None else [(meta["fmt"], *_audio_stats(meta))]
 
-    return df.select(id_col, payload_col).mapInPandas(process, schema=out_schema)
+    return map_payloads(df, id_col, payload_col, AUDIO_META_FIELDS, rows_of)
 
 
 def make_flac_payload(
@@ -1470,32 +1275,23 @@ def make_flac_payload(
     exclusively."""
     from .flac import encode_flac
 
-    @pandas_udf("binary")
-    def _build(ids: pd.Series) -> pd.Series:
-        out = []
-        modes = ["verbatim", "fixed1", "fixed2", "fixed3", "lpc2", "lpc4"]
-        for i in ids:
-            if i is None:
-                out.append(None)
-                continue
-            i = int(i)
-            n_channels = 1 + i % 2
-            n_frames = 50 + i % 100
-            n_samples = n_frames * n_channels
-            samples = (
-                (i * 31 + np.arange(n_samples, dtype=np.int64) * 17) % 4096
-            ) - 2048
-            out.append(
-                encode_flac(
-                    samples,
-                    sample_rate=sample_rate,
-                    n_channels=n_channels,
-                    subframe=modes[i % len(modes)],
-                )
-            )
-        return pd.Series(out)
+    modes = ["verbatim", "fixed1", "fixed2", "fixed3", "lpc2", "lpc4"]
 
-    return df.withColumn(payload_col, _build(F.col(id_col)))
+    def build_one(i: int) -> bytes:
+        n_channels = 1 + i % 2
+        n_frames = 50 + i % 100
+        n_samples = n_frames * n_channels
+        samples = (
+            (i * 31 + np.arange(n_samples, dtype=np.int64) * 17) % 4096
+        ) - 2048
+        return encode_flac(
+            samples,
+            sample_rate=sample_rate,
+            n_channels=n_channels,
+            subframe=modes[i % len(modes)],
+        )
+
+    return build_payloads(df, id_col, payload_col, build_one)
 
 
 def make_jpeg_payload(
@@ -1517,36 +1313,24 @@ def make_jpeg_payload(
     while the decode genuinely runs the Annex G scan accumulation."""
     from .jpeg import encode_jpeg, encode_jpeg_progressive
 
-    @pandas_udf("binary")
-    def _build(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            if i is None:
-                out.append(None)
-                continue
-            i = int(i)
-            bx, by = 1 + i % 3, 1 + i % 2
-            blocks = []
-            for b in range(bx * by):
-                dc = ((i * 7 + b * 13) % 160) - 80
-                blocks.append([dc] + [0] * 63)
-            if i % 3 == 2:
-                out.append(
-                    encode_jpeg_progressive(
-                        8 * bx, 8 * by, [blocks],
-                        restart_interval=2 if i % 5 == 0 else 0,
-                    )
-                )
-            else:
-                out.append(
-                    encode_jpeg(
-                        8 * bx, 8 * by, [blocks],
-                        restart_interval=2 if i % 5 == 0 else 0,
-                    )
-                )
-        return pd.Series(out)
+    def build_one(i: int) -> bytes:
+        bx, by = 1 + i % 3, 1 + i % 2
+        blocks = []
+        for b in range(bx * by):
+            dc = ((i * 7 + b * 13) % 160) - 80
+            blocks.append([dc] + [0] * 63)
+        if i % 3 == 2:
+            return encode_jpeg_progressive(
+                8 * bx, 8 * by, [blocks],
+                restart_interval=2 if i % 5 == 0 else 0,
+            )
+        else:
+            return encode_jpeg(
+                8 * bx, 8 * by, [blocks],
+                restart_interval=2 if i % 5 == 0 else 0,
+            )
 
-    return df.withColumn(payload_col, _build(F.col(id_col)))
+    return build_payloads(df, id_col, payload_col, build_one)
 
 
 def make_tiff_payload(
@@ -1569,39 +1353,30 @@ def make_tiff_payload(
     pal = [((j * 37) % 256, (j * 59) % 256, (j * 83) % 256)
            for j in range(8)]
 
-    @pandas_udf("binary")
-    def _build(ids: pd.Series) -> pd.Series:
-        comps = ["none", "packbits", "lzw"]
-        out = []
-        for i in ids:
-            if i is None:
-                out.append(None)
-                continue
-            i = int(i)
-            w, h = 4 + i % 13, 3 + i % 7
-            arm = i % 3
-            if arm == 0:
-                phot, px = "gray", [(i * 13 + k * 7) % 256
-                                    for k in range(w * h)]
-            elif arm == 1:
-                phot, px = "rgb", [(i * 7 + k * 13) % 256
-                                   for k in range(w * h * 3)]
-            else:
-                phot, px = "palette", [(i * 5 + k * 11) % 8
-                                       for k in range(w * h)]
-            out.append(
-                encode_tiff(
-                    w, h, px, phot,
-                    palette=pal if phot == "palette" else None,
-                    compression=comps[(i // 3) % 3],
-                    predictor=(i % 2 == 0),
-                    rows_per_strip=2 if i % 4 == 0 else None,
-                    byte_order=">" if i % 5 == 0 else "<",
-                )
-            )
-        return pd.Series(out)
+    comps = ["none", "packbits", "lzw"]
 
-    return df.withColumn(payload_col, _build(F.col(id_col)))
+    def build_one(i: int) -> bytes:
+        w, h = 4 + i % 13, 3 + i % 7
+        arm = i % 3
+        if arm == 0:
+            phot, px = "gray", [(i * 13 + k * 7) % 256
+                                for k in range(w * h)]
+        elif arm == 1:
+            phot, px = "rgb", [(i * 7 + k * 13) % 256
+                               for k in range(w * h * 3)]
+        else:
+            phot, px = "palette", [(i * 5 + k * 11) % 8
+                                   for k in range(w * h)]
+        return encode_tiff(
+            w, h, px, phot,
+            palette=pal if phot == "palette" else None,
+            compression=comps[(i // 3) % 3],
+            predictor=(i % 2 == 0),
+            rows_per_strip=2 if i % 4 == 0 else None,
+            byte_order=">" if i % 5 == 0 else "<",
+        )
+
+    return build_payloads(df, id_col, payload_col, build_one)
 
 
 def make_bmp_payload(
@@ -1621,44 +1396,30 @@ def make_bmp_payload(
     pal = [((j * 37) % 256, (j * 59) % 256, (j * 83) % 256)
            for j in range(8)]
 
-    @pandas_udf("binary")
-    def _build(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            if i is None:
-                out.append(None)
-                continue
-            i = int(i)
-            w, h = 4 + i % 13, 3 + i % 7
-            arm = i % 3
-            td = i % 7 == 0
-            if arm == 0:
-                out.append(
-                    encode_bmp(
-                        w, h,
-                        [(i * 7 + k * 13) % 256 for k in range(w * h * 3)],
-                        top_down=td,
-                    )
-                )
-            elif arm == 1:
-                out.append(
-                    encode_bmp(
-                        w, h,
-                        [(i * 5 + k * 11) % 8 for k in range(w * h)],
-                        bpp=8, palette=pal, top_down=td,
-                    )
-                )
-            else:
-                out.append(
-                    encode_bmp(
-                        w, h,
-                        [(k // 4 + i) % 8 for k in range(w * h)],
-                        bpp=8, palette=pal, rle=True,
-                    )
-                )
-        return pd.Series(out)
+    def build_one(i: int) -> bytes:
+        w, h = 4 + i % 13, 3 + i % 7
+        arm = i % 3
+        td = i % 7 == 0
+        if arm == 0:
+            return encode_bmp(
+                w, h,
+                [(i * 7 + k * 13) % 256 for k in range(w * h * 3)],
+                top_down=td,
+            )
+        elif arm == 1:
+            return encode_bmp(
+                w, h,
+                [(i * 5 + k * 11) % 8 for k in range(w * h)],
+                bpp=8, palette=pal, top_down=td,
+            )
+        else:
+            return encode_bmp(
+                w, h,
+                [(k // 4 + i) % 8 for k in range(w * h)],
+                bpp=8, palette=pal, rle=True,
+            )
 
-    return df.withColumn(payload_col, _build(F.col(id_col)))
+    return build_payloads(df, id_col, payload_col, build_one)
 
 
 def make_webp_payload(
@@ -1679,29 +1440,21 @@ def make_webp_payload(
     dimensions and raster mean."""
     from .webp import encode_webp
 
-    @pandas_udf("binary")
-    def _build(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            if i is None:
-                out.append(None)
-                continue
-            i = int(i)
-            w, h = 4 + i % 13, 3 + i % 7
-            ch = 3 + (i % 2)
-            n = w * h * ch
-            arm = i % 3
-            k = np.arange(n, dtype=np.int64)
-            if arm == 0:
-                px = (i * 7 + k * 13) % 256
-            elif arm == 1:
-                px = 200 * ((i + k) % 2)
-            else:
-                px = np.full(n, i % 256, dtype=np.int64)
-            out.append(encode_webp(px, w, h, ch))
-        return pd.Series(out)
+    def build_one(i: int) -> bytes:
+        w, h = 4 + i % 13, 3 + i % 7
+        ch = 3 + (i % 2)
+        n = w * h * ch
+        arm = i % 3
+        k = np.arange(n, dtype=np.int64)
+        if arm == 0:
+            px = (i * 7 + k * 13) % 256
+        elif arm == 1:
+            px = 200 * ((i + k) % 2)
+        else:
+            px = np.full(n, i % 256, dtype=np.int64)
+        return encode_webp(px, w, h, ch)
 
-    return df.withColumn(payload_col, _build(F.col(id_col)))
+    return build_payloads(df, id_col, payload_col, build_one)
 
 
 def make_webp_anim_payload(
@@ -1721,36 +1474,28 @@ def make_webp_anim_payload(
     state is a closed form DuckDB can state outright."""
     from .webp import encode_webp_animation
 
-    @pandas_udf("binary")
-    def _build(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            if i is None:
-                out.append(None)
-                continue
-            i = int(i)
-            w, h = 4 + i % 13, 3 + i % 7
-            frames = [
+    def build_one(i: int) -> bytes:
+        w, h = 4 + i % 13, 3 + i % 7
+        frames = [
+            dict(
+                x=0, y=0, width=w, height=h, channels=3,
+                pixels=((i * 7 + np.arange(w * h * 3) * 13) % 256),
+                duration_ms=40,
+            ),
+            dict(
+                x=2, y=2, width=w - 2, height=1, channels=3,
+                pixels=((i * 5 + np.arange((w - 2) * 3) * 11) % 256),
+                duration_ms=50,
+            ),
+        ]
+        if i % 2 == 1:
+            frames.append(
                 dict(
-                    x=0, y=0, width=w, height=h, channels=3,
-                    pixels=((i * 7 + np.arange(w * h * 3) * 13) % 256),
-                    duration_ms=40,
-                ),
-                dict(
-                    x=2, y=2, width=w - 2, height=1, channels=3,
-                    pixels=((i * 5 + np.arange((w - 2) * 3) * 11) % 256),
-                    duration_ms=50,
-                ),
-            ]
-            if i % 2 == 1:
-                frames.append(
-                    dict(
-                        x=0, y=0, width=w, height=1, channels=3,
-                        pixels=((i * 3 + np.arange(w * 3) * 17) % 256),
-                        duration_ms=60,
-                    )
+                    x=0, y=0, width=w, height=1, channels=3,
+                    pixels=((i * 3 + np.arange(w * 3) * 17) % 256),
+                    duration_ms=60,
                 )
-            out.append(encode_webp_animation(w, h, frames))
-        return pd.Series(out)
+            )
+        return encode_webp_animation(w, h, frames)
 
-    return df.withColumn(payload_col, _build(F.col(id_col)))
+    return build_payloads(df, id_col, payload_col, build_one)

@@ -40,13 +40,11 @@ from __future__ import annotations
 
 import re
 import zlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
+
+from ._payload import build_payloads, map_payloads
 
 __all__ = ["parse_pdf", "encode_pdf", "extract_pdf_text", "make_pdf_payload"]
 
@@ -1002,28 +1000,14 @@ def extract_pdf_text(
     metadata rather than failing the stage. At 100 TB this is the
     same embarrassingly-parallel shape as the image/audio decoders:
     per-payload CPU with zero shuffles."""
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), *PDF_META_FIELDS]
-    )
 
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_batch in batches:
-            rows = []
-            for p in pdf_batch[payload_col]:
-                meta = parse_pdf(p)
-                if meta is None:
-                    rows.append((None, None, None))
-                else:
-                    rows.append(
-                        (meta["n_pages"], meta["n_chars"], meta["text"])
-                    )
-            out = pd.DataFrame(
-                rows, columns=[f.name for f in PDF_META_FIELDS]
-            )
-            out.insert(0, id_col, pdf_batch[id_col].values)
-            yield out
+    def rows_of(p: bytes | None) -> list[tuple] | None:
+        meta = parse_pdf(p)
+        if meta is None:
+            return None
+        return [(meta["n_pages"], meta["n_chars"], meta["text"])]
 
-    return df.select(id_col, payload_col).mapInPandas(process, schema=out_schema)
+    return map_payloads(df, id_col, payload_col, PDF_META_FIELDS, rows_of)
 
 
 def make_pdf_payload(
@@ -1047,33 +1031,23 @@ def make_pdf_payload(
     DuckDB states it outright while :func:`parse_pdf` genuinely
     inflates and walks whichever flavor it gets."""
 
-    @pandas_udf("binary")
-    def _build(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            if i is None:
-                out.append(None)
-                continue
-            i = int(i)
-            pages = [
-                [f"Doc {i} page {p}", f"body {(i * 7 + p) % 97} (pdf)"]
-                for p in range(1 + i % 3)
-            ]
-            out.append(
-                encode_pdf(
-                    pages,
-                    compress=(i % 2 == 0),
-                    variant=i,
-                    nest_kids=(i % 7 == 0),
-                    split_contents=(i % 5 == 0),
-                    incremental_title=(f"rev{i}" if i % 3 == 0 else None),
-                    xref_stream=(i % 2 == 1),
-                    objstm=(i % 8 in (1, 3)),
-                    xref_predictor=(
-                        12 if i % 8 == 5 else (2 if i % 8 == 7 else None)
-                    ),
-                )
-            )
-        return pd.Series(out)
+    def build_one(i: int) -> bytes:
+        pages = [
+            [f"Doc {i} page {p}", f"body {(i * 7 + p) % 97} (pdf)"]
+            for p in range(1 + i % 3)
+        ]
+        return encode_pdf(
+            pages,
+            compress=(i % 2 == 0),
+            variant=i,
+            nest_kids=(i % 7 == 0),
+            split_contents=(i % 5 == 0),
+            incremental_title=(f"rev{i}" if i % 3 == 0 else None),
+            xref_stream=(i % 2 == 1),
+            objstm=(i % 8 in (1, 3)),
+            xref_predictor=(
+                12 if i % 8 == 5 else (2 if i % 8 == 7 else None)
+            ),
+        )
 
-    return df.withColumn(payload_col, _build(F.col(id_col)))
+    return build_payloads(df, id_col, payload_col, build_one)

@@ -30,15 +30,11 @@ and the ``video_frames`` oracle states them outright.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
+from ._payload import build_payloads, map_payloads
 from .jpeg import encode_jpeg, parse_jpeg
 
 __all__ = ["parse_avi_frames", "video_frames", "make_avi_payload"]
@@ -107,46 +103,38 @@ def video_frames(
     (the archive stays attributable either way)."""
     if every_n < 1:
         raise ValueError("every_n must be >= 1")
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), *VIDEO_FRAME_FIELDS]
+    return map_payloads(
+        df,
+        id_col,
+        payload_col,
+        VIDEO_FRAME_FIELDS,
+        lambda p: _avi_frame_rows(p, every_n),
     )
 
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = []
-            rows = []
-            for i, p in zip(pdf[id_col], pdf[payload_col]):
-                frames = parse_avi_frames(p)
-                if frames is None:
-                    ids.append(i)
-                    rows.append((None, None, None, None, None))
-                    continue
-                total = len(frames)
-                for fi in range(0, total, every_n):
-                    img = parse_jpeg(frames[fi])
-                    ids.append(i)
-                    if img is None:
-                        rows.append((fi, total, None, None, None))
-                    else:
-                        px = img["pixels"]
-                        rows.append(
-                            (
-                                fi,
-                                total,
-                                img["width"],
-                                img["height"],
-                                float(px.mean()) if px.size else None,
-                            )
-                        )
-            out = pd.DataFrame(
-                rows, columns=[f.name for f in VIDEO_FRAME_FIELDS]
+
+def _avi_frame_rows(payload: bytes, every_n: int) -> list[tuple] | None:
+    """``VIDEO_FRAME_FIELDS`` rows for every ``every_n``-th frame of an
+    MJPEG AVI, or ``None`` when the container does not parse."""
+    frames = parse_avi_frames(payload)
+    if frames is None:
+        return None
+    rows = []
+    for fi in range(0, len(frames), every_n):
+        img = parse_jpeg(frames[fi])
+        if img is None:
+            rows.append((fi, len(frames), None, None, None))
+        else:
+            px = img["pixels"]
+            rows.append(
+                (
+                    fi,
+                    len(frames),
+                    img["width"],
+                    img["height"],
+                    float(px.mean()) if px.size else None,
+                )
             )
-            out.insert(0, id_col, pd.Series(ids, dtype="object"))
-            yield out
-
-    return df.select(id_col, payload_col).mapInPandas(
-        process, schema=out_schema
-    )
+    return rows
 
 
 def make_avi_bytes(
@@ -199,23 +187,15 @@ def make_avi_payload(
     ``128 + ((id*11 + f*17 + b*23) % 160) - 80`` — the closed form
     the ``video_frames`` oracle states."""
 
-    @pandas_udf("binary")
-    def _build(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            if i is None:
-                out.append(None)
-                continue
-            i = int(i)
-            n = 4 + i % 5
-            frames = []
-            for f in range(n):
-                blocks = [
-                    [((i * 11 + f * 17 + b * 23) % 160) - 80] + [0] * 63
-                    for b in range(2)
-                ]
-                frames.append(encode_jpeg(16, 8, [blocks]))
-            out.append(make_avi_bytes(frames, 16, 8))
-        return pd.Series(out)
+    def build_one(i: int) -> bytes:
+        n = 4 + i % 5
+        frames = []
+        for f in range(n):
+            blocks = [
+                [((i * 11 + f * 17 + b * 23) % 160) - 80] + [0] * 63
+                for b in range(2)
+            ]
+            frames.append(encode_jpeg(16, 8, [blocks]))
+        return make_avi_bytes(frames, 16, 8)
 
-    return df.withColumn(payload_col, _build(F.col(id_col)))
+    return build_payloads(df, id_col, payload_col, build_one)

@@ -20,13 +20,12 @@ multi-member loop). Header parsing follows the spec: version line
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.functions import pandas_udf
+
+from ._payload import build_payloads, map_payloads
 
 __all__ = [
     "cdx_index",
@@ -367,44 +366,24 @@ def http_responses(
     malformed messages yield null columns. ``passthrough`` columns
     (e.g. ``rec_idx``, ``target_uri``) ride through the stage so a
     composed crawl query needs no join back."""
-    passthrough = [c for c in (passthrough or []) if c != id_col]
-    pass_fields = [df.schema[c] for c in passthrough]
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            *pass_fields,
-            *HTTP_RESPONSE_FIELDS,
-        ]
-    )
 
-    def process(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for p in pdf[body_col]:
-                meta = parse_http_response(p)
-                if meta is None:
-                    rows.append((None,) * 6)
-                else:
-                    rows.append(
-                        (
-                            meta["status"],
-                            meta["content_type"],
-                            meta["charset"],
-                            len(meta["payload"]),
-                            meta["payload"],
-                            meta["text"],
-                        )
-                    )
-            out = pd.DataFrame(
-                rows, columns=[f.name for f in HTTP_RESPONSE_FIELDS]
+    def rows_of(p: bytes | None) -> list[tuple] | None:
+        meta = parse_http_response(p)
+        if meta is None:
+            return None
+        return [
+            (
+                meta["status"],
+                meta["content_type"],
+                meta["charset"],
+                len(meta["payload"]),
+                meta["payload"],
+                meta["text"],
             )
-            for c in reversed(passthrough):
-                out.insert(0, c, pdf[c].values)
-            out.insert(0, id_col, pdf[id_col].values)
-            yield out
+        ]
 
-    return df.select(id_col, *passthrough, body_col).mapInPandas(
-        process, schema=out_schema
+    return map_payloads(
+        df, id_col, body_col, HTTP_RESPONSE_FIELDS, rows_of, passthrough
     )
 
 
@@ -417,40 +396,24 @@ def warc_records(
     no shuffle; at 100 TB the cost is the archive scan). A corrupt
     archive yields ONE null-record row (``rec_idx`` null) so bad
     inputs stay visible and attributable instead of vanishing."""
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), *WARC_RECORD_FIELDS]
-    )
 
-    def process(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids, rows = [], []
-            for i, p in zip(pdf[id_col], pdf[payload_col]):
-                recs = parse_warc(p)
-                if recs is None:
-                    ids.append(i)
-                    rows.append((None, None, None, None, None, None))
-                    continue
-                for j, r in enumerate(recs):
-                    ids.append(i)
-                    rows.append(
-                        (
-                            j,
-                            r["rec_type"],
-                            r["target_uri"],
-                            r["warc_date"],
-                            r["content_length"],
-                            r["body"],
-                        )
-                    )
-            out = pd.DataFrame(
-                rows, columns=[f.name for f in WARC_RECORD_FIELDS]
+    def rows_of(p: bytes | None) -> list[tuple] | None:
+        recs = parse_warc(p)
+        if recs is None:
+            return None
+        return [
+            (
+                j,
+                r["rec_type"],
+                r["target_uri"],
+                r["warc_date"],
+                r["content_length"],
+                r["body"],
             )
-            out.insert(0, id_col, pd.Series(ids, dtype="object"))
-            yield out
+            for j, r in enumerate(recs)
+        ]
 
-    return df.select(id_col, payload_col).mapInPandas(
-        process, schema=out_schema
-    )
+    return map_payloads(df, id_col, payload_col, WARC_RECORD_FIELDS, rows_of)
 
 
 def cdx_index(
@@ -900,31 +863,21 @@ def make_warc_payload(
         head.append(b"Content-Length: %d" % len(body))
         return b"\r\n".join(head) + b"\r\n\r\n" + body + b"\r\n\r\n"
 
-    @pandas_udf("binary")
-    def _build(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            if i is None:
-                out.append(None)
-                continue
-            i = int(i)
-            recs = [_record("warcinfo", None, b"software: flycatcher")]
-            for j in range(1 + i % 3):
-                body = (f"body {i} {j} " + "x" * (i % 7)).encode()
-                recs.append(
-                    _record("response", f"http://example.com/{i}/{j}", body)
-                )
-            if gzip_mode == "none":
-                out.append(b"".join(recs))
-            elif gzip_mode == "whole":
-                out.append(_gzip.compress(b"".join(recs), mtime=0))
-            else:
-                out.append(
-                    b"".join(_gzip.compress(r, mtime=0) for r in recs)
-                )
-        return pd.Series(out)
+    def build_one(i: int) -> bytes:
+        recs = [_record("warcinfo", None, b"software: flycatcher")]
+        for j in range(1 + i % 3):
+            body = (f"body {i} {j} " + "x" * (i % 7)).encode()
+            recs.append(
+                _record("response", f"http://example.com/{i}/{j}", body)
+            )
+        if gzip_mode == "none":
+            return b"".join(recs)
+        elif gzip_mode == "whole":
+            return _gzip.compress(b"".join(recs), mtime=0)
+        else:
+            return b"".join(_gzip.compress(r, mtime=0) for r in recs)
 
-    return df.withColumn(payload_col, _build(F.col(id_col)))
+    return build_payloads(df, id_col, payload_col, build_one)
 
 
 def make_http_warc_payload(
@@ -971,48 +924,40 @@ def make_http_warc_payload(
             out += b"%x\r\n" % len(rest) + rest + b"\r\n"
         return out + b"0\r\nX-Trailer: t\r\n\r\n"
 
-    @pandas_udf("binary")
-    def _build(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            if i is None:
-                out.append(None)
-                continue
-            i = int(i)
-            recs = []
-            p0 = f"Doc {i} rec 0 n {(i * 11) % 89} é".encode("utf-8")
-            recs.append(
-                _record(
-                    f"http://example.com/{i}/0",
-                    b"HTTP/1.1 200 OK\r\n"
-                    b"Content-Type: text/html; charset=utf-8\r\n"
-                    b"Content-Length: %d\r\n\r\n" % len(p0) + p0,
-                )
+    def build_one(i: int) -> bytes:
+        recs = []
+        p0 = f"Doc {i} rec 0 n {(i * 11) % 89} é".encode("utf-8")
+        recs.append(
+            _record(
+                f"http://example.com/{i}/0",
+                b"HTTP/1.1 200 OK\r\n"
+                b"Content-Type: text/html; charset=utf-8\r\n"
+                b"Content-Length: %d\r\n\r\n" % len(p0) + p0,
             )
-            p1 = f"Doc {i} rec 1 n {(i * 11 + 1) % 89} é".encode(
-                "latin-1"
+        )
+        p1 = f"Doc {i} rec 1 n {(i * 11 + 1) % 89} é".encode(
+            "latin-1"
+        )
+        recs.append(
+            _record(
+                f"http://example.com/{i}/1",
+                b"HTTP/1.1 301 Moved Permanently\r\n"
+                b"Location: http://example.com/new\r\n"
+                b"Content-Type: text/html; charset=latin-1\r\n"
+                b"Transfer-Encoding: chunked\r\n\r\n" + _chunk(p1),
             )
-            recs.append(
-                _record(
-                    f"http://example.com/{i}/1",
-                    b"HTTP/1.1 301 Moved Permanently\r\n"
-                    b"Location: http://example.com/new\r\n"
-                    b"Content-Type: text/html; charset=latin-1\r\n"
-                    b"Transfer-Encoding: chunked\r\n\r\n" + _chunk(p1),
-                )
+        )
+        p2 = f"Doc {i} rec 2 n {(i * 11 + 2) % 89}".encode("ascii")
+        recs.append(
+            _record(
+                f"http://example.com/{i}/2",
+                b"HTTP/1.1 404 Not Found\r\n"
+                b"Content-Type: text/plain\r\n"
+                b"Content-Encoding: gzip\r\n"
+                b"Transfer-Encoding: chunked\r\n\r\n"
+                + _chunk(_gzip.compress(p2, mtime=0)),
             )
-            p2 = f"Doc {i} rec 2 n {(i * 11 + 2) % 89}".encode("ascii")
-            recs.append(
-                _record(
-                    f"http://example.com/{i}/2",
-                    b"HTTP/1.1 404 Not Found\r\n"
-                    b"Content-Type: text/plain\r\n"
-                    b"Content-Encoding: gzip\r\n"
-                    b"Transfer-Encoding: chunked\r\n\r\n"
-                    + _chunk(_gzip.compress(p2, mtime=0)),
-                )
-            )
-            out.append(b"".join(recs))
-        return pd.Series(out)
+        )
+        return b"".join(recs)
 
-    return df.withColumn(payload_col, _build(F.col(id_col)))
+    return build_payloads(df, id_col, payload_col, build_one)

@@ -53,13 +53,13 @@ from __future__ import annotations
 
 import io
 import tarfile
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
+
+from ._payload import build_payloads, map_payloads
 
 __all__ = [
     "tar_members",
@@ -92,6 +92,17 @@ def _iter_members(payload: bytes):
             yield key, ext, body
 
 
+def _read_tar(payload: bytes | None) -> list[tuple[str, str, bytes]]:
+    """Every regular member of a tar shard, or ``[]`` when the shard is
+    null or unreadable."""
+    if payload is None:
+        return []
+    try:
+        return list(_iter_members(payload))
+    except (tarfile.TarError, OSError, EOFError):
+        return []
+
+
 TAR_MEMBER_FIELDS = [
     T.StructField("member_idx", T.LongType()),
     T.StructField("sample_key", T.StringType()),
@@ -110,34 +121,14 @@ def tar_members(
     archive, so shard ORDER is checkable downstream (the
     ``webdataset_roundtrip`` oracle replays it). Unreadable shards
     yield a single all-null member row."""
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), *TAR_MEMBER_FIELDS]
-    )
 
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, rows = [], []
-            for i, p in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    members = list(_iter_members(p)) if p is not None else None
-                except (tarfile.TarError, OSError, EOFError):
-                    members = None
-                if not members:
-                    ids.append(i)
-                    rows.append((None, None, None, None, None))
-                    continue
-                for j, (key, ext, body) in enumerate(members):
-                    ids.append(i)
-                    rows.append((j, key, ext, len(body), body))
-            out = pd.DataFrame(
-                rows, columns=[f.name for f in TAR_MEMBER_FIELDS]
-            )
-            out.insert(0, id_col, pd.Series(ids, dtype="object"))
-            yield out
+    def rows_of(p: bytes | None) -> list[tuple] | None:
+        return [
+            (j, key, ext, len(body), body)
+            for j, (key, ext, body) in enumerate(_read_tar(p))
+        ] or None
 
-    return df.select(id_col, payload_col).mapInPandas(
-        process, schema=out_schema
-    )
+    return map_payloads(df, id_col, payload_col, TAR_MEMBER_FIELDS, rows_of)
 
 
 SAMPLE_FIELDS = [
@@ -155,42 +146,21 @@ def webdataset_samples(
     """One row per training sample: members grouped by key INSIDE the
     Arrow stage (WebDataset stores a sample's files adjacently, so no
     shuffle is needed) with an ``ext -> payload`` map column."""
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), *SAMPLE_FIELDS]
-    )
 
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, rows = [], []
-            for i, p in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    members = list(_iter_members(p)) if p is not None else None
-                except (tarfile.TarError, OSError, EOFError):
-                    members = None
-                if not members:
-                    ids.append(i)
-                    rows.append((None, None, None))
-                    continue
-                cur_key, parts = None, {}
-                for key, ext, body in members:
-                    if cur_key is not None and key != cur_key:
-                        ids.append(i)
-                        rows.append((cur_key, len(parts), dict(parts)))
-                        parts = {}
-                    cur_key = key
-                    parts[ext] = body
-                if cur_key is not None:
-                    ids.append(i)
-                    rows.append((cur_key, len(parts), dict(parts)))
-            out = pd.DataFrame(
-                rows, columns=[f.name for f in SAMPLE_FIELDS]
-            )
-            out.insert(0, id_col, pd.Series(ids, dtype="object"))
-            yield out
+    def rows_of(p: bytes | None) -> list[tuple] | None:
+        rows = []
+        cur_key, parts = None, {}
+        for key, ext, body in _read_tar(p):
+            if cur_key is not None and key != cur_key:
+                rows.append((cur_key, len(parts), dict(parts)))
+                parts = {}
+            cur_key = key
+            parts[ext] = body
+        if cur_key is not None:
+            rows.append((cur_key, len(parts), dict(parts)))
+        return rows or None
 
-    return df.select(id_col, payload_col).mapInPandas(
-        process, schema=out_schema
-    )
+    return map_payloads(df, id_col, payload_col, SAMPLE_FIELDS, rows_of)
 
 
 def write_webdataset(
@@ -308,29 +278,21 @@ def make_webdataset_payload(
     WebDataset contract."""
     from .jpeg import encode_jpeg
 
-    @pandas_udf("binary")
-    def _build(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            if i is None:
-                out.append(None)
-                continue
-            i = int(i)
-            buf = io.BytesIO()
-            with tarfile.open(fileobj=buf, mode="w") as tf:
-                for k in range(2 + i % 3):
-                    txt = f"caption {i} {k}".encode()
-                    dc = ((i * 5 + k * 9) % 160) - 80
-                    jpg = encode_jpeg(8, 8, [[[dc] + [0] * 63]])
-                    for ext, body in (("txt", txt), ("jpg", jpg)):
-                        info = tarfile.TarInfo(name=f"s{i}_{k}.{ext}")
-                        info.size = len(body)
-                        info.mtime = 0
-                        tf.addfile(info, io.BytesIO(body))
-            out.append(buf.getvalue())
-        return pd.Series(out)
+    def build_one(i: int) -> bytes:
+        buf = io.BytesIO()
+        with tarfile.open(fileobj=buf, mode="w") as tf:
+            for k in range(2 + i % 3):
+                txt = f"caption {i} {k}".encode()
+                dc = ((i * 5 + k * 9) % 160) - 80
+                jpg = encode_jpeg(8, 8, [[[dc] + [0] * 63]])
+                for ext, body in (("txt", txt), ("jpg", jpg)):
+                    info = tarfile.TarInfo(name=f"s{i}_{k}.{ext}")
+                    info.size = len(body)
+                    info.mtime = 0
+                    tf.addfile(info, io.BytesIO(body))
+        return buf.getvalue()
 
-    return df.withColumn(payload_col, _build(F.col(id_col)))
+    return build_payloads(df, id_col, payload_col, build_one)
 
 
 # ---------------------------------------------------------------------------
@@ -361,62 +323,44 @@ def zip_samples(
 
     from .warc import MAX_DECODED_BYTES
 
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), *SAMPLE_FIELDS]
-    )
+    def rows_of(p: bytes | None) -> list[tuple] | None:
+        samples: dict[str, dict] = {}
+        try:
+            if p is None:
+                raise ValueError("null payload")
+            with zipfile.ZipFile(io.BytesIO(bytes(p))) as zf:
+                total = 0
+                for info in zf.infolist():
+                    if info.is_dir():
+                        continue
+                    name = info.filename.rsplit("/", 1)[-1]
+                    if "." not in name:
+                        continue
+                    total += info.file_size
+                    if (
+                        info.file_size > MAX_DECODED_BYTES
+                        or total > MAX_DECODED_BYTES
+                    ):
+                        raise ValueError("zip decompression bomb")
+                    key, ext = name.rsplit(".", 1)
+                    samples.setdefault(key, {})[ext] = zf.read(info)
+        except (
+            zipfile.BadZipFile,
+            ValueError,
+            OSError,
+            EOFError,
+            NotImplementedError,  # unsupported compression
+            RuntimeError,  # encrypted member
+            zlib.error,  # corrupt DEFLATE stream mid-read
+            struct.error,  # truncated fixed-size record
+        ):
+            return None
+        return [
+            (key, len(samples[key]), dict(samples[key]))
+            for key in sorted(samples)
+        ] or None
 
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, rows = [], []
-            for i, p in zip(pdf[id_col], pdf[payload_col]):
-                samples: dict[str, dict] = {}
-                try:
-                    if p is None:
-                        raise ValueError("null payload")
-                    with zipfile.ZipFile(io.BytesIO(bytes(p))) as zf:
-                        total = 0
-                        for info in zf.infolist():
-                            if info.is_dir():
-                                continue
-                            name = info.filename.rsplit("/", 1)[-1]
-                            if "." not in name:
-                                continue
-                            total += info.file_size
-                            if (
-                                info.file_size > MAX_DECODED_BYTES
-                                or total > MAX_DECODED_BYTES
-                            ):
-                                raise ValueError("zip decompression bomb")
-                            key, ext = name.rsplit(".", 1)
-                            samples.setdefault(key, {})[ext] = zf.read(
-                                info
-                            )
-                except (
-                    zipfile.BadZipFile,
-                    ValueError,
-                    OSError,
-                    EOFError,
-                    NotImplementedError,  # unsupported compression
-                    RuntimeError,  # encrypted member
-                    zlib.error,  # corrupt DEFLATE stream mid-read
-                    struct.error,  # truncated fixed-size record
-                ):
-                    samples = {}
-                if not samples:
-                    ids.append(i)
-                    rows.append((None, None, None))
-                    continue
-                for key in sorted(samples):
-                    parts = samples[key]
-                    ids.append(i)
-                    rows.append((key, len(parts), dict(parts)))
-            out = pd.DataFrame(rows, columns=[f.name for f in SAMPLE_FIELDS])
-            out.insert(0, id_col, pd.Series(ids, dtype="object"))
-            yield out
-
-    return df.select(id_col, payload_col).mapInPandas(
-        process, schema=out_schema
-    )
+    return map_payloads(df, id_col, payload_col, SAMPLE_FIELDS, rows_of)
 
 
 def make_zip_payload(
@@ -431,36 +375,28 @@ def make_zip_payload(
     byte-stable output."""
     import zipfile
 
-    @pandas_udf("binary")
-    def _build(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            if i is None:
-                out.append(None)
-                continue
-            i = int(i)
-            comp = zipfile.ZIP_DEFLATED if i % 2 else zipfile.ZIP_STORED
-            buf = io.BytesIO()
-            with zipfile.ZipFile(buf, "w", compression=comp) as zf:
-                for k in range(2 + i % 3):
-                    for ext, body in (
-                        ("txt", f"caption {i} {k}"),
-                        (
-                            "json",
-                            '{"id":%d,"k":%d,"n":%d}'
-                            % (i, k, 10 + (i + k) % 50),
-                        ),
-                    ):
-                        info = zipfile.ZipInfo(
-                            f"z{i}_{k}.{ext}",
-                            date_time=(1980, 1, 1, 0, 0, 0),
-                        )
-                        info.compress_type = comp
-                        zf.writestr(info, body)
-            out.append(buf.getvalue())
-        return pd.Series(out)
+    def build_one(i: int) -> bytes:
+        comp = zipfile.ZIP_DEFLATED if i % 2 else zipfile.ZIP_STORED
+        buf = io.BytesIO()
+        with zipfile.ZipFile(buf, "w", compression=comp) as zf:
+            for k in range(2 + i % 3):
+                for ext, body in (
+                    ("txt", f"caption {i} {k}"),
+                    (
+                        "json",
+                        '{"id":%d,"k":%d,"n":%d}'
+                        % (i, k, 10 + (i + k) % 50),
+                    ),
+                ):
+                    info = zipfile.ZipInfo(
+                        f"z{i}_{k}.{ext}",
+                        date_time=(1980, 1, 1, 0, 0, 0),
+                    )
+                    info.compress_type = comp
+                    zf.writestr(info, body)
+        return buf.getvalue()
 
-    return df.withColumn(payload_col, _build(F.col(id_col)))
+    return build_payloads(df, id_col, payload_col, build_one)
 
 
 def zip_members(
@@ -481,65 +417,48 @@ def zip_members(
 
     from .warc import MAX_DECODED_BYTES
 
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), *TAR_MEMBER_FIELDS]
-    )
+    def rows_of(p: bytes | None) -> list[tuple] | None:
+        members = []
+        try:
+            if p is None:
+                raise ValueError("null payload")
+            with zipfile.ZipFile(io.BytesIO(bytes(p))) as zf:
+                total = 0
+                for info in zf.infolist():
+                    if info.is_dir():
+                        continue
+                    total += info.file_size
+                    if (
+                        info.file_size > MAX_DECODED_BYTES
+                        or total > MAX_DECODED_BYTES
+                    ):
+                        raise ValueError("zip decompression bomb")
+                    name = info.filename
+                    base = name.rfind("/") + 1
+                    dot = name.find(".", base)
+                    key, ext = (
+                        (name, "")
+                        if dot < 0
+                        else (name[:dot], name[dot + 1 :])
+                    )
+                    members.append((key, ext, zf.read(info)))
+        except (
+            zipfile.BadZipFile,
+            ValueError,
+            OSError,
+            EOFError,
+            NotImplementedError,
+            RuntimeError,
+            zlib.error,  # corrupt DEFLATE stream mid-read
+            struct.error,  # truncated fixed-size record
+        ):
+            return None
+        return [
+            (j, key, ext, len(body), body)
+            for j, (key, ext, body) in enumerate(members)
+        ] or None
 
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, rows = [], []
-            for i, p in zip(pdf[id_col], pdf[payload_col]):
-                members = []
-                try:
-                    if p is None:
-                        raise ValueError("null payload")
-                    with zipfile.ZipFile(io.BytesIO(bytes(p))) as zf:
-                        total = 0
-                        for info in zf.infolist():
-                            if info.is_dir():
-                                continue
-                            total += info.file_size
-                            if (
-                                info.file_size > MAX_DECODED_BYTES
-                                or total > MAX_DECODED_BYTES
-                            ):
-                                raise ValueError("zip decompression bomb")
-                            name = info.filename
-                            base = name.rfind("/") + 1
-                            dot = name.find(".", base)
-                            key, ext = (
-                                (name, "")
-                                if dot < 0
-                                else (name[:dot], name[dot + 1 :])
-                            )
-                            members.append((key, ext, zf.read(info)))
-                except (
-                    zipfile.BadZipFile,
-                    ValueError,
-                    OSError,
-                    EOFError,
-                    NotImplementedError,
-                    RuntimeError,
-                    zlib.error,  # corrupt DEFLATE stream mid-read
-                    struct.error,  # truncated fixed-size record
-                ):
-                    members = []
-                if not members:
-                    ids.append(i)
-                    rows.append((None, None, None, None, None))
-                    continue
-                for j, (key, ext, body) in enumerate(members):
-                    ids.append(i)
-                    rows.append((j, key, ext, len(body), body))
-            out = pd.DataFrame(
-                rows, columns=[f.name for f in TAR_MEMBER_FIELDS]
-            )
-            out.insert(0, id_col, pd.Series(ids, dtype="object"))
-            yield out
-
-    return df.select(id_col, payload_col).mapInPandas(
-        process, schema=out_schema
-    )
+    return map_payloads(df, id_col, payload_col, TAR_MEMBER_FIELDS, rows_of)
 
 
 def write_zip_shards(

@@ -9,6 +9,7 @@ engine's extensions (validate_lazy, flag_violations, check_unique).
 
 from __future__ import annotations
 
+import logging
 from datetime import date, datetime
 
 import pytest
@@ -328,6 +329,31 @@ class TestCrossFieldValidators:
         df = spark.createDataFrame([(1,)], ["a"])
         out = S.to_spark_validator().validate(df, strict=True)
         assert out.count() == 1  # constraint skipped with a warning
+
+    def test_runtime_error_constraint_skipped(self, spark, caplog):
+        """A constraint that errors only on real data fails the merged
+        count job; the per-aggregate retry skips it alone."""
+
+        class S(Schema):
+            a: int = Field(ge=0)
+
+            @model_validator
+            def explodes():
+                boom = F.raise_error(F.lit("boom"))
+                return (
+                    F.when(F.col("a") > 2, boom).otherwise(F.lit(True)),
+                    "a must not explode",
+                )
+
+        df = spark.createDataFrame([(1,), (-1,), (5,)], ["a"])
+        v = S.to_spark_validator()
+        with caplog.at_level(logging.WARNING):
+            out = v.validate(df, strict=False)
+        assert sorted(r["a"] for r in out.collect()) == [1, 5]
+        assert [(x["constraint"], x["count"]) for x in v.last_violations] == [
+            ("a must be >= 0", 1)
+        ]
+        assert any("boom" in r.getMessage() for r in caplog.records)
 
 
 class TestScaleFastPaths:
