@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 
 from .. import caching
+from ._vectors import cosine_slabs
 from .similarity import cosine
 from .text import bind_once, normalize_text, tokens
 
@@ -1021,21 +1022,11 @@ def embedding_neardup_pairs(
         def _self_pairs(ids, V):
             """Upper-triangle near-dup pairs within one vector set
             (ids pre-sorted), chunked over row slabs."""
-            n = len(ids)
             out_a, out_b, out_s = [], [], []
-            norms = np.linalg.norm(V, axis=1)
-            jj = np.arange(n)[None, :]
-            for c0 in range(0, n - 1, step):
-                c1 = min(c0 + step, n)
-                denom = np.outer(norms[c0:c1], norms)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    S = np.where(
-                        denom > 0, (V[c0:c1] @ V.T) / denom, np.nan
-                    )
-                    Sr = np.round(S, 6)
-                    hit = Sr >= thr  # NaN (zero vector) compares False
+            jj = np.arange(len(ids))[None, :]
+            for c0, Sr, hit in cosine_slabs(V, V, thr, step):
                 # strict upper triangle in GLOBAL indices: col > row
-                hit &= jj > (c0 + np.arange(c1 - c0))[:, None]
+                hit &= jj > (c0 + np.arange(len(Sr)))[:, None]
                 r, c = np.nonzero(hit)
                 out_a.append(ids[c0 + r])
                 out_b.append(ids[c])
@@ -1046,17 +1037,7 @@ def embedding_neardup_pairs(
             """Near-dup pairs across two DISJOINT vector sets, chunked;
             output ids ordered (min, max) to match the self case."""
             out_a, out_b, out_s = [], [], []
-            na = np.linalg.norm(Va, axis=1)
-            nb = np.linalg.norm(Vb, axis=1)
-            for c0 in range(0, Va.shape[0], step):
-                c1 = min(c0 + step, Va.shape[0])
-                denom = np.outer(na[c0:c1], nb)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    S = np.where(
-                        denom > 0, (Va[c0:c1] @ Vb.T) / denom, np.nan
-                    )
-                    Sr = np.round(S, 6)
-                    hit = Sr >= thr
+            for c0, Sr, hit in cosine_slabs(Va, Vb, thr, step):
                 r, c = np.nonzero(hit)
                 ia = ids_a[c0 + r]
                 ib = ids_b[c]

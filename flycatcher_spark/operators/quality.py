@@ -1364,6 +1364,7 @@ def incremental_semantic_dedup(
     import numpy as np
     import pandas as pd
 
+    from ._vectors import cosine_slabs
     from .similarity import cosine
 
     if impl == "numpy":
@@ -1384,20 +1385,10 @@ def incremental_semantic_dedup(
             if not new_mask.any() or new_mask.all():
                 return pd.DataFrame({"loser": pdf[id_col].to_numpy()[:0]})
             V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            norms = np.linalg.norm(V, axis=1)
             Vn = V[new_mask]
-            nn = norms[new_mask]
-            Vc = V[~new_mask]
-            nc = norms[~new_mask]
             hit = np.zeros(Vn.shape[0], dtype=bool)
-            for c0 in range(0, Vn.shape[0], step):
-                c1 = min(c0 + step, Vn.shape[0])
-                denom = np.outer(nn[c0:c1], nc)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    S = np.where(
-                        denom > 0, (Vn[c0:c1] @ Vc.T) / denom, np.nan
-                    )
-                    hit[c0:c1] = (np.round(S, 6) >= thr).any(axis=1)
+            for c0, _, h in cosine_slabs(Vn, V[~new_mask], thr, step):
+                hit[c0 : c0 + len(h)] = h.any(axis=1)
             return pd.DataFrame(
                 {"loser": pdf[id_col].to_numpy()[new_mask][hit]}
             )

@@ -37,9 +37,10 @@ Reference parity note: the reference engine has no retrieval operator
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ._vectors import top_k
 from .text import normalize_text, tokens
 
 __all__ = ["bm25_postings", "bm25_topk", "rrf_fuse"]
@@ -204,12 +205,8 @@ def bm25_topk(
             ).alias("score")
         )
     )
-    w = Window.partitionBy(qid_col).orderBy(
-        F.desc("score"), F.asc(id_col)
-    )
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= int(k))
+        top_k(scored, int(k), id_col, key=qid_col, score="score")
         .select(
             qid_col,
             F.col("rank").cast("bigint").alias("rank"),
@@ -280,12 +277,8 @@ def rrf_fuse(
             F.sum("__c").cast("double"), _CONTRIB_DECIMALS
         ).alias("rrf_score")
     )
-    w = Window.partitionBy(qid_col).orderBy(
-        F.desc("rrf_score"), F.asc(id_col)
-    )
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= int(k))
+        top_k(scored, int(k), id_col, key=qid_col, score="rrf_score")
         .select(
             qid_col,
             F.col("rank").cast("bigint").alias("rank"),

@@ -27,6 +27,17 @@ from pyspark.sql import functions as F
 from .. import caching
 from pyspark.sql.functions import pandas_udf
 
+from ._vectors import (
+    adc_udf,
+    cells_udf,
+    modal_dim,
+    nearest_cells,
+    pq_codes,
+    scatter,
+    stack_valid,
+    top_k,
+)
+
 
 def dot(a: Column, b: Column) -> Column:
     """Dot product of two array<numeric> columns (JVM-side).
@@ -161,13 +172,7 @@ def brute_force_topk(
         F.col(id_col),
         F.round(score, 6).alias("sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return top_k(scored, k, id_col)
 
 
 def _hyperplanes(n_bits: int, dim: int, seed: int) -> list[list[float]]:
@@ -238,16 +243,9 @@ def signature_bits_kernel(
     def _sig(vecs: pd.Series) -> pd.Series:
         # null/short vectors get signature 0, matching the SQL fold
         # (null projection contributes the otherwise(0) branch).
-        mask = np.fromiter(
-            (v is not None and len(v) == dim for v in vecs), dtype=bool
-        )
+        mask, V = stack_valid(vecs, dim)
         out = np.zeros(len(vecs), dtype=np.int64)
-        if mask.any():
-            V = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in vecs[mask]]
-            )
-            bits = (V @ P.T) > 0  # (n, n_bits)
-            out[mask] = bits @ weights
+        out[mask] = ((V @ P.T) > 0) @ weights  # (n, n_bits) sign bits
         return pd.Series(out)
 
     return _sig(vec)
@@ -266,19 +264,25 @@ def train_ivf_centroids(
     :func:`save_ivf_centroids`), then pass to :func:`ivf_topk` via
     ``centroids=`` so search jobs never retrain.
     """
+    _, valid = modal_dim(corpus, vec_col, "train_ivf_centroids")
+    return _train_ivf(
+        corpus.where(valid), vec_col, n_cells, seed, max_train_rows
+    )
+
+
+def _train_ivf(
+    valid: DataFrame,
+    vec_col: str,
+    n_cells: int,
+    seed: int,
+    max_train_rows: int,
+) -> list[list[float]]:
+    """:func:`train_ivf_centroids` over a frame already filtered to
+    one vector dimension (callers that probed it pass it here)."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    first = corpus.where(F.col(vec_col).isNotNull()).select(
-        F.size(F.col(vec_col)).alias("d")
-    ).first()
-    if first is None:
-        raise ValueError("train_ivf_centroids: corpus has no non-null vectors")
-    vdim = int(first["d"])
-    valid = F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) == vdim)
-    train = corpus.where(valid).select(
-        array_to_vector(F.col(vec_col)).alias("features")
-    )
+    train = valid.select(array_to_vector(F.col(vec_col)).alias("features"))
     n = train.count()
     if n > max_train_rows:
         train = train.sample(fraction=max_train_rows / n, seed=seed)
@@ -356,27 +360,13 @@ def ivf_topk(
     """
     query_id_col = query_id_col or id_col
 
-    # Null / ragged embeddings crash KMeans training and can't be
-    # assigned a cell; drop them from BOTH sides up front (one cheap
-    # first() to learn the modal dimensionality).
-    first = corpus.where(F.col(vec_col).isNotNull()).select(
-        F.size(F.col(vec_col)).alias("d")
-    ).first()
-    if first is None:
-        raise ValueError("ivf_topk: corpus has no non-null vectors")
-    vdim = int(first["d"])
-    valid = F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) == vdim)
+    # drop null / ragged embeddings from BOTH sides up front
+    _, valid = modal_dim(corpus, vec_col, "ivf_topk")
     corpus = corpus.where(valid)
     queries = queries.where(valid)
 
     if centroids is None:
-        centroids = train_ivf_centroids(
-            corpus,
-            vec_col=vec_col,
-            n_cells=n_cells,
-            seed=seed,
-            max_train_rows=max_train_rows,
-        )
+        centroids = _train_ivf(corpus, vec_col, n_cells, seed, max_train_rows)
 
     def _cell_scores(vec: Column) -> list[Column]:
         # negative squared L2 to each centroid (driver-side literals)
@@ -390,40 +380,7 @@ def ivf_topk(
     def _assign(df: DataFrame, n_best: int, out: str) -> DataFrame:
         if impl == "numpy":
             C = np.array(centroids, dtype=np.float64)  # (cells, dim)
-
-            dim = C.shape[1]
-
-            @pandas_udf("array<int>")
-            def _cells(vecs: pd.Series) -> pd.Series:
-                # null / ragged vectors -> null cells, matching the
-                # SQL fold (null fold result -> null assignment)
-                mask = np.fromiter(
-                    (v is not None and len(v) == dim for v in vecs),
-                    dtype=bool,
-                )
-                out = [None] * len(vecs)
-                if mask.any():
-                    V = np.stack(
-                        [
-                            np.asarray(v, dtype=np.float64)
-                            for v, m in zip(vecs, mask)
-                            if m
-                        ]
-                    )  # (n, dim)
-                    # Explicit (v-c)^2 sum — same arithmetic as the
-                    # SQL fold up to summation order; ||v||²-2vc+||c||²
-                    # would drift more. (n, cells, dim) stays small:
-                    # Arrow batches are ~10k rows and n_cells is tens.
-                    D = np.square(V[:, None, :] - C[None, :, :]).sum(axis=2)
-                    # stable argsort == struct(d, cell) ordering: ties
-                    # break toward the lower cell index
-                    order = np.argsort(D, axis=1, kind="stable")[:, :n_best]
-                    rows = iter(order.astype(np.int32))
-                    for i in np.flatnonzero(mask):
-                        out[i] = next(rows)
-                return pd.Series(out, dtype=object)
-
-            return df.withColumn(out, _cells(F.col(vec_col)))
+            return df.withColumn(out, cells_udf(C, n_best)(F.col(vec_col)))
         dists = F.array(*_cell_scores(F.col(vec_col)))
         ranked = F.transform(
             F.array_sort(
@@ -460,12 +417,7 @@ def ivf_topk(
         F.col(id_col),
         F.round(cosine(F.col(vec_col), F.col("__qvec")), 6).alias("sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col(id_col).asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k
-    )
+    return top_k(scored, k, id_col)
 
 
 def lsh_bucketed_topk(
@@ -500,9 +452,16 @@ def lsh_bucketed_topk(
     ``impl="numpy"`` (default) computes signatures with the Arrow
     matmul kernel; ``impl="sql"`` uses the interpreted Catalyst fold
     (parity path).
+
+    Vectors that are null or not ``dim`` long are dropped first, as
+    the IVF and PQ searches drop them: both signature paths give them
+    signature 0, so they would share a bucket and be ranked as
+    neighbours with a null similarity.
     """
     sig_fn = signature_bits_kernel if impl == "numpy" else signature_bits
-    base = corpus.select(F.col(id_col), F.col(vec_col))
+    base = corpus.select(F.col(id_col), F.col(vec_col)).where(
+        F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) == dim)
+    )
     if n_tables == 1:
         with_sig = base.select(
             F.col(id_col),
@@ -575,12 +534,7 @@ def lsh_bucketed_topk(
                 F.round(cosine(F.col("__va"), F.col("__vb")), 6).alias("sim"),
             )
         )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col(id_col).asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k
-    )
+    return top_k(scored, k, id_col)
 
 # ---------------------------------------------------------------------------
 # Product quantization (PQ): compressed ANN for corpora whose raw
@@ -661,16 +615,26 @@ def train_pq_codebooks(
     matter the corpus size; at 100 TB the sample job is the only
     full-scan-adjacent cost and everything downstream is map-only.
     """
-    first = corpus.where(F.col(vec_col).isNotNull()).select(
-        F.size(F.col(vec_col)).alias("d")
-    ).first()
-    if first is None:
-        raise ValueError("train_pq_codebooks: no non-null vectors")
-    dim = int(first["d"])
+    dim, valid = modal_dim(corpus, vec_col, "train_pq_codebooks")
+    return _train_pq(
+        corpus.where(valid), vec_col, dim, m, n_codes, seed, max_train_rows
+    )
+
+
+def _train_pq(
+    valid: DataFrame,
+    vec_col: str,
+    dim: int,
+    m: int,
+    n_codes: int,
+    seed: int,
+    max_train_rows: int,
+) -> np.ndarray:
+    """:func:`train_pq_codebooks` over a frame already filtered to
+    vectors of dimension ``dim`` (callers that probed it pass it here)."""
     if dim % m:
         raise ValueError(f"train_pq_codebooks: dim {dim} not divisible by m={m}")
-    valid = F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) == dim)
-    sample = corpus.where(valid).select(F.col(vec_col).alias("v"))
+    sample = valid.select(F.col(vec_col).alias("v"))
     n = sample.count()
     if n == 0:
         raise ValueError("train_pq_codebooks: no trainable vectors")
@@ -739,32 +703,14 @@ def pq_encode(
     codebooks travel in the UDF closure (m * n_codes * sub * 8 bytes —
     a few hundred KB), not through a join.
     """
-    m, n_codes, sub = codebooks.shape
+    m, _, sub = codebooks.shape
     dim = m * sub
     books = np.ascontiguousarray(codebooks)
 
     @pandas_udf("binary")
     def _enc(vecs: pd.Series) -> pd.Series:
-        mask = np.fromiter(
-            (v is not None and len(v) == dim for v in vecs), dtype=bool
-        )
-        out = [None] * len(vecs)
-        if mask.any():
-            V = np.stack(
-                [np.asarray(v, dtype=np.float64) for v, ok in zip(vecs, mask) if ok]
-            )
-            codes = np.empty((V.shape[0], m), dtype=np.uint8)
-            for j in range(m):
-                S = V[:, j * sub : (j + 1) * sub]
-                # (n, codes) distances per subspace; stable argmin
-                # breaks ties toward the lower code (matches _np_kmeans
-                # assignment and keeps encode deterministic)
-                D = np.square(S[:, None, :] - books[j][None, :, :]).sum(axis=2)
-                codes[:, j] = D.argmin(axis=1).astype(np.uint8)
-            rows = iter(codes)
-            for i in np.flatnonzero(mask):
-                out[i] = bytes(next(rows))
-        return pd.Series(out, dtype=object)
+        mask, V = stack_valid(vecs, dim)
+        return pd.Series(scatter(mask, map(bytes, pq_codes(V, books))), dtype=object)
 
     # Callers filter on the encoded column (``__pq IS NOT NULL``);
     # a deterministic UDF lets Catalyst push that filter below the
@@ -941,12 +887,7 @@ def rerank_exact(
         F.col(id_col),
         F.round(cosine(F.col(vec_col), F.col("__qvec")), 6).alias("sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col(id_col).asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k
-    )
+    return top_k(scored, k, id_col)
 
 
 def pq_topk(
@@ -1002,8 +943,6 @@ def pq_topk(
     books = np.ascontiguousarray(codebooks)
     m_, _, sub = books.shape
     dim = m_ * sub
-    # Codeword squared norms per subspace — query-independent.
-    cw_norm2 = np.square(books).sum(axis=2)  # (m, n_codes)
 
     encoded = pq_encode(corpus, books, vec_col=vec_col, out_col="__pq").where(
         F.col("__pq").isNotNull()
@@ -1016,36 +955,27 @@ def pq_topk(
     joined = encoded.crossJoin(F.broadcast(q)).where(
         F.col(id_col) != F.col("query_id")
     )
+    return _adc_topk(
+        joined, books, corpus, queries, k, rerank, id_col, vec_col, query_id_col
+    )
 
-    @pandas_udf("double")
-    def _adc(codes: pd.Series, qvecs: pd.Series) -> pd.Series:
-        n = len(codes)
-        if n == 0:
-            return pd.Series([], dtype="float64")
-        C = np.frombuffer(b"".join(codes), dtype=np.uint8).reshape(n, m_)
-        Q = np.stack([np.asarray(v, dtype=np.float64) for v in qvecs])
-        # Tables for the distinct queries in this batch only.
-        res = np.empty(n, dtype=np.float64)
-        # group rows by identical query vector keyed on the raw bytes
-        # (exact — no hash-collision case; batches are ~10k rows)
-        groups: dict[bytes, list[int]] = {}
-        for i, v in enumerate(Q):
-            groups.setdefault(v.tobytes(), []).append(i)
-        for idxs in groups.values():
-            rows = np.asarray(idxs)
-            qv = Q[rows[0]]
-            qs = qv.reshape(m_, sub)  # (m, sub)
-            table = np.einsum("ms,mcs->mc", qs, books)  # (m, n_codes)
-            sub_codes = C[rows]
-            dots = table[np.arange(m_)[None, :], sub_codes].sum(axis=1)
-            norm2 = cw_norm2[np.arange(m_)[None, :], sub_codes].sum(axis=1)
-            qn = float(np.sqrt(np.square(qv).sum()))
-            denom = qn * np.sqrt(norm2)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sims = np.where(denom > 0, dots / denom, np.nan)
-            res[rows] = sims
-        return pd.Series(res)
 
+def _adc_topk(
+    joined: DataFrame,
+    books: np.ndarray,
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    rerank: int | None,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+) -> DataFrame:
+    """The search tail :func:`pq_topk` and :func:`ivf_pq_topk` share:
+    ADC-score ``joined``'s ``(query_id, id, __pq, __qvec)`` candidate
+    rows, drop NaN scores (zero norms), keep each query's top ``k`` —
+    or, with ``rerank=c``, its top ``c * k`` re-scored against the raw
+    vectors by :func:`rerank_exact`."""
     # asNondeterministic: the NaN filter below would otherwise be
     # pushed under the projection by duplicating the ADC evaluation
     # (two ArrowEvalPython nodes for one call — guide §4.4).
@@ -1053,20 +983,13 @@ def pq_topk(
         "query_id",
         F.col(id_col),
         F.round(
-            _adc.asNondeterministic()(F.col("__pq"), F.col("__qvec")), 6
+            adc_udf(books).asNondeterministic()(F.col("__pq"), F.col("__qvec")), 6
         ).alias("sim"),
     ).where(~F.isnan(F.col("sim")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col(id_col).asc()
-    )
-    shortlist_k = k if rerank is None else max(k, rerank * k)
-    topk = scored.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= shortlist_k
-    )
     if rerank is None:
-        return topk
+        return top_k(scored, k, id_col)
     return rerank_exact(
-        topk,
+        top_k(scored, max(k, rerank * k), id_col),
         corpus,
         queries,
         k=k,
@@ -1122,94 +1045,33 @@ def ivf_pq_topk(
     """
     query_id_col = query_id_col or id_col
 
-    first = corpus.where(F.col(vec_col).isNotNull()).select(
-        F.size(F.col(vec_col)).alias("d")
-    ).first()
-    if first is None:
-        raise ValueError("ivf_pq_topk: corpus has no non-null vectors")
-    dim = int(first["d"])
-    valid = F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) == dim)
+    dim, valid = modal_dim(corpus, vec_col, "ivf_pq_topk")
     corpus = corpus.where(valid)
     queries_v = queries.where(valid)
 
     if centroids is None:
-        centroids = train_ivf_centroids(
-            corpus,
-            vec_col=vec_col,
-            n_cells=n_cells,
-            seed=seed,
-            max_train_rows=max_train_rows,
-        )
+        centroids = _train_ivf(corpus, vec_col, n_cells, seed, max_train_rows)
     if codebooks is None:
-        codebooks = train_pq_codebooks(
-            corpus,
-            vec_col=vec_col,
-            m=m,
-            n_codes=n_codes,
-            seed=seed,
-            max_train_rows=max_train_rows,
+        codebooks = _train_pq(
+            corpus, vec_col, dim, m, n_codes, seed, max_train_rows
         )
     books = np.ascontiguousarray(codebooks)
-    m_, _, sub = books.shape
-    cw_norm2 = np.square(books).sum(axis=2)  # (m, n_codes)
     C = np.array(centroids, dtype=np.float64)
-
-    def _cells_udf(nb: int):
-        # same assignment arithmetic (and stable tie-break toward the
-        # lower cell index) as ivf_topk's numpy path
-        @pandas_udf("array<int>")
-        def _cells(vecs: pd.Series) -> pd.Series:
-            mask = np.fromiter(
-                (v is not None and len(v) == dim for v in vecs), dtype=bool
-            )
-            out = [None] * len(vecs)
-            if mask.any():
-                V = np.stack(
-                    [
-                        np.asarray(v, dtype=np.float64)
-                        for v, ok in zip(vecs, mask)
-                        if ok
-                    ]
-                )
-                D = np.square(V[:, None, :] - C[None, :, :]).sum(axis=2)
-                order = np.argsort(D, axis=1, kind="stable")[:, :nb]
-                rows = iter(order.astype(np.int32))
-                for i in np.flatnonzero(mask):
-                    out[i] = next(rows)
-            return pd.Series(out, dtype=object)
-
-        return _cells
 
     # Fused encode+assign: ONE Arrow crossing for the corpus scan.
     # The embedding column dominates scan bytes at 100 TB; separate
     # pq_encode and cell-assign UDFs would serialize it into Python
-    # twice. Arithmetic is identical to pq_encode + _cells_udf(1)
-    # (pinned by the full-probe == brute-force oracle/test).
+    # twice. The kernels are pq_encode's and cells_udf's (pinned by
+    # the full-probe == brute-force oracle/test).
     @pandas_udf("struct<pq: binary, cell: int>")
     def _enc_cell(vecs: pd.Series) -> pd.DataFrame:
-        mask = np.fromiter(
-            (v is not None and len(v) == dim for v in vecs), dtype=bool
+        mask, V = stack_valid(vecs, dim)
+        return pd.DataFrame(
+            {
+                "pq": scatter(mask, map(bytes, pq_codes(V, books))),
+                "cell": scatter(mask, map(int, nearest_cells(V, C, 1)[:, 0])),
+            }
         )
-        pq_out = [None] * len(vecs)
-        cell_out = [None] * len(vecs)
-        if mask.any():
-            V = np.stack(
-                [np.asarray(v, dtype=np.float64) for v, ok in zip(vecs, mask) if ok]
-            )
-            codes = np.empty((V.shape[0], m_), dtype=np.uint8)
-            # same subspace argmin as pq_encode (stable, low-code ties)
-            for j in range(m_):
-                S = V[:, j * sub : (j + 1) * sub]
-                D = np.square(S[:, None, :] - books[j][None, :, :]).sum(axis=2)
-                codes[:, j] = D.argmin(axis=1).astype(np.uint8)
-            Dc = np.square(V[:, None, :] - C[None, :, :]).sum(axis=2)
-            cells = np.argsort(Dc, axis=1, kind="stable")[:, 0].astype(np.int32)
-            code_iter = iter(codes)
-            cell_iter = iter(cells)
-            for i in np.flatnonzero(mask):
-                pq_out[i] = bytes(next(code_iter))
-                cell_out[i] = int(next(cell_iter))
-        return pd.DataFrame({"pq": pq_out, "cell": cell_out})
 
     # asNondeterministic: the ``__pq IS NOT NULL`` filter below would
     # otherwise duplicate the fused encode+assign evaluation (guide
@@ -1225,64 +1087,15 @@ def ivf_pq_topk(
         F.col(query_id_col).alias("query_id"),
         F.col(vec_col).alias("__qvec"),
         F.explode(
-            _cells_udf(min(n_probe, len(centroids)))(F.col(vec_col))
+            cells_udf(C, min(n_probe, len(centroids)))(F.col(vec_col))
         ).alias("__cell"),
     )
 
     joined = corpus_cells.join(F.broadcast(query_cells), "__cell").where(
         F.col(id_col) != F.col("query_id")
     )
-
-    @pandas_udf("double")
-    def _adc(codes: pd.Series, qvecs: pd.Series) -> pd.Series:
-        n = len(codes)
-        if n == 0:
-            return pd.Series([], dtype="float64")
-        Cc = np.frombuffer(b"".join(codes), dtype=np.uint8).reshape(n, m_)
-        Q = np.stack([np.asarray(v, dtype=np.float64) for v in qvecs])
-        res = np.empty(n, dtype=np.float64)
-        # exact bytes-keyed grouping (no hash-collision case)
-        groups: dict[bytes, list[int]] = {}
-        for i, v in enumerate(Q):
-            groups.setdefault(v.tobytes(), []).append(i)
-        for idxs in groups.values():
-            rows = np.asarray(idxs)
-            qv = Q[rows[0]]
-            qs = qv.reshape(m_, sub)
-            table = np.einsum("ms,mcs->mc", qs, books)
-            sub_codes = Cc[rows]
-            dots = table[np.arange(m_)[None, :], sub_codes].sum(axis=1)
-            norm2 = cw_norm2[np.arange(m_)[None, :], sub_codes].sum(axis=1)
-            qn = float(np.sqrt(np.square(qv).sum()))
-            denom = qn * np.sqrt(norm2)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sims = np.where(denom > 0, dots / denom, np.nan)
-            res[rows] = sims
-        return pd.Series(res)
-
-    # asNondeterministic: same §4.4 duplication guard as the pq_topk
-    # ADC — the NaN filter must not re-evaluate the kernel.
-    scored = joined.select(
-        "query_id",
-        F.col(id_col),
-        F.round(
-            _adc.asNondeterministic()(F.col("__pq"), F.col("__qvec")), 6
-        ).alias("sim"),
-    ).where(~F.isnan(F.col("sim")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col(id_col).asc()
-    )
-    shortlist = scored.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= max(k, rerank * k)
-    )
-    return rerank_exact(
-        shortlist,
-        corpus,
-        queries_v,
-        k=k,
-        id_col=id_col,
-        vec_col=vec_col,
-        query_id_col=query_id_col,
+    return _adc_topk(
+        joined, books, corpus, queries_v, k, rerank, id_col, vec_col, query_id_col
     )
 
 

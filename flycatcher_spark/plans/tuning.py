@@ -99,15 +99,24 @@ def ensure_min_parallelism(
     If the frame's current partition count is below ``min_partitions``
     (default: the session's ``defaultParallelism``), repartition up —
     hash-partitioned on ``key`` when given (deterministic layout),
-    round-robin otherwise. The check is driver-side plan metadata; no
-    job runs.
+    round-robin otherwise.
+
+    The guard runs no job, so it only judges frames whose partition
+    count is plan metadata. An adaptive (AQE) plan — any frame with a
+    shuffle, broadcast or subquery under it, e.g. an aggregate — has
+    no partition count until its stages run: AQE coalesces the
+    post-shuffle partitions at run time. Reading it would run those
+    stages in a job of their own, and the caller's action would then
+    run them again. Such a frame is returned unchanged; its
+    post-shuffle width is AQE's to choose.
     """
     spark = df.sparkSession
     target = int(min_partitions or spark.sparkContext.defaultParallelism)
-    # Plan-metadata-only .rdd touch (the one in the codebase): reads
-    # the analyzed plan's partitioning without running a job. The
-    # DataFrame-only alternatives are private-API spelunking; the RDD
-    # conversion costs a driver-side plan analysis, nothing more.
+    if df._jdf.queryExecution().executedPlan().nodeName() == "AdaptiveSparkPlan":
+        return df
+    # With AQE on (every get_spark session), a non-adaptive plan has no
+    # exchange or subquery: its RDD is built lazily and the partition
+    # count of its scans is read on the driver, without a job.
     if df.rdd.getNumPartitions() >= target:
         return df
     from pyspark.sql import functions as F

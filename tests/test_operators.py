@@ -937,8 +937,11 @@ class TestSimilarity:
             assert s == k, (vid, s, k)
 
     def test_ivf_numpy_tolerates_null_vectors(self, spark):
-        """A null/ragged embedding must not crash the numpy assignment
-        kernel; the row silently drops, matching the SQL fold."""
+        """A null/ragged embedding must not crash any caller of the
+        shared valid-vector stack (IVF cell assignment, PQ encode, the
+        fused IVF-PQ encode+assign, the LSH signature kernel); the row
+        silently drops, matching the SQL fold, and is never returned as
+        a query or a neighbour."""
         rows = [
             (1, [1.0, 0.0]), (2, [0.9, 0.1]), (3, [0.0, 1.0]),
             (4, None), (5, [0.5]),  # null + ragged
@@ -946,11 +949,28 @@ class TestSimilarity:
         ]
         df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
         q = df.filter(F.col("vec_id") == 1)
-        got = similarity.ivf_topk(
-            df, q, k=3, n_cells=2, n_probe=2, seed=7, impl="numpy"
-        ).collect()
-        assert all(r["vec_id"] not in (4, 5) for r in got)
-        assert len(got) >= 1
+        searches = {
+            "ivf_topk": similarity.ivf_topk(
+                df, q, k=3, n_cells=2, n_probe=2, seed=7, impl="numpy"
+            ),
+            "pq_topk": similarity.pq_topk(df, q, k=3, m=2, n_codes=4, seed=7),
+            # given centroids: ivf_topk above already trains KMeans
+            # through the same null-dropping filter
+            "ivf_pq_topk": similarity.ivf_pq_topk(
+                df, q, k=3, n_probe=2, m=2, n_codes=4, seed=7,
+                centroids=[[1.0, 0.0], [0.0, 1.0]],
+            ),
+            "lsh_bucketed_topk": similarity.lsh_bucketed_topk(
+                df, k=3, dim=2, n_bits=2, seed=7, n_tables=3
+            ),
+        }
+        for name, res in searches.items():
+            got = res.collect()
+            assert len(got) >= 1, name
+            assert all(
+                r["vec_id"] not in (4, 5) and r["query_id"] not in (4, 5)
+                for r in got
+            ), (name, got)
 
     def test_ivf_impls_agree(self, spark):
         """numpy and sql cell assignment produce identical top-k."""
@@ -1041,6 +1061,33 @@ class TestSimilarity:
             got = {(r["query_id"], r["vec_id"]) for r in df.collect()}
             recall = len(got & exact) / len(exact)
             assert recall >= 0.9, (name, recall)
+
+    def test_ivf_pq_full_probe_equals_pq_rerank(self, spark, tmp_path):
+        """Probing every cell, ivf_pq_topk scores the same candidates
+        as pq_topk's cross join; given the same codebooks and the same
+        rerank factor, both run one ADC -> shortlist -> rerank_exact
+        tail and must agree row for row. rerank=1 keeps the shortlist
+        at k, so the ADC ranking (not exact cosine) picks the rows."""
+        vecs = np.random.default_rng(3).normal(size=(200, 8))
+        # one parquet split, like the fixture tables: a local frame
+        # would run every stage as 8 tiny tasks
+        spark.createDataFrame(
+            [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+            "vec_id long, embedding array<double>",
+        ).coalesce(1).write.parquet(str(tmp_path / "em"))
+        em = spark.read.parquet(str(tmp_path / "em"))
+        q = em.filter(F.col("vec_id") < 5)
+        books = similarity.train_pq_codebooks(em, m=4, n_codes=16, seed=7)
+        key = lambda r: (r["query_id"], r["rank"], r["vec_id"], r["sim"])
+        for r in (1, 3):
+            pq = similarity.pq_topk(em, q, k=5, codebooks=books, rerank=r)
+            ivf = similarity.ivf_pq_topk(
+                em, q, k=5, n_cells=4, n_probe=4, seed=7, codebooks=books,
+                rerank=r,
+            )
+            assert sorted(map(key, ivf.collect())) == sorted(
+                map(key, pq.collect())
+            ), r
 
     def test_ivf_pq_pretrained_equals_inline(self, spark):
         """Passing pre-trained centroids+codebooks (the train-free

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -130,3 +132,30 @@ class TestQueryPlanQuality:
         rep = plans.plan_report(res)
         # numpy default: signatures via ArrowEvalPython, not interpreted folds
         assert any("Arrow" in n for n in rep.python_nodes)
+
+
+class TestEnsureMinParallelism:
+    def test_aggregated_input_runs_no_job(self, spark, lineitem):
+        """An aggregate's partition count exists only after AQE runs
+        its shuffle; the guard must not run that shuffle in a job of
+        its own (the caller's action would run it again)."""
+        agg = lineitem.groupBy("l_returnflag").count()
+        sc = spark.sparkContext
+        sc.setJobGroup("ensure_min_parallelism", "guard probe")
+        try:
+            out = plans.ensure_min_parallelism(agg, min_partitions=64)
+            jobs = sc.statusTracker().getJobIdsForGroup("ensure_min_parallelism")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(jobs) == []
+        assert out is agg  # post-shuffle width is AQE's to choose
+
+    def test_scan_input_keeps_widening(self, lineitem):
+        n = lineitem.rdd.getNumPartitions()
+        assert plans.ensure_min_parallelism(lineitem, min_partitions=n) is lineitem
+        widened = plans.ensure_min_parallelism(
+            lineitem, min_partitions=n + 3, key="l_orderkey"
+        )
+        rep = plans.plan_report(widened)
+        assert rep.n_shuffles == 1
+        assert re.search(rf"hashpartitioning\(l_orderkey#\d+L?, {n + 3}\)", rep.plan)
