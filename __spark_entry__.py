@@ -2163,7 +2163,7 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN with a pruned probe (3 of 8 cells) — approximate and
     rows-only BY DESIGN: which neighbors fall in unprobed cells
-    depends on the seeded KMeans quantizer, which no SQL engine
+    depends on the seeded k-means quantizer, which no SQL engine
     reproduces. Value-level evidence lives in the oracle-checked
     companions: ivf_full_probe (probe 8/8 == exact brute force,
     hash-matched vs DuckDB) proves the assign/probe/score machinery,
@@ -2276,8 +2276,9 @@ def q_events_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@5 of the approximate ANN paths against exact brute
     force — quantitative evidence for the rows-only operators. No SQL
-    oracle (DuckDB can't run KMeans/LSH), but the output is
-    deterministic: seeded quantizer/planes over deterministic data."""
+    oracle (DuckDB can't run the seeded k-means or LSH planes), but
+    the output is deterministic: seeded quantizer/planes over
+    deterministic data."""
     em = _emb_double(spark, sf_dir)
     q = em.filter(F.col("vec_id") < 20)
     exact = similarity.brute_force_topk(em, q, k=5).select(
@@ -2315,8 +2316,8 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("lsh_6bit_8tables", lsh(6, 8)),    # cheaper, lower recall
         ("ivf_probe2of8", ivf),
         ("pq_m32_codes16", pq),  # 8x-compressed codes, ADC scoring
-        # -- r5 production search paths (exact re-rank stage): recall
-        # -- >= 0.95 on this fixture, the shipped-ANN bar ------------
+        # -- production search paths (exact re-rank stage); sf0.001
+        # -- recall: ivf 6/8 0.90, pq rerank 0.97, ivfpq 0.90 --------
         ("ivf_probe6of8", ivf6),
         ("pq_m32_rerank4", pq_rr),
         ("ivfpq_probe6of8_rerank8", ivfpq),
@@ -2376,41 +2377,27 @@ def q_pq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: train-once ANN index artifacts, keyed by (sf_dir, config) — see
-#: q_ivf_rerank_topk's docstring.
-_ANN_INDEX_CACHE: dict = {}
-
-
 def q_ivf_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF+PQ+exact-rerank ANN (similarity.ivf_pq_topk — the
     production search composite) in its oracle-checkable
     configuration: every cell probed and a rerank shortlist wide
     enough that the re-ranked output provably equals exact
     brute-force top-k, which DuckDB computes directly. Proves the
-    whole pipeline — cell assign → PQ encode → ADC shortlist → exact
-    re-rank over raw vectors — end-to-end; pruned-probe recall
-    (>= 0.95 at probe 6/8) is quantified by ann_recall.
+    whole pipeline — index training → cell assign → PQ encode → ADC
+    shortlist → exact re-rank over raw vectors — end-to-end; pruned-
+    probe recall (0.90 at probe 6/8 on sf0.001) is quantified by
+    ann_recall.
 
-    The index (KMeans centroids + PQ codebooks) is trained once per
-    sf_dir and cached in-process — the production shape (train once
-    per corpus release, search jobs are train-free; cf.
-    save_ivf_centroids / save_pq_codebooks), and it keeps the bench
-    timing the SEARCH path rather than re-measuring driver-side
-    training every run. Determinism is unaffected: the cache holds
-    exactly what inline training (seeded, same data) would produce —
-    pinned by test_ivf_pq_pretrained_equals_inline."""
+    The index is trained inline on every run: one sample, from which
+    numpy k-means fits both the centroids and the PQ codebooks (the
+    timed run includes that training). Production search jobs pass
+    saved indexes instead (save_ivf_centroids / save_pq_codebooks),
+    which test_ivf_pq_pretrained_equals_inline pins to the same
+    rows."""
     em = _emb_double(spark, sf_dir)
-    key = (sf_dir, "ivfpq_c8_m32_k16_s7")
-    if key not in _ANN_INDEX_CACHE:
-        _ANN_INDEX_CACHE[key] = (
-            similarity.train_ivf_centroids(em, n_cells=8, seed=7),
-            similarity.train_pq_codebooks(em, m=32, n_codes=16, seed=7),
-        )
-    centroids, codebooks = _ANN_INDEX_CACHE[key]
     q = em.filter((F.col("vec_id") >= 20) & (F.col("vec_id") < 30))
     res = similarity.ivf_pq_topk(
-        em, q, k=5, n_cells=8, n_probe=8, m=32, n_codes=16, seed=7, rerank=8,
-        centroids=centroids, codebooks=codebooks,
+        em, q, k=5, n_cells=8, n_probe=8, m=32, n_codes=16, seed=7, rerank=8
     )
     return res.select(
         "query_id", "vec_id", "sim", F.col("rank").cast("long").alias("rank")

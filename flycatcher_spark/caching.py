@@ -33,6 +33,11 @@ and callers get two release mechanisms:
 
 Scopes nest per thread (``threading.local``): a scope opened on one
 thread never captures handles tracked by a concurrent job on another.
+
+Iterative operators (``dedup.connected_components``,
+``graph.pagerank``) cut their lineage with ``localCheckpoint()``
+instead; :func:`release_checkpoint` frees a superseded checkpoint once
+nothing reads it.
 """
 
 from __future__ import annotations
@@ -43,7 +48,7 @@ from typing import Iterator
 
 from pyspark.sql import DataFrame
 
-__all__ = ["track", "release", "scope", "tracked_count"]
+__all__ = ["track", "release", "scope", "tracked_count", "release_checkpoint"]
 
 _lock = threading.Lock()
 _global: list[DataFrame] = []
@@ -118,3 +123,9 @@ def scope(blocking: bool = False) -> Iterator[None]:
     finally:
         stack.remove(bucket)
         _unpersist_all(bucket, blocking)
+
+
+def release_checkpoint(df: DataFrame) -> None:
+    """Unpersist the blocks behind a ``localCheckpoint()``ed frame (the
+    checkpoint's plan is a ``LogicalRDD`` over the persisted RDD)."""
+    df._jdf.logicalPlan().rdd().unpersist(False)

@@ -62,8 +62,9 @@ def modal_dim(
 ) -> tuple[int, Column]:
     """The dimension of the corpus' first non-null vector (one
     ``first()`` job) and the filter keeping the vectors of exactly that
-    dimension — null and ragged vectors crash KMeans training and
-    cannot be assigned a cell, so every trainer and index drops them.
+    dimension — null and ragged vectors cannot be stacked into a
+    training sample or assigned a cell, so every trainer and index
+    drops them.
     """
     first = corpus.where(F.col(vec_col).isNotNull()).select(
         F.size(F.col(vec_col)).alias("d")

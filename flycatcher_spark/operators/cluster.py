@@ -2,9 +2,10 @@
 
 Complements the two existing clusterers rather than repeating them:
 
-- :func:`similarity.train_ivf_centroids` trains MLlib KMeans over a
-  *bounded sample* — fast index bootstrapping, but seed-dependent and
-  not reproducible across engines.
+- :func:`similarity.train_ivf_centroids` runs driver-side numpy
+  k-means over a *bounded sample* — fast index bootstrapping with
+  balanced cells, but seed-dependent and not reproducible across
+  engines.
 - This module runs **full-corpus Lloyd iterations whose every step is
   engine-portable**: deterministic init (explicit ids or the k
   smallest ids), per-dimension DECIMAL-summed means (bitwise
@@ -202,7 +203,7 @@ def kmeans_fit(
     smallest ids), per-dimension means DECIMAL-summed (partitioning-
     independent) and rounded to 9 decimals, assignment ties toward
     the lower cluster id — the fit is reproducible cell-for-cell
-    across engines, which sampled MLlib KMeans is not.
+    across engines, which the sampled IVF trainer is not.
 
     Examples
     --------

@@ -1233,7 +1233,7 @@ def connected_components(
         changed = updated.where(
             F.col("new_component") != F.col("component")
         ).count()
-        _release_checkpoint(checkpoint)
+        caching.release_checkpoint(checkpoint)
         checkpoint = updated
         labels = updated.select(
             "node", F.col("new_component").alias("component")
@@ -1242,12 +1242,6 @@ def connected_components(
             break
     edges.unpersist()
     return labels
-
-
-def _release_checkpoint(df: DataFrame) -> None:
-    """Unpersist the blocks behind a ``localCheckpoint()``ed frame (the
-    checkpoint's plan is a ``LogicalRDD`` over the persisted RDD)."""
-    df._jdf.logicalPlan().rdd().unpersist(False)
 
 
 def minhash_dedup_transitive(

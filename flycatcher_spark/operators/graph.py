@@ -46,7 +46,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import caching
-from .dedup import _release_checkpoint
 
 __all__ = ["hits", "out_degrees", "pagerank"]
 
@@ -195,7 +194,7 @@ def pagerank(
             nonlocal live
             new = df.localCheckpoint(eager=True)
             if live is not None:
-                _release_checkpoint(live)
+                caching.release_checkpoint(live)
             live = new
             return new
 

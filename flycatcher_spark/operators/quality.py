@@ -1491,7 +1491,7 @@ def semantic_dedup(
     :func:`dedup.embedding_neardup_pairs`).
 
     The cluster column is the blocking key — any assignment works
-    (a label, an IVF/KMeans cell from ``similarity.ivf_topk``'s
+    (a label, an IVF k-means cell from ``similarity.ivf_topk``'s
     quantizer, an LSH bucket); clusters bound the pairwise work to
     intra-cluster, which is the entire reason SemDeDup clusters
     first. Pairs come from ``dedup.embedding_neardup_pairs`` (BLAS

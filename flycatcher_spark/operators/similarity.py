@@ -251,6 +251,24 @@ def signature_bits_kernel(
     return _sig(vec)
 
 
+def _train_sample(
+    valid: DataFrame, vec_col: str, seed: int, max_train_rows: int
+) -> np.ndarray:
+    """The bounded training sample of ``valid`` (a frame already
+    filtered to one vector dimension by :func:`modal_dim`) as an
+    ``(n, dim)`` float64 matrix: one ``count``, a seeded sample only
+    above ``max_train_rows``, one ``collect`` — a fixed budget no
+    matter the corpus size. Every index trainer (IVF centroids, PQ
+    codebooks) fits :func:`_np_kmeans` to it."""
+    sample = valid.select(F.col(vec_col).alias("v"))
+    n = sample.count()
+    if n == 0:
+        raise ValueError("no trainable vectors")
+    if n > max_train_rows:
+        sample = sample.sample(fraction=max_train_rows / n, seed=seed)
+    return np.array([row["v"] for row in sample.collect()], dtype=np.float64)
+
+
 def train_ivf_centroids(
     corpus: DataFrame,
     vec_col: str = "embedding",
@@ -258,36 +276,17 @@ def train_ivf_centroids(
     seed: int = 42,
     max_train_rows: int = 100_000,
 ) -> list[list[float]]:
-    """Train the IVF coarse quantizer (MLlib KMeans over a bounded
-    sample) and return the centroids as plain lists — the reusable
-    index artifact. Build once per corpus release (see
-    :func:`save_ivf_centroids`), then pass to :func:`ivf_topk` via
-    ``centroids=`` so search jobs never retrain.
+    """Train the IVF coarse quantizer (:func:`_np_kmeans` over a
+    bounded sample) and return the centroids as plain lists — the
+    reusable index artifact. Lloyd's iterations from a k-means++ start
+    give cells of balanced size, so probing ``n_probe`` of ``n_cells``
+    scans about ``n_probe / n_cells`` of the corpus. Build once per
+    corpus release (see :func:`save_ivf_centroids`), then pass to
+    :func:`ivf_topk` via ``centroids=`` so search jobs never retrain.
     """
     _, valid = modal_dim(corpus, vec_col, "train_ivf_centroids")
-    return _train_ivf(
-        corpus.where(valid), vec_col, n_cells, seed, max_train_rows
-    )
-
-
-def _train_ivf(
-    valid: DataFrame,
-    vec_col: str,
-    n_cells: int,
-    seed: int,
-    max_train_rows: int,
-) -> list[list[float]]:
-    """:func:`train_ivf_centroids` over a frame already filtered to
-    one vector dimension (callers that probed it pass it here)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    train = valid.select(array_to_vector(F.col(vec_col)).alias("features"))
-    n = train.count()
-    if n > max_train_rows:
-        train = train.sample(fraction=max_train_rows / n, seed=seed)
-    model = KMeans(k=n_cells, seed=seed, featuresCol="features").fit(train)
-    return [[float(x) for x in c] for c in model.clusterCenters()]
+    X = _train_sample(corpus.where(valid), vec_col, seed, max_train_rows)
+    return _np_kmeans(X, n_cells, seed).tolist()
 
 
 def save_ivf_centroids(
@@ -336,9 +335,10 @@ def ivf_topk(
 
     Classic inverted-file search re-expressed Spark-first:
 
-    1. **Train** a coarse quantizer (MLlib KMeans, ``n_cells``
-       centroids) on a bounded sample of the corpus — iterative
-       driver-coordinated jobs over the sample only.
+    1. **Train** a coarse quantizer (``n_cells`` centroids, see
+       :func:`train_ivf_centroids`) on a bounded sample of the corpus
+       — one count and one collect, then numpy k-means on the driver;
+       the cells come out balanced in size.
     2. **Assign** every corpus vector to its nearest centroid — the
        centroid table is tiny and broadcast; assignment is a map-only
        scored-window pass, so the corpus shuffles once on cell id.
@@ -366,7 +366,8 @@ def ivf_topk(
     queries = queries.where(valid)
 
     if centroids is None:
-        centroids = _train_ivf(corpus, vec_col, n_cells, seed, max_train_rows)
+        X = _train_sample(corpus, vec_col, seed, max_train_rows)
+        centroids = _np_kmeans(X, n_cells, seed).tolist()
 
     def _cell_scores(vec: Column) -> list[Column]:
         # negative squared L2 to each centroid (driver-side literals)
@@ -545,10 +546,12 @@ def lsh_bucketed_topk(
 def _np_kmeans(
     X: np.ndarray, k: int, seed: int, n_iter: int = 15
 ) -> np.ndarray:
-    """Deterministic seeded Lloyd's k-means with k-means++ init.
+    """Deterministic seeded Lloyd's k-means with k-means++ init — the
+    one k-means behind every ANN index: IVF's coarse quantizer and
+    each PQ subspace codebook.
 
-    Runs driver-side over the *bounded* training sample only (the
-    same budget as IVF's coarse quantizer); the E-step is chunked so
+    Runs driver-side over the *bounded* training sample only (see
+    :func:`_train_sample`); the E-step is chunked so
     the (chunk × k) distance matrix stays ~32 MB regardless of
     sample size. Empty clusters keep their previous center — stable
     and seed-reproducible across platforms (pure numpy, no BLAS
@@ -611,38 +614,21 @@ def train_pq_codebooks(
     subspaces and k-means each to ``n_codes`` codewords.
 
     Returns an ``(m, n_codes, dim//m)`` float64 array. Training reads
-    a bounded sample (like IVF), so the collect is a fixed budget no
-    matter the corpus size; at 100 TB the sample job is the only
+    the same bounded sample as IVF (:func:`_train_sample`), so the
+    collect is a fixed budget no matter the corpus size; at 100 TB the sample job is the only
     full-scan-adjacent cost and everything downstream is map-only.
     """
-    dim, valid = modal_dim(corpus, vec_col, "train_pq_codebooks")
-    return _train_pq(
-        corpus.where(valid), vec_col, dim, m, n_codes, seed, max_train_rows
-    )
+    _, valid = modal_dim(corpus, vec_col, "train_pq_codebooks")
+    X = _train_sample(corpus.where(valid), vec_col, seed, max_train_rows)
+    return _fit_pq(X, m, n_codes, seed)
 
 
-def _train_pq(
-    valid: DataFrame,
-    vec_col: str,
-    dim: int,
-    m: int,
-    n_codes: int,
-    seed: int,
-    max_train_rows: int,
-) -> np.ndarray:
-    """:func:`train_pq_codebooks` over a frame already filtered to
-    vectors of dimension ``dim`` (callers that probed it pass it here)."""
+def _fit_pq(X: np.ndarray, m: int, n_codes: int, seed: int) -> np.ndarray:
+    """:func:`train_pq_codebooks`' fit over a training sample ``X``
+    (see :func:`_train_sample`)."""
+    dim = X.shape[1]
     if dim % m:
         raise ValueError(f"train_pq_codebooks: dim {dim} not divisible by m={m}")
-    sample = valid.select(F.col(vec_col).alias("v"))
-    n = sample.count()
-    if n == 0:
-        raise ValueError("train_pq_codebooks: no trainable vectors")
-    if n > max_train_rows:
-        sample = sample.sample(fraction=max_train_rows / n, seed=seed)
-    X = np.array(
-        [row["v"] for row in sample.collect()], dtype=np.float64
-    )
     sub = dim // m
     books = np.zeros((m, n_codes, sub), dtype=np.float64)
     for j in range(m):
@@ -1049,12 +1035,13 @@ def ivf_pq_topk(
     corpus = corpus.where(valid)
     queries_v = queries.where(valid)
 
-    if centroids is None:
-        centroids = _train_ivf(corpus, vec_col, n_cells, seed, max_train_rows)
-    if codebooks is None:
-        codebooks = _train_pq(
-            corpus, vec_col, dim, m, n_codes, seed, max_train_rows
-        )
+    # one training sample fits whichever of the two indexes is missing
+    if centroids is None or codebooks is None:
+        X = _train_sample(corpus, vec_col, seed, max_train_rows)
+        if centroids is None:
+            centroids = _np_kmeans(X, n_cells, seed).tolist()
+        if codebooks is None:
+            codebooks = _fit_pq(X, m, n_codes, seed)
     books = np.ascontiguousarray(codebooks)
     C = np.array(centroids, dtype=np.float64)
 

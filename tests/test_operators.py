@@ -851,16 +851,18 @@ class TestSimilarity:
 
     def test_ivf_probe_all_equals_exact(self, spark, vecs):
         """Probing every cell makes IVF exhaustive — must equal the
-        brute-force baseline exactly (same ranking, same sims)."""
+        brute-force baseline exactly (same ranking, same sims). The
+        default 16 cells over 5 vectors also pins k-means clamping its
+        cell count to the training sample size."""
         q = vecs.filter(F.col("vec_id") <= 2)
         exact = similarity.brute_force_topk(vecs, q, k=3)
-        ivf = similarity.ivf_topk(vecs, q, k=3, n_cells=2, n_probe=2, seed=7)
-        key = lambda r: (r["query_id"], r["rank"])
-        e = sorted(((r["query_id"], r["rank"], r["vec_id"], r["sim"])
-                    for r in exact.collect()))
-        a = sorted(((r["query_id"], r["rank"], r["vec_id"], r["sim"])
-                    for r in ivf.collect()))
-        assert e == a
+        key = lambda r: (r["query_id"], r["rank"], r["vec_id"], r["sim"])
+        e = sorted(map(key, exact.collect()))
+        for n_cells in (2, 16):
+            ivf = similarity.ivf_topk(
+                vecs, q, k=3, n_cells=n_cells, n_probe=n_cells, seed=7
+            )
+            assert sorted(map(key, ivf.collect())) == e, n_cells
 
     def test_ivf_partial_probe_subset(self, spark, vecs):
         q = vecs.filter(F.col("vec_id") == 1)
@@ -954,8 +956,8 @@ class TestSimilarity:
                 df, q, k=3, n_cells=2, n_probe=2, seed=7, impl="numpy"
             ),
             "pq_topk": similarity.pq_topk(df, q, k=3, m=2, n_codes=4, seed=7),
-            # given centroids: ivf_topk above already trains KMeans
-            # through the same null-dropping filter
+            # given centroids: ivf_topk above already trains its
+            # k-means through the same null-dropping filter
             "ivf_pq_topk": similarity.ivf_pq_topk(
                 df, q, k=3, n_probe=2, m=2, n_codes=4, seed=7,
                 centroids=[[1.0, 0.0], [0.0, 1.0]],
@@ -1088,6 +1090,35 @@ class TestSimilarity:
             assert sorted(map(key, ivf.collect())) == sorted(
                 map(key, pq.collect())
             ), r
+
+    def test_index_training_is_a_bounded_sample(self, spark):
+        """Training an index is a dimension probe, a count and one
+        sample collect, not a job per k-means iteration: both the IVF
+        trainer and building an untrained IVF-PQ search stay within a
+        handful of jobs."""
+        em = spark.read.parquet(
+            "/root/testdata/sf0.001/embeddings.parquet"
+        ).select("vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
+        q = em.filter(F.col("vec_id") < 3)
+        sc = spark.sparkContext
+        builds = {
+            "train_ivf_centroids": lambda: similarity.train_ivf_centroids(
+                em, n_cells=8, seed=7
+            ),
+            "ivf_pq_topk": lambda: similarity.ivf_pq_topk(
+                em, q, k=5, n_cells=8, n_probe=6, m=32, n_codes=16, seed=7
+            ),
+        }
+        for name, build in builds.items():
+            sc.setJobGroup(f"index_training_{name}", name)
+            try:
+                build()
+                jobs = sc.statusTracker().getJobIdsForGroup(
+                    f"index_training_{name}"
+                )
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            assert len(jobs) <= 5, (name, len(jobs))
 
     def test_ivf_pq_pretrained_equals_inline(self, spark):
         """Passing pre-trained centroids+codebooks (the train-free

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+import re
 import subprocess
 
 import pytest
@@ -54,22 +55,43 @@ def test_repeated_chain_reuses_generated_code(spark):
     assert compiled <= 40, f"second run compiled {compiled} classes"
 
 
-def test_only_the_factory_builds_sessions():
-    # every session outside session.py goes through get_spark, so the
-    # bench, the tools and the library run under the same confs
+def _tracked_sources(pathspec: str) -> dict[str, str]:
+    """Text of every tracked ``.py`` file matching ``pathspec``."""
     try:
         tracked = subprocess.run(
-            ["git", "ls-files", "*.py"],
+            ["git", "ls-files", pathspec],
             cwd=ROOT, capture_output=True, text=True, check=True,
         ).stdout.split()
     except (OSError, subprocess.CalledProcessError):
         pytest.skip("not a git checkout")
-    needle = "SparkSession" + ".builder"
-    found = []
+    sources = {}
     for rel in tracked:
         path = os.path.join(ROOT, rel)
-        if rel != "flycatcher_spark/session.py" and os.path.exists(path):
+        if os.path.exists(path):
             with open(path, encoding="utf-8") as f:
-                if needle in f.read():
-                    found.append(rel)
+                sources[rel] = f.read()
+    return sources
+
+
+def test_only_the_factory_builds_sessions():
+    # every session outside session.py goes through get_spark, so the
+    # bench, the tools and the library run under the same confs
+    needle = "SparkSession" + ".builder"
+    found = [
+        rel
+        for rel, text in _tracked_sources("*.py").items()
+        if rel != "flycatcher_spark/session.py" and needle in text
+    ]
+    assert found == []
+
+
+def test_library_does_not_import_mllib():
+    # every ANN index is trained by one driver-side numpy k-means over
+    # one bounded sample; MLlib would bring back a job per iteration
+    needle = re.compile(r"^\s*(from|import)\s+pyspark\.ml\b", re.MULTILINE)
+    found = [
+        rel
+        for rel, text in _tracked_sources("flycatcher_spark/*.py").items()
+        if needle.search(text)
+    ]
     assert found == []
