@@ -20,12 +20,19 @@ reference:
 from __future__ import annotations
 
 import types
-import typing
 from typing import Any, Callable, Union, get_args, get_origin
 
 from pyspark.sql import types as T
 
-from .fields import _MISSING, FieldBase, FieldInfo, get_field_class_for_type
+from .fields import (
+    _METADATA,
+    _MISSING,
+    FieldBase,
+    FieldInfo,
+    get_field_class_for_type,
+)
+from .validators import ValidatorResult
+from .validators.core import call_model_validator
 
 
 class SchemaMeta(type):
@@ -87,15 +94,21 @@ class SchemaMeta(type):
                 )
 
             if isinstance(class_value, FieldInfo):
-                kwargs = class_value.to_field_kwargs()
+                # Options the annotated type does not own (e.g. pattern
+                # on an int) are silently dropped, as in the reference
+                # (base.py:140-169).
+                kwargs = {
+                    k: v
+                    for k, v in class_value.options.items()
+                    if k in _METADATA or k in field_class.options
+                }
                 if nullable:
                     kwargs["nullable"] = True
-                field = _create_field_with_valid_kwargs(field_class, kwargs)
             else:
                 kwargs = {"nullable": nullable}
                 if class_value is not _MISSING:
                     kwargs["default"] = class_value
-                field = field_class(**kwargs)
+            field = field_class(**kwargs)
 
             field.name = field_name
             own_fields[field_name] = field
@@ -164,29 +177,6 @@ def _unwrap_optional(field_name: str, type_hint: Any) -> tuple[Any, bool]:
     return type_hint, False
 
 
-def _create_field_with_valid_kwargs(
-    field_class: type[FieldBase], kwargs: dict[str, typing.Any]
-) -> FieldBase:
-    """Instantiate a field class, dropping kwargs it doesn't accept.
-
-    Different field classes accept different constraint parameters
-    (e.g. ``pattern`` only on String); metadata captured by ``Field()``
-    that doesn't apply to the annotated type is silently ignored, as in
-    the reference (base.py:140-169).
-    """
-    import inspect
-
-    valid: set[str] = set()
-    for klass in field_class.__mro__:
-        init = klass.__dict__.get("__init__")
-        if init is None:
-            continue
-        sig = inspect.signature(init)
-        valid.update(set(sig.parameters.keys()) - {"self", "kwargs", "args"})
-    filtered = {k: v for k, v in kwargs.items() if k in valid}
-    return field_class(**filtered)
-
-
 class Schema(metaclass=SchemaMeta):
     """Base schema class for defining validated data models.
 
@@ -220,6 +210,15 @@ class Schema(metaclass=SchemaMeta):
     def model_validators(cls) -> list[Callable]:
         """All ``@model_validator`` functions (including inherited)."""
         return cls._model_validators.copy()
+
+    @classmethod
+    def _validator_results(cls) -> list[ValidatorResult]:
+        """Run every ``@model_validator`` once, in declaration order.
+
+        Both generators read their backend's half of each result, so
+        each validator is called the same way for both.
+        """
+        return [call_model_validator(v, cls) for v in cls._model_validators]
 
     @classmethod
     def to_spark_schema(cls) -> T.StructType:

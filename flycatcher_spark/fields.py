@@ -10,107 +10,64 @@ Where the reference compiles constraints to ``pl.Expr`` via
 ``get_spark_constraints()`` so that constraint evaluation runs inside
 Catalyst/Tungsten (whole-stage codegen, predicate pushdown) instead of
 a single-node columnar kernel.
+
+Each field class declares its constraint options once, in its
+``options`` table (option name -> Pydantic kwarg name, or None when
+the option reaches Pydantic through the type instead). The table
+drives the constructor, the metaclass's filtering of ``Field()``
+options, the Spark constraints and the Pydantic kwargs.
 """
 
 from __future__ import annotations
 
 import warnings
 from datetime import date, datetime
-from typing import Any, Callable
+from typing import Annotated, Any, Callable, ClassVar
 
 from pyspark.sql import types as T
 
-from .validators.array import ArrLen, ArrMax, ArrMin, MapHasKey, MapMax, MapMin
+from .validators.array import CollectionOp
 from .validators.core import FieldRef
-from .validators.ops import Expr, Lit
+from .validators.ops import BinaryOp, Expr, Lit
 
 # Sentinel: distinguishes "no default provided" from "default is None".
 _MISSING = object()
+
+# Metadata every field class accepts, with its default. DB-only
+# metadata (primary_key, unique, index, autoincrement, description)
+# shapes DDL and is intentionally NOT validated by the bulk path,
+# matching the reference's asymmetry (SURVEY.md §1.3).
+_METADATA: dict[str, Any] = {
+    "primary_key": False,
+    "nullable": False,
+    "default": _MISSING,
+    "description": None,
+    "unique": False,
+    "index": False,
+    "autoincrement": None,
+}
+
+# Bound options -> comparison symbol.
+_BOUNDS = {"gt": ">", "ge": ">=", "lt": "<", "le": "<="}
+
+# Count and per-element options shared by every collection field.
+_COUNTS = {"min_items": "min_length", "max_items": "max_length"}
+_ITEM_BOUNDS = {f"item_{k}": None for k in _BOUNDS}
 
 # Python annotation type -> Field class (populated at module end).
 _TYPE_MAP: dict[type, type["FieldBase"]] = {}
 
 
 class FieldInfo:
-    """Carrier for metadata/constraints declared through ``Field()``.
+    """Carrier for the metadata/constraints a ``Field()`` call set.
 
     Internal: the ``SchemaMeta`` metaclass merges a ``FieldInfo`` with
     the annotated Python type to pick and construct the concrete field
     class. Mirrors reference ``FieldInfo`` (fields.py:16-106).
     """
 
-    def __init__(
-        self,
-        *,
-        primary_key: bool = False,
-        nullable: bool = False,
-        default: Any = _MISSING,
-        description: str | None = None,
-        unique: bool = False,
-        index: bool = False,
-        autoincrement: bool | None = None,
-        gt: int | float | datetime | None = None,
-        ge: int | float | datetime | None = None,
-        lt: int | float | datetime | None = None,
-        le: int | float | datetime | None = None,
-        multiple_of: int | None = None,
-        min_length: int | None = None,
-        max_length: int | None = None,
-        pattern: str | None = None,
-        min_items: int | None = None,
-        max_items: int | None = None,
-        item_gt: int | float | None = None,
-        item_ge: int | float | None = None,
-        item_lt: int | float | None = None,
-        item_le: int | float | None = None,
-        required_keys: list[str] | None = None,
-    ):
-        self.primary_key = primary_key
-        self.nullable = nullable
-        self.default = default
-        self.description = description
-        self.unique = unique
-        self.index = index
-        self.autoincrement = autoincrement
-        self.gt = gt
-        self.ge = ge
-        self.lt = lt
-        self.le = le
-        self.multiple_of = multiple_of
-        self.min_length = min_length
-        self.max_length = max_length
-        self.pattern = pattern
-        self.min_items = min_items
-        self.max_items = max_items
-        self.item_gt = item_gt
-        self.item_ge = item_ge
-        self.item_lt = item_lt
-        self.item_le = item_le
-        self.required_keys = required_keys
-
-    def to_field_kwargs(self) -> dict[str, Any]:
-        """Flatten set options into constructor kwargs for a field class."""
-        kwargs: dict[str, Any] = {
-            "primary_key": self.primary_key,
-            "nullable": self.nullable,
-            "unique": self.unique,
-            "index": self.index,
-        }
-        if self.default is not _MISSING:
-            kwargs["default"] = self.default
-        if self.description is not None:
-            kwargs["description"] = self.description
-        if self.autoincrement is not None:
-            kwargs["autoincrement"] = self.autoincrement
-        for name in ("gt", "ge", "lt", "le", "multiple_of",
-                     "min_length", "max_length", "pattern",
-                     "min_items", "max_items",
-                     "item_gt", "item_ge", "item_lt", "item_le",
-                     "required_keys"):
-            value = getattr(self, name)
-            if value is not None:
-                kwargs[name] = value
-        return kwargs
+    def __init__(self, **options: Any):
+        self.options = options
 
 
 def Field(  # noqa: N802 - capitalized to match the Pydantic-style API
@@ -148,69 +105,54 @@ def Field(  # noqa: N802 - capitalized to match the Pydantic-style API
         ...     age: int = Field(ge=0, le=120)
         ...     email: str = Field(pattern=r'^[^@]+@[^@]+\\.[^@]+$')
     """
-    return FieldInfo(
-        primary_key=primary_key,
-        nullable=nullable,
-        default=default,
-        description=description,
-        unique=unique,
-        index=index,
-        autoincrement=autoincrement,
-        gt=gt,
-        ge=ge,
-        lt=lt,
-        le=le,
-        multiple_of=multiple_of,
-        min_length=min_length,
-        max_length=max_length,
-        pattern=pattern,
-        min_items=min_items,
-        max_items=max_items,
-        item_gt=item_gt,
-        item_ge=item_ge,
-        item_lt=item_lt,
-        item_le=item_le,
-        required_keys=required_keys,
-    )
+    given = locals()
+    # carry only what the call set: options still at their default
+    # (None, or the metadata default) are left out
+    return FieldInfo(**{k: v for k, v in given.items() if v is not _METADATA.get(k)})
 
 
 class FieldBase:
     """Base class for all schema field types.
 
     Holds name/nullability/default plus DB-only metadata (primary_key,
-    unique, index, autoincrement, description). DB-only metadata is
-    intentionally NOT validated by the bulk path — it only shapes DDL —
-    matching the reference's asymmetry (SURVEY.md §1.3).
+    unique, index, autoincrement, description), and the class's own
+    constraint options. Subclasses declare ``options`` and turn each
+    set option into constraints in ``_checks``.
     """
 
-    def __init__(
-        self,
-        *,
-        primary_key: bool = False,
-        nullable: bool = False,
-        default: Any = _MISSING,
-        description: str | None = None,
-        unique: bool = False,
-        index: bool = False,
-        autoincrement: bool | None = None,
-    ):
-        self.primary_key = primary_key
-        self.nullable = nullable
-        self.default = default
-        self.description = description
-        self.unique = unique
-        self.index = index
-        self.autoincrement = autoincrement
+    #: constraint option -> Pydantic ``Field`` kwarg name (None: the
+    #: option shapes the Pydantic type instead, see get_pydantic_type)
+    options: ClassVar[dict[str, str | None]] = {}
+
+    primary_key: bool
+    nullable: bool
+    default: Any
+    description: str | None
+    unique: bool
+    index: bool
+    autoincrement: bool | None
+
+    def __init__(self, **kwargs: Any):
+        for key in kwargs:
+            if key not in _METADATA and key not in self.options:
+                raise TypeError(
+                    f"{type(self).__name__}() got an unexpected keyword "
+                    f"argument '{key}'"
+                )
+        for key, default in _METADATA.items():
+            setattr(self, key, kwargs.get(key, default))
+        for key in self.options:
+            setattr(self, key, kwargs.get(key))
         self.name: str | None = None  # set by SchemaMeta
 
         # nullable + default is ambiguous (default fills only missing
         # columns, not nulls) — warn once, deferred until name is known.
-        self._needs_warning = nullable and default is not _MISSING
+        self._needs_warning = self.nullable and self.default is not _MISSING
 
         self.validators: list[Callable] = []
 
     # -- type mapping -------------------------------------------------
-    def get_python_type(self) -> type:
+    def get_python_type(self) -> Any:
         raise NotImplementedError
 
     def get_spark_dtype(self) -> T.DataType:
@@ -220,6 +162,19 @@ class FieldBase:
     def get_ddl_type(self) -> str:
         """ANSI-SQL-ish DDL type string for CREATE TABLE generation."""
         return self.get_spark_dtype().simpleString().upper()
+
+    # -- Pydantic -----------------------------------------------------
+    def get_pydantic_type(self) -> Any:
+        """Annotation for the generated Pydantic model field."""
+        return self.get_python_type()
+
+    def get_pydantic_field_kwargs(self) -> dict[str, Any]:
+        """Pydantic ``Field`` kwargs for the options that map to one."""
+        return {
+            kwarg: getattr(self, option)
+            for option, kwarg in self.options.items()
+            if kwarg is not None and getattr(self, option) is not None
+        }
 
     # -- constraints --------------------------------------------------
     def get_spark_constraints(self) -> list[tuple[Expr, str]]:
@@ -245,52 +200,56 @@ class FieldBase:
                 stacklevel=2,
             )
             self._needs_warning = False
-        return []
+        c = FieldRef(self.name)
+        return [
+            check
+            for option in self.options
+            if getattr(self, option) is not None
+            for check in self._checks(c, option, getattr(self, option))
+        ]
+
+    def _checks(self, c: FieldRef, option: str, value: Any) -> list[tuple[Expr, str]]:
+        """Constraints for one set option, in declaration order."""
+        raise NotImplementedError
 
     def add_validator(self, func: Callable):
         """Attach a custom validator callable (kept for API parity)."""
         self.validators.append(func)
         return self
 
-    # -- shared range-constraint helper -------------------------------
-    def _range_constraints(self, fmt=str, cast=None) -> list[tuple[Expr, str]]:
-        """gt/ge/lt/le constraints shared by numeric/datetime fields."""
-        assert self.name is not None
-        c = FieldRef(self.name)
-        out: list[tuple[Expr, str]] = []
-        for attr, op, sym in (
-            ("gt", c.__gt__, ">"),
-            ("ge", c.__ge__, ">="),
-            ("lt", c.__lt__, "<"),
-            ("le", c.__le__, "<="),
-        ):
-            bound = getattr(self, attr, None)
-            if bound is not None:
-                out.append(
-                    (op(Lit(bound, cast)), f"{self.name} must be {sym} {fmt(bound)}")
-                )
-        return out
+
+class _Range(FieldBase):
+    """gt/ge/lt/le bounds, shared by numeric and datetime fields."""
+
+    options: ClassVar[dict[str, str | None]] = {k: k for k in _BOUNDS}
+
+    gt: Any
+    ge: Any
+    lt: Any
+    le: Any
+
+    #: Spark type the bound literal is cast to (None: uncast)
+    bound_cast: ClassVar[T.DataType | None] = None
+
+    def _format(self, bound: Any) -> str:
+        return str(bound)
+
+    def _checks(self, c, option, bound):
+        sym = _BOUNDS[option]
+        return [
+            (
+                BinaryOp(c, sym, Lit(bound, self.bound_cast)),
+                f"{self.name} must be {sym} {self._format(bound)}",
+            )
+        ]
 
 
-class Integer(FieldBase):
+class Integer(_Range):
     """int field → Spark ``LongType`` with gt/ge/lt/le/multiple_of."""
 
-    def __init__(
-        self,
-        *,
-        gt: int | None = None,
-        ge: int | None = None,
-        lt: int | None = None,
-        le: int | None = None,
-        multiple_of: int | None = None,
-        **kwargs,
-    ):
-        super().__init__(**kwargs)
-        self.gt = gt
-        self.ge = ge
-        self.lt = lt
-        self.le = le
-        self.multiple_of = multiple_of
+    options = {**_Range.options, "multiple_of": "multiple_of"}
+
+    multiple_of: int | None
 
     def get_python_type(self):
         return int
@@ -298,63 +257,20 @@ class Integer(FieldBase):
     def get_spark_dtype(self):
         return T.LongType()
 
-    def get_spark_constraints(self) -> list[tuple[Expr, str]]:
-        constraints = list(super().get_spark_constraints())
-        constraints.extend(self._range_constraints())
-        if self.multiple_of is not None:
-            constraints.append(
-                (
-                    FieldRef(self.name) % self.multiple_of == 0,
-                    f"{self.name} must be multiple of {self.multiple_of}",
-                )
-            )
-        return constraints
-
-    def get_pydantic_field_kwargs(self) -> dict[str, Any]:
-        kwargs = {}
-        for k in ("gt", "ge", "lt", "le", "multiple_of"):
-            v = getattr(self, k)
-            if v is not None:
-                kwargs[k] = v
-        return kwargs
+    def _checks(self, c, option, value):
+        if option == "multiple_of":
+            return [(c % value == 0, f"{self.name} must be multiple of {value}")]
+        return super()._checks(c, option, value)
 
 
-class Float(FieldBase):
+class Float(_Range):
     """float field → Spark ``DoubleType`` with gt/ge/lt/le."""
-
-    def __init__(
-        self,
-        *,
-        gt: float | None = None,
-        ge: float | None = None,
-        lt: float | None = None,
-        le: float | None = None,
-        **kwargs,
-    ):
-        super().__init__(**kwargs)
-        self.gt = gt
-        self.ge = ge
-        self.lt = lt
-        self.le = le
 
     def get_python_type(self):
         return float
 
     def get_spark_dtype(self):
         return T.DoubleType()
-
-    def get_spark_constraints(self) -> list[tuple[Expr, str]]:
-        constraints = list(super().get_spark_constraints())
-        constraints.extend(self._range_constraints())
-        return constraints
-
-    def get_pydantic_field_kwargs(self) -> dict[str, Any]:
-        kwargs = {}
-        for k in ("gt", "ge", "lt", "le"):
-            v = getattr(self, k)
-            if v is not None:
-                kwargs[k] = v
-        return kwargs
 
 
 class String(FieldBase):
@@ -366,18 +282,11 @@ class String(FieldBase):
     (``rlike``), matching the reference's ``str.contains``.
     """
 
-    def __init__(
-        self,
-        *,
-        max_length: int | None = None,
-        min_length: int | None = None,
-        pattern: str | None = None,
-        **kwargs,
-    ):
-        super().__init__(**kwargs)
-        self.max_length = max_length
-        self.min_length = min_length
-        self.pattern = pattern
+    options = {k: k for k in ("min_length", "max_length", "pattern")}
+
+    min_length: int | None
+    max_length: int | None
+    pattern: str | None
 
     def get_python_type(self):
         return str
@@ -390,39 +299,16 @@ class String(FieldBase):
             return f"VARCHAR({self.max_length})"
         return "STRING"
 
-    def get_spark_constraints(self) -> list[tuple[Expr, str]]:
-        constraints = list(super().get_spark_constraints())
-        c = FieldRef(self.name)
-        if self.min_length is not None:
-            constraints.append(
-                (
-                    c.str.len_chars() >= self.min_length,
-                    f"{self.name} must have at least {self.min_length} characters",
-                )
+    def _checks(self, c, option, value):
+        if option == "pattern":
+            return [(c.str.contains(value), f"{self.name} must match pattern: {value}")]
+        sym, word = (">=", "least") if option == "min_length" else ("<=", "most")
+        return [
+            (
+                BinaryOp(c.str.len_chars(), sym, value),
+                f"{self.name} must have at {word} {value} characters",
             )
-        if self.max_length is not None:
-            constraints.append(
-                (
-                    c.str.len_chars() <= self.max_length,
-                    f"{self.name} must have at most {self.max_length} characters",
-                )
-            )
-        if self.pattern is not None:
-            constraints.append(
-                (
-                    c.str.contains(self.pattern),
-                    f"{self.name} must match pattern: {self.pattern}",
-                )
-            )
-        return constraints
-
-    def get_pydantic_field_kwargs(self) -> dict[str, Any]:
-        kwargs: dict[str, Any] = {}
-        for k in ("min_length", "max_length", "pattern"):
-            v = getattr(self, k)
-            if v is not None:
-                kwargs[k] = v
-        return kwargs
+        ]
 
 
 class Boolean(FieldBase):
@@ -435,27 +321,16 @@ class Boolean(FieldBase):
         return T.BooleanType()
 
 
-class Datetime(FieldBase):
+class Datetime(_Range):
     """datetime field → Spark ``TimestampNTZType`` with range constraints.
 
     TimestampNTZ is chosen for parity with the reference's tz-naive
     semantics (Polars ``pl.Datetime`` is tz-naive; SURVEY.md §1.2).
+    Literal datetimes become TIMESTAMP in Spark; bounds are cast to
+    NTZ so the comparison stays timezone-free.
     """
 
-    def __init__(
-        self,
-        *,
-        gt: datetime | None = None,
-        ge: datetime | None = None,
-        lt: datetime | None = None,
-        le: datetime | None = None,
-        **kwargs,
-    ):
-        super().__init__(**kwargs)
-        self.gt = gt
-        self.ge = ge
-        self.lt = lt
-        self.le = le
+    bound_cast = T.TimestampNTZType()
 
     def get_python_type(self):
         return datetime
@@ -463,24 +338,8 @@ class Datetime(FieldBase):
     def get_spark_dtype(self):
         return T.TimestampNTZType()
 
-    def get_spark_constraints(self) -> list[tuple[Expr, str]]:
-        constraints = list(super().get_spark_constraints())
-        # Literal datetimes become TIMESTAMP in Spark; cast to NTZ so the
-        # comparison against a TimestampNTZ column stays timezone-free.
-        constraints.extend(
-            self._range_constraints(
-                fmt=lambda v: v.isoformat(), cast=T.TimestampNTZType()
-            )
-        )
-        return constraints
-
-    def get_pydantic_field_kwargs(self) -> dict[str, Any]:
-        kwargs: dict[str, Any] = {}
-        for k in ("gt", "ge", "lt", "le"):
-            v = getattr(self, k)
-            if v is not None:
-                kwargs[k] = v
-        return kwargs
+    def _format(self, bound):
+        return bound.isoformat()
 
 
 class Date(FieldBase):
@@ -493,256 +352,157 @@ class Date(FieldBase):
         return T.DateType()
 
 
-class Array(FieldBase):
-    """``list[T]`` field → Spark ``ArrayType`` (§7 extension; the
-    reference DSL is scalar-only).
+class _Collection(FieldBase):
+    """Count bounds and per-element bounds, shared by ``Array`` and ``Map``.
 
-    Constraints: ``min_items``/``max_items`` bound the element count
-    (``.arr.len()``); ``item_gt/ge/lt/le`` bound every element via
-    the array extrema (``arr.min() >= b`` == "all elements >= b") —
+    ``min_items``/``max_items`` bound the element count
+    (``.arr.len()``); ``item_gt/ge/lt/le`` bound every element via the
+    collection's extrema (``min() >= b`` == "all elements >= b") —
     single codegen'd expressions, no higher-order lambdas, and
-    mirrorable in plain Python for the Pydantic bridge. Null-array
-    rows pass constraints (null handling owns them), matching every
-    scalar field.
+    mirrorable in plain Python for the Pydantic bridge. A null
+    collection passes constraints (null handling owns it), matching
+    every scalar field.
     """
+
+    options: ClassVar[dict[str, str | None]] = {**_COUNTS, **_ITEM_BOUNDS}
+
+    min_items: int | None
+    max_items: int | None
+    item_gt: int | float | None
+    item_ge: int | float | None
+    item_lt: int | float | None
+    item_le: int | float | None
 
     element_type: type = float  # overridden by concrete subclasses
     element_dtype: T.DataType = T.DoubleType()
+    #: nouns for the count and for one element in messages
+    count_noun: ClassVar[str] = "items"
+    item_noun: ClassVar[str] = "items"
+    #: extrema ops the lower and upper element bounds compare against
+    extrema: ClassVar[tuple[str, str]] = ("arr.min", "arr.max")
 
-    def __init__(
-        self,
-        *,
-        min_items: int | None = None,
-        max_items: int | None = None,
-        item_gt: int | float | None = None,
-        item_ge: int | float | None = None,
-        item_lt: int | float | None = None,
-        item_le: int | float | None = None,
-        **kwargs,
-    ):
-        super().__init__(**kwargs)
-        self.min_items = min_items
-        self.max_items = max_items
-        self.item_gt = item_gt
-        self.item_ge = item_ge
-        self.item_lt = item_lt
-        self.item_le = item_le
+    def _container(self, element: Any) -> Any:
+        raise NotImplementedError
 
     def get_python_type(self):
-        return list[self.element_type]  # type: ignore[name-defined]
+        return self._container(self.element_type)
 
     def get_pydantic_type(self):
-        """list[Annotated[T, Field(...)]] when item bounds exist."""
+        """Container of ``Annotated[T, Field(...)]`` when item bounds exist."""
         bounds = {
-            k: v
-            for k, v in (
-                ("gt", self.item_gt),
-                ("ge", self.item_ge),
-                ("lt", self.item_lt),
-                ("le", self.item_le),
-            )
-            if v is not None
+            option.removeprefix("item_"): getattr(self, option)
+            for option in _ITEM_BOUNDS
+            if getattr(self, option) is not None
         }
         if not bounds:
             return self.get_python_type()
-        from typing import Annotated
-
         from pydantic import Field as PydanticField
 
-        return list[Annotated[self.element_type, PydanticField(**bounds)]]  # type: ignore[name-defined]
+        element = Annotated[self.element_type, PydanticField(**bounds)]  # type: ignore[name-defined, valid-type]
+        return self._container(element)
 
-    def get_pydantic_field_kwargs(self) -> dict:
-        out = {}
-        if self.min_items is not None:
-            out["min_length"] = self.min_items
-        if self.max_items is not None:
-            out["max_length"] = self.max_items
-        return out
+    def _checks(self, c, option, value):
+        if option in _COUNTS:
+            sym, word = (">=", "least") if option == "min_items" else ("<=", "most")
+            return [
+                (
+                    BinaryOp(CollectionOp("arr.len", c), sym, Lit(value)),
+                    f"{self.name} must have at {word} {value} {self.count_noun}",
+                )
+            ]
+        sym = _BOUNDS[option.removeprefix("item_")]
+        lowest, highest = self.extrema
+        extremum = CollectionOp(lowest if sym.startswith(">") else highest, c)
+        return [
+            (
+                BinaryOp(extremum, sym, Lit(value)),
+                f"{self.name} {self.item_noun} must be {sym} {value}",
+            )
+        ]
+
+
+class Array(_Collection):
+    """``list[T]`` field → Spark ``ArrayType`` (§7 extension; the
+    reference DSL is scalar-only)."""
+
+    def _container(self, element):
+        return list[element]  # type: ignore[name-defined, valid-type]
 
     def get_spark_dtype(self):
         return T.ArrayType(self.element_dtype, containsNull=True)
 
-    def get_spark_constraints(self):
-        constraints = list(super().get_spark_constraints())
-        assert self.name is not None
-        c = FieldRef(self.name)
-        if self.min_items is not None:
-            constraints.append(
-                (
-                    ArrLen(c) >= Lit(self.min_items),
-                    f"{self.name} must have at least {self.min_items} items",
-                )
-            )
-        if self.max_items is not None:
-            constraints.append(
-                (
-                    ArrLen(c) <= Lit(self.max_items),
-                    f"{self.name} must have at most {self.max_items} items",
-                )
-            )
-        for attr, node, op, sym in (
-            ("item_gt", ArrMin, "__gt__", ">"),
-            ("item_ge", ArrMin, "__ge__", ">="),
-            ("item_lt", ArrMax, "__lt__", "<"),
-            ("item_le", ArrMax, "__le__", "<="),
-        ):
-            bound = getattr(self, attr)
-            if bound is not None:
-                constraints.append(
-                    (
-                        getattr(node(c), op)(Lit(bound)),
-                        f"{self.name} items must be {sym} {bound}",
-                    )
-                )
-        return constraints
 
-
-class Map(FieldBase):
+class Map(_Collection):
     """``dict[str, T]`` field → Spark ``MapType(string, T)`` (§7
     nested-type extension; JSON-object-shaped metadata columns).
 
-    Constraints: ``min_items``/``max_items`` bound the entry count,
-    ``required_keys`` demands specific keys, ``item_gt/ge/lt/le``
-    bound every VALUE via map_values extrema. Same null semantics as
-    every field: a null map passes constraints (null handling owns
-    it).
+    Count bounds count entries, ``required_keys`` demands specific
+    keys, and item bounds bound every VALUE via map_values extrema.
     """
 
-    value_type: type = str
-    value_dtype: T.DataType = T.StringType()
+    options = {**_COUNTS, "required_keys": None, **_ITEM_BOUNDS}
 
-    def __init__(
-        self,
-        *,
-        min_items: int | None = None,
-        max_items: int | None = None,
-        required_keys: list[str] | None = None,
-        item_gt: int | float | None = None,
-        item_ge: int | float | None = None,
-        item_lt: int | float | None = None,
-        item_le: int | float | None = None,
-        **kwargs,
-    ):
-        super().__init__(**kwargs)
-        self.min_items = min_items
-        self.max_items = max_items
-        self.required_keys = list(required_keys) if required_keys else None
-        self.item_gt = item_gt
-        self.item_ge = item_ge
-        self.item_lt = item_lt
-        self.item_le = item_le
+    required_keys: list[str] | None
 
-    def get_python_type(self):
-        return dict[str, self.value_type]  # type: ignore[name-defined]
+    element_type = str
+    element_dtype = T.StringType()
+    count_noun = "entries"
+    item_noun = "values"
+    extrema = ("map.min", "map.max")
+
+    def _container(self, element):
+        return dict[str, element]  # type: ignore[name-defined, valid-type]
 
     def get_pydantic_type(self):
-        from typing import Annotated
-
+        py_type = super().get_pydantic_type()
+        if not self.required_keys:
+            return py_type
         from pydantic import AfterValidator
-        from pydantic import Field as PydanticField
 
-        bounds = {
-            k: v
-            for k, v in (
-                ("gt", self.item_gt),
-                ("ge", self.item_ge),
-                ("lt", self.item_lt),
-                ("le", self.item_le),
-            )
-            if v is not None
-        }
-        vt: Any = (
-            Annotated[self.value_type, PydanticField(**bounds)]
-            if bounds
-            else self.value_type
-        )
-        py_type: Any = dict[str, vt]
-        if self.required_keys:
-            required = list(self.required_keys)
-            fname = self.name
+        required = list(self.required_keys)
+        fname = self.name
 
-            def _check(v: dict) -> dict:
-                missing = [k for k in required if k not in v]
-                if missing:
-                    raise ValueError(
-                        f"{fname or 'map'} missing required keys: {missing}"
-                    )
-                return v
+        def _check(v: dict) -> dict:
+            missing = [k for k in required if k not in v]
+            if missing:
+                raise ValueError(f"{fname or 'map'} missing required keys: {missing}")
+            return v
 
-            py_type = Annotated[py_type, AfterValidator(_check)]
-        return py_type
-
-    def get_pydantic_field_kwargs(self) -> dict:
-        out = {}
-        if self.min_items is not None:
-            out["min_length"] = self.min_items
-        if self.max_items is not None:
-            out["max_length"] = self.max_items
-        return out
+        return Annotated[py_type, AfterValidator(_check)]
 
     def get_spark_dtype(self):
-        return T.MapType(T.StringType(), self.value_dtype, valueContainsNull=True)
+        return T.MapType(T.StringType(), self.element_dtype, valueContainsNull=True)
 
-    def get_spark_constraints(self):
-        constraints = list(super().get_spark_constraints())
-        assert self.name is not None
-        c = FieldRef(self.name)
-        if self.min_items is not None:
-            constraints.append(
+    def _checks(self, c, option, value):
+        if option == "required_keys":
+            return [
                 (
-                    ArrLen(c) >= Lit(self.min_items),
-                    f"{self.name} must have at least {self.min_items} entries",
-                )
-            )
-        if self.max_items is not None:
-            constraints.append(
-                (
-                    ArrLen(c) <= Lit(self.max_items),
-                    f"{self.name} must have at most {self.max_items} entries",
-                )
-            )
-        for key in self.required_keys or []:
-            constraints.append(
-                (
-                    MapHasKey(c, key),
+                    CollectionOp("map.has_key", c, key),
                     f"{self.name} must contain key '{key}'",
                 )
-            )
-        for attr, node, op, sym in (
-            ("item_gt", MapMin, "__gt__", ">"),
-            ("item_ge", MapMin, "__ge__", ">="),
-            ("item_lt", MapMax, "__lt__", "<"),
-            ("item_le", MapMax, "__le__", "<="),
-        ):
-            bound = getattr(self, attr)
-            if bound is not None:
-                constraints.append(
-                    (
-                        getattr(node(c), op)(Lit(bound)),
-                        f"{self.name} values must be {sym} {bound}",
-                    )
-                )
-        return constraints
+                for key in value
+            ]
+        return super()._checks(c, option, value)
 
 
 class StrMap(Map):
-    value_type = str
-    value_dtype = T.StringType()
+    element_type = str
+    element_dtype = T.StringType()
 
 
 class IntMap(Map):
-    value_type = int
-    value_dtype = T.LongType()
+    element_type = int
+    element_dtype = T.LongType()
 
 
 class FloatMap(Map):
-    value_type = float
-    value_dtype = T.DoubleType()
+    element_type = float
+    element_dtype = T.DoubleType()
 
 
 class BoolMap(Map):
-    value_type = bool
-    value_dtype = T.BooleanType()
+    element_type = bool
+    element_dtype = T.BooleanType()
 
 
 class IntArray(Array):

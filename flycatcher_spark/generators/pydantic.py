@@ -13,7 +13,6 @@ run in the bulk path.
 
 from __future__ import annotations
 
-import inspect
 import logging
 from typing import TYPE_CHECKING, Any, Union
 
@@ -22,7 +21,6 @@ from pydantic import Field as PydanticField
 from pydantic import model_validator as pydantic_model_validator
 
 from ..fields import _MISSING
-from ..validators import ValidatorResult
 
 if TYPE_CHECKING:  # pragma: no cover
     from ..base import Schema
@@ -36,10 +34,7 @@ def create_pydantic_model(schema_cls: "type[Schema]") -> type[BaseModel]:
     pydantic_fields: dict[str, Any] = {}
 
     for field_name, field in fields.items():
-        get_type = getattr(field, "get_pydantic_type", None)
-        python_type: Any = (
-            get_type() if get_type is not None else field.get_python_type()
-        )
+        python_type: Any = field.get_pydantic_type()
         if field.nullable:
             python_type = Union[python_type, None]
 
@@ -48,10 +43,7 @@ def create_pydantic_model(schema_cls: "type[Schema]") -> type[BaseModel]:
             field_kwargs["description"] = field.description
         if field.default is not _MISSING:
             field_kwargs["default"] = field.default
-
-        get_kwargs = getattr(field, "get_pydantic_field_kwargs", None)
-        if get_kwargs is not None:
-            field_kwargs.update(get_kwargs())
+        field_kwargs.update(field.get_pydantic_field_kwargs())
 
         if field_kwargs:
             pydantic_fields[field_name] = (python_type, PydanticField(**field_kwargs))
@@ -61,19 +53,12 @@ def create_pydantic_model(schema_cls: "type[Schema]") -> type[BaseModel]:
     model_name = schema_cls.__name__.removesuffix("Schema") + "Model"
     base_model: type[BaseModel] = create_model(model_name, **pydantic_fields)
 
-    # Compile model validators that have a Python-side implementation.
-    validators_to_add = []
-    for validator_func in schema_cls.model_validators():
-        func = (
-            validator_func.__func__
-            if isinstance(validator_func, classmethod)
-            else validator_func
-        )
-        sig = inspect.signature(func)
-        validator_result = func(schema_cls) if len(sig.parameters) > 0 else func()
-        result = ValidatorResult(validator_result)
-        if result.has_pydantic_validator():
-            validators_to_add.append(result.get_pydantic_validator())
+    # Model validators that have a Python-side implementation.
+    validators_to_add = [
+        validator
+        for result in schema_cls._validator_results()
+        if (validator := result.get_pydantic_validator()) is not None
+    ]
 
     if validators_to_add:
 

@@ -45,7 +45,6 @@ it is counted in neither.
 
 from __future__ import annotations
 
-import inspect
 import logging
 from concurrent.futures import Future, ThreadPoolExecutor
 from functools import cache, reduce
@@ -57,7 +56,6 @@ from pyspark.sql import types as T
 from pyspark.util import inheritable_thread_target
 
 from ..fields import _MISSING
-from ..validators import ValidatorResult
 
 if TYPE_CHECKING:  # pragma: no cover
     from ..base import Schema
@@ -116,15 +114,7 @@ class SparkValidator:
         constraints: list[tuple[Any, str]] = []
         for _name, field in self.fields.items():
             constraints.extend(field.get_spark_constraints())
-
-        for validator in self.schema_cls.model_validators():
-            func = validator.__func__ if isinstance(validator, classmethod) else validator
-            sig = inspect.signature(func)
-            if len(sig.parameters) > 0:
-                validator_result = func(self.schema_cls)
-            else:
-                validator_result = func()
-            result = ValidatorResult(validator_result)
+        for result in self.schema_cls._validator_results():
             constraints.append(result.get_spark_validator())
         return constraints
 

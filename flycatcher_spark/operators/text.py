@@ -71,11 +71,7 @@ def char_count(text: Column | str) -> Column:
 
 def stopword_ratio(text: Column | str) -> Column:
     """Fraction of whitespace tokens that are (lowercased) stopwords."""
-    toks = tokens(text)
-    hits = F.size(F.filter(toks, lambda t: F.lower(t).isin(STOPWORDS)))
-    return F.when(F.size(toks) == 0, F.lit(0.0)).otherwise(
-        hits.cast("double") / F.size(toks)
-    )
+    return _stopword_ratio_tk(tokens(text))
 
 
 def punct_ratio(text: Column | str) -> Column:
@@ -94,13 +90,7 @@ def digit_ratio(text: Column | str) -> Column:
 
 
 def mean_token_length(text: Column | str) -> Column:
-    toks = tokens(text)
-    total = F.aggregate(
-        toks, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t)
-    )
-    return F.when(F.size(toks) == 0, F.lit(0.0)).otherwise(
-        total.cast("double") / F.size(toks)
-    )
+    return _mean_token_length_tk(tokens(text))
 
 
 def quality_score(text: Column | str) -> Column:
@@ -119,34 +109,19 @@ def quality_score(text: Column | str) -> Column:
         [Row(q=0.75)]
     """
     c = F.col(text) if isinstance(text, str) else text
-
-    def build(tk: Column) -> Column:
-        n_tok = F.size(tk).cast("double")
-        length_ok = F.when(
-            (n_tok >= 10) & (n_tok <= 5000), F.lit(1.0)
-        ).otherwise(F.lit(0.5))
-        mtl = _mean_token_length_tk(tk)
-        mtl_ok = F.when((mtl >= 3.0) & (mtl <= 8.0), F.lit(1.0)).otherwise(
-            F.lit(0.5)
-        )
-        sw = _stopword_ratio_tk(tk)
-        sw_ok = F.least(sw * 4.0, F.lit(1.0))
-        noise = punct_ratio(c) + digit_ratio(c)
-        noise_ok = F.greatest(F.lit(0.0), F.lit(1.0) - noise * 2.0)
-        return F.round((length_ok + mtl_ok + sw_ok + noise_ok) / 4.0, 6)
-
     # one tokenize pass instead of three (token_count +
     # mean_token_length + stopword_ratio each re-tokenizing)
-    return bind_once(tokens(c), build)
+    return bind_once(
+        tokens(c),
+        lambda tk: _quality_tk(
+            tk, _mean_token_length_tk(tk), _stopword_ratio_tk(tk), c
+        ),
+    )
 
 
 def lang_scores(text: Column | str) -> dict[str, Column]:
     """Per-language marker-hit counts over lowercased tokens."""
-    toks = F.transform(tokens(text), F.lower)
-    return {
-        lang: F.size(F.filter(toks, lambda t: t.isin(markers)))
-        for lang, markers in LANG_MARKERS.items()
-    }
+    return _lang_scores_tk(tokens(text))
 
 
 def lang_id(text: Column | str) -> Column:
@@ -172,7 +147,7 @@ def lang_id(text: Column | str) -> Column:
 
 
 def _mean_token_length_tk(tk: Column) -> Column:
-    """mean_token_length over a bound token array (same expression)."""
+    """mean_token_length over a token array."""
     total = F.aggregate(
         tk, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t)
     )
@@ -182,20 +157,25 @@ def _mean_token_length_tk(tk: Column) -> Column:
 
 
 def _stopword_ratio_tk(tk: Column) -> Column:
-    """stopword_ratio over a bound token array (same expression)."""
+    """stopword_ratio over a token array."""
     hits = F.size(F.filter(tk, lambda t: F.lower(t).isin(STOPWORDS)))
     return F.when(F.size(tk) == 0, F.lit(0.0)).otherwise(
         hits.cast("double") / F.size(tk)
     )
 
 
-def _lang_id_tk(tk: Column) -> Column:
-    """lang_id over a bound token array (same expression/tie-break)."""
+def _lang_scores_tk(tk: Column) -> dict[str, Column]:
+    """lang_scores over a token array."""
     lowered = F.transform(tk, F.lower)
-    scores = {
+    return {
         lang: F.size(F.filter(lowered, lambda t: t.isin(markers)))
         for lang, markers in LANG_MARKERS.items()
     }
+
+
+def _lang_id_tk(tk: Column) -> Column:
+    """lang_id over a token array: argmax of its marker scores."""
+    scores = _lang_scores_tk(tk)
     best_lang = F.lit("und")
     best_score = F.lit(0)
     for lang in sorted(scores):
@@ -204,6 +184,21 @@ def _lang_id_tk(tk: Column) -> Column:
         best_lang = F.when(is_better, F.lit(lang)).otherwise(best_lang)
         best_score = F.when(is_better, s).otherwise(best_score)
     return best_lang
+
+
+def _quality_tk(tk: Column, mtl: Column, sw: Column, text: Column) -> Column:
+    """quality_score's formula over a token array, its mean token
+    length and stopword ratio, and the raw text (for the character
+    ratios)."""
+    n_tok = F.size(tk).cast("double")
+    length_ok = F.when((n_tok >= 10) & (n_tok <= 5000), F.lit(1.0)).otherwise(
+        F.lit(0.5)
+    )
+    mtl_ok = F.when((mtl >= 3.0) & (mtl <= 8.0), F.lit(1.0)).otherwise(F.lit(0.5))
+    sw_ok = F.least(sw * 4.0, F.lit(1.0))
+    noise = punct_ratio(text) + digit_ratio(text)
+    noise_ok = F.greatest(F.lit(0.0), F.lit(1.0) - noise * 2.0)
+    return F.round((length_ok + mtl_ok + sw_ok + noise_ok) / 4.0, 6)
 
 
 def profile_struct(text: Column | str) -> Column:
@@ -223,25 +218,13 @@ def profile_struct(text: Column | str) -> Column:
     c = F.col(text) if isinstance(text, str) else text
 
     def build(tk: Column) -> Column:
-        n_tok = F.size(tk)
         mtl = _mean_token_length_tk(tk)
         sw = _stopword_ratio_tk(tk)
-        length_ok = F.when(
-            (n_tok.cast("double") >= 10) & (n_tok.cast("double") <= 5000),
-            F.lit(1.0),
-        ).otherwise(F.lit(0.5))
-        mtl_ok = F.when((mtl >= 3.0) & (mtl <= 8.0), F.lit(1.0)).otherwise(
-            F.lit(0.5)
-        )
-        sw_ok = F.least(sw * 4.0, F.lit(1.0))
-        noise = punct_ratio(c) + digit_ratio(c)
-        noise_ok = F.greatest(F.lit(0.0), F.lit(1.0) - noise * 2.0)
-        quality = F.round((length_ok + mtl_ok + sw_ok + noise_ok) / 4.0, 6)
         return F.struct(
-            n_tok.alias("n_tokens"),
+            F.size(tk).alias("n_tokens"),
             mtl.alias("mean_token_len"),
             sw.alias("stopword_ratio"),
-            quality.alias("quality"),
+            _quality_tk(tk, mtl, sw, c).alias("quality"),
             _lang_id_tk(tk).alias("lang_pred"),
         )
 

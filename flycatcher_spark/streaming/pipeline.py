@@ -90,16 +90,14 @@ def windowed_quality(
             F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"nulls_{c}")
         )
     if validator is not None:
-        flagged = validator.flag_violations(sdf)
-        # one conditional aggregate per constraint, evaluated on the
-        # per-row violations array (single pass)
-        for i, msg in enumerate(validator.describe_constraints()):
-            aggs.append(
-                F.sum(
-                    F.when(F.array_contains("_violations", msg), 1).otherwise(0)
-                ).alias(f"viol_{i}")
-            )
-        sdf = flagged
+        sdf = validator._coerce(sdf, fill_nulls=False)
+        # one conditional aggregate per constraint on its own predicate
+        # (single pass); constraints that cannot resolve count 0, as
+        # flag_violations never reports them
+        usable = {i: expr for i, expr, _msg in validator._usable_constraints(sdf)}
+        for i in range(len(validator.describe_constraints())):
+            violated = ~usable[i] if i in usable else F.lit(False)
+            aggs.append(F.sum(F.when(violated, 1).otherwise(0)).alias(f"viol_{i}"))
     # Event-time semantics require TIMESTAMP; NTZ columns (the parquet
     # default here) are reinterpreted in the session timezone.
     sdf = sdf.withColumn(ts_col, F.col(ts_col).cast("timestamp"))

@@ -1,25 +1,30 @@
-"""Array expression nodes: the ``.arr`` accessor.
+"""Collection expression nodes: the ``.arr`` and ``.map`` accessors.
 
 Extension beyond the reference surface (nested/array types are a
-SURVEY §7 item — the reference DSL is scalar-only). Three nodes cover
-the constraint surface an ``array<T>`` column needs:
+SURVEY §7 item — the reference DSL is scalar-only). One table-driven
+node, ``CollectionOp``, covers the constraint surface an
+``array<T>`` or ``map<string, T>`` column needs:
 
-- ``ArrLen`` — element count (``F.size``; null array -> null, so a
-  length constraint on a null row is neither pass nor violation,
+- ``arr.len`` — element (or entry) count (``F.size``; null -> null,
+  so a length constraint on a null row is neither pass nor violation,
   consistent with every scalar constraint).
-- ``ArrMin`` / ``ArrMax`` — element extrema (``F.array_min/max``;
+- ``arr.min`` / ``arr.max`` — element extrema (``F.array_min/max``;
   null or empty array -> null). ``arr.min() >= b`` is exactly
   "every element >= b" and compiles to ONE codegen'd expression —
   unlike a ``forall`` lambda, it is also expressible in plain Python
   for the Pydantic bridge and in any SQL dialect for the oracles.
+- ``map.has_key`` — key presence; ``map.min`` / ``map.max`` — extrema
+  over the map's VALUES.
 
 All dual-compile: ``to_spark()`` -> Column, ``to_python(values)`` ->
-plain value, matching the rest of the DSL.
+plain value, matching the rest of the DSL. A null collection yields
+null from every op.
 """
 
 from __future__ import annotations
 
-from typing import Any
+import builtins
+from typing import Any, Callable
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -27,122 +32,54 @@ from pyspark.sql import functions as F
 from .ops import Expr
 
 
-class ArrLen(Expr):
-    """Number of elements in an array column (null -> null)."""
-
-    def __init__(self, operand: Any):
-        self.operand = operand
-
-    def to_spark(self) -> Column:
-        return F.size(self._to_spark(self.operand))
-
-    def to_python(self, values: Any) -> Any:
-        v = self._to_python(self.operand, values)
-        return None if v is None else len(v)
-
-    def __repr__(self) -> str:
-        return f"{self.operand!r}.arr.len()"
+def _extremum(pick: Callable, items: Any) -> Any:
+    """``pick`` over the non-null items; none left -> None."""
+    present = [x for x in items if x is not None]
+    return pick(present) if present else None
 
 
-class ArrMin(Expr):
-    """Smallest element (null/empty array -> null; nulls skipped)."""
+class CollectionOp(Expr):
+    """Array/map operation node dual-compiled to Spark and Python.
 
-    def __init__(self, operand: Any):
-        self.operand = operand
+    ``op`` is the accessor path it was built from (``"arr.len"``,
+    ``"map.has_key"``, ...), which is also how it prints.
+    """
 
-    def to_spark(self) -> Column:
-        return F.array_min(self._to_spark(self.operand))
-
-    def to_python(self, values: Any) -> Any:
-        v = self._to_python(self.operand, values)
-        if v is None:
-            return None
-        items = [x for x in v if x is not None]
-        return min(items) if items else None
-
-    def __repr__(self) -> str:
-        return f"{self.operand!r}.arr.min()"
-
-
-class ArrMax(Expr):
-    """Largest element (null/empty array -> null; nulls skipped)."""
-
-    def __init__(self, operand: Any):
-        self.operand = operand
-
-    def to_spark(self) -> Column:
-        return F.array_max(self._to_spark(self.operand))
-
-    def to_python(self, values: Any) -> Any:
-        v = self._to_python(self.operand, values)
-        if v is None:
-            return None
-        items = [x for x in v if x is not None]
-        return max(items) if items else None
-
-    def __repr__(self) -> str:
-        return f"{self.operand!r}.arr.max()"
-
-
-class MapHasKey(Expr):
-    """True when a map column contains ``key`` (null map -> null)."""
-
-    def __init__(self, operand: Any, key: str):
-        self.operand = operand
-        self.key = key
-
-    def to_spark(self) -> Column:
-        c = self._to_spark(self.operand)
-        return F.when(
+    SPARK_OPS: dict[builtins.str, Callable[..., Column]] = {
+        "arr.len": F.size,
+        "arr.min": F.array_min,
+        "arr.max": F.array_max,
+        "map.has_key": lambda c, key: F.when(
             c.isNull(), F.lit(None).cast("boolean")
-        ).otherwise(F.map_contains_key(c, self.key))
+        ).otherwise(F.map_contains_key(c, key)),
+        "map.min": lambda c: F.array_min(F.map_values(c)),
+        "map.max": lambda c: F.array_max(F.map_values(c)),
+    }
 
-    def to_python(self, values: Any) -> Any:
-        v = self._to_python(self.operand, values)
-        return None if v is None else self.key in v
+    PYTHON_OPS: dict[builtins.str, Callable[..., Any]] = {
+        "arr.len": len,
+        "arr.min": lambda v: _extremum(min, v),
+        "arr.max": lambda v: _extremum(max, v),
+        "map.has_key": lambda v, key: key in v,
+        "map.min": lambda v: _extremum(min, v.values()),
+        "map.max": lambda v: _extremum(max, v.values()),
+    }
 
-    def __repr__(self) -> str:
-        return f"{self.operand!r}.map.has_key({self.key!r})"
-
-
-class MapMin(Expr):
-    """Smallest map VALUE (null/empty map -> null; null values skipped)."""
-
-    def __init__(self, operand: Any):
+    def __init__(self, op: builtins.str, operand: Any, *args: Any):
+        self.op = op
         self.operand = operand
+        self.args = args
 
     def to_spark(self) -> Column:
-        return F.array_min(F.map_values(self._to_spark(self.operand)))
+        return self.SPARK_OPS[self.op](self._to_spark(self.operand), *self.args)
 
     def to_python(self, values: Any) -> Any:
         v = self._to_python(self.operand, values)
-        if v is None:
-            return None
-        items = [x for x in v.values() if x is not None]
-        return min(items) if items else None
+        return None if v is None else self.PYTHON_OPS[self.op](v, *self.args)
 
     def __repr__(self) -> str:
-        return f"{self.operand!r}.map.min()"
-
-
-class MapMax(Expr):
-    """Largest map VALUE (null/empty map -> null; null values skipped)."""
-
-    def __init__(self, operand: Any):
-        self.operand = operand
-
-    def to_spark(self) -> Column:
-        return F.array_max(F.map_values(self._to_spark(self.operand)))
-
-    def to_python(self, values: Any) -> Any:
-        v = self._to_python(self.operand, values)
-        if v is None:
-            return None
-        items = [x for x in v.values() if x is not None]
-        return max(items) if items else None
-
-    def __repr__(self) -> str:
-        return f"{self.operand!r}.map.max()"
+        args = ", ".join(repr(a) for a in self.args)
+        return f"{self.operand!r}.{self.op}({args})"
 
 
 class ArrayAccessor:
@@ -151,34 +88,34 @@ class ArrayAccessor:
     def __init__(self, expr: Any):
         self._expr = expr
 
-    def len(self) -> ArrLen:
-        return ArrLen(self._expr)
+    def len(self) -> CollectionOp:
+        return CollectionOp("arr.len", self._expr)
 
-    def min(self) -> ArrMin:
-        return ArrMin(self._expr)
+    def min(self) -> CollectionOp:
+        return CollectionOp("arr.min", self._expr)
 
-    def max(self) -> ArrMax:
-        return ArrMax(self._expr)
+    def max(self) -> CollectionOp:
+        return CollectionOp("arr.max", self._expr)
 
 
 class MapAccessor:
     """``col("props").map`` — map helpers on any expression node.
 
-    ``len()`` counts entries (``ArrLen`` — F.size works for maps and
+    ``len()`` counts entries (``arr.len`` — F.size works for maps and
     Python ``len`` for dicts); ``min()/max()`` range over VALUES.
     """
 
     def __init__(self, expr: Any):
         self._expr = expr
 
-    def len(self) -> ArrLen:
-        return ArrLen(self._expr)
+    def len(self) -> CollectionOp:
+        return CollectionOp("arr.len", self._expr)
 
-    def has_key(self, key: str) -> MapHasKey:
-        return MapHasKey(self._expr, key)
+    def has_key(self, key: str) -> CollectionOp:
+        return CollectionOp("map.has_key", self._expr, key)
 
-    def min(self) -> MapMin:
-        return MapMin(self._expr)
+    def min(self) -> CollectionOp:
+        return CollectionOp("map.min", self._expr)
 
-    def max(self) -> MapMax:
-        return MapMax(self._expr)
+    def max(self) -> CollectionOp:
+        return CollectionOp("map.max", self._expr)

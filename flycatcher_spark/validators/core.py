@@ -13,6 +13,7 @@ backend dict; reference core.py:113-197).
 from __future__ import annotations
 
 import builtins
+import inspect
 import logging
 from typing import Any
 
@@ -52,6 +53,17 @@ def col(name: str) -> FieldRef:
         >>> expr = (col("price") * (1 - col("discount"))) > 0
     """
     return FieldRef(name)
+
+
+def call_model_validator(validator: Any, schema_cls: type) -> "ValidatorResult":
+    """Call one ``@model_validator`` and normalise what it returns.
+
+    The validator may be wrapped in ``classmethod``; it receives
+    ``schema_cls`` when it declares a parameter.
+    """
+    func = validator.__func__ if isinstance(validator, classmethod) else validator
+    takes_cls = len(inspect.signature(func).parameters) > 0
+    return ValidatorResult(func(schema_cls) if takes_cls else func())
 
 
 class ValidatorResult:

@@ -11,7 +11,7 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
-from flycatcher_spark import Field, Schema
+from flycatcher_spark import Field, Schema, col, model_validator
 from flycatcher_spark import streaming as fst
 
 
@@ -107,6 +107,35 @@ class TestStreamingValidate:
         # constraint order: event_id>=0, user_id>=0, event_type len,
         # value>=0  → value violations in viol_3, type in viol_2
         assert w10["viol_3"] == 1 and w10["viol_2"] == 1
+
+    def test_windowed_quality_counts_each_constraint(self, spark):
+        """Bare validators share the message "Validation failed"; each
+        window count must still be its own constraint's, as in the
+        batch validator."""
+
+        class TwoChecks(Schema):
+            a: int
+            b: int
+            ts: datetime
+
+            @model_validator
+            def a_positive():
+                return col("a") > 0
+
+            @model_validator
+            def b_positive():
+                return col("b") > 0
+
+        ts = datetime(2024, 1, 1, 10, 0, 0)
+        df = spark.createDataFrame(
+            [(1, -1, ts), (-1, 1, ts), (1, 1, ts)],
+            "a long, b long, ts timestamp_ntz",
+        )
+        v = TwoChecks.to_spark_validator()
+        (row,) = fst.windowed_quality(df, v, ts_col="ts").collect()
+        assert (row["n_rows"], row["viol_0"], row["viol_1"]) == (3, 1, 1)
+        v.validate(df, strict=False)
+        assert [x["count"] for x in v.last_violations] == [1, 1]
 
     def test_session_windows_stream(self, spark, stream_dir):
         sdf = fst.read_stream(spark, stream_dir, EventSchema)
