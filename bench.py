@@ -53,7 +53,8 @@ protect the recorded numbers:
    stalled more than $SPARK_GRAFT_BENCH_IO_STALL (default 0.3) of its
    duration is dirty by the same exclusion rule. Timing methodology,
    statistic and output contract are unchanged — this only widens
-   what counts as a contaminated sample.
+   what counts as a contaminated sample. Each run's detail records
+   which arms fired (``"cpu"``, ``"io"``, ``"cpu+io"`` or null).
 3. **A machine-state stanza in the output.** The JSON line carries
    loadavg at bench start/end, per-query loadavg before/after, the
    per-run external-core estimates, and a top-level ``clean`` flag —
@@ -258,6 +259,26 @@ def _host_calibration() -> float:
     return round(best, 4)
 
 
+def fired_arms(
+    ext_cores: float | None,
+    io_stall: float | None,
+    ext_thresh: float,
+    io_thresh: float,
+) -> str | None:
+    """The sentinel arms that condemn one run: ``"cpu"``, ``"io"``,
+    ``"cpu+io"`` or None (clean). Either arm condemns on its own; a
+    meter that could not be read cannot condemn (r8 rule)."""
+    fired = [
+        arm
+        for arm, value, thresh in (
+            ("cpu", ext_cores, ext_thresh),
+            ("io", io_stall, io_thresh),
+        )
+        if value is not None and value > thresh
+    ]
+    return "+".join(fired) or None
+
+
 class _RunMeter:
     """Times one run and estimates average EXTERNAL busy cores during
     it: (host busy CPU - our tree's CPU) / wall. Also records the
@@ -407,18 +428,11 @@ def main() -> None:
             if p == n_passes - 1:
                 detail[name]["loadavg_after"] = _loadavg()
 
+    def arms(e, io):
+        return fired_arms(e, io, ext_thresh, io_thresh)
+
     def split_clean(samples):
-        # a run is dirty if EITHER metered sentinel condemns it; a
-        # sentinel that could not be read cannot condemn (r8 rule)
-        clean = [
-            s
-            for s, e, io in samples
-            if (e is None or e <= ext_thresh)
-            and (io is None or io <= io_thresh)
-            and not (e is None and io is None)
-        ]
-        unmetered = [s for s, e, io in samples if e is None and io is None]
-        return clean + unmetered  # no meter -> can't condemn the run
+        return [s for s, e, io in samples if arms(e, io) is None]
 
     # Retry round: a query whose EVERY sample was taken under external
     # load gets two more attempts now (the burst may have passed).
@@ -444,6 +458,7 @@ def main() -> None:
                 "runs": [round(s, 3) for s, _, _ in samples],
                 "ext_cores": [e for _, e, _ in samples],
                 "io_stall": [io for _, _, io in samples],
+                "fired": [arms(e, io) for _, e, io in samples],
                 "n_clean": len(clean),
                 "dirty": dirty,
             }

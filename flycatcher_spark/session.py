@@ -30,6 +30,19 @@ compiles. A session that already exists before :func:`get_spark`
 runs (a ``getOrCreate`` hit on a session built elsewhere) keeps the
 size it was built with, Spark's default of 100 unless its builder set
 it.
+
+Call-site capture
+-----------------
+PySpark's ``spark.python.sql.dataFrameDebugging.enabled`` (on by
+default) makes every ``pyspark.sql.functions`` call and ``Column``
+method walk the Python stack and send the caller's ``file:line`` to
+the JVM, a dozen or more extra py4j commands per call.
+:func:`get_spark` turns it off (:data:`DATAFRAME_DEBUGGING`); runtime
+expression errors then lose only that ``file:line`` context line.
+The conf is static, and PySpark reads it once per process at the
+first wrapped call and keeps the answer, so a session built before
+:func:`get_spark` keeps capture on. SCALE.md, "Call-site capture",
+has the measured command counts and the trade-off.
 """
 
 from __future__ import annotations
@@ -41,6 +54,10 @@ from pyspark.sql import SparkSession
 #: Entries in Spark's generated-code class cache; see the module
 #: docstring for how it is sized.
 CODEGEN_CACHE_ENTRIES = 1000
+
+#: PySpark's per-call Python stack capture, turned off by
+#: :func:`get_spark`; see "Call-site capture" in the module docstring.
+DATAFRAME_DEBUGGING = "spark.python.sql.dataFrameDebugging.enabled"
 
 
 def get_spark(
@@ -79,6 +96,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # no per-call Python stack capture: see "Call-site capture"
+        .config(DATAFRAME_DEBUGGING, "false")
     )
     if default_parallelism is not None:
         builder = builder.config(

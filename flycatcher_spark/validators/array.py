@@ -29,7 +29,7 @@ from typing import Any, Callable
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .ops import Expr
+from .ops import Expr, method_repr
 
 
 def _extremum(pick: Callable, items: Any) -> Any:
@@ -78,8 +78,7 @@ class CollectionOp(Expr):
         return None if v is None else self.PYTHON_OPS[self.op](v, *self.args)
 
     def __repr__(self) -> str:
-        args = ", ".join(repr(a) for a in self.args)
-        return f"{self.operand!r}.{self.op}({args})"
+        return method_repr(self.operand, self.op, *self.args)
 
 
 class ArrayAccessor:

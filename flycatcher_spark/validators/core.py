@@ -43,6 +43,9 @@ class FieldRef(Expr):
         except (KeyError, TypeError) as e:
             raise AttributeError(f"Field '{self.name}' not found in values") from e
 
+    def __repr__(self) -> builtins.str:
+        return f'col("{self.name}")'
+
 
 def col(name: str) -> FieldRef:
     """Create a field reference for use in validator expressions.

@@ -22,7 +22,7 @@ from typing import Any
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .ops import Expr
+from .ops import Expr, method_repr
 
 
 class DateTimeAccessor:
@@ -103,6 +103,10 @@ class DateTimeOp(Expr):
                 return None
             return (operand - other).total_seconds() / 86_400
         raise ValueError(f"Unknown datetime op: {self.op}")
+
+    def __repr__(self) -> builtins.str:
+        args = () if self.arg is None else (self.arg,)
+        return method_repr(self.operand, f"dt.{self.op}", *args)
 
     @staticmethod
     def _extract_component(value: Any, attr: builtins.str) -> Any:

@@ -24,7 +24,7 @@ from typing import Any
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .ops import Expr
+from .ops import Expr, method_repr
 
 logger = logging.getLogger(__name__)
 
@@ -110,6 +110,13 @@ class MembershipOp(Expr):
             return bool(lower < value < upper)
 
         raise ValueError(f"Unknown membership op: {self.op}")
+
+    def __repr__(self) -> builtins.str:
+        if self.op == "is_between":
+            closed = {} if self.closed == "both" else {"closed": self.closed}
+            return method_repr(self.operand, self.op, *self.arg, **closed)
+        nulls = {"nulls_equal": True} if self.nulls_equal else {}
+        return method_repr(self.operand, self.op, self.arg, **nulls)
 
     # -- helpers ------------------------------------------------------
     def _validate_closed(self) -> None:

@@ -202,6 +202,14 @@ class Expr(_ExpressionMixin):
         return DateTimeAccessor(self)
 
 
+def method_repr(
+    operand: Any, path: builtins.str, *args: Any, **kwargs: Any
+) -> builtins.str:
+    """How a method-chain node prints: ``operand.path(args, key=value)``."""
+    parts = [repr(a) for a in args] + [f"{k}={v!r}" for k, v in kwargs.items()]
+    return f"{operand!r}.{path}({', '.join(parts)})"
+
+
 class Lit(Expr):
     """Literal value node, optionally cast to a specific Spark type.
 
@@ -222,6 +230,12 @@ class Lit(Expr):
 
     def to_python(self, values: Any) -> Any:
         return self.value
+
+    def __repr__(self) -> builtins.str:
+        # an uncast literal is written as the bare value in the DSL
+        if self.cast is None:
+            return repr(self.value)
+        return f"Lit({self.value!r}, cast={self.cast!r})"
 
 
 class BinaryOp(Expr):
@@ -279,6 +293,9 @@ class BinaryOp(Expr):
         return self.PYTHON_OPS[self.op](
             self._to_python(self.left, values), self._to_python(self.right, values)
         )
+
+    def __repr__(self) -> builtins.str:
+        return f"({self.left!r} {self.op} {self.right!r})"
 
 
 def _python_round(value: Any, decimals: builtins.int) -> Any:
@@ -368,3 +385,9 @@ class UnaryOp(Expr):
             self._to_python(self.operand, values),
             self._checked_arg(values, python=True),
         )
+
+    def __repr__(self) -> builtins.str:
+        if self.op == "~":
+            return f"~{self.operand!r}"
+        args = () if self.arg is None else (self.arg,)
+        return method_repr(self.operand, self.op, *args)

@@ -28,7 +28,7 @@ from typing import Any, Callable
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .ops import Expr
+from .ops import Expr, method_repr
 
 
 class StringAccessor:
@@ -167,3 +167,8 @@ class StringOp(Expr):
         if self.op not in self.PYTHON_OPS:
             raise ValueError(f"Unknown string op: {self.op}")
         return self.PYTHON_OPS[self.op](self._to_python(self.operand, values), self.arg)
+
+    def __repr__(self) -> builtins.str:
+        arg = self.arg
+        args = () if arg is None else arg if isinstance(arg, tuple) else (arg,)
+        return method_repr(self.operand, f"str.{self.op}", *args)

@@ -7,7 +7,11 @@ import re
 import subprocess
 
 import pytest
+from py4j.clientserver import ClientServerConnection
+from pyspark.errors import AnalysisException
+from pyspark.sql import functions as F
 
+from flycatcher_spark import Field, Schema, col, model_validator
 from flycatcher_spark.operators import dedup, quality, retrieval
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -53,6 +57,77 @@ def test_repeated_chain_reuses_generated_code(spark):
     compiled = _compilations(spark) - start
     assert second == first
     assert compiled <= 40, f"second run compiled {compiled} classes"
+
+
+def _py4j_commands(monkeypatch, action) -> int:
+    """Python→JVM commands one call of ``action`` sends."""
+    action()  # PySpark reads its call-site flag on the first wrapped call
+    sent = []
+    send = ClientServerConnection.send_command
+
+    def counting(self, command, *args, **kwargs):
+        sent.append(command)
+        return send(self, command, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(ClientServerConnection, "send_command", counting)
+        action()
+    return len(sent)
+
+
+def test_columns_are_built_without_call_site_capture(spark, monkeypatch):
+    # with capture on, each wrapped call also walks the Python stack and
+    # sends its file:line to the JVM and clears it: 13-20 commands each
+    x = F.col("x")
+    assert _py4j_commands(monkeypatch, lambda: F.col("x")) <= 3
+    assert _py4j_commands(monkeypatch, x.isNotNull) <= 1
+
+
+def test_errors_keep_their_class_and_text(spark):
+    class Reading(Schema):
+        sensor_id: int = Field(ge=0)
+        value: float = Field(le=150.0)
+
+        @model_validator
+        def bounded():
+            return (col("value") > -50, "value must exceed -50")
+
+    df = spark.createDataFrame([(1, 20.0)], "sensor_id long, value double")
+    with pytest.raises(AnalysisException, match="`nope`"):
+        df.select(F.col("nope")).collect()
+
+    v = Reading.to_spark_validator()
+    cases = [
+        ([(1,)], "sensor_id long", "Missing required columns: {'value'}"),
+        (
+            [(None, 20.0), (2, 30.0)],
+            "sensor_id long, value double",
+            "Column 'sensor_id' has 1 null values but is not nullable",
+        ),
+        (
+            [(1, 20.0), (-3, 10.0), (-4, 11.0)],
+            "sensor_id long, value double",
+            "Constraint violation: sensor_id must be >= 0\n"
+            "Found 2 violations.\n"
+            "Sample violations:\n"
+            "columns: sensor_id, value\n"
+            "(-3, 10.0)\n"
+            "(-4, 11.0)",
+        ),
+        (
+            [(1, -60.0)],
+            "sensor_id long, value double",
+            "Constraint violation: value must exceed -50\n"
+            "Found 1 violations.\n"
+            "Sample violations:\n"
+            "columns: sensor_id, value\n"
+            "(1, -60.0)",
+        ),
+    ]
+    for rows, ddl, message in cases:
+        with pytest.raises(ValueError) as raised:
+            v.validate(spark.createDataFrame(rows, ddl))
+        assert str(raised.value) == message
 
 
 def _tracked_sources(pathspec: str) -> dict[str, str]:

@@ -8,8 +8,12 @@ NaN behavior. Fixture values mirror FIXTURES.md F9.
 
 from __future__ import annotations
 
+import importlib
+import importlib.util
 import math
+import warnings
 from datetime import date, datetime
+from pathlib import Path
 
 import pytest
 from pyspark.sql import types as T
@@ -418,3 +422,69 @@ class TestCompositeExpressions:
         expr = col("bonus").is_null() | (col("bonus") <= col("base") * 0.5)
         s = spark_eval(spark, expr, rows, schema)
         assert s == [True, True, False]
+
+
+# --- printing --------------------------------------------------------
+SCHEMA_MODULES = [
+    "__spark_entry__",
+    "tests.conftest",
+    "tests.test_array_fields",
+    "tests.test_ddl",
+    "tests.test_streaming",
+    "perfbench.inputs",
+]
+ROOT = Path(__file__).resolve().parent.parent
+
+
+def _module_level_schemas() -> list[type]:
+    from flycatcher_spark import Schema
+
+    modules = [importlib.import_module(name) for name in SCHEMA_MODULES]
+    for path in sorted((ROOT / "examples").glob("*.py")):
+        spec = importlib.util.spec_from_file_location(f"_ex_{path.stem}", path)
+        module = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(module)
+        modules.append(module)
+    return [
+        obj
+        for module in modules
+        for obj in vars(module).values()
+        if isinstance(obj, type)
+        and issubclass(obj, Schema)
+        and obj.__module__ == module.__name__
+    ]
+
+
+def test_dsl_nodes_print_as_dsl_calls():
+    cases = {
+        'col("xs").arr.len()': col("xs").arr.len(),
+        '((col("p") * (1 - col("d"))) >= 0)': col("p") * (1 - col("d")) >= 0,
+        '~col("a").is_null()': ~col("a").is_null(),
+        'col("a").round(2)': col("a").round(2),
+        "col(\"s\").str.replace('a', 'b')": col("s").str.replace("a", "b"),
+        'col("t").dt.total_days(col("u"))': col("t").dt.total_days(col("u")),
+        'col("a").is_in([1, 2], nulls_equal=True)': col("a").is_in(
+            [1, 2], nulls_equal=True
+        ),
+        "col(\"a\").is_between(1, 'b', closed='left')": col("a").is_between(
+            1, "b", closed="left"
+        ),
+        "col(\"m\").map.has_key('k')": col("m").map.has_key("k"),
+    }
+    assert {text: repr(node) for text, node in cases.items()} == {
+        text: text for text in cases
+    }
+
+
+def test_no_schema_constraint_prints_an_address():
+    schemas = _module_level_schemas()
+    assert len(schemas) == 16, [s.__name__ for s in schemas]
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")  # nullable-with-default notices
+        printed = {
+            f"{schema.__name__}: {msg}": repr(expr)
+            for schema in schemas
+            for expr, msg in schema.to_spark_validator()._constraints
+        }
+    assert printed
+    assert {k: v for k, v in printed.items() if "0x" in v} == {}

@@ -1,11 +1,13 @@
-"""Dump ``.explain("formatted")`` for headline queries to $SPARK_GRAFT_PLANS_DIR (default plans/r12/).
+"""Dump ``.explain("formatted")`` for headline queries to a plans directory.
 
 Usage: python tools/dump_plans.py <suffix> [query ...]
 
 ``suffix`` is ``before`` or ``after``; with no query names, every
-bench HEADLINE query is dumped. Output: <plans dir>/<query>_<suffix>.txt
-(the optimization round's evidence files — the judge checks plan
-claims against these).
+bench HEADLINE query is dumped. Output: <plans dir>/<query>_<suffix>.txt,
+on-demand evidence for a plan claim. The plans directory is
+$SPARK_GRAFT_PLANS_DIR, default the untracked ``plans/`` at the repo
+root; the plan-shape tests use ``flycatcher_spark.plans``'s
+assertions instead.
 """
 
 from __future__ import annotations
@@ -17,7 +19,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-OUT_DIR = os.environ.get("SPARK_GRAFT_PLANS_DIR", os.path.join(REPO, "plans", "r12"))
+OUT_DIR = os.environ.get("SPARK_GRAFT_PLANS_DIR", os.path.join(REPO, "plans"))
 
 
 def main() -> int:
