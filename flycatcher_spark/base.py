@@ -19,7 +19,9 @@ reference:
 
 from __future__ import annotations
 
+import threading
 import types
+import warnings
 from typing import Any, Callable, Union, get_args, get_origin
 
 from pyspark.sql import types as T
@@ -31,8 +33,11 @@ from .fields import (
     FieldInfo,
     get_field_class_for_type,
 )
-from .validators import ValidatorResult
-from .validators.core import call_model_validator
+from .validators.core import Constraint, model_constraint
+
+#: held while a schema class builds its constraint records; reentrant,
+#: since a model validator may build another schema's records
+_BUILD_LOCK = threading.RLock()
 
 
 class SchemaMeta(type):
@@ -200,6 +205,7 @@ class Schema(metaclass=SchemaMeta):
 
     _fields: dict[str, FieldBase] = {}
     _model_validators: list[Callable] = []
+    _constraint_records: list[Constraint]  # set by _constraints()
 
     @classmethod
     def fields(cls) -> dict[str, FieldBase]:
@@ -212,13 +218,34 @@ class Schema(metaclass=SchemaMeta):
         return cls._model_validators.copy()
 
     @classmethod
-    def _validator_results(cls) -> list[ValidatorResult]:
-        """Run every ``@model_validator`` once, in declaration order.
+    def _constraints(cls) -> list[Constraint]:
+        """Every constraint of this schema: field options in field
+        order, then model validators in declaration order.
 
-        Both generators read their backend's half of each result, so
-        each validator is called the same way for both.
+        Built on first use and cached on this class (a subclass builds
+        its own), so each model validator runs once per schema class
+        and every generator reads the same records.
         """
-        return [call_model_validator(v, cls) for v in cls._model_validators]
+        with _BUILD_LOCK:
+            if "_constraint_records" in cls.__dict__:
+                return cls._constraint_records
+            records: list[Constraint] = []
+            for name, field in cls._fields.items():
+                if field.nullable and field.default is not _MISSING:
+                    # the default fills only missing columns, not nulls
+                    warnings.warn(
+                        f"Field '{cls.__name__}.{name}' is nullable=True with "
+                        "a default value. Default will only be used for missing "
+                        "columns, not null values. Use fill_nulls=True in "
+                        "validate() to replace nulls with defaults.",
+                        UserWarning,
+                        stacklevel=2,
+                    )
+                records.extend(field.constraints())
+            for i, validator in enumerate(cls._model_validators):
+                records.append(model_constraint(validator, cls, i))
+            cls._constraint_records = records
+            return records
 
     @classmethod
     def to_spark_schema(cls) -> T.StructType:

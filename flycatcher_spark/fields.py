@@ -6,8 +6,8 @@ types (int, float, str, bool, datetime, date), Pydantic-style
 ``Field()`` metadata capture, and per-field declarative constraints.
 Where the reference compiles constraints to ``pl.Expr`` via
 ``get_polars_constraints()`` (fields.py:397-422, 491-506, 573-604,
-681-704), this engine compiles to ``pyspark.sql.Column`` via
-``get_spark_constraints()`` so that constraint evaluation runs inside
+681-704), this engine records DSL nodes (``constraints()``) that
+compile to ``pyspark.sql.Column``, so that constraint evaluation runs inside
 Catalyst/Tungsten (whole-stage codegen, predicate pushdown) instead of
 a single-node columnar kernel.
 
@@ -20,14 +20,13 @@ options, the Spark constraints and the Pydantic kwargs.
 
 from __future__ import annotations
 
-import warnings
 from datetime import date, datetime
 from typing import Annotated, Any, Callable, ClassVar
 
 from pyspark.sql import types as T
 
 from .validators.array import CollectionOp
-from .validators.core import FieldRef
+from .validators.core import Constraint, FieldRef
 from .validators.ops import BinaryOp, Expr, Lit
 
 # Sentinel: distinguishes "no default provided" from "default is None".
@@ -117,7 +116,7 @@ class FieldBase:
     Holds name/nullability/default plus DB-only metadata (primary_key,
     unique, index, autoincrement, description), and the class's own
     constraint options. Subclasses declare ``options`` and turn each
-    set option into constraints in ``_checks``.
+    set option into a constraint in ``_check``.
     """
 
     #: constraint option -> Pydantic ``Field`` kwarg name (None: the
@@ -144,11 +143,6 @@ class FieldBase:
         for key in self.options:
             setattr(self, key, kwargs.get(key))
         self.name: str | None = None  # set by SchemaMeta
-
-        # nullable + default is ambiguous (default fills only missing
-        # columns, not nulls) — warn once, deferred until name is known.
-        self._needs_warning = self.nullable and self.default is not _MISSING
-
         self.validators: list[Callable] = []
 
     # -- type mapping -------------------------------------------------
@@ -177,39 +171,37 @@ class FieldBase:
         }
 
     # -- constraints --------------------------------------------------
-    def get_spark_constraints(self) -> list[tuple[Expr, str]]:
-        """Return ``(boolean DSL expression, error message)`` pairs.
+    def constraints(self) -> list[Constraint]:
+        """One record per set option, in ``options`` order.
 
-        Constraints are DSL nodes (session-free); ``SparkValidator``
-        compiles them to Columns at validate time. They run after null
-        handling, so they need not guard nulls explicitly (rows where
-        the predicate evaluates to null are neither violations nor —
-        unless another constraint fires — filtered).
+        The id is ``<field>.<option>``; a list option (``required_keys``)
+        gives one record per item, ``<field>.<option>[<item>]``. Nodes
+        are DSL (session-free) and run after null handling, so they
+        need not guard nulls (rows where the predicate evaluates to
+        null are neither violations nor — unless another constraint
+        fires — filtered). Pydantic enforces these options through the
+        field itself, so no record carries a row check.
         """
-        if self.name is None:
-            raise RuntimeError(
-                f"{self.__class__.__name__} constraints require field name "
-                f"to be set by Schema metaclass"
-            )
-        if self._needs_warning:
-            warnings.warn(
-                f"Field '{self.name}' is nullable=True with a default value. "
-                f"Default will only be used for missing columns, not null values. "
-                f"Use fill_nulls=True in validate() to replace nulls with defaults.",
-                UserWarning,
-                stacklevel=2,
-            )
-            self._needs_warning = False
         c = FieldRef(self.name)
-        return [
-            check
-            for option in self.options
-            if getattr(self, option) is not None
-            for check in self._checks(c, option, getattr(self, option))
-        ]
+        records = []
+        for option in self.options:
+            value = getattr(self, option)
+            if value is None:
+                continue
+            items = (
+                [(f"[{v}]", v) for v in value]
+                if isinstance(value, (list, tuple))
+                else [("", value)]
+            )
+            for suffix, item in items:
+                node, message = self._check(c, option, item)
+                records.append(
+                    Constraint(f"{self.name}.{option}{suffix}", message, node, None)
+                )
+        return records
 
-    def _checks(self, c: FieldRef, option: str, value: Any) -> list[tuple[Expr, str]]:
-        """Constraints for one set option, in declaration order."""
+    def _check(self, c: FieldRef, option: str, value: Any) -> tuple[Expr, str]:
+        """``(boolean DSL expression, error message)`` for one option value."""
         raise NotImplementedError
 
     def add_validator(self, func: Callable):
@@ -234,14 +226,12 @@ class _Range(FieldBase):
     def _format(self, bound: Any) -> str:
         return str(bound)
 
-    def _checks(self, c, option, bound):
+    def _check(self, c, option, bound):
         sym = _BOUNDS[option]
-        return [
-            (
-                BinaryOp(c, sym, Lit(bound, self.bound_cast)),
-                f"{self.name} must be {sym} {self._format(bound)}",
-            )
-        ]
+        return (
+            BinaryOp(c, sym, Lit(bound, self.bound_cast)),
+            f"{self.name} must be {sym} {self._format(bound)}",
+        )
 
 
 class Integer(_Range):
@@ -257,10 +247,10 @@ class Integer(_Range):
     def get_spark_dtype(self):
         return T.LongType()
 
-    def _checks(self, c, option, value):
+    def _check(self, c, option, value):
         if option == "multiple_of":
-            return [(c % value == 0, f"{self.name} must be multiple of {value}")]
-        return super()._checks(c, option, value)
+            return (c % value == 0, f"{self.name} must be multiple of {value}")
+        return super()._check(c, option, value)
 
 
 class Float(_Range):
@@ -299,16 +289,14 @@ class String(FieldBase):
             return f"VARCHAR({self.max_length})"
         return "STRING"
 
-    def _checks(self, c, option, value):
+    def _check(self, c, option, value):
         if option == "pattern":
-            return [(c.str.contains(value), f"{self.name} must match pattern: {value}")]
+            return (c.str.contains(value), f"{self.name} must match pattern: {value}")
         sym, word = (">=", "least") if option == "min_length" else ("<=", "most")
-        return [
-            (
-                BinaryOp(c.str.len_chars(), sym, value),
-                f"{self.name} must have at {word} {value} characters",
-            )
-        ]
+        return (
+            BinaryOp(c.str.len_chars(), sym, value),
+            f"{self.name} must have at {word} {value} characters",
+        )
 
 
 class Boolean(FieldBase):
@@ -401,24 +389,20 @@ class _Collection(FieldBase):
         element = Annotated[self.element_type, PydanticField(**bounds)]  # type: ignore[name-defined, valid-type]
         return self._container(element)
 
-    def _checks(self, c, option, value):
+    def _check(self, c, option, value):
         if option in _COUNTS:
             sym, word = (">=", "least") if option == "min_items" else ("<=", "most")
-            return [
-                (
-                    BinaryOp(CollectionOp("arr.len", c), sym, Lit(value)),
-                    f"{self.name} must have at {word} {value} {self.count_noun}",
-                )
-            ]
+            return (
+                BinaryOp(CollectionOp("arr.len", c), sym, Lit(value)),
+                f"{self.name} must have at {word} {value} {self.count_noun}",
+            )
         sym = _BOUNDS[option.removeprefix("item_")]
         lowest, highest = self.extrema
         extremum = CollectionOp(lowest if sym.startswith(">") else highest, c)
-        return [
-            (
-                BinaryOp(extremum, sym, Lit(value)),
-                f"{self.name} {self.item_noun} must be {sym} {value}",
-            )
-        ]
+        return (
+            BinaryOp(extremum, sym, Lit(value)),
+            f"{self.name} {self.item_noun} must be {sym} {value}",
+        )
 
 
 class Array(_Collection):
@@ -473,16 +457,13 @@ class Map(_Collection):
     def get_spark_dtype(self):
         return T.MapType(T.StringType(), self.element_dtype, valueContainsNull=True)
 
-    def _checks(self, c, option, value):
+    def _check(self, c, option, value):
         if option == "required_keys":
-            return [
-                (
-                    CollectionOp("map.has_key", c, key),
-                    f"{self.name} must contain key '{key}'",
-                )
-                for key in value
-            ]
-        return super()._checks(c, option, value)
+            return (
+                CollectionOp("map.has_key", c, value),
+                f"{self.name} must contain key '{value}'",
+            )
+        return super()._check(c, option, value)
 
 
 class StrMap(Map):

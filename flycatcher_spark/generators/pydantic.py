@@ -13,7 +13,6 @@ run in the bulk path.
 
 from __future__ import annotations
 
-import logging
 from typing import TYPE_CHECKING, Any, Union
 
 from pydantic import BaseModel, create_model
@@ -24,8 +23,6 @@ from ..fields import _MISSING
 
 if TYPE_CHECKING:  # pragma: no cover
     from ..base import Schema
-
-logger = logging.getLogger(__name__)
 
 
 def create_pydantic_model(schema_cls: "type[Schema]") -> type[BaseModel]:
@@ -51,35 +48,26 @@ def create_pydantic_model(schema_cls: "type[Schema]") -> type[BaseModel]:
             pydantic_fields[field_name] = (python_type, ...)
 
     model_name = schema_cls.__name__.removesuffix("Schema") + "Model"
-    base_model: type[BaseModel] = create_model(model_name, **pydantic_fields)
-
-    # Model validators that have a Python-side implementation.
-    validators_to_add = [
-        validator
-        for result in schema_cls._validator_results()
-        if (validator := result.get_pydantic_validator()) is not None
+    row_checks = [
+        c.row_check for c in schema_cls._constraints() if c.row_check is not None
     ]
+    if not row_checks:
+        return create_model(model_name, **pydantic_fields)
 
-    if validators_to_add:
+    def validate_all(self):
+        """Execute all custom model validators after field checks."""
+        for check in row_checks:
+            check(self)
+        return self
 
-        class ModelWithValidators(base_model):  # type: ignore[misc, valid-type]
-            """Pydantic model with custom cross-field validators."""
-
-            @pydantic_model_validator(mode="after")
-            def validate_all(self):
-                """Execute all custom model validators after field checks."""
-                for validator in validators_to_add:
-                    try:
-                        validator(self)
-                    except Exception as e:
-                        logger.warning("Model validator failed: %s", e)
-                        raise
-                return self
-
-        ModelWithValidators.__name__ = model_name
-        return ModelWithValidators
-
-    return base_model
+    return create_model(
+        model_name,
+        __doc__="Pydantic model with custom cross-field validators.",
+        __validators__={
+            "validate_all": pydantic_model_validator(mode="after")(validate_all)
+        },
+        **pydantic_fields,
+    )
 
 
 def as_pandas_udf(schema_cls: "type[Schema]"):

@@ -56,14 +56,15 @@ from pyspark.sql import types as T
 from pyspark.util import inheritable_thread_target
 
 from ..fields import _MISSING
+from ..validators.core import Constraint
 
 if TYPE_CHECKING:  # pragma: no cover
     from ..base import Schema
 
 logger = logging.getLogger(__name__)
 
-#: one compiled constraint: (declaration index, Column, message)
-_Compiled = tuple[int, Column, str]
+#: one compiled constraint: its record and its Column
+_Compiled = tuple[Constraint, Column]
 
 
 @cache
@@ -91,32 +92,16 @@ class SparkValidator:
         self.schema_cls = schema_cls
         self.fields = schema_cls.fields()
         self._struct_type = schema_cls.to_spark_schema()
-        self._constraints = self._build_constraints()
+        # the schema's records; their nodes compile on first validate
+        self._constraints = schema_cls._constraints()
+        for c in self._constraints:
+            if c.node is None:
+                raise ValueError(c.message)
+        # Columns hold JVM handles, so they live here, not on the schema
         self._compiled: list[_Compiled] | None = None
         self._usable: dict[T.StructType, list[_Compiled]] = {}
         self._violations: list[dict[str, Any]] = []
         self._sample_fetches: list[Future] = []
-
-    # ------------------------------------------------------------------
-    # plan build (driver-side, lazy)
-    # ------------------------------------------------------------------
-    def _build_constraints(self) -> list[tuple[Any, str]]:
-        """Field-level constraints + model-level validators, in order.
-
-        Each entry is ``(expression, message)`` where the expression is
-        an *uncompiled* DSL node (or a raw Column from a dict-format
-        validator) — construction needs no SparkSession; compilation
-        happens per validate() call. Constraints are evaluated after
-        null handling, so they don't guard nulls explicitly (null
-        predicate results are neither violations nor kept rows when
-        the constraint filters).
-        """
-        constraints: list[tuple[Any, str]] = []
-        for _name, field in self.fields.items():
-            constraints.extend(field.get_spark_constraints())
-        for result in self.schema_cls._validator_results():
-            constraints.append(result.get_spark_validator())
-        return constraints
 
     # ------------------------------------------------------------------
     # public pipeline
@@ -179,9 +164,9 @@ class SparkValidator:
         aggs: dict[str, Column] = {}
         for name in null_checks:
             aggs[f"__null_{name}"] = F.sum(F.when(F.col(name).isNull(), 1).otherwise(0))
-        for i, expr, _msg in usable:
+        for c, expr in usable:
             violated = ~expr if ok is None else ok & ~expr
-            aggs[f"__viol_{i}"] = F.sum(F.when(violated, 1).otherwise(0))
+            aggs[c.id] = F.sum(F.when(violated, 1).otherwise(0))
 
         counts: dict[str, int] = {}
         if aggs:
@@ -204,34 +189,44 @@ class SparkValidator:
 
         # --- V5/V6: constraints --------------------------------------
         self._violations, self._sample_fetches = [], []
-        applied: list[Column] = []
-        for i, expr, msg in usable:
-            violation_count = counts.get(f"__viol_{i}", 0) or 0
+        applied: dict[str, Column] = {}
+        for c, expr in usable:
+            violation_count = counts.get(c.id, 0) or 0
             if violation_count == 0:
                 continue
             if strict:
                 sample = df.filter(~expr).limit(5)
                 sample_str = self._render_sample(sample)
                 raise ValueError(
-                    f"Constraint violation: {msg}\n"
+                    f"Constraint violation: {c.message}\n"
                     f"Found {violation_count} violations.\n"
                     f"Sample violations:\n{sample_str}"
                 )
             self._violations.append(
-                {"constraint": msg, "count": violation_count, "rows": None}
+                {
+                    "id": c.id,
+                    "constraint": c.message,
+                    "count": violation_count,
+                    "rows": None,
+                }
             )
-            applied.append(expr)
+            applied[c.id] = expr
 
         if show_violations and applied:
             self._sample_fetches = self._fetch_samples(df, applied)
         if applied:
-            df = df.filter(reduce(lambda a, b: a & b, applied))
+            df = df.filter(reduce(lambda a, b: a & b, applied.values()))
         return df
 
     @property
     def last_violations(self) -> list[dict[str, Any]]:
         """Diagnostics from the most recent non-strict ``validate()``:
-        ``[{"constraint": msg, "count": n, "rows": [Row] | None}]``.
+        ``[{"id": id, "constraint": msg, "count": n, "rows": [Row] | None}]``.
+
+        ``id`` names the constraint within the schema and stays the
+        same across runs: ``<field>.<option>`` for a field option,
+        ``<field>.required_keys[<key>]`` for each required map key, and
+        ``<function name>#<position>`` for a model validator.
 
         Counts are exact and ready when ``validate`` returns. With
         ``show_violations=True`` the sample ``rows`` are fetched by
@@ -261,7 +256,7 @@ class SparkValidator:
         nn = self._not_null_condition(self._null_check_fields(fill_nulls))
         if nn is not None:
             conditions.append(nn)
-        for _i, expr, _msg in self._usable_constraints(df):
+        for _c, expr in self._usable_constraints(df):
             # true-or-null keeps the "nulls are not violations" semantic
             conditions.append(expr.isNull() | expr)
         if conditions:
@@ -288,8 +283,8 @@ class SparkValidator:
                     F.lit(f"{name} must not be null"),
                 )
             )
-        for _i, expr, msg in self._usable_constraints(df):
-            flags.append(F.when(~expr, F.lit(msg)))
+        for c, expr in self._usable_constraints(df):
+            flags.append(F.when(~expr, F.lit(c.message)))
         if not flags:
             return df.withColumn("_violations", F.array().cast("array<string>"))
         return df.withColumn(
@@ -332,7 +327,7 @@ class SparkValidator:
 
     def describe_constraints(self) -> list[str]:
         """Human-readable list of constraint messages, in order."""
-        return [msg for _, msg in self._constraints]
+        return [c.message for c in self._constraints]
 
     # ------------------------------------------------------------------
     # internals
@@ -425,7 +420,7 @@ class SparkValidator:
             usable = self._compile()
             try:
                 if usable:
-                    df.select(*[expr.cast("boolean") for _i, expr, _msg in usable])
+                    df.select(*[expr.cast("boolean") for _c, expr in usable])
             except Exception:
                 usable = [c for c in usable if self._resolves(df, c)]
             self._usable[key] = usable
@@ -435,28 +430,32 @@ class SparkValidator:
         """DSL nodes -> Columns, once per validator (needs a session)."""
         if self._compiled is None:
             self._compiled = []
-            for i, (raw, msg) in enumerate(self._constraints):
+            for c in self._constraints:
+                node = c.node
                 try:
                     # isinstance first: Column.__getattr__ would satisfy
-                    # hasattr(raw, "to_spark") via struct-field access.
-                    expr = raw if isinstance(raw, Column) else raw.to_spark()
+                    # hasattr(node, "to_spark") via struct-field access.
+                    expr = node if isinstance(node, Column) else node.to_spark()
                 except Exception as e:
+                    msg = c.message
                     logger.warning("Could not evaluate constraint '%s': %s", msg, e)
                     continue
-                self._compiled.append((i, expr, msg))
+                self._compiled.append((c, expr))
         return self._compiled
 
     @staticmethod
     def _resolves(df: DataFrame, constraint: _Compiled) -> bool:
-        _i, expr, msg = constraint
+        c, expr = constraint
         try:
             df.select(expr.cast("boolean"))
         except Exception as e:
-            logger.warning("Could not evaluate constraint '%s': %s", msg, e)
+            logger.warning("Could not evaluate constraint '%s': %s", c.message, e)
             return False
         return True
 
-    def _fetch_samples(self, df: DataFrame, applied: list[Column]) -> list[Future]:
+    def _fetch_samples(
+        self, df: DataFrame, applied: dict[str, Column]
+    ) -> list[Future]:
         """Submit one ``limit(10)`` sample job per violated constraint,
         all at once; each builds its plan off the caller's thread, fills
         its ``last_violations`` entry's ``rows`` and logs it. The calling
@@ -466,9 +465,9 @@ class SparkValidator:
         # outside pinned-thread mode this returns the session itself
         inherit = inheritable_thread_target(session)
         fetches = []
-        for violation, expr in zip(self._violations, applied):
+        for violation in self._violations:
 
-            def fetch(violation=violation, expr=expr) -> None:
+            def fetch(violation=violation, expr=applied[violation["id"]]) -> None:
                 violation["rows"] = df.filter(~expr).limit(10).collect()
                 logger.warning(
                     "Constraint violation: %s\nCount: %s\nRows: %s\n%s",
@@ -487,7 +486,8 @@ class SparkValidator:
     ) -> dict[str, int]:
         """Execute the merged count aggregation; fall back per-aggregate.
 
-        ``aggs`` maps each result alias to its count aggregate. The
+        ``aggs`` maps each result alias (a constraint id, or
+        ``__null_<field>``) to its count aggregate. The
         merged job is the fast path (one scan). If it fails at runtime
         (a constraint whose expression errors on real data), each
         aggregate runs on its own so the failing one alone is skipped
@@ -502,17 +502,12 @@ class SparkValidator:
                 "Merged validation aggregate failed (%s); retrying per-constraint",
                 merged_err,
             )
-        messages = {f"__viol_{i}": msg for i, _expr, msg in self._compile()}
         counts: dict[str, int] = {}
         for alias, agg in aggs.items():
             try:
                 counts[alias] = df.agg(agg).collect()[0][0] or 0
             except Exception as e:
-                logger.warning(
-                    "Could not evaluate constraint '%s': %s",
-                    messages.get(alias, alias),
-                    e,
-                )
+                logger.warning("Could not evaluate constraint '%s': %s", alias, e)
         return counts
 
     @staticmethod

@@ -94,9 +94,9 @@ def windowed_quality(
         # one conditional aggregate per constraint on its own predicate
         # (single pass); constraints that cannot resolve count 0, as
         # flag_violations never reports them
-        usable = {i: expr for i, expr, _msg in validator._usable_constraints(sdf)}
-        for i in range(len(validator.describe_constraints())):
-            violated = ~usable[i] if i in usable else F.lit(False)
+        usable = dict(validator._usable_constraints(sdf))
+        for i, c in enumerate(validator._constraints):
+            violated = ~usable[c] if c in usable else F.lit(False)
             aggs.append(F.sum(F.when(violated, 1).otherwise(0)).alias(f"viol_{i}"))
     # Event-time semantics require TIMESTAMP; NTZ columns (the parquet
     # default here) are reinterpreted in the session timezone.

@@ -7,7 +7,8 @@ compiles to a Spark ``Column`` (``to_spark()``) for bulk validation
 and evaluates as plain Python (``to_python(values)``) for row-level
 (Pydantic) validation. ``ValidatorResult`` normalizes the three
 model-validator return formats (bare expr / (expr, msg) tuple /
-backend dict; reference core.py:113-197).
+backend dict; reference core.py:113-197), and ``Constraint`` is the
+one record per schema constraint that every generator reads.
 """
 
 from __future__ import annotations
@@ -15,7 +16,8 @@ from __future__ import annotations
 import builtins
 import inspect
 import logging
-from typing import Any
+from dataclasses import dataclass
+from typing import Any, Callable
 
 from pyspark.sql import Column
 
@@ -58,19 +60,44 @@ def col(name: str) -> FieldRef:
     return FieldRef(name)
 
 
-def call_model_validator(validator: Any, schema_cls: type) -> "ValidatorResult":
-    """Call one ``@model_validator`` and normalise what it returns.
+@dataclass(frozen=True, eq=False)
+class Constraint:
+    """One constraint of a schema, built once per schema class.
+
+    ``id`` names the constraint within its schema: ``<field>.<option>``
+    for a field option, ``<field>.required_keys[<key>]`` for each
+    required map key, and ``<function name>#<position>`` for a model
+    validator (its position among the schema's model validators).
+    ``node`` is the uncompiled bulk predicate: a DSL node, or a raw
+    ``Column`` that a validator built itself. It is None for a
+    validator with no bulk form, and ``message`` then says why.
+    ``row_check`` is what the Pydantic model runs per row; it is None
+    where Pydantic enforces the constraint through the field itself
+    (field options) or the validator has no row-level form.
+    """
+
+    id: str
+    message: str
+    node: Any
+    row_check: Callable[[Any], Any] | None
+
+
+def model_constraint(validator: Any, schema_cls: type, position: int) -> Constraint:
+    """Call one ``@model_validator`` and record what it returns.
 
     The validator may be wrapped in ``classmethod``; it receives
     ``schema_cls`` when it declares a parameter.
     """
     func = validator.__func__ if isinstance(validator, classmethod) else validator
     takes_cls = len(inspect.signature(func).parameters) > 0
-    return ValidatorResult(func(schema_cls) if takes_cls else func())
+    result = ValidatorResult(func(schema_cls) if takes_cls else func())
+    return Constraint(
+        f"{func.__name__}#{position}", result.message, result.node, result.row_check
+    )
 
 
 class ValidatorResult:
-    """Normalizes model-validator return values across backends.
+    """Parses one model-validator return value, once.
 
     Accepted formats:
     1. bare DSL expression  -> ``(expr, "Validation failed")``
@@ -78,95 +105,69 @@ class ValidatorResult:
        ``pyspark.sql.Column``
     3. ``{'spark': (Column|expr, msg), 'pydantic': callable}`` dict for
        backend-specific logic (the reference's ``'polars'`` key becomes
-       ``'spark'`` here)
+       ``'spark'`` here); either key may be left out, not both
+
+    Sets ``node``, ``message`` and ``row_check`` as ``Constraint``
+    documents them. The node stays *uncompiled*, so validator
+    construction never requires an active SparkSession;
+    ``SparkValidator`` compiles it.
     """
 
     def __init__(self, result: Any):
         self.result = result
-
-    def get_spark_validator(self) -> tuple[Any, str]:
-        """Extract the bulk validator as an ``(expression, message)`` tuple.
-
-        The expression is returned *uncompiled* (a DSL node, or a raw
-        ``pyspark.sql.Column`` if the validator built one directly) so
-        that validator construction never requires an active
-        SparkSession; ``SparkValidator`` compiles at validate time.
-        """
-        if isinstance(self.result, dict):
-            if "spark" not in self.result:
-                raise ValueError(
+        self.row_check: Callable[[Any], Any] | None = None
+        from_dict = isinstance(result, dict)
+        spark = result
+        if from_dict:
+            self.row_check = result.get("pydantic")
+            if "spark" not in result:
+                self.node = None
+                self.message = (
                     "Dict validator must have 'spark' key. "
-                    f"Got keys: {list(self.result.keys())}"
+                    f"Got keys: {list(result.keys())}"
                 )
-            spark_val = self.result["spark"]
-            if isinstance(spark_val, tuple):
-                expr, msg = spark_val
-                return (self._checked(expr), msg)
-            return (self._checked(spark_val), "Validation failed")
-        elif isinstance(self.result, tuple) and len(self.result) == 2:
-            expr, msg = self.result
-            return (self._checked(expr), msg)
-        elif hasattr(self.result, "to_spark"):
-            return (self.result, "Validation failed")
-        else:
-            raise ValueError(
-                f"Invalid validator result type: {type(self.result).__name__}. "
-                "Expected dict, tuple of (expr, msg), or object with "
-                "'to_spark' method."
-            )
-
-    @staticmethod
-    def _checked(expr: Any) -> Any:
-        if hasattr(expr, "to_spark") or isinstance(expr, Column):
-            return expr
-        raise ValueError(
-            f"Invalid expression in validator: {type(expr).__name__}. "
-            "Expected DSL expression or pyspark.sql.Column."
-        )
-
-    def get_pydantic_validator(self) -> Any | None:
-        """Extract the row-level validator callable, or None."""
-        if isinstance(self.result, dict):
-            if "pydantic" not in self.result:
+                if self.row_check is None:
+                    raise ValueError(self.message)
+                return
+            if self.row_check is None:
                 logger.warning(
                     "Dict validator does not have 'pydantic' key. "
                     "This validator will only be used for Spark validation."
                 )
-                return None
-            return self.result["pydantic"]
-        elif isinstance(self.result, tuple) and len(self.result) == 2:
-            expr, msg = self.result
-            if not hasattr(expr, "to_python"):
-                return None
-
-            def validator(values: Any) -> Any:
-                try:
-                    result = expr.to_python(values)
-                    if not result:
-                        raise ValueError(msg)
-                    return values
-                except ValueError:
-                    raise
-                except Exception as e:
-                    raise ValueError(f"{msg}: {e}") from e
-
-            return validator
-        elif hasattr(self.result, "to_python"):
-            node = self.result
-
-            def validator(values: Any) -> Any:
-                try:
-                    result = node.to_python(values)
-                    if not result:
-                        raise ValueError("Validation failed")
-                    return values
-                except Exception as e:
-                    raise ValueError(f"Validation failed: {e}") from e
-
-            return validator
+            spark = result["spark"]
+        if isinstance(spark, tuple) and len(spark) == 2:
+            node, self.message = spark
+        elif from_dict or hasattr(spark, "to_spark"):
+            node, self.message = spark, "Validation failed"
         else:
-            return None
+            raise ValueError(
+                f"Invalid validator result type: {type(result).__name__}. "
+                "Expected dict, tuple of (expr, msg), or object with "
+                "'to_spark' method."
+            )
+        # isinstance first: Column.__getattr__ satisfies any hasattr()
+        is_column = isinstance(node, Column)
+        if not is_column and not hasattr(node, "to_spark"):
+            raise ValueError(
+                f"Invalid expression in validator: {type(node).__name__}. "
+                "Expected DSL expression or pyspark.sql.Column."
+            )
+        self.node = node
+        if not from_dict and not is_column and hasattr(node, "to_python"):
+            self.row_check = self._row_check(node, self.message)
 
-    def has_pydantic_validator(self) -> bool:
-        """Whether a row-level (Pydantic) validator can be extracted."""
-        return self.get_pydantic_validator() is not None
+    @staticmethod
+    def _row_check(node: Any, message: str) -> Callable[[Any], Any]:
+        """Evaluate ``node`` on one row's values; raise ``message`` if false."""
+
+        def check(values: Any) -> Any:
+            try:
+                if not node.to_python(values):
+                    raise ValueError(message)
+            except ValueError:
+                raise
+            except Exception as e:
+                raise ValueError(f"{message}: {e}") from e
+            return values
+
+        return check

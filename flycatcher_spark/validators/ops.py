@@ -155,7 +155,9 @@ class Expr(_ExpressionMixin):
         return UnaryOp("pow", self, exponent)
 
     # -- membership ---------------------------------------------------
-    def is_in(self, other: Any, *, nulls_equal: builtins.bool = False) -> "MembershipOp":
+    def is_in(
+        self, other: Any, *, nulls_equal: builtins.bool = False
+    ) -> "MembershipOp":
         """Membership test against a sequence; see MembershipOp."""
         from .membership import MembershipOp
 

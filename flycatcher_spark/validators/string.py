@@ -67,11 +67,15 @@ class StringAccessor:
         """Regex replace-all."""
         return StringOp("replace", self.expr, (pattern, value))
 
-    def extract(self, pattern: builtins.str, group_index: builtins.int = 0) -> "StringOp":
+    def extract(
+        self, pattern: builtins.str, group_index: builtins.int = 0
+    ) -> "StringOp":
         """Regex group extraction; no match yields null."""
         return StringOp("extract", self.expr, (pattern, group_index))
 
-    def slice(self, offset: builtins.int, length: builtins.int | None = None) -> "StringOp":
+    def slice(
+        self, offset: builtins.int, length: builtins.int | None = None
+    ) -> "StringOp":
         """Substring with Python slice semantics (0-based, clamping)."""
         return StringOp("slice", self.expr, (offset, length))
 

@@ -117,6 +117,66 @@ class TestCrossFieldValidators:
             model(email="nope")
 
 
+    def test_bare_validator_error_states_its_message_once(self):
+        class S(Schema):
+            a: int
+
+            @model_validator
+            def positive():
+                return col("a") > 0
+
+        with pytest.raises(ValidationError) as exc:
+            S.to_pydantic()(a=-1)
+        assert "Value error, Validation failed [" in str(exc.value)
+
+    def test_validation_error_names_the_model(self):
+        class BookingSchema(Schema):
+            check_in: int
+            check_out: int
+
+            @model_validator
+            def ordered():
+                return (col("check_out") > col("check_in"), "out before in")
+
+        model = BookingSchema.to_pydantic()
+        with pytest.raises(ValidationError) as exc:
+            model(check_in=2, check_out=1)
+        assert str(exc.value).splitlines()[0] == "1 validation error for BookingModel"
+
+    def test_invalid_result_type_raises_in_both_generators(self):
+        class S(Schema):
+            a: int
+
+            @model_validator
+            def bad():
+                return 5
+
+        with pytest.raises(ValueError, match="Invalid validator result type: int"):
+            S.to_pydantic()
+        with pytest.raises(ValueError, match="Invalid validator result type: int"):
+            S.to_spark_validator()
+
+    def test_pydantic_only_dict_builds_a_model_but_no_spark_validator(self):
+        class S(Schema):
+            a: int
+
+            @model_validator
+            def even():
+                def check(m):
+                    if m.a % 2 != 0:
+                        raise ValueError("a must be even")
+                    return m
+
+                return {"pydantic": check}
+
+        model = S.to_pydantic()
+        assert model(a=2).a == 2
+        with pytest.raises(ValidationError, match="a must be even"):
+            model(a=3)
+        with pytest.raises(ValueError, match="Dict validator must have 'spark' key"):
+            S.to_spark_validator()
+
+
 class TestPandasUdfBridge:
     def test_validity_udf(self, spark):
         from pyspark.sql import functions as F

@@ -10,6 +10,9 @@ engine's extensions (validate_lazy, flag_violations, check_unique).
 from __future__ import annotations
 
 import logging
+import sys
+import warnings
+from concurrent.futures import ThreadPoolExecutor
 from datetime import date, datetime
 
 import pytest
@@ -354,6 +357,109 @@ class TestCrossFieldValidators:
             ("a must be >= 0", 1)
         ]
         assert any("boom" in r.getMessage() for r in caplog.records)
+
+
+class TestConstraintRecords:
+    def test_ids_name_options_keys_and_validators(self):
+        class S(Schema):
+            a: int = Field(ge=0, le=9)
+            m: dict[str, int] = Field(required_keys=["k1", "k2"], min_items=2)
+
+            @model_validator
+            def a_small():
+                return col("a") < 5
+
+            @classmethod
+            @model_validator
+            def a_odd(cls):
+                return (col("a") % 2 == 1, "a must be odd")
+
+        assert [(c.id, c.message) for c in S._constraints()] == [
+            ("a.ge", "a must be >= 0"),
+            ("a.le", "a must be <= 9"),
+            ("m.min_items", "m must have at least 2 entries"),
+            ("m.required_keys[k1]", "m must contain key 'k1'"),
+            ("m.required_keys[k2]", "m must contain key 'k2'"),
+            ("a_small#0", "Validation failed"),
+            ("a_odd#1", "a must be odd"),
+        ]
+
+    def test_bare_validators_report_distinct_ids(self, spark):
+        class S(Schema):
+            a: int
+            b: int
+
+            @model_validator
+            def a_positive():
+                return col("a") > 0
+
+            @model_validator
+            def b_positive():
+                return col("b") > 0
+
+        df = spark.createDataFrame([(1, -1), (-1, 1), (-1, -1)], "a long, b long")
+        v = S.to_spark_validator()
+        assert v.validate(df, strict=False).count() == 0
+        assert [(x["id"], x["constraint"], x["count"]) for x in v.last_violations] == [
+            ("a_positive#0", "Validation failed", 2),
+            ("b_positive#1", "Validation failed", 2),
+        ]
+
+    def test_model_validators_run_once_per_schema_class(self):
+        calls = []
+
+        class Parent(Schema):
+            a: int
+
+            @model_validator
+            def positive():
+                calls.append("positive")
+                return col("a") > 0
+
+        class Child(Parent):
+            b: int
+
+        for _ in range(2):
+            Parent.to_spark_validator()
+            Parent.to_pydantic()
+        assert calls == ["positive"]
+        for _ in range(2):
+            Child.to_spark_validator()
+            Child.to_pydantic()
+        assert calls == ["positive", "positive"]  # a subclass builds its own
+        assert Child._constraints() is not Parent._constraints()
+
+    def test_concurrent_first_builds_run_each_validator_once(self):
+        calls = []
+
+        class S(Schema):
+            a: int
+
+            @model_validator
+            def positive():
+                calls.append("positive")
+                return col("a") > 0
+
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            with ThreadPoolExecutor(16) as pool:
+                built = list(pool.map(lambda _: S._constraints(), range(64)))
+        finally:
+            sys.setswitchinterval(interval)
+        assert calls == ["positive"]
+        assert all(records is built[0] for records in built)
+
+    def test_nullable_default_warning_names_the_schema_once(self):
+        class Profile(Schema):
+            bio: str | None = "n/a"
+
+        with pytest.warns(UserWarning, match=r"Field 'Profile\.bio' is nullable"):
+            Profile.to_spark_validator()
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            Profile.to_spark_validator()
+            Profile.to_pydantic()
 
 
 class TestScaleFastPaths:

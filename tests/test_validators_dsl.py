@@ -482,9 +482,22 @@ def test_no_schema_constraint_prints_an_address():
     with warnings.catch_warnings():
         warnings.simplefilter("ignore")  # nullable-with-default notices
         printed = {
-            f"{schema.__name__}: {msg}": repr(expr)
+            f"{schema.__name__}: {c.id}": repr(c.node)
             for schema in schemas
-            for expr, msg in schema.to_spark_validator()._constraints
+            for c in schema._constraints()
         }
     assert printed
     assert {k: v for k, v in printed.items() if "0x" in v} == {}
+
+
+def test_constraint_ids_are_unique_per_schema():
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")  # nullable-with-default notices
+        ids = {
+            f"{schema.__module__}.{schema.__name__}": [
+                c.id for c in schema._constraints()
+            ]
+            for schema in _module_level_schemas()
+        }
+    assert len(ids) == 16
+    assert {name: i for name, i in ids.items() if len(set(i)) != len(i)} == {}
