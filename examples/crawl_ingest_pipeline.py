@@ -135,9 +135,8 @@ def main() -> None:
     # 4c. Cross-document line dedup (r7): the site template's footer
     #    line appears in every page → removed everywhere; real
     #    content survives in order.
-    with_footer = unique.withColumn(
-        "text", F.concat_ws("\n", "text", F.lit("(c) example.com — all rights reserved"))
-    )
+    footer = F.lit("(c) example.com — all rights reserved")
+    with_footer = unique.withColumn("text", F.concat_ws("\n", "text", footer))
     deduped_lines = dedup.line_dedup(
         with_footer, id_col="page_id"
     ).withColumnRenamed("text_dedup", "text")

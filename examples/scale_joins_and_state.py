@@ -55,7 +55,9 @@ def main() -> None:
     )
     print("events in morning windows:", in_window.count())
     plan = in_window._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" not in plan, "range join fell back to a nested loop!"
+    assert "BroadcastNestedLoopJoin" not in plan, (
+        "range join fell back to a nested loop!"
+    )
 
     # 2. As-of join: for each 'click', the most recent 'purchase' by
     # the same user at or before it.
@@ -63,7 +65,9 @@ def main() -> None:
         "user_id", F.col("ts_us").alias("click_us"), "event_id"
     )
     purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", F.col("ts_us").alias("purchase_us"), F.col("value").alias("purchase_value")
+        "user_id",
+        F.col("ts_us").alias("purchase_us"),
+        F.col("value").alias("purchase_value"),
     )
     enriched = asof.asof_join(
         clicks.withColumnRenamed("click_us", "ts_us"),

@@ -386,7 +386,9 @@ class _Collection(FieldBase):
             return self.get_python_type()
         from pydantic import Field as PydanticField
 
-        element = Annotated[self.element_type, PydanticField(**bounds)]  # type: ignore[name-defined, valid-type]
+        element = Annotated[  # type: ignore[name-defined, valid-type]
+            self.element_type, PydanticField(**bounds)
+        ]
         return self._container(element)
 
     def _check(self, c, option, value):

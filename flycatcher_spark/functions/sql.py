@@ -44,7 +44,9 @@ _SCALARS: dict[str, tuple[str, str, str]] = {
         "s STRING",
         "DOUBLE",
         r"""CASE WHEN length(s) = 0 THEN 0.0D
-                 ELSE CAST(length(s) - length(regexp_replace(s, '[^0-9A-Za-z_\\s]', '')) AS DOUBLE)
+                 ELSE CAST(length(s)
+                           - length(regexp_replace(s, '[^0-9A-Za-z_\\s]', ''))
+                           AS DOUBLE)
                       / length(s) END""",
     ),
     "fc_norm_text": (
@@ -55,7 +57,8 @@ _SCALARS: dict[str, tuple[str, str, str]] = {
     "fc_fingerprint": (
         "s STRING",
         "STRING",
-        r"md5(regexp_replace(regexp_replace(lower(s), '^\\s+|\\s+$', ''), '\\s+', ' '))",
+        r"md5(regexp_replace(regexp_replace(lower(s), '^\\s+|\\s+$', ''), "
+        r"'\\s+', ' '))",
     ),
     "fc_dot": (
         "a ARRAY<DOUBLE>, b ARRAY<DOUBLE>",
@@ -72,7 +75,8 @@ _SCALARS: dict[str, tuple[str, str, str]] = {
         "DOUBLE",
         """CASE WHEN sqrt(aggregate(a, 0.0D, (acc, v) -> acc + v * v))
                    * sqrt(aggregate(b, 0.0D, (acc, v) -> acc + v * v)) > 0
-                THEN aggregate(zip_with(a, b, (x, y) -> x * y), 0.0D, (acc, v) -> acc + v)
+                THEN aggregate(zip_with(a, b, (x, y) -> x * y), 0.0D,
+                               (acc, v) -> acc + v)
                      / (sqrt(aggregate(a, 0.0D, (acc, v) -> acc + v * v))
                         * sqrt(aggregate(b, 0.0D, (acc, v) -> acc + v * v)))
            END""",

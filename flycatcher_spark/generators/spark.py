@@ -5,21 +5,28 @@ Capability parity with the reference's bulk validator
 the same public surface (``validate(df, strict, show_violations,
 fill_nulls)``, ``.schema``, ``describe_constraints()``) and the same
 pipeline stages V1-V8 (SURVEY.md §2.1), re-architected for Spark's
-lazy, distributed execution model:
+lazy, distributed execution model.
 
-**Physical design (the core improvement, SURVEY.md §4.2).** The
-reference evaluates each constraint in its own pass — N+ full scans
-for N constraints. Here, null counts for every non-nullable column
-AND violation counts for every constraint are computed in ONE
-conditional-aggregation job::
+**One check list, one scan (SURVEY.md §4.2).** Each call coerces its
+frame (V1-V3) and lists its checks: the null check of each
+non-nullable field that ``fill_nulls`` does not fill, then each
+constraint that resolves against the frame (V7). A check is an id, a
+message and the ``passes`` Column (null where a predicate is null),
+and every output is a fold over the list: ``validate`` counts each
+check's violations, ``validate_lazy`` keeps the rows that violate
+none, ``flag_violations`` collects the messages of the violated ones,
+and ``streaming.windowed_quality`` sums them per window. The reference
+evaluates each constraint in its own pass — N+ full scans for N
+constraints. Here every count comes from ONE conditional-aggregation
+job::
 
-    df.agg(sum(when(col.isNull(), 1)), ..., sum(when(ok & ~expr, 1)), ...)
+    df.agg(sum(when(col.isNull(), 1)), ..., sum(when(ok & ~passes, 1)), ...)
 
 which Catalyst executes as a single whole-stage-codegen scan with
 map-side partial aggregation — one scan regardless of constraint
 count, at any scale. Constraints compile to ``Column``s once per
 validator and are analysed in one batched ``select`` per input
-schema. Sample rows (``filter(~expr).limit(k)``) are fetched only for
+schema. Sample rows (``filter(~passes).limit(k)``) are fetched only for
 constraints that actually violated: in strict mode one sample before
 raising; with ``show_violations`` all samples at once, as concurrent
 jobs that run while the caller goes on (``last_violations`` waits for
@@ -46,9 +53,10 @@ it is counted in neither.
 from __future__ import annotations
 
 import logging
+import operator
 from concurrent.futures import Future, ThreadPoolExecutor
 from functools import cache, reduce
-from typing import TYPE_CHECKING, Any
+from typing import TYPE_CHECKING, Any, NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -56,15 +64,19 @@ from pyspark.sql import types as T
 from pyspark.util import inheritable_thread_target
 
 from ..fields import _MISSING
-from ..validators.core import Constraint
 
 if TYPE_CHECKING:  # pragma: no cover
     from ..base import Schema
 
 logger = logging.getLogger(__name__)
 
-#: one compiled constraint: its record and its Column
-_Compiled = tuple[Constraint, Column]
+class _Check(NamedTuple):
+    """One row check: ``passes`` is false on a violating row. ``id`` is
+    the constraint's id, or the field name of a null check."""
+
+    id: str
+    message: str
+    passes: Column
 
 
 @cache
@@ -98,8 +110,8 @@ class SparkValidator:
             if c.node is None:
                 raise ValueError(c.message)
         # Columns hold JVM handles, so they live here, not on the schema
-        self._compiled: list[_Compiled] | None = None
-        self._usable: dict[T.StructType, list[_Compiled]] = {}
+        self._compiled: list[_Check] | None = None
+        self._usable: dict[T.StructType, list[_Check]] = {}
         self._violations: list[dict[str, Any]] = []
         self._sample_fetches: list[Future] = []
 
@@ -155,31 +167,29 @@ class SparkValidator:
             >>> sorted((x["constraint"], x["count"]) for x in v.last_violations)
             [('id must be >= 1', 1), ('name must have at least 1 characters', 1)]
         """
-        df = self._coerce(df, fill_nulls=fill_nulls)
-        null_checks = self._null_check_fields(fill_nulls)
-        usable = self._usable_constraints(df)
+        df, checks = self._checks(df, fill_nulls)
+        nulls = [k for k in checks if k.id in self.fields]
+        constraints = checks[len(nulls) :]
+        ok = reduce(operator.and_, [k.passes for k in nulls]) if nulls else None
 
-        # --- single-pass conditional aggregation (one scan) ----------
-        ok = self._not_null_condition(null_checks)
-        aggs: dict[str, Column] = {}
-        for name in null_checks:
-            aggs[f"__null_{name}"] = F.sum(F.when(F.col(name).isNull(), 1).otherwise(0))
-        for c, expr in usable:
-            violated = ~expr if ok is None else ok & ~expr
-            aggs[c.id] = F.sum(F.when(violated, 1).otherwise(0))
-
+        # --- single-pass conditional aggregation (one scan); a constraint
+        # is counted only on rows that pass every null check
+        violated = [~k.passes for k in nulls] + [
+            ~k.passes if ok is None else ok & ~k.passes for k in constraints
+        ]
         counts: dict[str, int] = {}
-        if aggs:
-            counts = self._run_count_job(df, aggs)
+        if checks:
+            aggs = [F.sum(F.when(v, 1).otherwise(0)) for v in violated]
+            counts = self._run_count_job(
+                df, {k.id: agg for k, agg in zip(checks, aggs)}
+            )
 
         # --- V4: null handling ---------------------------------------
-        for name in null_checks:
-            null_count = counts.get(f"__null_{name}", 0) or 0
-            if null_count == 0:
-                continue
-            if strict:
+        for k in nulls:
+            null_count = counts.get(k.id, 0) or 0
+            if strict and null_count:
                 raise ValueError(
-                    f"Column '{name}' has {null_count} null values "
+                    f"Column '{k.id}' has {null_count} null values "
                     f"but is not nullable"
                 )
         if ok is not None:
@@ -189,33 +199,32 @@ class SparkValidator:
 
         # --- V5/V6: constraints --------------------------------------
         self._violations, self._sample_fetches = [], []
-        applied: dict[str, Column] = {}
-        for c, expr in usable:
-            violation_count = counts.get(c.id, 0) or 0
+        applied: list[_Check] = []
+        for k in constraints:
+            violation_count = counts.get(k.id, 0) or 0
             if violation_count == 0:
                 continue
             if strict:
-                sample = df.filter(~expr).limit(5)
-                sample_str = self._render_sample(sample)
+                sample_str = self._render_sample(df.filter(~k.passes).limit(5))
                 raise ValueError(
-                    f"Constraint violation: {c.message}\n"
+                    f"Constraint violation: {k.message}\n"
                     f"Found {violation_count} violations.\n"
                     f"Sample violations:\n{sample_str}"
                 )
             self._violations.append(
                 {
-                    "id": c.id,
-                    "constraint": c.message,
+                    "id": k.id,
+                    "constraint": k.message,
                     "count": violation_count,
                     "rows": None,
                 }
             )
-            applied[c.id] = expr
+            applied.append(k)
 
         if show_violations and applied:
             self._sample_fetches = self._fetch_samples(df, applied)
         if applied:
-            df = df.filter(reduce(lambda a, b: a & b, applied.values()))
+            df = df.filter(reduce(operator.and_, [k.passes for k in applied]))
         return df
 
     @property
@@ -251,16 +260,11 @@ class SparkValidator:
         Violation diagnostics are not collected — use ``validate()``
         or ``flag_violations()`` when counts are needed.
         """
-        df = self._coerce(df, fill_nulls=fill_nulls)
-        conditions: list[Column] = []
-        nn = self._not_null_condition(self._null_check_fields(fill_nulls))
-        if nn is not None:
-            conditions.append(nn)
-        for _c, expr in self._usable_constraints(df):
-            # true-or-null keeps the "nulls are not violations" semantic
-            conditions.append(expr.isNull() | expr)
-        if conditions:
-            df = df.filter(reduce(lambda a, b: a & b, conditions))
+        df, checks = self._checks(df, fill_nulls)
+        if checks:
+            # a null predicate is no violation: keep true-or-null
+            keep = [k.passes.isNull() | k.passes for k in checks]
+            df = df.filter(reduce(operator.and_, keep))
         return df
 
     def flag_violations(self, df: DataFrame, fill_nulls: bool = False) -> DataFrame:
@@ -273,24 +277,17 @@ class SparkValidator:
             flagged = validator.flag_violations(df)
             good = flagged.filter(F.size("_violations") == 0)
             quarantine = flagged.filter(F.size("_violations") > 0)
+
+        The array holds messages, not ids: constraints that share a
+        message cannot be told apart there (two bare validators both
+        read "Validation failed"). The ``id`` of each
+        ``last_violations`` entry names each one.
         """
-        df = self._coerce(df, fill_nulls=fill_nulls)
-        flags: list[Column] = []
-        for name in self._null_check_fields(fill_nulls):
-            flags.append(
-                F.when(
-                    F.col(name).isNull(),
-                    F.lit(f"{name} must not be null"),
-                )
-            )
-        for c, expr in self._usable_constraints(df):
-            flags.append(F.when(~expr, F.lit(c.message)))
-        if not flags:
+        df, checks = self._checks(df, fill_nulls)
+        if not checks:
             return df.withColumn("_violations", F.array().cast("array<string>"))
-        return df.withColumn(
-            "_violations",
-            F.filter(F.array(*flags), lambda x: x.isNotNull()),
-        )
+        flags = F.array(*[F.when(~k.passes, F.lit(k.message)) for k in checks])
+        return df.withColumn("_violations", F.filter(flags, lambda x: x.isNotNull()))
 
     def check_unique(self, df: DataFrame) -> dict[str, int]:
         """Opt-in uniqueness scan for ``unique``/``primary_key`` fields.
@@ -388,23 +385,13 @@ class SparkValidator:
                 df = df.withColumns(fills)
         return df
 
-    def _null_check_fields(self, fill_nulls: bool) -> list[str]:
-        """Non-nullable fields whose nulls aren't covered by a fill."""
-        return [
-            name
-            for name, field in self.fields.items()
-            if not field.nullable
-            and not (fill_nulls and field.default is not _MISSING)
-        ]
-
-    @staticmethod
-    def _not_null_condition(names: list[str]) -> Column | None:
-        if not names:
-            return None
-        return reduce(lambda a, b: a & b, [F.col(n).isNotNull() for n in names])
-
-    def _usable_constraints(self, df: DataFrame) -> list[_Compiled]:
-        """The constraints that resolve against the coerced frame ``df``.
+    def _checks(
+        self, df: DataFrame, fill_nulls: bool
+    ) -> tuple[DataFrame, list[_Check]]:
+        """Coerce ``df`` and list the call's checks, which every output
+        is built from: the null check of each non-nullable field that
+        ``fill_nulls`` does not fill (V4), then each constraint that
+        resolves against the coerced frame (V5-V7), in schema order.
 
         Analysis is driver-side only — no job runs — and is cached per
         frame schema, so ``validate``, ``validate_lazy`` and
@@ -415,18 +402,25 @@ class SparkValidator:
         schema, or a type-invalid operation), with a warning, mirroring
         the reference's error-tolerant evaluation (polars.py:230-246).
         """
+        df = self._coerce(df, fill_nulls=fill_nulls)
         key = df.schema
         if key not in self._usable:
             usable = self._compile()
             try:
                 if usable:
-                    df.select(*[expr.cast("boolean") for _c, expr in usable])
+                    df.select(*[k.passes.cast("boolean") for k in usable])
             except Exception:
-                usable = [c for c in usable if self._resolves(df, c)]
+                usable = [k for k in usable if self._resolves(df, k)]
             self._usable[key] = usable
-        return self._usable[key]
+        nulls = [
+            _Check(name, f"{name} must not be null", F.col(name).isNotNull())
+            for name, field in self.fields.items()
+            if not field.nullable
+            and not (fill_nulls and field.default is not _MISSING)
+        ]
+        return df, nulls + self._usable[key]
 
-    def _compile(self) -> list[_Compiled]:
+    def _compile(self) -> list[_Check]:
         """DSL nodes -> Columns, once per validator (needs a session)."""
         if self._compiled is None:
             self._compiled = []
@@ -440,22 +434,19 @@ class SparkValidator:
                     msg = c.message
                     logger.warning("Could not evaluate constraint '%s': %s", msg, e)
                     continue
-                self._compiled.append((c, expr))
+                self._compiled.append(_Check(c.id, c.message, expr))
         return self._compiled
 
     @staticmethod
-    def _resolves(df: DataFrame, constraint: _Compiled) -> bool:
-        c, expr = constraint
+    def _resolves(df: DataFrame, check: _Check) -> bool:
         try:
-            df.select(expr.cast("boolean"))
+            df.select(check.passes.cast("boolean"))
         except Exception as e:
-            logger.warning("Could not evaluate constraint '%s': %s", c.message, e)
+            logger.warning("Could not evaluate constraint '%s': %s", check.message, e)
             return False
         return True
 
-    def _fetch_samples(
-        self, df: DataFrame, applied: dict[str, Column]
-    ) -> list[Future]:
+    def _fetch_samples(self, df: DataFrame, applied: list[_Check]) -> list[Future]:
         """Submit one ``limit(10)`` sample job per violated constraint,
         all at once; each builds its plan off the caller's thread, fills
         its ``last_violations`` entry's ``rows`` and logs it. The calling
@@ -465,10 +456,10 @@ class SparkValidator:
         # outside pinned-thread mode this returns the session itself
         inherit = inheritable_thread_target(session)
         fetches = []
-        for violation in self._violations:
+        for violation, k in zip(self._violations, applied):
 
-            def fetch(violation=violation, expr=applied[violation["id"]]) -> None:
-                violation["rows"] = df.filter(~expr).limit(10).collect()
+            def fetch(violation=violation, passes=k.passes) -> None:
+                violation["rows"] = df.filter(~passes).limit(10).collect()
                 logger.warning(
                     "Constraint violation: %s\nCount: %s\nRows: %s\n%s",
                     violation["constraint"],
@@ -486,8 +477,7 @@ class SparkValidator:
     ) -> dict[str, int]:
         """Execute the merged count aggregation; fall back per-aggregate.
 
-        ``aggs`` maps each result alias (a constraint id, or
-        ``__null_<field>``) to its count aggregate. The
+        ``aggs`` maps each check's id to its count aggregate. The
         merged job is the fast path (one scan). If it fails at runtime
         (a constraint whose expression errors on real data), each
         aggregate runs on its own so the failing one alone is skipped

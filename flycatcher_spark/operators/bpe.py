@@ -822,7 +822,9 @@ def bpe_bytes_symbol_counts(
     )
     spaced = F.concat(
         F.lit(" "),
-        F.rtrim(F.regexp_replace(F.hex(F.encode(F.col("__w"), "utf-8")), "(..)", "$1  ")),
+        F.rtrim(
+            F.regexp_replace(F.hex(F.encode(F.col("__w"), "utf-8")), "(..)", "$1  ")
+        ),
         F.lit(" "),
     )
     for a, b in merges:

@@ -42,7 +42,9 @@ META_FIELDS = [
 ]
 
 
-def attach_payload(df: DataFrame, text_col: str = "text", payload_col: str = "payload") -> DataFrame:
+def attach_payload(
+    df: DataFrame, text_col: str = "text", payload_col: str = "payload"
+) -> DataFrame:
     """Materialize an opaque binary payload column (UTF-8 bytes of a
     text column — stands in for real media bytes in tests).
 

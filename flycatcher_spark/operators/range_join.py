@@ -37,6 +37,11 @@ def _floor_div(col_name: str, width: int) -> "Column":
     return F.expr(f"(`{col_name}` - pmod(`{col_name}`, {width})) DIV {width}")
 
 
+def _buckets(start: str, end: str, width: int) -> Column:
+    """Explode an interval to every bucket it touches."""
+    return F.explode(F.sequence(_floor_div(start, width), _floor_div(end, width)))
+
+
 def _check_closed(closed: str) -> tuple[bool, bool]:
     table = {
         "both": (True, True),
@@ -87,16 +92,7 @@ def point_in_interval_join(
         )
 
     p = points.withColumn(_BUCKET, _floor_div(point, bucket_width))
-    # Explode the interval to every bucket it touches.
-    iv = intervals.withColumn(
-        _BUCKET,
-        F.explode(
-            F.sequence(
-                _floor_div(start, bucket_width),
-                _floor_div(end, bucket_width),
-            )
-        ),
-    )
+    iv = intervals.withColumn(_BUCKET, _buckets(start, end, bucket_width))
 
     lo = F.col(start) <= F.col(point) if lo_closed else F.col(start) < F.col(point)
     hi = F.col(point) <= F.col(end) if hi_closed else F.col(point) < F.col(end)
@@ -140,14 +136,8 @@ def interval_overlap_join(
         )
 
     lb, rb = "__fc_lbucket", _BUCKET
-    l = left.withColumn(
-        lb,
-        F.explode(F.sequence(_floor_div(left_start, bucket_width), _floor_div(left_end, bucket_width))),
-    )
-    r = right.withColumn(
-        rb,
-        F.explode(F.sequence(_floor_div(right_start, bucket_width), _floor_div(right_end, bucket_width))),
-    )
+    l = left.withColumn(lb, _buckets(left_start, left_end, bucket_width))
+    r = right.withColumn(rb, _buckets(right_start, right_end, bucket_width))
     cond = [l[lb] == r[rb]] + [l[c] == r[c] for c in equi]
     # first common bucket = max(floor(l.start/w), floor(r.start/w))
     first_common = F.greatest(

@@ -407,7 +407,11 @@ def ivf_topk(
             n_probe,
             "__cells",
         )
-        .select("query_id", F.col(vec_col).alias("__qvec"), F.explode("__cells").alias("__cell"))
+        .select(
+            "query_id",
+            F.col(vec_col).alias("__qvec"),
+            F.explode("__cells").alias("__cell"),
+        )
     )
 
     joined = corpus_cells.join(F.broadcast(query_cells), "__cell").where(
@@ -615,8 +619,9 @@ def train_pq_codebooks(
 
     Returns an ``(m, n_codes, dim//m)`` float64 array. Training reads
     the same bounded sample as IVF (:func:`_train_sample`), so the
-    collect is a fixed budget no matter the corpus size; at 100 TB the sample job is the only
-    full-scan-adjacent cost and everything downstream is map-only.
+    collect is a fixed budget no matter the corpus size; at 100 TB the
+    sample job is the only full-scan-adjacent cost and everything
+    downstream is map-only.
     """
     _, valid = modal_dim(corpus, vec_col, "train_pq_codebooks")
     X = _train_sample(corpus.where(valid), vec_col, seed, max_train_rows)

@@ -44,7 +44,8 @@ def profile_stats(
 
     aggs: list[Column] = [F.count(F.lit(1)).alias("__n")]
     for c in cols:
-        aggs.append(F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"__null_{c}"))
+        nulls = F.sum(F.when(F.col(c).isNull(), 1).otherwise(0))
+        aggs.append(nulls.alias(f"__null_{c}"))
         if exact:
             aggs.append(F.count_distinct(F.col(c)).alias(f"__dist_{c}"))
         else:

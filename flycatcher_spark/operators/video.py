@@ -169,7 +169,8 @@ def make_avi_bytes(
     )
     hdrl = lst(
         b"hdrl",
-        chunk(b"avih", avih) + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)),
+        chunk(b"avih", avih)
+        + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)),
     )
     movi = lst(b"movi", b"".join(chunk(b"00dc", f) for f in frames))
     body = b"AVI " + hdrl + movi

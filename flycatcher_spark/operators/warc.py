@@ -708,6 +708,8 @@ def write_wat(
     )
 
 
+_WAT_LINK = T.StructType([T.StructField("url", T.StringType())])
+
 #: typed schema of the WAT envelope subtree the readers consume
 WAT_ENVELOPE_SCHEMA = T.StructType(
     [
@@ -774,16 +776,7 @@ WAT_ENVELOPE_SCHEMA = T.StructType(
                                                         ),
                                                         T.StructField(
                                                             "Links",
-                                                            T.ArrayType(
-                                                                T.StructType(
-                                                                    [
-                                                                        T.StructField(
-                                                                            "url",
-                                                                            T.StringType(),
-                                                                        )
-                                                                    ]
-                                                                )
-                                                            ),
+                                                            T.ArrayType(_WAT_LINK),
                                                         ),
                                                     ]
                                                 ),

@@ -995,7 +995,8 @@ def encode_webp_animation(
             f["y"] + f["height"] > canvas_height
         ):
             raise ValueError("frame exceeds canvas")
-        ch = int(f.get("channels", 4 if len(f["pixels"]) == f["width"] * f["height"] * 4 else 3))
+        rgba = len(f["pixels"]) == f["width"] * f["height"] * 4
+        ch = int(f.get("channels", 4 if rgba else 3))
         body = _encode_vp8l_body(
             f["pixels"], f["width"], f["height"], channels=ch
         )

@@ -115,7 +115,7 @@ def plan_report(df: DataFrame) -> PlanReport:
         ls = line.strip()
         scan_m = re.match(r"\(\d+\) (?:Batch)?Scan (\w+)", ls)
         if scan_m:
-            current = {"format": scan_m.group(1), "pushed_filters": [], "read_schema": ""}
+            current = dict(format=scan_m.group(1), pushed_filters=[], read_schema="")
             r.scans.append(current)
         elif current is not None and ls.startswith("PushedFilters: ["):
             inner = ls[len("PushedFilters: [") :].rstrip("]")

@@ -70,10 +70,11 @@ def runtime_bloom_pruning(
     executed plan gains ``bloom_filter_agg`` on the build side and a
     ``might_contain`` filter above the probe-side scan.
     """
+    bloom = "spark.sql.optimizer.runtime.bloomFilter"
     confs = {
-        "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": application_side_scan_threshold,
-        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": creation_side_threshold,
+        f"{bloom}.enabled": "true",
+        f"{bloom}.applicationSideScanSizeThreshold": application_side_scan_threshold,
+        f"{bloom}.creationSideThreshold": creation_side_threshold,
     }
     if disable_broadcast:
         confs["spark.sql.autoBroadcastJoinThreshold"] = "-1"

@@ -216,7 +216,9 @@ class _EventsStreamReader(SimpleDataSourceStreamReader):
         ids = np.arange(lo, hi, dtype=np.int64).astype(_U64)
         h = _splitmix64(ids * _U64(3_000_017) + _U64(self.seed))
         users = (h % _U64(self.n_users)).astype(np.int64)
-        etype = _EVENT_TYPES[((h >> _U64(8)) % _U64(len(_EVENT_TYPES))).astype(np.int64)]
+        etype = _EVENT_TYPES[
+            ((h >> _U64(8)) % _U64(len(_EVENT_TYPES))).astype(np.int64)
+        ]
         value = ((h >> _U64(16)) % _U64(10_000)).astype(np.float64) / 100.0
         # fixed epoch base + 1s per event: monotonically increasing event time
         ts_us = 1_700_000_000_000_000 + ids.astype(np.int64) * 1_000_000

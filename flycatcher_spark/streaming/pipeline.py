@@ -8,7 +8,8 @@ Design notes for scale:
   they run per micro-batch with zero extra state.
 - ``windowed_quality`` is the streaming analogue of the batch
   violation counts: a watermarked tumbling-window aggregation whose
-  state is bounded by the watermark delay. Counts are conditional
+  state is bounded by the watermark delay. Counts sum the validator's
+  checks, the rows ``flag_violations`` flags, as conditional
   aggregates (one pass, map-side partial aggregation per batch).
 - ``session_windows`` uses Spark's native ``session_window`` —
   state-store-backed gap sessions with watermark-driven eviction, the
@@ -90,14 +91,12 @@ def windowed_quality(
             F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"nulls_{c}")
         )
     if validator is not None:
-        sdf = validator._coerce(sdf, fill_nulls=False)
-        # one conditional aggregate per constraint on its own predicate
-        # (single pass); constraints that cannot resolve count 0, as
-        # flag_violations never reports them
-        usable = dict(validator._usable_constraints(sdf))
+        sdf, checks = validator._checks(sdf, fill_nulls=False)
+        # a constraint that cannot resolve has no check and counts 0
+        viol = {k.id: F.sum(F.when(~k.passes, 1).otherwise(0)) for k in checks}
+        zero = F.sum(F.lit(0))
         for i, c in enumerate(validator._constraints):
-            violated = ~usable[c] if c in usable else F.lit(False)
-            aggs.append(F.sum(F.when(violated, 1).otherwise(0)).alias(f"viol_{i}"))
+            aggs.append(viol.get(c.id, zero).alias(f"viol_{i}"))
     # Event-time semantics require TIMESTAMP; NTZ columns (the parquet
     # default here) are reinterpreted in the session timezone.
     sdf = sdf.withColumn(ts_col, F.col(ts_col).cast("timestamp"))

@@ -71,7 +71,8 @@ def running_counts(
             n += len(pdf)
             total += float(pdf[value_col].fillna(0.0).sum())
         state.update((n, total))
-        yield pd.DataFrame([dict(zip([f.name for f in key_fields], key), n=n, total=total)])
+        keys = dict(zip([f.name for f in key_fields], key))
+        yield pd.DataFrame([dict(keys, n=n, total=total)])
 
     return sdf.groupBy(*key_cols).applyInPandasWithState(
         update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout

@@ -84,7 +84,9 @@ class TestSchemaEnforcedIO:
         from flycatcher_spark.generators import ddl
 
         a = spark.createDataFrame([(i, i * 2) for i in range(100)], "k long, x long")
-        b = spark.createDataFrame([(i, f"v{i}") for i in range(100)], "k long, s string")
+        b = spark.createDataFrame(
+            [(i, f"v{i}") for i in range(100)], "k long, s string"
+        )
         ddl.write_bucketed(a, "bucketed_a", ["k"], num_buckets=4, sort_cols=["k"])
         ddl.write_bucketed(b, "bucketed_b", ["k"], num_buckets=4, sort_cols=["k"])
         try:
@@ -113,7 +115,9 @@ class TestSchemaEnforcedIO:
         # partition column materialized as directory structure
         import os
 
-        assert any(d.startswith("id=") for d in os.listdir(path) if not d.startswith("_"))
+        assert any(
+            d.startswith("id=") for d in os.listdir(path) if not d.startswith("_")
+        )
 
 
 class TestCorruptRecordRouting:

@@ -44,9 +44,11 @@ def corpus_and_benchmark(draw):
         if kind == "copy":
             text = bench_text
         elif kind == "short":
-            text = " ".join(draw(st.lists(st.sampled_from(FRESH_TOKENS), min_size=0, max_size=2)))
+            tokens = st.lists(st.sampled_from(FRESH_TOKENS), min_size=0, max_size=2)
+            text = " ".join(draw(tokens))
         elif kind == "fresh":
-            text = " ".join(draw(st.lists(st.sampled_from(FRESH_TOKENS), min_size=3, max_size=10)))
+            tokens = st.lists(st.sampled_from(FRESH_TOKENS), min_size=3, max_size=10)
+            text = " ".join(draw(tokens))
         else:
             text = bench_text + " " + " ".join(
                 draw(st.lists(st.sampled_from(FRESH_TOKENS), min_size=3, max_size=10))

@@ -33,12 +33,24 @@ class TestSqlRegistration:
         mism = (
             registered.table("fn_documents")
             .select(
-                (F.expr("fc_tok_count(text)") != fn.token_count("text").cast("bigint")).alias("a"),
-                (F.expr("fc_char_count(text)") != fn.char_count("text").cast("bigint")).alias("b"),
+                (
+                    F.expr("fc_tok_count(text)")
+                    != fn.token_count("text").cast("bigint")
+                ).alias("a"),
+                (
+                    F.expr("fc_char_count(text)")
+                    != fn.char_count("text").cast("bigint")
+                ).alias("b"),
                 (F.expr("fc_norm_text(text)") != fn.normalize_text("text")).alias("c"),
                 (F.expr("fc_fingerprint(text)") != fn.fingerprint("text")).alias("d"),
-                (F.abs(F.expr("fc_digit_ratio(text)") - fn.digit_ratio("text")) > 1e-12).alias("e"),
-                (F.abs(F.expr("fc_punct_ratio(text)") - fn.punct_ratio("text")) > 1e-12).alias("f"),
+                (
+                    F.abs(F.expr("fc_digit_ratio(text)") - fn.digit_ratio("text"))
+                    > 1e-12
+                ).alias("e"),
+                (
+                    F.abs(F.expr("fc_punct_ratio(text)") - fn.punct_ratio("text"))
+                    > 1e-12
+                ).alias("f"),
             )
             .filter("a OR b OR c OR d OR e OR f")
             .count()

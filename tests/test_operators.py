@@ -325,7 +325,13 @@ class TestRepetition:
 class TestPII:
     def test_redacts_and_counts(self, spark):
         df = spark.createDataFrame(
-            [(1, "mail a.b+c@x-corp.io or visit https://x.io/p?q=1 call +15551234567 now")],
+            [
+                (
+                    1,
+                    "mail a.b+c@x-corp.io or visit https://x.io/p?q=1 "
+                    "call +15551234567 now",
+                )
+            ],
             ["doc_id", "text"],
         )
         [r] = df.select(
@@ -477,7 +483,8 @@ class TestStratifiedSample:
             for r in duckdb.sql(
                 """
                 SELECT i FROM range(2000) t(i)
-                WHERE CAST(concat('0x', substr(md5(CAST(i AS VARCHAR)), 1, 8)) AS BIGINT) % 10000
+                WHERE CAST(concat('0x', substr(md5(CAST(i AS VARCHAR)), 1, 8))
+                           AS BIGINT) % 10000
                       < CAST(0.35 * 10000 AS BIGINT)
                 """
             ).fetchall()
@@ -561,7 +568,11 @@ class TestMinHash:
         rows = [
             (1, base),
             (2, base + " extra"),               # near dup of 1
-            (3, "completely different text about spark dataframes and shuffles at scale"),
+            (
+                3,
+                "completely different text about spark dataframes and shuffles "
+                "at scale",
+            ),
         ]
         df = spark.createDataFrame(rows, ["doc_id", "text"])
         pairs = dedup.minhash_lsh_pairs(
@@ -817,7 +828,9 @@ class TestSimilarity:
         row = (
             vecs.filter(F.col("vec_id") == 2)
             .select(
-                similarity.dot(F.col("embedding"), F.array(F.lit(1.0), F.lit(0.0), F.lit(0.0))).alias("d"),
+                similarity.dot(
+                    F.col("embedding"), F.array(F.lit(1.0), F.lit(0.0), F.lit(0.0))
+                ).alias("d"),
                 similarity.norm(F.col("embedding")).alias("n"),
             )
             .collect()[0]
@@ -932,7 +945,9 @@ class TestSimilarity:
             for r in df.select(
                 "vec_id",
                 similarity.signature_bits(F.col("embedding"), 3, 4, 7).alias("s"),
-                similarity.signature_bits_kernel(F.col("embedding"), 3, 4, 7).alias("k"),
+                similarity.signature_bits_kernel(
+                    F.col("embedding"), 3, 4, 7
+                ).alias("k"),
             ).collect()
         }
         for vid, (s, k) in rows.items():
@@ -1145,7 +1160,10 @@ class TestMultimodal:
     def test_decode_meta(self, spark):
         df = spark.createDataFrame([(1, "abcd"), (2, "")], ["doc_id", "text"])
         with_payload = multimodal.attach_payload(df)
-        meta = {r["doc_id"]: r.asDict() for r in multimodal.decode_meta(with_payload).collect()}
+        meta = {
+            r["doc_id"]: r.asDict()
+            for r in multimodal.decode_meta(with_payload).collect()
+        }
         assert meta[1]["n_bytes"] == 4
         assert meta[1]["width"] == 4 % 1024
         assert meta[1]["height"] == (4 * 7) % 768
@@ -1213,9 +1231,11 @@ class TestMultimodal:
                            CAST(COALESCE(list_sum(list_transform(
                                range(0, nb),
                                j -> CASE WHEN j % 8 = i
-                                         THEN (strpos('0123456789ABCDEF', substr(h, 2*j + 1, 1)) - 1) * 16
-                                              + (strpos('0123456789ABCDEF', substr(h, 2*j + 2, 1)) - 1)
-                                         ELSE 0 END)), 0) AS DOUBLE)) AS v
+                                   THEN (strpos('0123456789ABCDEF',
+                                                substr(h, 2*j + 1, 1)) - 1) * 16
+                                        + (strpos('0123456789ABCDEF',
+                                                  substr(h, 2*j + 2, 1)) - 1)
+                                   ELSE 0 END)), 0) AS DOUBLE)) AS v
                 FROM (SELECT doc_id, hex(encode(text)) AS h,
                              octet_length(encode(text)) AS nb FROM d)
             """).fetchall()

@@ -737,11 +737,13 @@ class TestLeakageSafeSplit:
         a = sorted(map(tuple, small.collect()))
         b = sorted(map(tuple, big.collect()))
         assert a == b
-        assert "BroadcastHashJoin" in small._jdf.queryExecution().executedPlan().toString()
+        small_plan = small._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin" in small_plan
         # the ungated plan may still broadcast (AQE's call at runtime)
         # but the LOGICAL plan must not force it
         assert "UnresolvedHint" not in big._jdf.queryExecution().logical().toString()
-        assert "ResolvedHint" not in big._jdf.queryExecution().optimizedPlan().toString()
+        big_plan = big._jdf.queryExecution().optimizedPlan().toString()
+        assert "ResolvedHint" not in big_plan
 
 
 class TestQualityFunnel:

@@ -18,7 +18,9 @@ def points(spark):
 
 @pytest.fixture(scope="module")
 def intervals(spark):
-    rows = [(j, (j * 83) % 900, (j * 83) % 900 + (j % 7) * 25, j % 5) for j in range(60)]
+    rows = [
+        (j, (j * 83) % 900, (j * 83) % 900 + (j % 7) * 25, j % 5) for j in range(60)
+    ]
     return spark.createDataFrame(rows, "iid long, s long, e long, k long")
 
 
@@ -30,8 +32,9 @@ def _naive(points, intervals, closed="both"):
     points = points.coalesce(1)
     intervals = intervals.coalesce(1)
     joined = points.crossJoin(intervals.withColumnRenamed("k", "ik"))
-    lo = F.col("s") <= F.col("p") if closed in ("both", "left") else F.col("s") < F.col("p")
-    hi = F.col("p") <= F.col("e") if closed in ("both", "right") else F.col("p") < F.col("e")
+    s, p, e = F.col("s"), F.col("p"), F.col("e")
+    lo = s <= p if closed in ("both", "left") else s < p
+    hi = p <= e if closed in ("both", "right") else p < e
     return joined.filter(lo & hi)
 
 
@@ -58,7 +61,11 @@ def test_point_in_interval_with_equi_key(spark, points, intervals):
         intervals.select(
             F.col("iid"), F.col("s"), F.col("e"), F.col("k").alias("ik")
         ).coalesce(1)
-    ).filter((F.col("s") <= F.col("p")) & (F.col("p") <= F.col("e")) & (F.col("k") == F.col("ik")))
+    ).filter(
+        (F.col("s") <= F.col("p"))
+        & (F.col("p") <= F.col("e"))
+        & (F.col("k") == F.col("ik"))
+    )
     assert _key_set(got) == _key_set(naive)
     # equi column survives exactly once
     assert got.columns.count("k") == 1
@@ -69,7 +76,9 @@ def test_left_join_keeps_unmatched_points(spark, points, intervals):
         points, intervals.withColumnRenamed("k", "ik").filter(F.col("iid") < 5),
         "p", "s", "e", bucket_width=40, how="left",
     )
-    matched = {r[0] for r in got.filter(F.col("iid").isNotNull()).select("pid").collect()}
+    matched = {
+        r[0] for r in got.filter(F.col("iid").isNotNull()).select("pid").collect()
+    }
     all_pids = {r[0] for r in got.select("pid").collect()}
     assert all_pids == {r[0] for r in points.select("pid").collect()}
     naive = _naive(points, intervals.filter(F.col("iid") < 5))
@@ -109,7 +118,9 @@ def test_rejects_bad_args(spark, points, intervals):
     with pytest.raises(ValueError, match="bucket_width"):
         range_join.point_in_interval_join(points, intervals, "p", "s", "e", 0)
     with pytest.raises(ValueError, match="closed"):
-        range_join.point_in_interval_join(points, intervals, "p", "s", "e", 10, closed="open")
+        range_join.point_in_interval_join(
+            points, intervals, "p", "s", "e", 10, closed="open"
+        )
     with pytest.raises(ValueError, match="ambiguous"):
         range_join.point_in_interval_join(
             points.withColumnRenamed("pid", "s"), intervals, "p", "s", "e", 10

@@ -159,7 +159,8 @@ class TestSyntheticEventsStream:
                 time.sleep(0.5)
             bad = registered.sql(
                 "SELECT count(*) c FROM synth_mono "
-                "WHERE ts != timestampadd(SECOND, event_id, TIMESTAMP '2023-11-14 22:13:20')"
+                "WHERE ts != timestampadd("
+                "SECOND, event_id, TIMESTAMP '2023-11-14 22:13:20')"
             ).collect()[0].c
             assert bad == 0
         finally:

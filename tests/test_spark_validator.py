@@ -11,7 +11,9 @@ from __future__ import annotations
 
 import logging
 import sys
+import uuid
 import warnings
+from collections import Counter
 from concurrent.futures import ThreadPoolExecutor
 from datetime import date, datetime
 
@@ -20,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from flycatcher_spark import Field, Schema, col, model_validator
+from flycatcher_spark.streaming import windowed_quality
 
 from .conftest import ConstrainedSchema, DefaultsSchema, SimpleSchema
 
@@ -155,7 +158,9 @@ class TestDefaults:
 
 
 class TestConstraints:
-    def test_strict_first_violation_in_declaration_order(self, spark, constrained_invalid_df):
+    def test_strict_first_violation_in_declaration_order(
+        self, spark, constrained_invalid_df
+    ):
         v = ConstrainedSchema.to_spark_validator()
         with pytest.raises(ValueError) as exc:
             v.validate(constrained_invalid_df, strict=True)
@@ -521,6 +526,112 @@ class TestScaleFastPaths:
         )
         dupes = S.to_spark_validator().check_unique(df)
         assert dupes == {"id": 1, "email": 1}
+
+
+class MixedChecks(Schema):
+    """A null check, a nullable constrained field, two bare validators,
+    a raw-``Column`` validator and one that cannot resolve."""
+
+    id: int
+    a: int
+    b: int | None = Field(default=None, le=10)
+    ts: datetime
+
+    @model_validator
+    def a_positive():
+        return col("a") > 0
+
+    @model_validator
+    def b_small():
+        return col("b") < 100
+
+    @model_validator
+    def a_not_five():
+        return (F.col("a") != 5, "a must not be 5")
+
+    @model_validator
+    def ghost():
+        return (col("no_such_column") > 0, "no_such_column must be > 0")
+
+
+class TestEntryPointsAgree:
+    @pytest.fixture
+    def mixed_df(self, spark):
+        ts = datetime(2024, 1, 1, 10, 0, 0)
+        return spark.createDataFrame(
+            [
+                (1, 1, 3, ts),  # valid
+                (2, None, 3, ts),  # null in non-nullable a
+                (3, -1, 20, ts),  # a_positive and b.le
+                (4, 5, None, ts),  # a_not_five; b.le and b_small null
+                (5, 200, 150, ts),  # b.le and b_small
+                (6, 2, None, ts),  # valid, b null
+            ],
+            "id long, a long, b long, ts timestamp_ntz",
+        )
+
+    def test_outputs_agree(self, spark, mixed_df):
+        v = MixedChecks.to_spark_validator()
+        flagged = {r.id: r._violations for r in v.flag_violations(mixed_df).collect()}
+        lazy = sorted(r.id for r in v.validate_lazy(mixed_df).collect())
+        assert sorted(i for i, f in flagged.items() if not f) == lazy == [1, 6]
+
+        # each message's window count is the flagged count of that message
+        (window,) = windowed_quality(mixed_df, v, ts_col="ts").collect()
+        windowed: Counter[str] = Counter()
+        for i, message in enumerate(v.describe_constraints()):
+            windowed[message] += window[f"viol_{i}"]
+        in_flags = Counter(m for f in flagged.values() for m in f)
+        for message in v.describe_constraints():
+            assert windowed[message] == in_flags[message], message
+        assert windowed["Validation failed"] == 2
+        assert windowed["no_such_column must be > 0"] == 0
+
+        # validate counts the flags of rows that pass every null check
+        v.validate(mixed_df, strict=False)
+        counted: Counter[str] = Counter()
+        for x in v.last_violations:
+            counted[x["constraint"]] += x["count"]
+        null_flag = "a must not be null"
+        assert counted == Counter(
+            m for f in flagged.values() if null_flag not in f for m in f
+        )
+        assert [x["id"] for x in v.last_violations] == [
+            "b.le",
+            "a_positive#0",
+            "b_small#1",
+            "a_not_five#2",
+        ]
+
+    def test_job_counts(self, spark, mixed_df, constrained_valid_df):
+        """One count job per ``validate`` call, plus one sample job per
+        violated constraint with ``show_violations``; the lazy outputs
+        run none. On one partition the count aggregate needs no shuffle
+        stage and each sample one job."""
+        sc = spark.sparkContext
+        df = mixed_df.coalesce(1)
+
+        def jobs(action) -> int:
+            group = f"entry_jobs_{uuid.uuid4().hex}"
+            sc.setJobGroup(group, group)
+            try:
+                action()
+                return len(sc.statusTracker().getJobIdsForGroup(group))
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+
+        v = MixedChecks.to_spark_validator()
+        assert jobs(lambda: v.validate(df, strict=False)) == 1
+
+        def with_samples() -> None:
+            v.validate(df, strict=False, show_violations=True)
+            assert len(v.last_violations) == 4
+
+        assert jobs(with_samples) == 1 + 4
+        clean = ConstrainedSchema.to_spark_validator()
+        assert jobs(lambda: clean.validate(constrained_valid_df.coalesce(1))) == 1
+        assert jobs(lambda: v.validate_lazy(df)) == 0
+        assert jobs(lambda: v.flag_violations(df)) == 0
 
 
 class TestPlanQuality:

@@ -36,7 +36,10 @@ def test_running_counts_accumulates_across_batches(spark, src_dir):
     q = _start(out, "rc_test")
     try:
         q.processAllAvailable()
-        got = {r["k"]: (r["n"], r["total"]) for r in spark.sql("SELECT * FROM rc_test").collect()}
+        got = {
+            r["k"]: (r["n"], r["total"])
+            for r in spark.sql("SELECT * FROM rc_test").collect()
+        }
         assert got["a"] == (2, 3.0)
         assert got["b"] == (1, 10.0)
 

@@ -37,7 +37,9 @@ def stream_dir(spark, tmp_path_factory):
         (5, 2, "purchase", 9.0, datetime(2024, 1, 1, 10, 6, 0)),
     ]
     df = spark.createDataFrame(
-        rows, "event_id long, user_id long, event_type string, value double, ts timestamp_ntz"
+        rows,
+        "event_id long, user_id long, event_type string, value double, "
+        "ts timestamp_ntz",
     )
     df.coalesce(1).write.mode("overwrite").parquet(str(d))
     return str(d)

@@ -305,9 +305,10 @@ class TestParseHttpResponse:
         assert p(b"not http at all") is None
         assert p(b"HTTP/2 200\r\n\r\nx") is None  # subset is 1.x
         # bad chunk size token
-        assert p(b"HTTP/1.1 200 OK\r\nTransfer-Encoding: chunked\r\n\r\nzz\r\nx") is None
+        chunked = b"HTTP/1.1 200 OK\r\nTransfer-Encoding: chunked\r\n\r\n"
+        assert p(chunked + b"zz\r\nx") is None
         # truncated chunk
-        assert p(b"HTTP/1.1 200 OK\r\nTransfer-Encoding: chunked\r\n\r\nff\r\nshort") is None
+        assert p(chunked + b"ff\r\nshort") is None
         # unknown transfer/content encodings
         assert p(b"HTTP/1.1 200 OK\r\nTransfer-Encoding: gzip\r\n\r\nx") is None
         assert p(b"HTTP/1.1 200 OK\r\nContent-Encoding: br\r\n\r\nx") is None

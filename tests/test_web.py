@@ -31,7 +31,8 @@ class TestCanonicalUrl:
         assert _canon(spark, "https://example.com:443/x") == "https://example.com/x"
         # non-default ports survive
         assert _canon(spark, "http://example.com:443/x") == "http://example.com:443/x"
-        assert _canon(spark, "https://example.com:8443/x") == "https://example.com:8443/x"
+        url = "https://example.com:8443/x"
+        assert _canon(spark, url) == url
 
     def test_empty_path_becomes_root(self, spark):
         assert _canon(spark, "https://example.com") == "https://example.com/"
@@ -472,7 +473,10 @@ class TestAnchorTextAgg:
                 ("https://s1.com/p", '<a href="/t">home</a><a href="/t">start</a>'),
                 ("https://s2.com/p", '<a href="https://s1.com/t">home</a>'),
                 # fragment resolves NULL -> drops; empty anchor drops
-                ("https://s3.com/p", '<a href="#f">x</a><a href="https://s1.com/t"></a>'),
+                (
+                    "https://s3.com/p",
+                    '<a href="#f">x</a><a href="https://s1.com/t"></a>',
+                ),
             ],
             ["url", "html"],
         )

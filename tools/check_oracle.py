@@ -74,7 +74,10 @@ def compare(name, spark_pdf, duck_pdf):
                 if first is None:
                     first = (a, b)
         if n_diff:
-            problems.append(f"{n_diff}/{len(sr)} rows differ; first: spark={first[0]} duck={first[1]}")
+            problems.append(
+                f"{n_diff}/{len(sr)} rows differ; "
+                f"first: spark={first[0]} duck={first[1]}"
+            )
     return problems
 
 

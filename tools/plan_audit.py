@@ -27,28 +27,66 @@ SF_DIR = "/root/testdata/sf0.001"
 # (linear, not quadratic), or an intentionally-broadcast small dim
 # for an exact-baseline n^2 on bounded data.
 KNOWN_BNLJ = {
-    "knn_topk": "broadcast query set vs corpus: exact brute-force baseline (linear in corpus)",
-    "contrastive_pairs": "knn_topk's broadcast-anchors brute scan (oracle arm; production mines from the IVF shortlist, impl='ivf')",
-    "pq_topk": "broadcast query set vs compressed code scan: ADC is linear in corpus (same shape as knn_topk, 8-32x less data)",
-    "pq_rerank_topk": "pq_topk's broadcast-queries ADC scan + broadcast shortlist rerank (r10 oracle arm; linear in corpus)",
-    "ann_recall": "recall report joins the brute-force baseline (same shape as knn_topk)",
+    "knn_topk": (
+        "broadcast query set vs corpus: exact brute-force baseline (linear in corpus)"
+    ),
+    "contrastive_pairs": (
+        "knn_topk's broadcast-anchors brute scan (oracle arm; production mines from "
+        "the IVF shortlist, impl='ivf')"
+    ),
+    "pq_topk": (
+        "broadcast query set vs compressed code scan: ADC is linear in corpus (same "
+        "shape as knn_topk, 8-32x less data)"
+    ),
+    "pq_rerank_topk": (
+        "pq_topk's broadcast-queries ADC scan + broadcast shortlist rerank (r10 oracle"
+        " arm; linear in corpus)"
+    ),
+    "ann_recall": (
+        "recall report joins the brute-force baseline (same shape as knn_topk)"
+    ),
     "nearest_centroid": "one-row broadcast of all centroids",
     "doc_tfidf_top3": "one-row broadcast corpus-size aggregate",
     "events_gapfill": "one-row broadcast min/max bounds for the time spine",
     "q11_important_parts": "one-row broadcast scalar threshold (value fraction)",
     "q22_dormant_customers": "one-row broadcast scalar avg(acctbal) subquery",
-    "name_editdist_pairs": "documented broadcast n^2 on the small supplier dim (short-key fuzzy dedup)",
+    "name_editdist_pairs": (
+        "documented broadcast n^2 on the small supplier dim (short-key fuzzy dedup)"
+    ),
     "unigram_surprise": "one-row broadcast corpus token total (LM denominator)",
-    "bm25_search": "one-row broadcast corpus stats (N, avgdl — the BM25 normalizers; same shape as unigram_surprise)",
-    "hybrid_search": "one-row broadcast BM25 corpus stats + the knn_topk broadcast-queries exact baseline (both whitelisted shapes, composed)",
-    "bigram_surprise": "one-row broadcast corpus token total (unigram backoff denominator; same shape as unigram_surprise)",
-    "ccnet_buckets": "one-row broadcasts: LM token total (unigram_surprise stage) + the percentile-threshold row",
+    "bm25_search": (
+        "one-row broadcast corpus stats (N, avgdl — the BM25 normalizers; same shape "
+        "as unigram_surprise)"
+    ),
+    "hybrid_search": (
+        "one-row broadcast BM25 corpus stats + the knn_topk broadcast-queries exact "
+        "baseline (both whitelisted shapes, composed)"
+    ),
+    "bigram_surprise": (
+        "one-row broadcast corpus token total (unigram backoff denominator; same shape"
+        " as unigram_surprise)"
+    ),
+    "ccnet_buckets": (
+        "one-row broadcasts: LM token total (unigram_surprise stage) + the percentile-"
+        "threshold row"
+    ),
     "mixture_sample": "one-row broadcast temperature-weight denominator",
-    "curated_corpus": "one-row broadcasts inherited from unigram/mixture stages (LM total, rate denominator)",
+    "curated_corpus": (
+        "one-row broadcasts inherited from unigram/mixture stages (LM total, rate "
+        "denominator)"
+    ),
     "dsir_sample": "one-row broadcast LM token totals (target + corpus denominators)",
-    "payload_embed_knn": "broadcast query set vs corpus: exact brute-force baseline (same shape as knn_topk)",
-    "corpus_divergence": "one-row broadcast token totals (both corpora's LM denominators)",
-    "langid_profiles": "broadcast of the tiny language list (docs x langs score matrix; langs is single digits)",
+    "payload_embed_knn": (
+        "broadcast query set vs corpus: exact brute-force baseline (same shape as "
+        "knn_topk)"
+    ),
+    "corpus_divergence": (
+        "one-row broadcast token totals (both corpora's LM denominators)"
+    ),
+    "langid_profiles": (
+        "broadcast of the tiny language list (docs x langs score matrix; langs is "
+        "single digits)"
+    ),
 }
 
 
@@ -78,11 +116,15 @@ def audit():
             )
         if any("BatchEvalPython" in n for n in rep.python_nodes):
             flags.append("ROW-PYTHON")
-        if re.search(r"Window \[[^\]]*\bwindowspecdefinition\(\s*[a-z]", rep.plan) is None and "Window" in rep.plan:
+        partitioned = r"Window \[[^\]]*\bwindowspecdefinition\(\s*[a-z]"
+        if re.search(partitioned, rep.plan) is None and "Window" in rep.plan:
             # Window node with an empty partition spec = single task
             if re.search(r"windowspecdefinition\([^,)]*\bORDER\b", rep.plan):
                 flags.append("GLOBAL-WINDOW?")
-        arrow = sum("Arrow" in n or "MapInPandas" in n or "FlatMapGroupsInPandas" in n for n in rep.python_nodes)
+        arrow = sum(
+            "Arrow" in n or "MapInPandas" in n or "FlatMapGroupsInPandas" in n
+            for n in rep.python_nodes
+        )
         rows.append(
             (
                 name,

@@ -133,7 +133,10 @@ def measure() -> dict:
         got = json.loads(line)["queries"]
         for q in TRACKED:
             times[q][sf] = got[q]
-    out = {"protocol": "bench.py warm + min-of-clean-runs noop-sink (r8 noise-proof)", "queries": {}}
+    out = {
+        "protocol": "bench.py warm + min-of-clean-runs noop-sink (r8 noise-proof)",
+        "queries": {},
+    }
     for q in TRACKED:
         t = times[q]
         out["queries"][q] = {
