@@ -54,6 +54,7 @@ from __future__ import annotations
 
 import logging
 import operator
+from collections.abc import Sequence
 from concurrent.futures import Future, ThreadPoolExecutor
 from functools import cache, reduce
 from typing import TYPE_CHECKING, Any, NamedTuple
@@ -84,6 +85,14 @@ def _sample_pool() -> ThreadPoolExecutor:
     """Driver threads for ``show_violations`` sample fetches; each
     blocks on one small Spark job, so they overlap on the cluster."""
     return ThreadPoolExecutor(thread_name_prefix="flycatcher-samples")
+
+
+def _warn_skipped(cid: str, message: str, err: Exception) -> None:
+    """Log a constraint that cannot compile or resolve, by message and
+    by id (bare validators share one message; the ids differ)."""
+    logger.warning(
+        "Could not evaluate constraint '%s' (id %s): %s", message, cid, err
+    )
 
 
 class SparkValidator:
@@ -329,20 +338,28 @@ class SparkValidator:
     # ------------------------------------------------------------------
     # internals
     # ------------------------------------------------------------------
-    def _coerce(self, df: DataFrame, fill_nulls: bool) -> DataFrame:
+    def _coerce(
+        self, df: DataFrame, fill_nulls: bool, keep: Sequence[str] = ()
+    ) -> DataFrame:
         """Stages V1-V3 (+fill): required-check, defaults, cast-select.
 
         All lazy; the required-column check inspects only driver-side
-        metadata (``df.columns``) and runs no job.
+        metadata (``df.columns``) and runs no job. Input columns named
+        in ``keep`` that the schema does not declare pass through
+        unchanged after the schema's columns; every other undeclared
+        column is dropped.
         """
-        # V1: fail fast on missing required (no-default) columns.
-        required = {
-            name for name, field in self.fields.items() if field.default is _MISSING
-        }
+        # V1: fail fast on missing required (no-default) columns, named
+        # in schema order so the message is the same in every process.
         present = set(df.columns)
-        missing = required - present
+        missing = [
+            name
+            for name, field in self.fields.items()
+            if field.default is _MISSING and name not in present
+        ]
         if missing:
-            raise ValueError(f"Missing required columns: {missing}")
+            names = ", ".join(repr(name) for name in missing)
+            raise ValueError(f"Missing required columns: {{{names}}}")
 
         # V2: inject missing defaulted columns; afterwards every field
         # is present.
@@ -369,7 +386,12 @@ class SparkValidator:
                     else F.col(name).try_cast(field.get_spark_dtype())
                 ).alias(name)
                 for name, field in self.fields.items()
-            ]
+            ],
+            *[
+                F.col(c)
+                for c in dict.fromkeys(keep)
+                if c in present and c not in self.fields
+            ],
         )
 
         # Optional fill: nulls -> default, only where a default exists.
@@ -386,7 +408,7 @@ class SparkValidator:
         return df
 
     def _checks(
-        self, df: DataFrame, fill_nulls: bool
+        self, df: DataFrame, fill_nulls: bool, keep: Sequence[str] = ()
     ) -> tuple[DataFrame, list[_Check]]:
         """Coerce ``df`` and list the call's checks, which every output
         is built from: the null check of each non-nullable field that
@@ -402,7 +424,7 @@ class SparkValidator:
         schema, or a type-invalid operation), with a warning, mirroring
         the reference's error-tolerant evaluation (polars.py:230-246).
         """
-        df = self._coerce(df, fill_nulls=fill_nulls)
+        df = self._coerce(df, fill_nulls=fill_nulls, keep=keep)
         key = df.schema
         if key not in self._usable:
             usable = self._compile()
@@ -431,8 +453,7 @@ class SparkValidator:
                     # hasattr(node, "to_spark") via struct-field access.
                     expr = node if isinstance(node, Column) else node.to_spark()
                 except Exception as e:
-                    msg = c.message
-                    logger.warning("Could not evaluate constraint '%s': %s", msg, e)
+                    _warn_skipped(c.id, c.message, e)
                     continue
                 self._compiled.append(_Check(c.id, c.message, expr))
         return self._compiled
@@ -442,7 +463,7 @@ class SparkValidator:
         try:
             df.select(check.passes.cast("boolean"))
         except Exception as e:
-            logger.warning("Could not evaluate constraint '%s': %s", check.message, e)
+            _warn_skipped(check.id, check.message, e)
             return False
         return True
 

@@ -1,13 +1,18 @@
-"""The two Arrow stages every media operator is built from.
+"""The three Arrow stages every media and archive operator is built
+from.
 
 - :func:`build_payloads` — one ``pandas_udf("binary")`` over an id
   column: the fixture generators' per-id payload builder.
 - :func:`map_payloads` — one ``mapInPandas`` stage over a payload
   column: the decoders' per-payload row fan-out.
+- :func:`pack_shards` — one ``applyInPandas`` stage over md5-ordered
+  rows: the archive writers' shard packer (tar, zip, WET, WAT).
 
-Both own the null-row discipline, so no operator re-types it: a null
-id builds a null payload, and a payload a decoder cannot read emits
-one all-null row that keeps its id attributable.
+The first two own the null-row discipline, so no operator re-types
+it: a null id builds a null payload, and a payload a decoder cannot
+read emits one all-null row that keeps its id attributable. The
+third owns the shard assignment, so every writer's layout replays
+the same way.
 """
 
 from __future__ import annotations
@@ -90,4 +95,59 @@ def map_payloads(
 
     return df.select(*keys, payload_col).mapInPandas(
         process, schema=out_schema
+    )
+
+
+def pack_shards(
+    rows: DataFrame,
+    per_shard: int,
+    seed: str,
+    count_col: str,
+    pack: Callable[[pd.DataFrame], tuple[int, bytes]],
+) -> DataFrame:
+    """Pack ``rows`` into archive shards: ``(shard_id, count_col,
+    n_bytes, payload)``, one row per shard.
+
+    Each row gets a dense global position ``pos`` ordered by
+    ``md5(seed || ':' || key)``, the key being ``rows``' first column
+    (:func:`quality.training_order`: a sharded cumsum, no single-task
+    window), and ``shard_id = pos // per_shard``, so any engine
+    replays the assignment. One ``applyInPandas`` group per shard
+    hands ``pack`` its rows sorted by ``pos`` and takes back
+    ``(count, payload)``. Rows shuffle exactly once, into their
+    shard's group, and never visit the driver; a shard's bytes exist
+    only inside its one task, so executor memory bounds shard size,
+    not corpus size.
+    """
+    from .quality import training_order
+
+    ordered = training_order(rows, rows.columns[0], seed=seed)
+    with_shard = ordered.select(
+        *rows.columns,
+        "pos",
+        (F.col("pos") / F.lit(int(per_shard))).cast("long").alias("shard_id"),
+    )
+    out_schema = T.StructType(
+        [
+            T.StructField("shard_id", T.LongType()),
+            T.StructField(count_col, T.LongType()),
+            T.StructField("n_bytes", T.LongType()),
+            T.StructField("payload", T.BinaryType()),
+        ]
+    )
+
+    def pack_group(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("pos")
+        n, payload = pack(pdf)
+        return pd.DataFrame(
+            {
+                "shard_id": [int(pdf["shard_id"].iloc[0])],
+                count_col: [n],
+                "n_bytes": [len(payload)],
+                "payload": [payload],
+            }
+        )
+
+    return with_shard.groupBy("shard_id").applyInPandas(
+        pack_group, schema=out_schema
     )

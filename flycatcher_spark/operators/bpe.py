@@ -14,7 +14,10 @@ way production tokenizer training actually scales:
   learned merges are deterministic (ties break lexicographically).
 - **Application is map-only**: the merge ranks broadcast in the UDF
   closure; each Arrow batch tokenizes with the classic greedy
-  lowest-rank merge loop (GPT-2's algorithm over characters).
+  lowest-rank merge loop (GPT-2's algorithm over characters). One
+  kernel, :func:`_bpe_apply`, serves all six encoders: each passes
+  its input column, its piece splitter and its piece encoder, and
+  picks a count, the pieces or their ids.
 
 The first training iteration (adjacent-pair counts over the word
 table) is plain SQL — the oracle checks it cell-for-cell; the
@@ -25,10 +28,15 @@ character-level BPE (top of the module) and the production-faithful
 **byte-level BPE** (GPT-2 family — regex pre-tokenization, 256-byte
 alphabet in the byte-unicode rendering; see the byte-level section
 below), whose applied segmentation the driver's oracle also replays
-end-to-end via the hex-pair replace chain.
+end-to-end via the hex-pair replace chain. Both replace-chain twins
+share :func:`_symbol_counts`, both trainers share the counting tail
+:func:`_top_words`, and both vocabularies number their merge
+products with :func:`_add_merge_products`.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -46,9 +54,14 @@ def word_counts(
     """Distinct normalized words with corpus counts, capped at the
     ``max_vocab_words`` most frequent (count desc, word asc — the
     deterministic training vocabulary)."""
-    toks = docs.select(
-        F.explode(tokens(normalize_text(text_col))).alias("word")
-    )
+    return _top_words(docs, tokens(normalize_text(text_col)), max_vocab_words)
+
+
+def _top_words(docs: DataFrame, words: Column, max_vocab_words: int) -> DataFrame:
+    """The counting tail of both trainers: every element of the
+    ``words`` array column, counted over ``docs``, the most frequent
+    ``max_vocab_words`` kept (count desc, word asc)."""
+    toks = docs.select(F.explode(words).alias("word"))
     counts = toks.groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
     return counts.orderBy(F.desc("cnt"), F.asc("word")).limit(
         int(max_vocab_words)
@@ -200,20 +213,23 @@ def vocab_from_merges(merges: list[tuple[str, str]]) -> dict[str, int]:
     convention real BPE vocabularies follow (alphabet first, merge
     products in learning order)."""
     alphabet = sorted({c for pair in merges for s in pair for c in s})
-    vocab = {c: i for i, c in enumerate(alphabet)}
-    nxt = len(vocab)
+    return _add_merge_products({c: i for i, c in enumerate(alphabet)}, merges)
+
+
+def _add_merge_products(
+    vocab: dict[str, int], merges: list[tuple[str, str]]
+) -> dict[str, int]:
+    """Give each new merge product the next id, in rank order, after
+    a base alphabet whose ids are ``0..len(vocab) - 1``."""
     for a, b in merges:
-        piece = a + b
-        if piece not in vocab:
-            vocab[piece] = nxt
-            nxt += 1
+        vocab.setdefault(a + b, len(vocab))
     return vocab
 
 
-def _make_encoder(ranks: dict[tuple[str, str], int]):
+def _make_encoder(merges: list[tuple[str, str]]):
     """Greedy lowest-rank merge loop (GPT-2 style), built as a local
-    closure so cloudpickle ships it BY VALUE — executors never need
-    this package importable."""
+    closure so cloudpickle ships it and its rank table BY VALUE."""
+    ranks = {pair: i for i, pair in enumerate(merges)}
 
     def encode_word(word: str) -> list[str]:
         syms = list(word)
@@ -231,6 +247,150 @@ def _make_encoder(ranks: dict[tuple[str, str], int]):
         return syms
 
     return encode_word
+
+
+def _special_splitter(special_tokens):
+    """Build a driver-side splitter spec for ATOMIC special tokens
+    (``<|endoftext|>`` et al., r9): returns the alternation pattern
+    (longest-first so overlapping literals resolve the way HF /
+    tiktoken do) or None. Specials are matched BEFORE the GPT-2
+    pre-tokenizer runs — BPE merges never cross them, and the
+    literals never reach the byte alphabet."""
+    if not special_tokens:
+        return None
+    import re as _re
+
+    toks = sorted(special_tokens, key=len, reverse=True)
+    return "(" + "|".join(_re.escape(t) for t in toks) + ")"
+
+
+def _segments(text: str, spec_re) -> list[tuple[str, bool]]:
+    """Split text into (segment, is_special) runs; plain segments
+    still carry their original whitespace for the pre-tokenizer."""
+    if spec_re is None:
+        return [(text, False)]
+    parts = spec_re.split(text)
+    return [(p, i % 2 == 1) for i, p in enumerate(parts) if p]
+
+
+def _bpe_apply(
+    text: Column,
+    split: Callable[[str], list[str]],
+    encode: Callable[[str], list[str]],
+    out: str,
+    vocab: dict[str, int] | None = None,
+    unk_id: int | None = None,
+    specials: list[str] | dict[str, int] | None = None,
+) -> Column:
+    """The one Arrow kernel behind every BPE encoder, map-only.
+
+    A null row stays null. Otherwise the row splits into atomic
+    ``specials`` (matched longest-first, merges never cross them) and
+    plain segments; ``split`` cuts a plain segment into pieces, and
+    ``encode`` runs once per distinct piece per batch. ``out`` picks
+    the row's value: ``long`` counts tokens (a special counts 1),
+    ``array<string>`` lists them (a special is its literal), and
+    ``array<long>`` maps them through ``vocab``, ``unk_id`` when
+    missing (a special through the ``specials`` dict)."""
+    spec_pattern = _special_splitter(specials)
+    value, special = {
+        "long": (len, lambda s: 1),
+        "array<string>": (list, lambda s: [s]),
+        "array<long>": (
+            lambda pieces: [vocab.get(p, unk_id) for p in pieces],
+            lambda s: [specials[s]],
+        ),
+    }[out]
+
+    @pandas_udf(out)
+    def _apply(texts: pd.Series) -> pd.Series:
+        import re as _re
+
+        spec = _re.compile(spec_pattern) if spec_pattern else None
+        cache: dict[str, int | list] = {}
+        rows = []
+        for t in texts:
+            if t is None:
+                rows.append(None)
+                continue
+            acc = 0 if out == "long" else []
+            for seg, is_special in _segments(t, spec):
+                if is_special:
+                    acc += special(seg)
+                    continue
+                for w in split(seg):
+                    hit = cache.get(w)
+                    if hit is None:
+                        hit = cache[w] = value(encode(w))
+                    acc += hit
+            rows.append(acc)
+        return pd.Series(rows, dtype="object")
+
+    return _apply(text)
+
+
+def _word_split(text: str) -> list[str]:
+    """The word-level pieces of a row: whitespace-split, lowercased."""
+    return [w.lower() for w in text.split()]
+
+
+def _col(text: Column | str) -> Column:
+    return F.col(text) if isinstance(text, str) else text
+
+
+def _words(text: Column | str) -> Column:
+    """The word-level kernels' input: the normalized, lowercased text."""
+    return F.lower(normalize_text(_col(text)))
+
+
+def _symbol_counts(
+    docs: DataFrame,
+    words: Column,
+    merges: list[tuple[str, str]],
+    text_col: str,
+    id_col: str,
+    hex_bytes: bool,
+) -> DataFrame:
+    """The replace chain behind both ``*_symbol_counts`` twins: each
+    element of the ``words`` array column becomes its symbols, two
+    spaces apart with one at each end; each merge is one exact
+    ``replace``; a word's token count is its spaces / 2, summed per
+    document into ``n_bpe``. A symbol is one character, or with
+    ``hex_bytes`` one hex pair of the word's UTF-8 bytes (the merges
+    are rendered in hex to match)."""
+    from ..plans import ensure_min_parallelism
+
+    # The per-row work is a len(merges)-deep string-replace chain over
+    # every word — expensive-per-row CPU that runs serially on an
+    # under-partitioned scan (profiled: one 1.15-1.5 s single-task
+    # stage at sf0.1), the §2.5 regime where the widening guard is a
+    # measured win (unlike cheap JVM map stages, where it was measured
+    # a loss and rejected).
+    exploded = ensure_min_parallelism(
+        docs.select(F.col(id_col), F.col(text_col)), key=id_col
+    ).select(F.col(id_col), F.explode(words).alias("__w"))
+    w = F.col("__w")
+    if hex_bytes:
+        w, one = F.hex(F.encode(w, "utf-8")), "(..)"
+        merges = [(_symbols_to_hex(a), _symbols_to_hex(b)) for a, b in merges]
+    else:
+        one = "(.)"
+    # "low" -> " l  o  w " (two spaces BETWEEN symbols, one at ends)
+    spaced = F.concat(
+        F.lit(" "), F.rtrim(F.regexp_replace(w, one, "$1  ")), F.lit(" ")
+    )
+    for a, b in merges:
+        spaced = F.replace(spaced, F.lit(f" {a}  {b} "), F.lit(f" {a}{b} "))
+    # invariant: k symbols -> exactly 2k spaces (2(k-1) between + 2 pad)
+    n_sym = (
+        F.length(spaced)
+        - F.length(F.replace(spaced, F.lit(" "), F.lit("")))
+    ) / 2
+    return (
+        exploded.select(id_col, n_sym.cast("long").alias("__n"))
+        .groupBy(id_col)
+        .agg(F.sum("__n").cast("long").alias("n_bpe"))
+    )
 
 
 def bpe_word_symbol_counts(
@@ -267,35 +427,13 @@ def bpe_word_symbol_counts(
     lists learned by :func:`learn_merges` they agree (tested), since
     each learning iteration exhaustively merged its pair.
     """
-    from ..plans import ensure_min_parallelism
-
-    # Same widening guard as bpe_bytes_symbol_counts: the
-    # len(merges)-deep replace chain is expensive per row and runs
-    # serially on an under-partitioned scan (profiled: one 1.15 s
-    # single-task stage at sf0.1).
-    words = ensure_min_parallelism(
-        docs.select(F.col(id_col), F.col(text_col)), key=id_col
-    ).select(
-        F.col(id_col),
-        F.explode(tokens(normalize_text(text_col))).alias("__w"),
-    )
-    # "low" -> " l  o  w " (two spaces BETWEEN symbols, one at ends)
-    spaced = F.concat(
-        F.lit(" "),
-        F.rtrim(F.regexp_replace(F.col("__w"), "(.)", "$1  ")),
-        F.lit(" "),
-    )
-    for a, b in merges:
-        spaced = F.replace(spaced, F.lit(f" {a}  {b} "), F.lit(f" {a}{b} "))
-    # invariant: k symbols -> exactly 2k spaces (2(k-1) between + 2 pad)
-    n_sym = (
-        F.length(spaced)
-        - F.length(F.replace(spaced, F.lit(" "), F.lit("")))
-    ) / 2
-    return (
-        words.select(id_col, n_sym.cast("long").alias("__n"))
-        .groupBy(id_col)
-        .agg(F.sum("__n").cast("long").alias("n_bpe"))
+    return _symbol_counts(
+        docs,
+        tokens(normalize_text(text_col)),
+        merges,
+        text_col,
+        id_col,
+        hex_bytes=False,
     )
 
 
@@ -314,30 +452,7 @@ def bpe_token_count(
         >>> df.select(bpe_token_count("text", merges).alias("n")).collect()
         [Row(n=4)]
     """
-    ranks = {pair: i for i, pair in enumerate(merges)}
-    encode_word = _make_encoder(ranks)
-    c = F.col(text) if isinstance(text, str) else text
-
-    @pandas_udf("long")
-    def _count(texts: pd.Series) -> pd.Series:
-        out = []
-        cache: dict[str, int] = {}
-        for t in texts:
-            if t is None:
-                out.append(None)
-                continue
-            total = 0
-            for w in t.split():
-                w = w.lower()
-                hit = cache.get(w)
-                if hit is None:
-                    hit = len(encode_word(w))
-                    cache[w] = hit
-                total += hit
-            out.append(total)
-        return pd.Series(out, dtype="object")
-
-    return _count(F.lower(normalize_text(c)))
+    return _bpe_apply(_words(text), _word_split, _make_encoder(merges), "long")
 
 
 def bpe_encode_ids(
@@ -353,30 +468,14 @@ def bpe_encode_ids(
     Arrow kernel shape as :func:`bpe_encode`; both side tables ride
     in the closure (bounded: a real vocab is tens of thousands of
     rows)."""
-    ranks = {pair: i for i, pair in enumerate(merges)}
-    encode_word = _make_encoder(ranks)
-    c = F.col(text) if isinstance(text, str) else text
-
-    @pandas_udf("array<long>")
-    def _ids(texts: pd.Series) -> pd.Series:
-        out = []
-        cache: dict[str, list] = {}
-        for t in texts:
-            if t is None:
-                out.append(None)
-                continue
-            ids: list = []
-            for w in t.split():
-                w = w.lower()
-                hit = cache.get(w)
-                if hit is None:
-                    hit = [vocab.get(p, unk_id) for p in encode_word(w)]
-                    cache[w] = hit
-                ids.extend(hit)
-            out.append(ids)
-        return pd.Series(out)
-
-    return _ids(F.lower(normalize_text(c)))
+    return _bpe_apply(
+        _words(text),
+        _word_split,
+        _make_encoder(merges),
+        "array<long>",
+        vocab=vocab,
+        unk_id=unk_id,
+    )
 
 
 def bpe_encode(
@@ -385,30 +484,9 @@ def bpe_encode(
 ) -> Column:
     """Per-row BPE pieces (``array<string>``) under the learned
     merges — same kernel shape as :func:`bpe_token_count`."""
-    ranks = {pair: i for i, pair in enumerate(merges)}
-    encode_word = _make_encoder(ranks)
-    c = F.col(text) if isinstance(text, str) else text
-
-    @pandas_udf("array<string>")
-    def _enc(texts: pd.Series) -> pd.Series:
-        out = []
-        cache: dict[str, list[str]] = {}
-        for t in texts:
-            if t is None:
-                out.append(None)
-                continue
-            pieces: list[str] = []
-            for w in t.split():
-                w = w.lower()
-                hit = cache.get(w)
-                if hit is None:
-                    hit = encode_word(w)
-                    cache[w] = hit
-                pieces.extend(hit)
-            out.append(pieces)
-        return pd.Series(out)
-
-    return _enc(F.lower(normalize_text(c)))
+    return _bpe_apply(
+        _words(text), _word_split, _make_encoder(merges), "array<string>"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -530,8 +608,7 @@ def pretokens(text: Column | str) -> Column:
     lookahead-free pattern per segment. Tests pin this equal to
     :func:`gpt2_pretokenize` on fixtures, fuzzed strings, and the
     documents corpus."""
-    c = F.col(text) if isinstance(text, str) else text
-    stripped = F.replace(c, F.lit("\x00"), F.lit(""))
+    stripped = F.replace(_col(text), F.lit("\x00"), F.lit(""))
     marked = F.regexp_replace(stripped, _SENTINEL_PATTERN, "$1\x00$2")
     segs = F.split(marked, "\x00")
     return F.flatten(
@@ -554,11 +631,7 @@ def byte_word_counts(
     corpus-scale stage of byte-level training: one shuffle with
     map-side partial aggregation; pre-tokens keep case and their
     leading space (GPT-2 does not normalize)."""
-    toks = docs.select(F.explode(pretokens(text_col)).alias("word"))
-    counts = toks.groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
-    return counts.orderBy(F.desc("cnt"), F.asc("word")).limit(
-        int(max_vocab_words)
-    )
+    return _top_words(docs, pretokens(text_col), max_vocab_words)
 
 
 def learn_merges_bytes(
@@ -583,54 +656,18 @@ def byte_vocab_from_merges(merges: list[tuple[str, str]]) -> dict[str, int]:
     tokenizers: ids 0..255 for the full byte alphabet (in
     byte-value order, rendered via :func:`bytes_to_unicode`), then
     one id per merge product in rank order."""
-    vocab = {_B2U[b]: b for b in range(256)}
-    nxt = 256
-    for a, b in merges:
-        piece = a + b
-        if piece not in vocab:
-            vocab[piece] = nxt
-            nxt += 1
-    return vocab
+    return _add_merge_products({_B2U[b]: b for b in range(256)}, merges)
 
 
 def _make_byte_encoder(merges: list[tuple[str, str]]):
-    """Per-pre-token byte-level encoder closure: pre-token -> list of
-    byte-unicode pieces under the greedy lowest-rank loop. Built on
-    module-level tables captured BY VALUE so executors never import
-    this package."""
-    ranks = {pair: i for i, pair in enumerate(merges)}
-    encode_symbols = _make_encoder(ranks)
-    b2u = dict(_B2U)
+    """Per-pre-token byte-level encoder: the pre-token's UTF-8 bytes
+    in the GPT-2 rendering, then the greedy lowest-rank loop."""
+    encode_symbols = _make_encoder(merges)
 
     def encode_pre_token(tok: str) -> list[str]:
-        symbols = "".join(b2u[b] for b in tok.encode("utf-8"))
-        return encode_symbols(symbols)
+        return encode_symbols(_to_byte_symbols(tok))
 
     return encode_pre_token
-
-
-def _special_splitter(special_tokens):
-    """Build a driver-side splitter spec for ATOMIC special tokens
-    (``<|endoftext|>`` et al., r9): returns the alternation pattern
-    (longest-first so overlapping literals resolve the way HF /
-    tiktoken do) or None. Specials are matched BEFORE the GPT-2
-    pre-tokenizer runs — BPE merges never cross them, and the
-    literals never reach the byte alphabet."""
-    if not special_tokens:
-        return None
-    import re as _re
-
-    toks = sorted(special_tokens, key=len, reverse=True)
-    return "(" + "|".join(_re.escape(t) for t in toks) + ")"
-
-
-def _segments(text: str, spec_re) -> list[tuple[str, bool]]:
-    """Split text into (segment, is_special) runs; plain segments
-    still carry their original whitespace for the pre-tokenizer."""
-    if spec_re is None:
-        return [(text, False)]
-    parts = spec_re.split(text)
-    return [(p, i % 2 == 1) for i, p in enumerate(parts) if p]
 
 
 def bpe_bytes_token_count(
@@ -652,40 +689,13 @@ def bpe_bytes_token_count(
         >>> df.select(bpe_bytes_token_count("text", m).alias("n")).collect()
         [Row(n=2)]
     """
-    encode_pre_token = _make_byte_encoder(merges)
-    split_pattern = GPT2_SPLIT_PATTERN
-    spec_pattern = _special_splitter(special_tokens)
-    c = F.col(text) if isinstance(text, str) else text
-
-    @pandas_udf("long")
-    def _count(texts: pd.Series) -> pd.Series:
-        import re as _re
-
-        import regex
-
-        pat = regex.compile(split_pattern)
-        spec = _re.compile(spec_pattern) if spec_pattern else None
-        out = []
-        cache: dict[str, int] = {}
-        for t in texts:
-            if t is None:
-                out.append(None)
-                continue
-            total = 0
-            for seg, is_special in _segments(t, spec):
-                if is_special:
-                    total += 1
-                    continue
-                for w in pat.findall(seg.replace("\x00", "")):
-                    hit = cache.get(w)
-                    if hit is None:
-                        hit = len(encode_pre_token(w))
-                        cache[w] = hit
-                    total += hit
-            out.append(total)
-        return pd.Series(out, dtype="object")
-
-    return _count(c)
+    return _bpe_apply(
+        _col(text),
+        gpt2_pretokenize,
+        _make_byte_encoder(merges),
+        "long",
+        specials=special_tokens,
+    )
 
 
 def bpe_bytes_encode(
@@ -696,40 +706,13 @@ def bpe_bytes_encode(
     """Per-row byte-level BPE pieces (``array<string>``, byte-unicode
     rendering — GPT-2's vocab key space). ``special_tokens`` (r9)
     surface as their own literal pieces, atomic and merge-proof."""
-    encode_pre_token = _make_byte_encoder(merges)
-    split_pattern = GPT2_SPLIT_PATTERN
-    spec_pattern = _special_splitter(special_tokens)
-    c = F.col(text) if isinstance(text, str) else text
-
-    @pandas_udf("array<string>")
-    def _enc(texts: pd.Series) -> pd.Series:
-        import re as _re
-
-        import regex
-
-        pat = regex.compile(split_pattern)
-        spec = _re.compile(spec_pattern) if spec_pattern else None
-        out = []
-        cache: dict[str, list[str]] = {}
-        for t in texts:
-            if t is None:
-                out.append(None)
-                continue
-            pieces: list[str] = []
-            for seg, is_special in _segments(t, spec):
-                if is_special:
-                    pieces.append(seg)
-                    continue
-                for w in pat.findall(seg.replace("\x00", "")):
-                    hit = cache.get(w)
-                    if hit is None:
-                        hit = encode_pre_token(w)
-                        cache[w] = hit
-                    pieces.extend(hit)
-            out.append(pieces)
-        return pd.Series(out)
-
-    return _enc(c)
+    return _bpe_apply(
+        _col(text),
+        gpt2_pretokenize,
+        _make_byte_encoder(merges),
+        "array<string>",
+        specials=special_tokens,
+    )
 
 
 def bpe_bytes_encode_ids(
@@ -748,44 +731,15 @@ def bpe_bytes_encode_ids(
     ``special_tokens`` (r9) maps atomic literals straight to their
     ids (``{"<|endoftext|>": 50256}``), matched longest-first before
     pre-tokenization so no merge ever crosses a document boundary."""
-    encode_pre_token = _make_byte_encoder(merges)
-    split_pattern = GPT2_SPLIT_PATTERN
-    spec_pattern = _special_splitter(special_tokens)
-    spec_ids = dict(special_tokens or {})
-    c = F.col(text) if isinstance(text, str) else text
-
-    @pandas_udf("array<long>")
-    def _ids(texts: pd.Series) -> pd.Series:
-        import re as _re
-
-        import regex
-
-        pat = regex.compile(split_pattern)
-        spec = _re.compile(spec_pattern) if spec_pattern else None
-        out = []
-        cache: dict[str, list] = {}
-        for t in texts:
-            if t is None:
-                out.append(None)
-                continue
-            ids: list = []
-            for seg, is_special in _segments(t, spec):
-                if is_special:
-                    ids.append(spec_ids[seg])
-                    continue
-                for w in pat.findall(seg.replace("\x00", "")):
-                    hit = cache.get(w)
-                    if hit is None:
-                        hit = [
-                            vocab.get(p, unk_id)
-                            for p in encode_pre_token(w)
-                        ]
-                        cache[w] = hit
-                    ids.extend(hit)
-            out.append(ids)
-        return pd.Series(out)
-
-    return _ids(c)
+    return _bpe_apply(
+        _col(text),
+        gpt2_pretokenize,
+        _make_byte_encoder(merges),
+        "array<long>",
+        vocab=vocab,
+        unk_id=unk_id,
+        specials=special_tokens,
+    )
 
 
 def bpe_bytes_symbol_counts(
@@ -806,36 +760,6 @@ def bpe_bytes_symbol_counts(
     replace, token count = spaces / 2 (see
     :func:`bpe_word_symbol_counts` for why double spacing makes each
     replace a true merge-all pass). Everything stays JVM-side."""
-    from ..plans import ensure_min_parallelism
-
-    # The per-row work below is a len(merges)-deep string-replace
-    # chain over every pre-token — expensive-per-row CPU that runs
-    # serially on an under-partitioned scan (profiled: one 1.5 s
-    # single-task stage at sf0.1), the §2.5 regime where the widening
-    # guard is a measured win (unlike cheap JVM map stages, where it
-    # was measured a loss and rejected).
-    words = ensure_min_parallelism(
-        docs.select(F.col(id_col), F.col(text_col)), key=id_col
-    ).select(
-        F.col(id_col),
-        F.explode(pretokens(text_col)).alias("__w"),
-    )
-    spaced = F.concat(
-        F.lit(" "),
-        F.rtrim(
-            F.regexp_replace(F.hex(F.encode(F.col("__w"), "utf-8")), "(..)", "$1  ")
-        ),
-        F.lit(" "),
-    )
-    for a, b in merges:
-        ha, hb = _symbols_to_hex(a), _symbols_to_hex(b)
-        spaced = F.replace(spaced, F.lit(f" {ha}  {hb} "), F.lit(f" {ha}{hb} "))
-    n_sym = (
-        F.length(spaced)
-        - F.length(F.replace(spaced, F.lit(" "), F.lit("")))
-    ) / 2
-    return (
-        words.select(id_col, n_sym.cast("long").alias("__n"))
-        .groupBy(id_col)
-        .agg(F.sum("__n").cast("long").alias("n_bpe"))
+    return _symbol_counts(
+        docs, pretokens(text_col), merges, text_col, id_col, hex_bytes=True
     )

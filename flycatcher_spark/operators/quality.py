@@ -722,6 +722,11 @@ def budget_mix(
     return keep.drop("__tc", "__h", "__shard", "__within", "__off")
 
 
+#: Largest component table :func:`leakage_safe_split` broadcasts;
+#: past it the join runs unhinted and AQE picks the strategy.
+SPLIT_BROADCAST_MAX_ROWS = 5_000_000
+
+
 def leakage_safe_split(
     docs: DataFrame,
     pairs: DataFrame,
@@ -730,7 +735,6 @@ def leakage_safe_split(
     dst_col: str = "doc_id_b",
     train_pct: int = 90,
     seed: str = "split0",
-    broadcast_max_rows: int = 5_000_000,
 ) -> DataFrame:
     """Train/validation split where near-duplicates can never
     straddle the boundary — the leakage guard every eval pipeline
@@ -751,10 +755,11 @@ def leakage_safe_split(
     the corpus), so the join is map-side broadcast — but only under a
     measured gate: the table is already materialized (checkpointed)
     by ``connected_components``, so one cheap count decides. Past
-    ``broadcast_max_rows`` (a boilerplate-heavy corpus can put a large
-    fraction of all docs into components) the hint is DROPPED and the
-    plain shuffled join runs, letting AQE pick the strategy from
-    runtime sizes instead of a forced broadcast OOMing the driver.
+    :data:`SPLIT_BROADCAST_MAX_ROWS` (a boilerplate-heavy corpus can
+    put a large fraction of all docs into components) the hint is
+    DROPPED and the plain shuffled join runs, letting AQE pick the
+    strategy from runtime sizes instead of a forced broadcast OOMing
+    the driver.
 
     Returns ``(id_col, component, split)``.
 
@@ -777,7 +782,7 @@ def leakage_safe_split(
     # connected_components, so this count re-reads the materialized
     # table (no recompute). Small → map-side join; big → unhinted
     # join, AQE decides from runtime stats.
-    if comp.count() <= broadcast_max_rows:
+    if comp.count() <= SPLIT_BROADCAST_MAX_ROWS:
         comp = F.broadcast(comp)
     out = docs.select(F.col(id_col)).join(comp, id_col, "left")
     comp_id = F.coalesce(F.col("component"), F.col(id_col))

@@ -70,10 +70,12 @@ def bm25_postings(
         >>> sorted((r.doc_id, r.dl) for r in dl.collect())
         [(1, 4), (2, 2)]
     """
+    # the no-op isNotNull(term) filter (split() never yields null
+    # tokens) keeps bm25_topk's stage reuse: see the note there
     terms = docs.select(
         F.col(id_col),
         F.explode(tokens(normalize_text(text_col))).alias("term"),
-    )
+    ).where(F.col("term").isNotNull())
     postings = terms.groupBy(id_col, "term").agg(
         F.count(F.lit(1)).alias("tf")
     )
@@ -136,9 +138,10 @@ def bm25_topk(
     # table (doclen, avgdl, document frequency) re-aggregates the one
     # postings aggregate, whose shuffle AQE stage reuse materializes
     # a single time (guide §2.4). Three measured decisions shape this:
-    # - the explicit no-op ``isnotnull(term)`` filter (split() never
-    #   yields null tokens) keeps every consumer's subtree canonically
-    #   IDENTICAL: the term-equi-joins below infer that filter and
+    # - the explicit no-op ``isnotnull(term)`` filter in
+    #   :func:`bm25_postings` (split() never yields null tokens) keeps
+    #   every consumer's subtree canonically IDENTICAL: the
+    #   term-equi-joins below infer that filter and
     #   push it into only THEIR copy of the aggregate, which otherwise
     #   makes the doclen/avgdl branch differ from the probe/dfreq
     #   branch — stage reuse then re-executes the whole corpus explode
@@ -161,14 +164,7 @@ def bm25_topk(
     #   map stage (measured 0.71 -> 1.53 s at sf0.1) — a far worse
     #   trade at any scale than shuffling one slim (id, dl) row per
     #   document, since the corpus tokenize IS the dominant cost.
-    terms = docs.select(
-        F.col(id_col),
-        F.explode(tokens(normalize_text(text_col))).alias("term"),
-    ).where(F.col("term").isNotNull())
-    postings = terms.groupBy(id_col, "term").agg(
-        F.count(F.lit(1)).alias("tf")
-    )
-    doclen = postings.groupBy(id_col).agg(F.sum("tf").alias("dl"))
+    postings, doclen = bm25_postings(docs, text_col, id_col)
     stats = docs.agg(
         F.count(F.lit(1)).cast("double").alias("__n_docs")
     ).crossJoin(

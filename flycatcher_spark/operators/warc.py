@@ -16,6 +16,13 @@ per-record-member concatenation Common Crawl uses — stdlib zlib,
 multi-member loop). Header parsing follows the spec: version line
 ``WARC/1.x``, CRLF header lines until an empty line, mandatory
 ``Content-Length``, record block followed by two CRLFs.
+
+Write side: one record builder, :func:`_warc_record`, writes every
+record here — the WET and WAT shard writers' and the two fixture
+generators' — and :func:`_join_records` applies the gzip layout.
+:func:`write_wet` and :func:`write_wat` pack their shards through
+:func:`._payload.pack_shards`, the packer the tar and zip writers
+share.
 """
 
 from __future__ import annotations
@@ -25,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ._payload import build_payloads, map_payloads
+from ._payload import build_payloads, map_payloads, pack_shards
 
 __all__ = [
     "cdx_index",
@@ -470,6 +477,42 @@ def cdx_index(
     )
 
 
+#: The fixture generators' fixed WARC-Date.
+_DATE = "2024-01-01T00:00:00Z"
+
+
+def _warc_record(
+    rtype: str,
+    uri: str | None,
+    date: str,
+    body: bytes,
+    ctype: str | None = None,
+) -> bytes:
+    """One WARC/1.0 record: the type, the target URI unless ``None``,
+    the date, the Content-Type unless ``None``, the Content-Length,
+    then the block and the closing two CRLFs."""
+    head = [b"WARC/1.0", b"WARC-Type: " + rtype.encode()]
+    if uri is not None:
+        head.append(b"WARC-Target-URI: " + uri.encode())
+    head.append(b"WARC-Date: " + date.encode())
+    if ctype is not None:
+        head.append(b"Content-Type: " + ctype.encode())
+    head.append(b"Content-Length: %d" % len(body))
+    return b"\r\n".join(head) + b"\r\n\r\n" + body + b"\r\n\r\n"
+
+
+def _join_records(recs: list[bytes], gzip_mode: str) -> bytes:
+    """Concatenate WARC records as plain bytes (``none``), as one gzip
+    stream (``whole``) or as one gzip member per record (``members``,
+    the Common Crawl layout); gzip mtime is 0, so bytes are stable."""
+    import gzip
+
+    if gzip_mode == "members":
+        return b"".join(gzip.compress(r, mtime=0) for r in recs)
+    joined = b"".join(recs)
+    return gzip.compress(joined, mtime=0) if gzip_mode == "whole" else joined
+
+
 def write_wet(
     pages: DataFrame,
     records_per_shard: int = 1000,
@@ -504,65 +547,22 @@ def write_wet(
     bytes exist only inside its one pack task, so executor memory
     bounds shard size, never corpus size.
     """
-    import gzip as _gzip
-
-    from .quality import training_order
-
     if gzip_mode not in ("none", "members"):
         raise ValueError(f"unknown gzip_mode: {gzip_mode}")
 
-    ordered = training_order(
-        pages.select(uri_col, text_col), uri_col, seed=seed
-    )
-    with_shard = ordered.select(
-        F.col(uri_col).alias("uri"),
-        F.col(text_col).alias("text"),
-        "pos",
-        (F.col("pos") / F.lit(int(records_per_shard)))
-        .cast("long")
-        .alias("shard_id"),
-    )
-    out_schema = T.StructType(
-        [
-            T.StructField("shard_id", T.LongType()),
-            T.StructField("n_records", T.LongType()),
-            T.StructField("n_bytes", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def _record(rtype: str, uri: str | None, body: bytes) -> bytes:
-        head = [b"WARC/1.0", b"WARC-Type: " + rtype.encode()]
-        if uri is not None:
-            head.append(b"WARC-Target-URI: " + uri.encode())
-        head.append(b"WARC-Date: " + date.encode())
-        head.append(b"Content-Type: text/plain")
-        head.append(b"Content-Length: %d" % len(body))
-        return b"\r\n".join(head) + b"\r\n\r\n" + body + b"\r\n\r\n"
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("pos")
-        recs = [_record("warcinfo", None, b"software: flycatcher-wet")]
-        for uri, text in zip(pdf["uri"], pdf["text"]):
-            recs.append(
-                _record("conversion", uri, ("" if text is None else text).encode())
+    def pack(pdf: pd.DataFrame) -> tuple[int, bytes]:
+        recs = [
+            _warc_record(
+                "warcinfo", None, date, b"software: flycatcher-wet", "text/plain"
             )
-        if gzip_mode == "members":
-            payload = b"".join(_gzip.compress(r, mtime=0) for r in recs)
-        else:
-            payload = b"".join(recs)
-        return pd.DataFrame(
-            {
-                "shard_id": [int(pdf["shard_id"].iloc[0])],
-                "n_records": [len(recs)],
-                "n_bytes": [len(payload)],
-                "payload": [payload],
-            }
-        )
+        ]
+        for uri, text in zip(pdf["uri"], pdf["text"]):
+            body = ("" if text is None else text).encode()
+            recs.append(_warc_record("conversion", uri, date, body, "text/plain"))
+        return len(recs), _join_records(recs, gzip_mode)
 
-    return with_shard.groupBy("shard_id").applyInPandas(
-        pack, schema=out_schema
-    )
+    rows = pages.select(F.col(uri_col).alias("uri"), F.col(text_col).alias("text"))
+    return pack_shards(rows, records_per_shard, seed, "n_records", pack)
 
 
 def write_wat(
@@ -596,53 +596,15 @@ def write_wat(
     once. Output rows: ``(shard_id, n_records, n_bytes, payload)``,
     readable back by :func:`warc_records` + :func:`wat_metadata`.
     """
-    import gzip as _gzip
     import json as _json
-
-    from .quality import training_order
 
     if gzip_mode not in ("none", "members"):
         raise ValueError(f"unknown gzip_mode: {gzip_mode}")
 
-    ordered = training_order(
-        pages.select(uri_col, status_col, ctype_col, title_col, links_col),
-        uri_col,
-        seed=seed,
-    )
-    with_shard = ordered.select(
-        F.col(uri_col).alias("uri"),
-        F.col(status_col).alias("status"),
-        F.col(ctype_col).alias("ctype"),
-        F.col(title_col).alias("title"),
-        F.col(links_col).alias("links"),
-        "pos",
-        (F.col("pos") / F.lit(int(records_per_shard)))
-        .cast("long")
-        .alias("shard_id"),
-    )
-    out_schema = T.StructType(
-        [
-            T.StructField("shard_id", T.LongType()),
-            T.StructField("n_records", T.LongType()),
-            T.StructField("n_bytes", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def _record(rtype: str, uri: str | None, ctype: str, body: bytes) -> bytes:
-        head = [b"WARC/1.0", b"WARC-Type: " + rtype.encode()]
-        if uri is not None:
-            head.append(b"WARC-Target-URI: " + uri.encode())
-        head.append(b"WARC-Date: " + date.encode())
-        head.append(b"Content-Type: " + ctype.encode())
-        head.append(b"Content-Length: %d" % len(body))
-        return b"\r\n".join(head) + b"\r\n\r\n" + body + b"\r\n\r\n"
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("pos")
+    def pack(pdf: pd.DataFrame) -> tuple[int, bytes]:
         recs = [
-            _record(
-                "warcinfo", None, "text/plain", b"software: flycatcher-wat"
+            _warc_record(
+                "warcinfo", None, date, b"software: flycatcher-wat", "text/plain"
             )
         ]
         for uri, status, ctype, title, links in zip(
@@ -689,23 +651,19 @@ def write_wat(
             body = _json.dumps(
                 envelope, sort_keys=True, separators=(",", ":")
             ).encode("utf-8")
-            recs.append(_record("metadata", uri, "application/json", body))
-        if gzip_mode == "members":
-            payload = b"".join(_gzip.compress(r, mtime=0) for r in recs)
-        else:
-            payload = b"".join(recs)
-        return pd.DataFrame(
-            {
-                "shard_id": [int(pdf["shard_id"].iloc[0])],
-                "n_records": [len(recs)],
-                "n_bytes": [len(payload)],
-                "payload": [payload],
-            }
-        )
+            recs.append(
+                _warc_record("metadata", uri, date, body, "application/json")
+            )
+        return len(recs), _join_records(recs, gzip_mode)
 
-    return with_shard.groupBy("shard_id").applyInPandas(
-        pack, schema=out_schema
+    rows = pages.select(
+        F.col(uri_col).alias("uri"),
+        F.col(status_col).alias("status"),
+        F.col(ctype_col).alias("ctype"),
+        F.col(title_col).alias("title"),
+        F.col(links_col).alias("links"),
     )
+    return pack_shards(rows, records_per_shard, seed, "n_records", pack)
 
 
 _WAT_LINK = T.StructType([T.StructField("url", T.StringType())])
@@ -843,32 +801,16 @@ def make_warc_payload(
         >>> [r["rec_type"] for r in out.orderBy("rec_idx").collect()]
         ['warcinfo', 'response', 'response']
     """
-    import gzip as _gzip
-
     if gzip_mode not in ("none", "whole", "members"):
         raise ValueError(f"unknown gzip_mode: {gzip_mode}")
 
-    def _record(rtype: str, uri: str | None, body: bytes) -> bytes:
-        head = [b"WARC/1.0", b"WARC-Type: " + rtype.encode()]
-        if uri is not None:
-            head.append(b"WARC-Target-URI: " + uri.encode())
-        head.append(b"WARC-Date: 2024-01-01T00:00:00Z")
-        head.append(b"Content-Length: %d" % len(body))
-        return b"\r\n".join(head) + b"\r\n\r\n" + body + b"\r\n\r\n"
-
     def build_one(i: int) -> bytes:
-        recs = [_record("warcinfo", None, b"software: flycatcher")]
+        recs = [_warc_record("warcinfo", None, _DATE, b"software: flycatcher")]
         for j in range(1 + i % 3):
             body = (f"body {i} {j} " + "x" * (i % 7)).encode()
-            recs.append(
-                _record("response", f"http://example.com/{i}/{j}", body)
-            )
-        if gzip_mode == "none":
-            return b"".join(recs)
-        elif gzip_mode == "whole":
-            return _gzip.compress(b"".join(recs), mtime=0)
-        else:
-            return b"".join(_gzip.compress(r, mtime=0) for r in recs)
+            uri = f"http://example.com/{i}/{j}"
+            recs.append(_warc_record("response", uri, _DATE, body))
+        return _join_records(recs, gzip_mode)
 
     return build_payloads(df, id_col, payload_col, build_one)
 
@@ -899,16 +841,6 @@ def make_http_warc_payload(
     genuinely de-chunks and gunzips its way there."""
     import gzip as _gzip
 
-    def _record(uri: str, body: bytes) -> bytes:
-        head = [
-            b"WARC/1.0",
-            b"WARC-Type: response",
-            b"WARC-Target-URI: " + uri.encode(),
-            b"WARC-Date: 2024-01-01T00:00:00Z",
-            b"Content-Length: %d" % len(body),
-        ]
-        return b"\r\n".join(head) + b"\r\n\r\n" + body + b"\r\n\r\n"
-
     def _chunk(payload: bytes) -> bytes:
         cut = min(5, len(payload))
         first, rest = payload[:cut], payload[cut:]
@@ -921,8 +853,10 @@ def make_http_warc_payload(
         recs = []
         p0 = f"Doc {i} rec 0 n {(i * 11) % 89} é".encode("utf-8")
         recs.append(
-            _record(
+            _warc_record(
+                "response",
                 f"http://example.com/{i}/0",
+                _DATE,
                 b"HTTP/1.1 200 OK\r\n"
                 b"Content-Type: text/html; charset=utf-8\r\n"
                 b"Content-Length: %d\r\n\r\n" % len(p0) + p0,
@@ -932,8 +866,10 @@ def make_http_warc_payload(
             "latin-1"
         )
         recs.append(
-            _record(
+            _warc_record(
+                "response",
                 f"http://example.com/{i}/1",
+                _DATE,
                 b"HTTP/1.1 301 Moved Permanently\r\n"
                 b"Location: http://example.com/new\r\n"
                 b"Content-Type: text/html; charset=latin-1\r\n"
@@ -942,8 +878,10 @@ def make_http_warc_payload(
         )
         p2 = f"Doc {i} rec 2 n {(i * 11 + 2) % 89}".encode("ascii")
         recs.append(
-            _record(
+            _warc_record(
+                "response",
                 f"http://example.com/{i}/2",
+                _DATE,
                 b"HTTP/1.1 404 Not Found\r\n"
                 b"Content-Type: text/plain\r\n"
                 b"Content-Encoding: gzip\r\n"

@@ -40,7 +40,12 @@ fixture writer. r11 closes the ZIP loop with the write side:
 md5-order assignment, DOS-epoch-pinned byte-stable output) and
 :func:`zip_members` (ordered member explode), mirroring the tar
 writer so the ``zip_roundtrip`` oracle value-checks the full
-read-curate-write loop including member order.
+read-curate-write loop including member order. Each writer keeps
+only its member-writing ``pack`` body: the md5-order shard
+assignment and the one ``applyInPandas`` stage are
+:func:`._payload.pack_shards`, shared with the WET and WAT writers
+of :mod:`.warc`, and both ``save_*`` functions write their files
+through one executor-side writer, :func:`_save_shards`.
 
 The fixture generator (:func:`make_webdataset_payload`) builds real
 tar shards whose ``.txt`` members are closed-form strings and whose
@@ -59,7 +64,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ._payload import build_payloads, map_payloads
+from ._payload import build_payloads, map_payloads, pack_shards
 
 __all__ = [
     "tar_members",
@@ -196,30 +201,8 @@ def write_webdataset(
     bounds shard size, not corpus size — pick ``samples_per_shard``
     to target the usual ~1 GB shards.
     """
-    from .quality import training_order
 
-    ordered = training_order(
-        samples.select(key_col, parts_col), key_col, seed=seed
-    )
-    with_shard = ordered.select(
-        F.col(key_col).alias("sample_key"),
-        F.col(parts_col).alias("parts"),
-        "pos",
-        (F.col("pos") / F.lit(int(samples_per_shard)))
-        .cast("long")
-        .alias("shard_id"),
-    )
-    out_schema = T.StructType(
-        [
-            T.StructField("shard_id", T.LongType()),
-            T.StructField("n_samples", T.LongType()),
-            T.StructField("n_bytes", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("pos")
+    def pack(pdf: pd.DataFrame) -> tuple[int, bytes]:
         buf = io.BytesIO()
         with tarfile.open(fileobj=buf, mode="w") as tf:
             for key, parts in zip(pdf["sample_key"], pdf["parts"]):
@@ -229,18 +212,21 @@ def write_webdataset(
                     info.size = len(body)
                     info.mtime = 0
                     tf.addfile(info, io.BytesIO(body))
-        payload = buf.getvalue()
-        return pd.DataFrame(
-            {
-                "shard_id": [int(pdf["shard_id"].iloc[0])],
-                "n_samples": [len(pdf)],
-                "n_bytes": [len(payload)],
-                "payload": [payload],
-            }
-        )
+        return len(pdf), buf.getvalue()
 
-    return with_shard.groupBy("shard_id").applyInPandas(
-        pack, schema=out_schema
+    return pack_shards(
+        _sample_rows(samples, key_col, parts_col),
+        samples_per_shard,
+        seed,
+        "n_samples",
+        pack,
+    )
+
+
+def _sample_rows(samples: DataFrame, key_col: str, parts_col: str) -> DataFrame:
+    """The shard writers' input: ``(sample_key, parts)``."""
+    return samples.select(
+        F.col(key_col).alias("sample_key"), F.col(parts_col).alias("parts")
     )
 
 
@@ -251,13 +237,19 @@ def save_webdataset(shards: DataFrame, directory: str) -> None:
     directory must be visible to every executor — true in local mode
     and on shared filesystems (NFS/FUSE); object stores want their
     own committer instead."""
+    _save_shards(shards, directory, "tar")
+
+
+def _save_shards(shards: DataFrame, directory: str, ext: str) -> None:
+    """Write each shard's payload to ``shard-{id:06d}.{ext}`` under
+    ``directory``, executor-side inside ``foreachPartition``."""
     import os
 
     os.makedirs(directory, exist_ok=True)
 
     def write_part(rows):
         for r in rows:
-            p = os.path.join(directory, f"shard-{r['shard_id']:06d}.tar")
+            p = os.path.join(directory, f"shard-{r['shard_id']:06d}.{ext}")
             with open(p, "wb") as f:
                 f.write(bytes(r["payload"]))
 
@@ -498,32 +490,9 @@ def write_zip_shards(
     ``zip_samples`` / ``zip_members`` read back transparently."""
     import zipfile
 
-    from .quality import training_order
-
     comp = zipfile.ZIP_DEFLATED if compress else zipfile.ZIP_STORED
 
-    ordered = training_order(
-        samples.select(key_col, parts_col), key_col, seed=seed
-    )
-    with_shard = ordered.select(
-        F.col(key_col).alias("sample_key"),
-        F.col(parts_col).alias("parts"),
-        "pos",
-        (F.col("pos") / F.lit(int(samples_per_shard)))
-        .cast("long")
-        .alias("shard_id"),
-    )
-    out_schema = T.StructType(
-        [
-            T.StructField("shard_id", T.LongType()),
-            T.StructField("n_samples", T.LongType()),
-            T.StructField("n_bytes", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("pos")
+    def pack(pdf: pd.DataFrame) -> tuple[int, bytes]:
         buf = io.BytesIO()
         with zipfile.ZipFile(buf, "w", compression=comp) as zf:
             for key, parts in zip(pdf["sample_key"], pdf["parts"]):
@@ -534,18 +503,14 @@ def write_zip_shards(
                     info.compress_type = comp
                     info.create_system = 3  # byte-stable across hosts
                     zf.writestr(info, bytes(parts[ext]))
-        payload = buf.getvalue()
-        return pd.DataFrame(
-            {
-                "shard_id": [int(pdf["shard_id"].iloc[0])],
-                "n_samples": [len(pdf)],
-                "n_bytes": [len(payload)],
-                "payload": [payload],
-            }
-        )
+        return len(pdf), buf.getvalue()
 
-    return with_shard.groupBy("shard_id").applyInPandas(
-        pack, schema=out_schema
+    return pack_shards(
+        _sample_rows(samples, key_col, parts_col),
+        samples_per_shard,
+        seed,
+        "n_samples",
+        pack,
     )
 
 
@@ -553,14 +518,4 @@ def save_zip_shards(shards: DataFrame, directory: str) -> None:
     """Write :func:`write_zip_shards` output as ``shard-{id:06d}.zip``
     files under ``directory`` — executor-side ``foreachPartition``,
     same visibility caveats as :func:`save_webdataset`."""
-    import os
-
-    os.makedirs(directory, exist_ok=True)
-
-    def write_part(rows):
-        for r in rows:
-            p = os.path.join(directory, f"shard-{r['shard_id']:06d}.zip")
-            with open(p, "wb") as f:
-                f.write(bytes(r["payload"]))
-
-    shards.select("shard_id", "payload").foreachPartition(write_part)
+    _save_shards(shards, directory, "zip")

@@ -91,7 +91,9 @@ def windowed_quality(
             F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"nulls_{c}")
         )
     if validator is not None:
-        sdf, checks = validator._checks(sdf, fill_nulls=False)
+        # ts_col and value_cols survive coercion even if undeclared
+        keep = [ts_col, *(value_cols or [])]
+        sdf, checks = validator._checks(sdf, fill_nulls=False, keep=keep)
         # a constraint that cannot resolve has no check and counts 0
         viol = {k.id: F.sum(F.when(~k.passes, 1).otherwise(0)) for k in checks}
         zero = F.sum(F.lit(0))

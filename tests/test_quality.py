@@ -723,7 +723,7 @@ class TestLeakageSafeSplit:
         ).where("a.split <> b.split").count()
         assert diff > 0  # new seed reshuffles the assignment
 
-    def test_broadcast_gate_paths_identical(self, spark):
+    def test_broadcast_gate_paths_identical(self, spark, monkeypatch):
         # r9 verdict: the component-table broadcast must be
         # size-gated. Both sides of the gate must produce the exact
         # same split, and the over-threshold path must not carry a
@@ -733,7 +733,8 @@ class TestLeakageSafeSplit:
             [(1, 2), (2, 3), (7, 9), (10, 11)], ["doc_id_a", "doc_id_b"]
         )
         small = quality.leakage_safe_split(docs, pairs)
-        big = quality.leakage_safe_split(docs, pairs, broadcast_max_rows=0)
+        monkeypatch.setattr(quality, "SPLIT_BROADCAST_MAX_ROWS", 0)
+        big = quality.leakage_safe_split(docs, pairs)
         a = sorted(map(tuple, small.collect()))
         b = sorted(map(tuple, big.collect()))
         assert a == b

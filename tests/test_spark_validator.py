@@ -46,6 +46,18 @@ class TestBasicValidation:
         with pytest.raises(ValueError, match="Missing required columns"):
             v.validate(df)
 
+    def test_missing_columns_named_in_schema_order(self, spark):
+        class Wide(Schema):
+            z: int
+            x: int
+            k: int
+            y: int
+
+        df = spark.createDataFrame([(1,)], ["k"])
+        with pytest.raises(ValueError) as err:
+            Wide.to_spark_validator().validate(df)
+        assert str(err.value) == "Missing required columns: {'z', 'x', 'y'}"
+
     def test_extra_columns_dropped_and_order_normalized(self, spark):
         df = spark.createDataFrame(
             [("x", 25, "Alice", 1)], ["junk", "age", "name", "id"]
@@ -364,6 +376,33 @@ class TestCrossFieldValidators:
         assert any("boom" in r.getMessage() for r in caplog.records)
 
 
+    def test_skip_warnings_name_each_constraint_id(self, spark, caplog):
+        class Ghosts(Schema):
+            id: int
+
+            @model_validator
+            def ghost_a():
+                return col("no_a") > 0
+
+            @model_validator
+            def ghost_b():
+                return col("no_b") > 0
+
+        df = spark.createDataFrame([(1,)], ["id"])
+        with caplog.at_level(logging.WARNING):
+            Ghosts.to_spark_validator().validate(df)
+        skipped = [
+            r.getMessage()
+            for r in caplog.records
+            if r.getMessage().startswith(
+                "Could not evaluate constraint 'Validation failed'"
+            )
+        ]
+        assert len(skipped) == 2
+        assert "(id ghost_a#0)" in skipped[0]
+        assert "(id ghost_b#1)" in skipped[1]
+
+
 class TestConstraintRecords:
     def test_ids_name_options_keys_and_validators(self):
         class S(Schema):
@@ -602,6 +641,27 @@ class TestEntryPointsAgree:
             "b_small#1",
             "a_not_five#2",
         ]
+
+    def test_windowed_quality_keeps_undeclared_columns(self, spark):
+        """``ts_col`` and ``value_cols`` outside the schema survive the
+        coercion; the validator outputs still drop them."""
+
+        class NoTs(Schema):
+            id: int
+            a: int = Field(gt=0)
+
+        ts = datetime(2024, 1, 1, 10, 0, 0)
+        df = spark.createDataFrame(
+            [(1, 1, ts, None), (2, -1, ts, 3.0)],
+            "id long, a long, ts timestamp_ntz, extra double",
+        )
+        v = NoTs.to_spark_validator()
+        (row,) = windowed_quality(
+            df, v, ts_col="ts", value_cols=["extra"]
+        ).collect()
+        assert (row.n_rows, row.nulls_extra, row.viol_0) == (2, 1, 1)
+        assert v.validate_lazy(df).columns == ["id", "a"]
+        assert v.flag_violations(df).columns == ["id", "a", "_violations"]
 
     def test_job_counts(self, spark, mixed_df, constrained_valid_df):
         """One count job per ``validate`` call, plus one sample job per
