@@ -43,7 +43,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 
-from .text import normalize_text, tokens
+from .text import _col, normalize_text, tokens
 
 
 def word_counts(
@@ -332,10 +332,6 @@ def _bpe_apply(
 def _word_split(text: str) -> list[str]:
     """The word-level pieces of a row: whitespace-split, lowercased."""
     return [w.lower() for w in text.split()]
-
-
-def _col(text: Column | str) -> Column:
-    return F.col(text) if isinstance(text, str) else text
 
 
 def _words(text: Column | str) -> Column:

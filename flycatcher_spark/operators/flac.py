@@ -28,13 +28,17 @@ Rice residuals, correct CRCs), which is what lets pytest pin exact
 round-trips through every decode path, including stereo
 decorrelation and the LPC coefficient/shift layout.
 
-Bit-level work runs inside the Arrow ``mapInPandas`` decode stage
+Bits are read and written MSB-first with the shared
+:class:`._bits.BitReader` / :class:`._bits.BitWriter`. Bit-level
+work runs inside the Arrow ``mapInPandas`` decode stage
 (see :func:`multimodal.decode_audio_meta`): payloads never shuffle
 and never reach the driver; a corrupt archive yields an attributable
 null row, not a job failure.
 """
 
 from __future__ import annotations
+
+from ._bits import BitReader, BitWriter
 
 __all__ = [
     "parse_flac",
@@ -84,44 +88,18 @@ def crc16(data: bytes) -> int:
     return crc
 
 
-class _BitReader:
-    def __init__(self, buf: bytes, pos_bytes: int = 0):
-        self.buf = buf
-        self.pos = pos_bytes * 8  # absolute bit position
+def _signed(br: BitReader, n: int) -> int:
+    """n-bit two's-complement read."""
+    v = br.read(n)
+    return v - (1 << n) if v & (1 << (n - 1)) else v
 
-    def read(self, n: int) -> int:
-        """n-bit big-endian unsigned read."""
-        end = self.pos + n
-        if end > len(self.buf) * 8:
-            raise EOFError("bitstream truncated")
-        v = 0
-        pos = self.pos
-        while n > 0:
-            byte = self.buf[pos >> 3]
-            avail = 8 - (pos & 7)
-            take = min(avail, n)
-            shift = avail - take
-            v = (v << take) | ((byte >> shift) & ((1 << take) - 1))
-            pos += take
-            n -= take
-        self.pos = pos
-        return v
 
-    def read_signed(self, n: int) -> int:
-        v = self.read(n)
-        return v - (1 << n) if v & (1 << (n - 1)) else v
-
-    def read_unary(self) -> int:
-        q = 0
-        while self.read(1) == 0:
-            q += 1
-        return q
-
-    def align(self) -> None:
-        self.pos = (self.pos + 7) & ~7
-
-    def byte_pos(self) -> int:
-        return self.pos >> 3
+def _unary(br: BitReader) -> int:
+    """Count of 0 bits before the next 1 bit (consumed)."""
+    q = 0
+    while br.read(1) == 0:
+        q += 1
+    return q
 
 
 _FIXED_COEFFS = {
@@ -146,7 +124,7 @@ _SAMPLE_SIZES = {1: 8, 2: 12, 4: 16, 5: 20, 6: 24, 7: 32}
 MAX_PCM_BYTES = 64 * 1024 * 1024
 
 
-def _decode_residuals(br: _BitReader, blocksize: int, order: int) -> list[int]:
+def _decode_residuals(br: BitReader, blocksize: int, order: int) -> list[int]:
     method = br.read(2)
     if method > 1:
         raise ValueError("reserved residual coding method")
@@ -163,30 +141,30 @@ def _decode_residuals(br: _BitReader, blocksize: int, order: int) -> list[int]:
         if param == escape:
             raw = br.read(5)
             for _ in range(count):
-                out.append(br.read_signed(raw) if raw else 0)
+                out.append(_signed(br, raw) if raw else 0)
         else:
             for _ in range(count):
-                q = br.read_unary()
+                q = _unary(br)
                 u = (q << param) | br.read(param)
                 out.append((u >> 1) ^ -(u & 1))
     return out
 
 
-def _decode_subframe(br: _BitReader, blocksize: int, bps: int) -> list[int]:
+def _decode_subframe(br: BitReader, blocksize: int, bps: int) -> list[int]:
     if br.read(1) != 0:
         raise ValueError("subframe padding bit set")
     ftype = br.read(6)
     wasted = 0
     if br.read(1):  # wasted-bits flag: unary count - 1 follows
-        wasted = 1 + br.read_unary()
+        wasted = 1 + _unary(br)
     eff = bps - wasted
     if ftype == 0:  # CONSTANT
-        samples = [br.read_signed(eff)] * blocksize
+        samples = [_signed(br, eff)] * blocksize
     elif ftype == 1:  # VERBATIM
-        samples = [br.read_signed(eff) for _ in range(blocksize)]
+        samples = [_signed(br, eff) for _ in range(blocksize)]
     elif 8 <= ftype <= 12:  # FIXED, order 0-4
         order = ftype - 8
-        samples = [br.read_signed(eff) for _ in range(order)]
+        samples = [_signed(br, eff) for _ in range(order)]
         residuals = _decode_residuals(br, blocksize, order)
         coeffs = _FIXED_COEFFS[order]
         for r in residuals:
@@ -196,17 +174,17 @@ def _decode_subframe(br: _BitReader, blocksize: int, bps: int) -> list[int]:
             samples.append(r + pred)
     elif ftype >= 32:  # LPC, order 1-32 (RFC 9639 §9.2.4, r8)
         order = (ftype & 31) + 1
-        samples = [br.read_signed(eff) for _ in range(order)]
+        samples = [_signed(br, eff) for _ in range(order)]
         pbits = br.read(4)
         if pbits == 15:
             raise ValueError("invalid LPC coefficient precision code")
         prec = pbits + 1
-        shift = br.read_signed(5)
+        shift = _signed(br, 5)
         if shift < 0:
             # the spec marks negative shifts unused; real encoders
             # never emit them and libFLAC rejects them
             raise ValueError("negative LPC quantization shift")
-        coeffs = [br.read_signed(prec) for _ in range(order)]
+        coeffs = [_signed(br, prec) for _ in range(order)]
         residuals = _decode_residuals(br, blocksize, order)
         # Integer-exact reconstruction: the accumulator is unbounded
         # in Python (the spec requires >= 64-bit; exact here) and
@@ -224,7 +202,7 @@ def _decode_subframe(br: _BitReader, blocksize: int, bps: int) -> list[int]:
     return samples
 
 
-def _read_utf8_number(br: _BitReader) -> int:
+def _read_utf8_number(br: BitReader) -> int:
     first = br.read(8)
     if first < 0x80:
         return first
@@ -282,7 +260,7 @@ def parse_flac(payload: bytes) -> dict | None:
                 break
         if streaminfo is None:
             return None
-        si = _BitReader(streaminfo)
+        si = BitReader(streaminfo, "msb")
         si.read(16)  # min block size
         si.read(16)  # max block size
         si.read(24)  # min frame size
@@ -303,9 +281,10 @@ def parse_flac(payload: bytes) -> dict | None:
 
         chans: list[list[int]] = [[] for _ in range(n_channels)]
         got = 0
+        br = BitReader(buf, "msb")
+        br.pos = pos * 8
         while got < total:
-            fr_start = pos
-            br = _BitReader(buf, pos)
+            fr_start = br.pos >> 3
             if br.read(14) != 0b11111111111110:
                 return None
             br.read(1)  # reserved
@@ -338,7 +317,7 @@ def parse_flac(payload: bytes) -> dict | None:
                 return None
             fbps = _SAMPLE_SIZES[ss_code] if ss_code else bps
             header_crc = br.read(8)
-            hdr_end = br.byte_pos()
+            hdr_end = br.pos >> 3
             if crc8(buf[fr_start : hdr_end - 1]) != header_crc:
                 return None
 
@@ -359,11 +338,10 @@ def parse_flac(payload: bytes) -> dict | None:
                 subs.append(
                     _decode_subframe(br, blocksize, fbps + (1 if side[c] else 0))
                 )
-            br.align()
+            br.pos = (br.pos + 7) & ~7  # frames end byte-aligned
             frame_crc = br.read(16)
-            if crc16(buf[fr_start : br.byte_pos() - 2]) != frame_crc:
+            if crc16(buf[fr_start : (br.pos >> 3) - 2]) != frame_crc:
                 return None
-            pos = br.byte_pos()
 
             if ch_code == 8:  # left/side: R = L - S
                 left, s = subs
@@ -394,38 +372,8 @@ def parse_flac(payload: bytes) -> dict | None:
             "n_frames": n_frames,
             "samples": inter,
         }
-    except (EOFError, ValueError, KeyError, IndexError):
+    except (ValueError, KeyError, IndexError):
         return None
-
-
-class _BitWriter:
-    def __init__(self) -> None:
-        self.bits: list[int] = []
-
-    def write(self, v: int, n: int) -> None:
-        for i in range(n - 1, -1, -1):
-            self.bits.append((v >> i) & 1)
-
-    def write_signed(self, v: int, n: int) -> None:
-        self.write(v & ((1 << n) - 1), n)
-
-    def write_unary(self, q: int) -> None:
-        self.bits.extend([0] * q)
-        self.bits.append(1)
-
-    def align(self) -> None:
-        while len(self.bits) % 8:
-            self.bits.append(0)
-
-    def to_bytes(self) -> bytes:
-        self.align()
-        out = bytearray()
-        for i in range(0, len(self.bits), 8):
-            b = 0
-            for bit in self.bits[i : i + 8]:
-                b = (b << 1) | bit
-            out.append(b)
-        return bytes(out)
 
 
 # Deterministic quantized-coefficient sets for the ``lpc{k}`` fixture
@@ -443,7 +391,7 @@ _LPC_FIXTURE = {
 
 
 def _encode_subframe(
-    bw: _BitWriter,
+    bw: BitWriter,
     samples: list[int],
     bps: int,
     mode: str,
@@ -454,12 +402,12 @@ def _encode_subframe(
 ) -> None:
     if mode == "constant":
         bw.write(0, 1); bw.write(0, 6); bw.write(0, 1)
-        bw.write_signed(samples[0], bps)
+        bw.write(samples[0], bps)
         return
     if mode == "verbatim":
         bw.write(0, 1); bw.write(1, 6); bw.write(0, 1)
         for s in samples:
-            bw.write_signed(s, bps)
+            bw.write(s, bps)
         return
     # fixed/LPC order k with rice-coded residuals, partition order 0
     if not 0 <= rice_param <= 14:
@@ -496,11 +444,11 @@ def _encode_subframe(
         coeffs = list(lpc_coeffs)
         bw.write(0, 1); bw.write(32 + order - 1, 6); bw.write(0, 1)
         for s in samples[:order]:
-            bw.write_signed(s, bps)
+            bw.write(s, bps)
         bw.write(lpc_precision - 1, 4)
-        bw.write_signed(shift, 5)
+        bw.write(shift, 5)
         for c in coeffs:
-            bw.write_signed(c, lpc_precision)
+            bw.write(c, lpc_precision)
 
         def predict(i: int) -> int:
             acc = sum(c * samples[i - 1 - k] for k, c in enumerate(coeffs))
@@ -510,7 +458,7 @@ def _encode_subframe(
         coeffs = _FIXED_COEFFS[order]
         bw.write(0, 1); bw.write(8 + order, 6); bw.write(0, 1)
         for s in samples[:order]:
-            bw.write_signed(s, bps)
+            bw.write(s, bps)
 
         def predict(i: int) -> int:
             return sum(c * samples[i - 1 - k] for k, c in enumerate(coeffs))
@@ -521,7 +469,7 @@ def _encode_subframe(
     for i in range(order, len(samples)):
         r = samples[i] - predict(i)
         u = (r << 1) ^ (r >> 63) if r >= 0 else ((-r) << 1) - 1
-        bw.write_unary(u >> rice_param)
+        bw.write(1, (u >> rice_param) + 1)  # unary: q zeros, then a 1
         bw.write(u & ((1 << rice_param) - 1), rice_param)
 
 
@@ -551,7 +499,7 @@ def encode_flac(
     n = len(samples) // n_channels
     chans = [samples[c::n_channels] for c in range(n_channels)]
 
-    bw = _BitWriter()
+    bw = BitWriter("msb")
     # frame header
     bw.write(0b11111111111110, 14)
     bw.write(0, 1)  # reserved
@@ -573,10 +521,10 @@ def encode_flac(
         bw.write(n - 1, 8)
     else:
         bw.write(n - 1, 16)
-    hdr = bw.to_bytes()
+    hdr = bw.bytes()
     hdr += bytes([crc8(hdr)])
 
-    body = _BitWriter()
+    body = BitWriter("msb")
     if mode_code is None:
         subs = [(ch, bps) for ch in chans]
     else:
@@ -595,16 +543,16 @@ def encode_flac(
             lpc_coeffs=lpc_coeffs, lpc_shift=lpc_shift,
             lpc_precision=lpc_precision,
         )
-    frame = hdr + body.to_bytes()
+    frame = hdr + body.bytes()
     frame += crc16(frame).to_bytes(2, "big")
 
-    si = _BitWriter()
+    si = BitWriter("msb")
     si.write(n, 16); si.write(n, 16)       # min/max block size
     si.write(0, 24); si.write(0, 24)       # min/max frame size unknown
     si.write(sample_rate, 20)
     si.write(n_channels - 1, 3)
     si.write(bps - 1, 5)
     si.write(n, 36)
-    streaminfo = si.to_bytes() + bytes(16)  # md5 unknown (zeros)
+    streaminfo = si.bytes() + bytes(16)  # md5 unknown (zeros)
     meta = bytes([0x80]) + len(streaminfo).to_bytes(3, "big") + streaminfo
     return b"fLaC" + meta + frame

@@ -15,11 +15,13 @@ Scope (documented subset, honest about what it is):
   real disposal semantics — keep, restore-to-background,
   restore-previous — decoding only the frames composition needs;
 - full LZW decompression: variable code width (LSB-first packing),
-  clear/end codes, table growth to 12 bits, the deferred-clear case;
+  clear/end codes, table growth to 12 bits, the deferred-clear case
+  — the GIF variant of the shared :func:`._bits.lzw_decode`;
 - both row orders: sequential and the 4-pass GIF interlace.
 
 The fixture encoder (:func:`encode_gif`) is a real LZW compressor
-(greedy longest-match string table, the standard algorithm), so
+(greedy longest-match string table, the standard algorithm —
+:func:`._bits.lzw_encode`, resetting at 4096 entries), so
 pytest pins exact round-trips through genuine compression — table
 growth, width bumps and clear-code resets included — and the
 ``gif_decode`` oracle states pixel statistics in closed form while
@@ -33,64 +35,14 @@ from __future__ import annotations
 
 import numpy as np
 
+from ._bits import lzw_decode, lzw_encode
+
 __all__ = [
     "parse_gif",
     "parse_gif_frames",
     "encode_gif",
     "encode_gif_animation",
 ]
-
-
-def _lzw_decode(data: bytes, min_code_size: int, n_pixels: int) -> list[int]:
-    """GIF-flavor LZW: codes packed LSB-first, initial width
-    ``min_code_size + 1``, clear code ``2^mcs``, end-of-information
-    ``2^mcs + 1``; the table grows by one entry per code consumed and
-    the width bumps when the NEXT code would overflow it (capped at
-    12 bits; further growth waits for a clear)."""
-    clear = 1 << min_code_size
-    end = clear + 1
-
-    def fresh_table() -> list[list[int] | None]:
-        return [[i] for i in range(clear)] + [None, None]
-
-    table = fresh_table()
-    width = min_code_size + 1
-    out: list[int] = []
-    prev: list[int] | None = None
-    acc = 0
-    nbits = 0
-    pos = 0
-    while len(out) < n_pixels:
-        while nbits < width:
-            if pos >= len(data):
-                raise ValueError("LZW stream truncated")
-            acc |= data[pos] << nbits
-            nbits += 8
-            pos += 1
-        code = acc & ((1 << width) - 1)
-        acc >>= width
-        nbits -= width
-        if code == clear:
-            table = fresh_table()
-            width = min_code_size + 1
-            prev = None
-            continue
-        if code == end:
-            break
-        if code < len(table) and table[code] is not None:
-            entry = table[code]
-        elif code == len(table) and prev is not None:
-            entry = prev + [prev[0]]  # the KwKwK case
-        else:
-            raise ValueError("bad LZW code")
-        out.extend(entry)
-        if prev is not None:
-            if len(table) < 4096:
-                table.append(prev + [entry[0]])
-        prev = entry
-        if len(table) == (1 << width) and width < 12:
-            width += 1
-    return out[:n_pixels]
 
 
 _INTERLACE_PASSES = [(0, 8), (4, 8), (2, 4), (1, 2)]
@@ -181,9 +133,8 @@ def _decode_frame_indices(frame, gct) -> np.ndarray | None:
     pal = lct if lct is not None else gct
     if pal is None or w <= 0 or h <= 0 or not 2 <= mcs <= 8:
         return None
-    idx = np.array(_lzw_decode(data, mcs, w * h), dtype=np.int64).reshape(
-        h, w
-    )
+    raster = lzw_decode(data, mcs, "lsb", early_change=False, n_out=w * h)
+    idx = np.frombuffer(raster, dtype=np.uint8).astype(np.int64).reshape(h, w)
     if interlaced:
         rows = np.empty_like(idx)
         src = 0
@@ -348,62 +299,6 @@ def parse_gif(payload: bytes) -> dict | None:
         return None
 
 
-def _lzw_encode(indices: list[int], min_code_size: int) -> bytes:
-    """Real greedy LZW (the standard GIF compressor): emits a leading
-    clear code, grows the string table to 4096 then resets with a
-    clear code — exactly the stream shape real encoders produce."""
-    clear = 1 << min_code_size
-    end = clear + 1
-    out = bytearray()
-    acc = 0
-    nbits = 0
-
-    def emit(code: int, width: int) -> None:
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += width
-        while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    def fresh() -> dict:
-        return {(i,): i for i in range(clear)}
-
-    table = fresh()
-    next_code = end + 1
-    width = min_code_size + 1
-    emit(clear, width)
-    run: tuple[int, ...] = ()
-    for px in indices:
-        cand = run + (px,)
-        if cand in table:
-            run = cand
-            continue
-        emit(table[run], width)
-        # The decoder appends one table entry per code it consumes
-        # (except the first after a clear), so ITS table length is
-        # always next_code - 1 here; mirror its width bump (when that
-        # length reaches 2^width) and reset with a clear code when it
-        # fills 4096 (codes are 12-bit max).
-        table[cand] = next_code
-        next_code += 1
-        if next_code - 1 == (1 << width) and width < 12:
-            width += 1
-        if next_code - 1 == 4096:
-            emit(clear, width)
-            table = fresh()
-            next_code = end + 1
-            width = min_code_size + 1
-        run = (px,)
-    if run:
-        emit(table[run], width)
-    emit(end, width)
-    if nbits:
-        out.append(acc & 0xFF)
-    return bytes(out)
-
-
 def encode_gif(
     width: int,
     height: int,
@@ -437,7 +332,8 @@ def encode_gif(
         stream = np.concatenate(rows).reshape(-1).tolist()
     else:
         stream = indices
-    lzw = _lzw_encode(stream, mcs)
+    lzw = lzw_encode(bytes(stream), mcs, "lsb", early_change=False,
+                     clear_at=4096)
     frame = bytearray(b"\x2c")
     frame += (0).to_bytes(2, "little") + (0).to_bytes(2, "little")
     frame += width.to_bytes(2, "little") + height.to_bytes(2, "little")
@@ -531,7 +427,8 @@ def encode_gif_animation(
         else:
             stream = indices
         out += bytes([mcs])
-        lzw = _lzw_encode(stream, mcs)
+        lzw = lzw_encode(bytes(stream), mcs, "lsb", early_change=False,
+                     clear_at=4096)
         for i in range(0, len(lzw), 255):
             chunk = lzw[i : i + 255]
             out += bytes([len(chunk)]) + chunk

@@ -25,9 +25,12 @@ Scope (documented subset, honest about what it is):
   precision return ``None`` (unsupported, not wrong).
 
 The decode is the real thing — marker walk, DHT canonical-Huffman
-reconstruction, byte-unstuffing bit reader, DC prediction, run/size
-AC coefficients, dequantization, dezigzag, orthonormal 2-D IDCT,
-level shift, YCbCr→RGB — not a header sniff.
+reconstruction, byte unstuffing per restart interval, DC prediction,
+run/size AC coefficients, dequantization, dezigzag, orthonormal 2-D
+IDCT, level shift, YCbCr→RGB — not a header sniff. The bit reader
+and writer and the canonical code construction are the shared ones of
+:mod:`._bits`; byte stuffing, the pad-with-1s flush and the RSTn
+markers stay here, as transforms of each interval's bytes.
 
 What makes it oracle-checkable without a reference codec in the
 container: the fixture encoder (:func:`encode_jpeg`) is a
@@ -47,6 +50,8 @@ decoders: payloads never shuffle, corrupt payloads yield null rows.
 from __future__ import annotations
 
 import numpy as np
+
+from ._bits import BitReader, BitWriter, canonical_codes, prefix_lut
 
 __all__ = ["parse_jpeg", "encode_jpeg", "encode_jpeg_progressive", "ZIGZAG"]
 
@@ -88,51 +93,33 @@ for _u in range(8):
 del _u, _x, s
 
 
-def _idct2(block: np.ndarray) -> np.ndarray:
-    return _A.T @ block @ _A
-
-
 _HUFF_CACHE: dict = {}
 
 
-def _huff_table(counts: list[int], symbols: bytes) -> "_HuffTable":
-    """Memoized table compilation: the 65536-entry LUT costs more to
-    build than decoding a small image, and a corpus of fixture (or
-    same-encoder) JPEGs reuses identical tables across payloads."""
+def _dht_codes(counts, symbols) -> dict[int, tuple[int, int]]:
+    """``symbol -> (code, length)`` for a DHT's 16 counts and its
+    symbols in table order (T.81 Annex C)."""
+    lengths = [ln for ln in range(1, 17) for _ in range(counts[ln - 1])]
+    if len(symbols) < len(lengths):
+        raise ValueError("DHT symbols truncated")
+    return canonical_codes(zip(symbols, lengths))
+
+
+def _huff_table(counts: list[int], symbols: bytes) -> tuple[list, list]:
+    """Memoized decode tables ``(lut_sym, lut_len)`` indexed by the
+    next 16 bits: the 65536-entry tables cost more to build than
+    decoding a small image, and a corpus of fixture (or same-encoder)
+    JPEGs reuses identical tables across payloads. The canonical
+    builder rejects an over-subscribed DHT before any table is
+    written; an incomplete one is valid, and its unused prefixes
+    keep ``lut_len == 0``."""
     key = (bytes(counts), bytes(symbols))
     table = _HUFF_CACHE.get(key)
     if table is None:
-        table = _HuffTable(counts, symbols)
+        table = prefix_lut(_dht_codes(counts, symbols), 16, "msb")
         if len(_HUFF_CACHE) < 64:  # bound worker-side memory
             _HUFF_CACHE[key] = table
     return table
-
-
-class _HuffTable:
-    """Canonical Huffman table from a DHT (16 counts + symbols),
-    compiled to a flat 16-bit-prefix lookup (the classic fast-decode
-    table): ``lut_len[idx] == 0`` marks an invalid prefix."""
-
-    def __init__(self, counts: list[int], symbols: bytes):
-        self.lut_len = [0] * 65536
-        self.lut_sym = [0] * 65536
-        code = 0
-        k = 0
-        for length in range(1, 17):
-            # Reject over-subscription BEFORE touching the LUT: a
-            # slice-assign past index 65536 silently GROWS the lists
-            # (worst case ~8M entries on an adversarial DHT), so the
-            # guard must precede the writes, not follow them.
-            if code + counts[length - 1] > (1 << length):
-                raise ValueError("over-subscribed huffman table")
-            for _ in range(counts[length - 1]):
-                lo = code << (16 - length)
-                hi = (code + 1) << (16 - length)
-                self.lut_len[lo:hi] = [length] * (hi - lo)
-                self.lut_sym[lo:hi] = [symbols[k]] * (hi - lo)
-                code += 1
-                k += 1
-            code <<= 1
 
 
 def _split_entropy(buf: bytes, pos: int) -> tuple[list[bytes], int]:
@@ -164,47 +151,17 @@ def _split_entropy(buf: bytes, pos: int) -> tuple[list[bytes], int]:
     return segs, n
 
 
-class _SegReader:
-    """MSB-first bit reader over one unstuffed entropy segment. The
-    huffman path peeks a 16-bit window into the flat table and
-    consumes the decoded length — no per-bit Python loop."""
-
-    __slots__ = ("data", "bitpos", "nbits")
-
-    def __init__(self, data: bytes):
-        # 2 padding bytes so the 16-bit peek window never runs off
-        # the end mid-symbol (spec pads the tail with 1-bits; zeros
-        # here are fine because decoding is bounded by the MCU count)
-        self.data = data + b"\x00\x00"
-        self.bitpos = 0
-        self.nbits = len(data) * 8
-
-    def huff(self, table: _HuffTable) -> int:
-        if self.bitpos >= self.nbits:
-            raise ValueError("entropy segment exhausted")
-        byte = self.bitpos >> 3
-        off = self.bitpos & 7
-        window = (
-            int.from_bytes(self.data[byte : byte + 3], "big") >> (8 - off)
-        ) & 0xFFFF
-        length = table.lut_len[window]
-        if length == 0:
-            raise ValueError("invalid huffman code")
-        self.bitpos += length
-        return table.lut_sym[window]
-
-    def bits(self, k: int) -> int:
-        if k == 0:
-            return 0
-        if self.bitpos + k > self.nbits:
-            raise ValueError("entropy segment exhausted")
-        byte = self.bitpos >> 3
-        off = self.bitpos & 7
-        need = off + k
-        nbytes = (need + 7) >> 3
-        v = int.from_bytes(self.data[byte : byte + nbytes], "big")
-        self.bitpos += k
-        return (v >> (nbytes * 8 - need)) & ((1 << k) - 1)
+def _huff(br: BitReader, table: tuple[list, list]) -> int:
+    """Decode one Huffman symbol: peek a 16-bit window into the flat
+    table and consume the decoded length."""
+    if br.pos >= br.nbits:
+        raise ValueError("entropy segment exhausted")
+    window = br.peek(16)
+    length = table[1][window]
+    if length == 0:
+        raise ValueError("invalid huffman code")
+    br.skip(length)
+    return table[0][window]
 
 
 def _extend(v: int, size: int) -> int:
@@ -236,8 +193,8 @@ def parse_jpeg(payload: bytes) -> dict | None:
             return None
         pos = 2
         qt: dict[int, np.ndarray] = {}
-        huff_dc: dict[int, _HuffTable] = {}
-        huff_ac: dict[int, _HuffTable] = {}
+        huff_dc: dict[int, tuple] = {}
+        huff_ac: dict[int, tuple] = {}
         frame = None
         progressive = False
         coefs: list[np.ndarray] | None = None
@@ -374,13 +331,13 @@ def _alloc_coefs(h, w, comps) -> list[np.ndarray]:
 def _decode_block_seq(br, dc_t, ac_t, pred, coeffs) -> int:
     """One sequential block: DC diff + run/size AC into ``coeffs``
     (a 64-slot zigzag list). Returns the new DC predictor."""
-    size = br.huff(dc_t)
-    diff = _extend(br.bits(size), size) if size else 0
+    size = _huff(br, dc_t)
+    diff = _extend(br.read(size), size) if size else 0
     pred += diff
     coeffs[0] = pred
     k = 1
     while k < 64:
-        rs = br.huff(ac_t)
+        rs = _huff(br, ac_t)
         if rs == 0x00:  # EOB
             break
         run, size = rs >> 4, rs & 15
@@ -390,7 +347,7 @@ def _decode_block_seq(br, dc_t, ac_t, pred, coeffs) -> int:
         k += run
         if k > 63 or size == 0:
             raise ValueError("bad AC run")
-        coeffs[k] = _extend(br.bits(size), size)
+        coeffs[k] = _extend(br.read(size), size)
         k += 1
     return pred
 
@@ -403,7 +360,7 @@ def _decode_seq_scan(
     vectorized afterwards in :func:`_assemble`."""
     _, _, mcus_x, mcus_y, _ = _geometry(h, w, comps)
     segs, _ = _split_entropy(buf, pos)
-    br = _SegReader(segs[0])
+    br = BitReader(segs[0], "msb")
     seg_idx = 0
     pred = [0] * len(comps)
     n_mcu = 0
@@ -414,7 +371,7 @@ def _decode_seq_scan(
                 seg_idx += 1  # RSTn boundary: next unstuffed segment
                 if seg_idx >= len(segs):
                     raise ValueError("missing restart segment")
-                br = _SegReader(segs[seg_idx])
+                br = BitReader(segs[seg_idx], "msb")
                 pred = [0] * len(comps)
             for ci, c in enumerate(comps):
                 dc_t = huff_dc[sel[ci][0]]
@@ -434,7 +391,7 @@ def _refine_nonzero(br, block, k, al) -> None:
     (T.81 G.1.2.3 / libjpeg decode_mcu_AC_refine): if the bit is set
     and this scan's magnitude bit isn't already present, move the
     coefficient one quantum away from zero."""
-    if br.bits(1):
+    if br.read(1):
         p1 = 1 << al
         if (block[k] & p1) == 0:
             block[k] += p1 if block[k] >= 0 else -p1
@@ -457,7 +414,7 @@ def _decode_prog_scan(
     hmax, vmax, mcus_x, mcus_y, dims = _geometry(h, w, comps)
     segs, end = _split_entropy(buf, pos)
     seg_iter = iter(segs)
-    br = _SegReader(next(seg_iter))
+    br = BitReader(next(seg_iter), "msb")
 
     if ss == 0:  # DC scan (Se must be 0 per spec)
         if se != 0:
@@ -468,7 +425,7 @@ def _decode_prog_scan(
             for my in range(mcus_y):
                 for mx in range(mcus_x):
                     if dri and n_mcu and n_mcu % dri == 0:
-                        br = _SegReader(next(seg_iter))
+                        br = BitReader(next(seg_iter), "msb")
                         pred = [0] * len(comps)
                     for ci, td, _ta in scan_comps:
                         c = comps[ci]
@@ -478,16 +435,16 @@ def _decode_prog_scan(
                                     my * c["v"] + by, mx * c["h"] + bx
                                 ]
                                 if ah == 0:
-                                    size = br.huff(huff_dc[td])
+                                    size = _huff(br, huff_dc[td])
                                     diff = (
-                                        _extend(br.bits(size), size)
+                                        _extend(br.read(size), size)
                                         if size
                                         else 0
                                     )
                                     pred[ci] += diff
                                     blk[0] = pred[ci] << al
                                 else:  # refinement: one bit per block
-                                    blk[0] |= br.bits(1) << al
+                                    blk[0] |= br.read(1) << al
                     n_mcu += 1
             return end
         (ci, td, _ta) = scan_comps[0]
@@ -497,16 +454,16 @@ def _decode_prog_scan(
         for by in range(d["by"]):
             for bx in range(d["bx"]):
                 if dri and n_blk and n_blk % dri == 0:
-                    br = _SegReader(next(seg_iter))
+                    br = BitReader(next(seg_iter), "msb")
                     pred0 = 0
                 blk = coefs[ci][by, bx]
                 if ah == 0:
-                    size = br.huff(huff_dc[td])
-                    diff = _extend(br.bits(size), size) if size else 0
+                    size = _huff(br, huff_dc[td])
+                    diff = _extend(br.read(size), size) if size else 0
                     pred0 += diff
                     blk[0] = pred0 << al
                 else:
-                    blk[0] |= br.bits(1) << al
+                    blk[0] |= br.read(1) << al
                 n_blk += 1
         return end
 
@@ -521,7 +478,7 @@ def _decode_prog_scan(
     for by in range(d["by"]):
         for bx in range(d["bx"]):
             if dri and n_blk and n_blk % dri == 0:
-                br = _SegReader(next(seg_iter))
+                br = BitReader(next(seg_iter), "msb")
                 eobrun = 0
             n_blk += 1
             blk = coefs[ci][by, bx]
@@ -531,7 +488,7 @@ def _decode_prog_scan(
                     continue
                 k = ss
                 while k <= se:
-                    rs = br.huff(ac_t)
+                    rs = _huff(br, ac_t)
                     r, size = rs >> 4, rs & 15
                     if size == 0:
                         if r == 15:  # ZRL
@@ -539,33 +496,33 @@ def _decode_prog_scan(
                             continue
                         eobrun = (1 << r) - 1
                         if r:
-                            eobrun += br.bits(r)
+                            eobrun += br.read(r)
                         break
                     k += r
                     if k > se:
                         raise ValueError("AC run past Se")
-                    blk[k] = _extend(br.bits(size), size) << al
+                    blk[k] = _extend(br.read(size), size) << al
                     k += 1
                 continue
             # AC refinement scan (G.1.2.3)
             k = ss
             if eobrun == 0:
                 while k <= se:
-                    rs = br.huff(ac_t)
+                    rs = _huff(br, ac_t)
                     r, size = rs >> 4, rs & 15
                     val = 0
                     if size == 0:
                         if r != 15:  # EOBn: run covers this block too
                             eobrun = 1 << r
                             if r:
-                                eobrun += br.bits(r)
+                                eobrun += br.read(r)
                             break
                         # r == 15 (ZRL): pass over 16 zero-history
                         # coefficients below
                     else:
                         if size != 1:
                             raise ValueError("bad refinement size")
-                        val = (1 << al) if br.bits(1) else -(1 << al)
+                        val = (1 << al) if br.read(1) else -(1 << al)
                     # advance over coefficients: correction bits for
                     # history-nonzero ones, counting down r zero-
                     # history positions
@@ -644,32 +601,31 @@ def _assemble(h, w, comps, qt, coefs):
 # ---------------------------------------------------------------------------
 # fixture encoder
 # ---------------------------------------------------------------------------
-class _BitWriter:
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.acc = 0
-        self.n = 0
+def _pad_ones(bw: BitWriter) -> None:
+    """Pad to a byte boundary with 1-bits (T.81 F.1.2.3)."""
+    bw.write(0xFF, -bw.nbits % 8)
 
-    def write(self, v: int, k: int) -> None:
-        self.acc = (self.acc << k) | (v & ((1 << k) - 1))
-        self.n += k
-        while self.n >= 8:
-            self.n -= 8
-            b = (self.acc >> self.n) & 0xFF
-            self.out.append(b)
-            if b == 0xFF:
-                self.out.append(0x00)  # byte stuffing
-        self.acc &= (1 << self.n) - 1
 
-    def flush(self) -> None:
-        if self.n:
-            b = (self.acc << (8 - self.n)) & 0xFF
-            b |= (1 << (8 - self.n)) - 1  # pad with 1s per T.81
-            self.out.append(b)
-            if b == 0xFF:
-                self.out.append(0x00)
-            self.acc = 0
-            self.n = 0
+def _emit_rst(bw: BitWriter, marks: list[int]) -> None:
+    """Close a restart interval: pad it and record the byte offset
+    where its RSTn marker goes."""
+    _pad_ones(bw)
+    marks.append(bw.nbits // 8)
+
+
+def _entropy_bytes(bw: BitWriter, marks: list[int]) -> bytes:
+    """One scan's entropy-coded data: pad the tail, stuff a 0x00
+    after every 0xFF of each restart interval, and join the intervals
+    with RST0..RST7 markers in turn (markers are never stuffed)."""
+    _pad_ones(bw)
+    data = bw.bytes()
+    cuts = [0, *marks, len(data)]
+    out = bytearray()
+    for n, (lo, hi) in enumerate(zip(cuts, cuts[1:])):
+        if n:
+            out += bytes([0xFF, 0xD0 + (n - 1) % 8])
+        out += data[lo:hi].replace(b"\xff", b"\xff\x00")
+    return bytes(out)
 
 
 def _category(v: int) -> int:
@@ -697,21 +653,8 @@ _DC_COUNTS = [0, 0, 0, 12] + [0] * 12
 _AC_COUNTS = [0, 0, 0, 0, 0, 0, 0, len(_AC_SYMS)] + [0] * 8
 
 
-def _huff_codes(counts, symbols):
-    codes = {}
-    code = 0
-    k = 0
-    for length in range(1, 17):
-        for _ in range(counts[length - 1]):
-            codes[symbols[k]] = (length, code)
-            code += 1
-            k += 1
-        code <<= 1
-    return codes
-
-
-_DC_CODES = _huff_codes(_DC_COUNTS, _DC_SYMS)
-_AC_CODES = _huff_codes(_AC_COUNTS, _AC_SYMS)
+_DC_CODES = _dht_codes(_DC_COUNTS, _DC_SYMS)
+_AC_CODES = _dht_codes(_AC_COUNTS, _AC_SYMS)
 
 
 def encode_jpeg(
@@ -759,15 +702,13 @@ def encode_jpeg(
     hmax = max(s[0] for s in sampling)
     vmax = max(s[1] for s in sampling)
     mcus = (-(-width // (8 * hmax))) * (-(-height // (8 * vmax)))
-    bw = _BitWriter()
+    bw = BitWriter("msb")
+    marks: list[int] = []
     pred = [0] * ncomp
     idx = [0] * ncomp
-    n_rst = 0
     for m in range(mcus):
         if restart_interval and m and m % restart_interval == 0:
-            bw.flush()
-            bw.out += bytes([0xFF, 0xD0 + (n_rst % 8)])
-            n_rst += 1
+            _emit_rst(bw, marks)
             pred = [0] * ncomp
         for c in range(ncomp):
             for _b in range(sampling[c][0] * sampling[c][1]):
@@ -776,7 +717,7 @@ def encode_jpeg(
                 diff = coeffs[0] - pred[c]
                 pred[c] = coeffs[0]
                 size = _category(diff)
-                ln, code = _DC_CODES[size]
+                code, ln = _DC_CODES[size]
                 bw.write(code, ln)
                 if size:
                     bw.write(_enc_bits(diff, size), size)
@@ -786,19 +727,18 @@ def encode_jpeg(
                         run += 1
                         continue
                     while run >= 16:
-                        ln, code = _AC_CODES[0xF0]  # ZRL
+                        code, ln = _AC_CODES[0xF0]  # ZRL
                         bw.write(code, ln)
                         run -= 16
                     size = _category(coeffs[k])
-                    ln, code = _AC_CODES[(run << 4) | size]
+                    code, ln = _AC_CODES[(run << 4) | size]
                     bw.write(code, ln)
                     bw.write(_enc_bits(coeffs[k], size), size)
                     run = 0
                 if run:  # trailing zeros
-                    ln, code = _AC_CODES[0x00]  # EOB
+                    code, ln = _AC_CODES[0x00]  # EOB
                     bw.write(code, ln)
-    bw.flush()
-    out += bw.out
+    out += _entropy_bytes(bw, marks)
     out += b"\xff\xd9"  # EOI
     return bytes(out)
 
@@ -894,26 +834,20 @@ def encode_jpeg_progressive(
             sos += bytes([c + 1, 0x00])
         sos += bytes([sc["ss"], sc["se"], (sc["ah"] << 4) | sc["al"]])
         out += seg(0xDA, sos)
-        bw = _BitWriter()
+        bw = BitWriter("msb")
+        marks: list[int] = []
         if sc["ss"] == 0:
-            _enc_dc_scan(bw, sc, comp_blocks, sampling, mcus_x, mcus_y,
-                         comp_grid, block_at, restart_interval)
+            _enc_dc_scan(bw, marks, sc, comp_blocks, sampling, mcus_x,
+                         mcus_y, comp_grid, block_at, restart_interval)
         else:
-            _enc_ac_scan(bw, sc, comp_grid, block_at, restart_interval)
-        bw.flush()
-        out += bw.out
+            _enc_ac_scan(bw, marks, sc, comp_grid, block_at,
+                         restart_interval)
+        out += _entropy_bytes(bw, marks)
     out += b"\xff\xd9"
     return bytes(out)
 
 
-def _emit_rst(bw, n_rst: int) -> None:
-    """Byte-align and emit the next RSTn marker (markers are appended
-    raw — never byte-stuffed)."""
-    bw.flush()
-    bw.out += bytes([0xFF, 0xD0 + (n_rst % 8)])
-
-
-def _enc_dc_scan(bw, sc, comp_blocks, sampling, mcus_x, mcus_y,
+def _enc_dc_scan(bw, marks, sc, comp_blocks, sampling, mcus_x, mcus_y,
                  comp_grid, block_at, dri=0):
     ah, al = sc["ah"], sc["al"]
 
@@ -941,11 +875,9 @@ def _enc_dc_scan(bw, sc, comp_blocks, sampling, mcus_x, mcus_y,
                     yield [(c, block_at(c, by, bx))]
 
     pred = {c: 0 for c in sc["comps"]}
-    n_rst = 0
     for m, group in enumerate(mcus_in_order()):
         if dri and m and m % dri == 0:
-            _emit_rst(bw, n_rst)
-            n_rst += 1
+            _emit_rst(bw, marks)
             pred = {c: 0 for c in sc["comps"]}
         for c, blk in group:
             if ah == 0:  # first scan: diffs of the point-transformed DC
@@ -953,7 +885,7 @@ def _enc_dc_scan(bw, sc, comp_blocks, sampling, mcus_x, mcus_y,
                 diff = v - pred[c]
                 pred[c] = v
                 size = _category(diff)
-                ln, code = _DC_CODES[size]
+                code, ln = _DC_CODES[size]
                 bw.write(code, ln)
                 if size:
                     bw.write(_enc_bits(diff, size), size)
@@ -961,7 +893,7 @@ def _enc_dc_scan(bw, sc, comp_blocks, sampling, mcus_x, mcus_y,
                 bw.write((blk[0] >> al) & 1, 1)
 
 
-def _enc_ac_scan(bw, sc, comp_grid, block_at, dri=0):
+def _enc_ac_scan(bw, marks, sc, comp_grid, block_at, dri=0):
     """AC first/refinement scan with EOB-run coding (T.81 G.1.2.2-3,
     the jcphuff structure: EOBn emission is deferred until the run
     length is known; refinement correction bits that belong to a
@@ -974,7 +906,7 @@ def _enc_ac_scan(bw, sc, comp_grid, block_at, dri=0):
     def flush_eob():
         if state["eobrun"]:
             n = state["eobrun"].bit_length() - 1
-            ln, code = _AC_CODES[n << 4]
+            code, ln = _AC_CODES[n << 4]
             bw.write(code, ln)
             if n:
                 bw.write(state["eobrun"] & ((1 << n) - 1), n)
@@ -983,7 +915,6 @@ def _enc_ac_scan(bw, sc, comp_grid, block_at, dri=0):
             bw.write(b, 1)
         state["held"] = []
 
-    n_rst = 0
     n_blk = 0
     for by in range(nby):
         for bx in range(nbx):
@@ -991,8 +922,7 @@ def _enc_ac_scan(bw, sc, comp_grid, block_at, dri=0):
                 # flush the pending EOB run + held correction bits
                 # INTO the closing segment, then restart
                 flush_eob()
-                _emit_rst(bw, n_rst)
-                n_rst += 1
+                _emit_rst(bw, marks)
             n_blk += 1
             blk = block_at(c, by, bx)
             if ah == 0:  # AC first scan over point-transformed values
@@ -1004,11 +934,11 @@ def _enc_ac_scan(bw, sc, comp_grid, block_at, dri=0):
                         continue
                     flush_eob()
                     while r > 15:
-                        ln, code = _AC_CODES[0xF0]
+                        code, ln = _AC_CODES[0xF0]
                         bw.write(code, ln)
                         r -= 16
                     size = t.bit_length()
-                    ln, code = _AC_CODES[(r << 4) | size]
+                    code, ln = _AC_CODES[(r << 4) | size]
                     bw.write(code, ln)
                     bw.write(_enc_bits(t if blk[k] > 0 else -t, size), size)
                     r = 0
@@ -1031,7 +961,7 @@ def _enc_ac_scan(bw, sc, comp_grid, block_at, dri=0):
                     continue
                 while r > 15 and i < eob_pos:
                     flush_eob()
-                    ln, code = _AC_CODES[0xF0]
+                    code, ln = _AC_CODES[0xF0]
                     bw.write(code, ln)
                     r -= 16
                     for b in pend:
@@ -1041,7 +971,7 @@ def _enc_ac_scan(bw, sc, comp_grid, block_at, dri=0):
                     pend.append(t & 1)
                     continue
                 flush_eob()
-                ln, code = _AC_CODES[(r << 4) | 1]
+                code, ln = _AC_CODES[(r << 4) | 1]
                 bw.write(code, ln)
                 bw.write(1 if blk[ss + i] > 0 else 0, 1)
                 for b in pend:

@@ -33,16 +33,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .text import _col
+
 __all__ = [
     "char_ngram_count",
     "char_ngrams",
     "train_langid_profiles",
     "langid_predict",
 ]
-
-
-def _col(c: Column | str) -> Column:
-    return F.col(c) if isinstance(c, str) else c
 
 
 def char_ngrams(text: Column | str, n: int = 3) -> Column:

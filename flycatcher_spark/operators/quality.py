@@ -30,7 +30,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .text import md5_bucket, tokens
+from .text import _col, md5_bucket, tokens
 
 # Marker words whose presence Gopher requires (>= 2 of them) — kept
 # lowercase and engine-neutral.
@@ -50,10 +50,6 @@ _ELLIPSIS_END_RE = r"(\.\.\.|…)\s*$"
 # applied to the phrase list.
 _PUNCT_RE = r"[^\p{L}\p{N}\s]"
 _PUNCT_PY = _re.compile(r"[^\w\s]|_", _re.UNICODE)
-
-
-def _col(text: Column | str) -> Column:
-    return F.col(text) if isinstance(text, str) else text
 
 
 def lines(text: Column | str) -> Column:

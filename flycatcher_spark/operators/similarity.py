@@ -37,6 +37,7 @@ from ._vectors import (
     stack_valid,
     top_k,
 )
+from .text import _col
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -1125,7 +1126,7 @@ def random_projection(
         >>> df.select(random_projection("v", 2).alias("p")).first()["p"]
         [1.414214, 0.0]
     """
-    v = F.col(vec) if isinstance(vec, str) else vec
+    v = _col(vec)
     # divide (not multiply-by-reciprocal): the DuckDB oracle computes
     # ``total / sqrt(out_dim)`` and ``x*(1/s)`` differs from ``x/s``
     # by up to 1 ulp — same IEEE op in both engines or the

@@ -44,9 +44,14 @@ STOPWORDS = [
 ]
 
 
+def _col(c: Column | str) -> Column:
+    """A column name or a Column, as a Column."""
+    return F.col(c) if isinstance(c, str) else c
+
+
 def tokens(text: Column | str) -> Column:
     """Whitespace tokens of trimmed text (empty string -> empty array)."""
-    c = F.col(text) if isinstance(text, str) else text
+    c = _col(text)
     trimmed = F.regexp_replace(c, r"^\s+|\s+$", "")
     return F.when(F.length(trimmed) == 0, F.array().cast("array<string>")).otherwise(
         F.split(trimmed, _WS)
@@ -60,12 +65,12 @@ def token_count(text: Column | str) -> Column:
 
 def bpe_ish_token_count(text: Column | str) -> Column:
     """Subword-ish token estimate: word runs + individual punctuation."""
-    c = F.col(text) if isinstance(text, str) else text
+    c = _col(text)
     return F.regexp_count(c, F.lit(_BPE_ISH))
 
 
 def char_count(text: Column | str) -> Column:
-    c = F.col(text) if isinstance(text, str) else text
+    c = _col(text)
     return F.length(c)
 
 
@@ -76,14 +81,14 @@ def stopword_ratio(text: Column | str) -> Column:
 
 def punct_ratio(text: Column | str) -> Column:
     """Fraction of characters that are punctuation (non-word, non-space)."""
-    c = F.col(text) if isinstance(text, str) else text
+    c = _col(text)
     n = F.length(c)
     punct = F.length(c) - F.length(F.regexp_replace(c, r"[^0-9A-Za-z_\s]", ""))
     return F.when(n == 0, F.lit(0.0)).otherwise(punct.cast("double") / n)
 
 
 def digit_ratio(text: Column | str) -> Column:
-    c = F.col(text) if isinstance(text, str) else text
+    c = _col(text)
     n = F.length(c)
     digits = F.length(c) - F.length(F.regexp_replace(c, r"[0-9]", ""))
     return F.when(n == 0, F.lit(0.0)).otherwise(digits.cast("double") / n)
@@ -108,7 +113,7 @@ def quality_score(text: Column | str) -> Column:
         >>> df.select(quality_score("text").alias("q")).collect()
         [Row(q=0.75)]
     """
-    c = F.col(text) if isinstance(text, str) else text
+    c = _col(text)
     # one tokenize pass instead of three (token_count +
     # mean_token_length + stopword_ratio each re-tokenizing)
     return bind_once(
@@ -141,7 +146,7 @@ def lang_id(text: Column | str) -> Column:
         >>> [r.lang for r in df.select(lang_id("text").alias("lang")).collect()]
         ['en', 'es']
     """
-    c = F.col(text) if isinstance(text, str) else text
+    c = _col(text)
     # one tokenize pass instead of one per language's marker filter
     return bind_once(tokens(c), _lang_id_tk)
 
@@ -215,7 +220,7 @@ def profile_struct(text: Column | str) -> Column:
     it in without value drift. Character-level ratios (punct/digit)
     evaluate once inside the same struct.
     """
-    c = F.col(text) if isinstance(text, str) else text
+    c = _col(text)
 
     def build(tk: Column) -> Column:
         mtl = _mean_token_length_tk(tk)
@@ -251,7 +256,7 @@ def bind_once(value: Column, build) -> Column:
 def normalize_text(text: Column | str) -> Column:
     """Canonical form for fingerprinting: lowercase, trim, collapse
     internal whitespace to single spaces."""
-    c = F.col(text) if isinstance(text, str) else text
+    c = _col(text)
     return F.regexp_replace(
         F.regexp_replace(F.lower(c), r"^\s+|\s+$", ""), _WS, " "
     )
@@ -292,7 +297,7 @@ def normalize_unicode(text: Column | str, form: str = "NFC") -> Column:
             lambda x: unicodedata.normalize(form, x) if x is not None else None
         )
 
-    c = F.col(text) if isinstance(text, str) else text
+    c = _col(text)
     return _norm(c)
 
 
@@ -314,7 +319,7 @@ def unique_lines(text: Column | str) -> Column:
         >>> df.select(unique_lines("t").alias("u")).first()["u"]
         'nav\\nbody\\nfooter'
     """
-    c = F.col(text) if isinstance(text, str) else text
+    c = _col(text)
     uniq = F.aggregate(
         F.split(c, "\n"),
         F.array().cast("array<string>"),
@@ -336,7 +341,7 @@ def sentence_count(text: Column | str) -> Column:
     or end-of-text); non-empty text without a terminator counts as
     ONE sentence (a fragment is still a sentence — the convention
     readability formulas assume)."""
-    c = F.col(text) if isinstance(text, str) else text
+    c = _col(text)
     n = F.regexp_count(c, F.lit(_SENT_END))
     return (
         F.when(F.length(F.trim(c)) == 0, F.lit(0))
@@ -351,7 +356,7 @@ def syllable_count(text: Column | str) -> Column:
     has at least one syllable — covers digits and vowel-less
     tokens). The standard cheap estimator behind readability
     scores; within a few percent on latin prose."""
-    c = F.col(text) if isinstance(text, str) else text
+    c = _col(text)
     return F.aggregate(
         F.transform(
             tokens(c),
@@ -375,7 +380,7 @@ def fk_grade(text: Column | str) -> Column:
     engine (no transcendental), so the rounded grade hash-matches
     the DuckDB oracle cell-for-cell.
     """
-    c = F.col(text) if isinstance(text, str) else text
+    c = _col(text)
 
     def build(tk: Column) -> Column:
         n_words = F.size(tk).cast("double")
@@ -410,7 +415,7 @@ def split_sentences(text: Column | str) -> Column:
     No lookbehind (RE2, the oracle engine, has none): the boundary
     whitespace is rewritten to ``\\x01`` with a backreference, then
     split — the identical two-step replays in DuckDB."""
-    c = F.col(text) if isinstance(text, str) else text
+    c = _col(text)
     return F.split(
         F.regexp_replace(c, r"([.!?])\s+", "$1\u0001"), "\u0001"
     )
@@ -723,7 +728,7 @@ PHONE_RE = r"\+[0-9]{7,15}"
 
 def pii_counts(text: Column | str) -> Column:
     """Struct of match counts per PII class (map-only)."""
-    c = F.col(text) if isinstance(text, str) else text
+    c = _col(text)
     return F.struct(
         F.regexp_count(c, F.lit(EMAIL_RE)).alias("n_emails"),
         F.regexp_count(c, F.lit(URL_RE)).alias("n_urls"),
@@ -744,7 +749,7 @@ def redact_pii(text: Column | str, repl: str = "[PII]") -> Column:
         >>> df.select(redact_pii("text").alias("t")).collect()[0].t
         'mail me at [PII] now'
     """
-    c = F.col(text) if isinstance(text, str) else text
+    c = _col(text)
     out = F.regexp_replace(c, EMAIL_RE, repl)
     out = F.regexp_replace(out, URL_RE, repl)
     return F.regexp_replace(out, PHONE_RE, repl)

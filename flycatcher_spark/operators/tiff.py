@@ -18,7 +18,10 @@ Scope (documented subset, honest about what it is):
 - REAL TIFF-flavor LZW: codes packed MSB-first (the opposite of
   GIF), initial width 9, Clear=256/EOI=257, table growth with the
   spec's EARLY-CHANGE width bump (at table size ``2^w - 1``, one
-  code earlier than GIF) and deferred-clear handling;
+  code earlier than GIF) and deferred-clear handling — the TIFF
+  variant of the shared :func:`._bits.lzw_decode` /
+  :func:`._bits.lzw_encode` pair (the encoder resets at 4094
+  entries);
 - PackBits exactly per the spec: literal runs, repeat runs, the
   128 no-op;
 - anything outside the subset (16-bit samples, tiles, other
@@ -39,6 +42,8 @@ payloads never shuffle, corrupt payloads yield null rows.
 from __future__ import annotations
 
 import numpy as np
+
+from ._bits import lzw_decode, lzw_encode
 
 __all__ = ["parse_tiff", "encode_tiff"]
 
@@ -92,106 +97,6 @@ def _packbits_encode(data: bytes) -> bytes:
             k += 1
         out += bytes([k - i - 1]) + data[i:k]
         i = k
-    return bytes(out)
-
-
-# ---------------------------------------------------------------------------
-# TIFF-flavor LZW (TIFF 6.0 §13): MSB-first packing, early change
-# ---------------------------------------------------------------------------
-_CLEAR, _EOI = 256, 257
-
-
-def _lzw_decode_tiff(data: bytes) -> bytes:
-    out = bytearray()
-    acc = 0
-    nbits = 0
-    pos = 0
-    width = 9
-    table: list[bytes] = []
-    prev: bytes | None = None
-
-    def reset() -> None:
-        nonlocal table, width, prev
-        table = [bytes([i]) for i in range(256)] + [b"", b""]
-        width = 9
-        prev = None
-
-    reset()
-    n = len(data)
-    while True:
-        while nbits < width:
-            if pos >= n:
-                return bytes(out)  # tolerate missing EOI at the end
-            acc = (acc << 8) | data[pos]
-            nbits += 8
-            pos += 1
-        code = (acc >> (nbits - width)) & ((1 << width) - 1)
-        nbits -= width
-        if code == _CLEAR:
-            reset()
-            continue
-        if code == _EOI:
-            return bytes(out)
-        if code < len(table) and (code < 256 or table[code]):
-            entry = table[code]
-        elif code == len(table) and prev is not None:
-            entry = prev + prev[:1]  # the KwKwK case
-        else:
-            raise ValueError("bad TIFF-LZW code")
-        out += entry
-        if prev is not None and len(table) < 4096:
-            table.append(prev + entry[:1])
-        prev = entry
-        # EARLY CHANGE: the width bumps one code before the table
-        # fills the current width (TIFF's documented deviation)
-        if len(table) >= (1 << width) - 1 and width < 12:
-            width += 1
-
-
-def _lzw_encode_tiff(data: bytes) -> bytes:
-    out = bytearray()
-    acc = 0
-    nbits = 0
-
-    def emit(code: int, width: int) -> None:
-        nonlocal acc, nbits
-        acc = (acc << width) | code
-        nbits += width
-        while nbits >= 8:
-            out.append((acc >> (nbits - 8)) & 0xFF)
-            nbits -= 8
-
-    def fresh() -> dict:
-        return {bytes([i]): i for i in range(256)}
-
-    table = fresh()
-    next_code = 258
-    width = 9
-    emit(_CLEAR, width)
-    run = b""
-    for byte in data:
-        cand = run + bytes([byte])
-        if cand in table:
-            run = cand
-            continue
-        emit(table[run], width)
-        table[cand] = next_code
-        next_code += 1
-        # mirror the decoder: ITS table length is next_code - 1 here,
-        # and the early-change bump fires at 2^w - 1
-        if next_code - 1 >= (1 << width) - 1 and width < 12:
-            width += 1
-        if next_code - 1 >= 4094:  # leave room before 12-bit fills
-            emit(_CLEAR, width)
-            table = fresh()
-            next_code = 258
-            width = 9
-        run = bytes([byte])
-    if run:
-        emit(table[run], width)
-    emit(_EOI, width)
-    if nbits:
-        out.append((acc << (8 - nbits)) & 0xFF)
     return bytes(out)
 
 
@@ -294,7 +199,7 @@ def parse_tiff(payload: bytes) -> dict | None:
             if len(strip) < cnt:
                 return None
             if compression == 5:
-                strip = _lzw_decode_tiff(strip)
+                strip = lzw_decode(strip, 8, "msb", early_change=True)
             elif compression == 32773:
                 strip = _packbits_decode(strip)
             n_rows = min(rows_per_strip, height - si * rows_per_strip)
@@ -386,7 +291,7 @@ def encode_tiff(
             arr[y0 : y0 + rps].astype(np.uint8).tobytes()
         )
         if comp_code == 5:
-            raw = _lzw_encode_tiff(raw)
+            raw = lzw_encode(raw, 8, "msb", early_change=True, clear_at=4094)
         elif comp_code == 32773:
             raw = _packbits_encode(raw)
         strips.append(raw)

@@ -20,6 +20,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .text import _col
+
 __all__ = [
     "canonical_url",
     "extract_links",
@@ -44,10 +46,6 @@ __all__ = [
 TRACKING_PARAM_RE = r"^(utm_[^=]*|gclid|fbclid|ref_src|ref_url|mc_cid|mc_eid)="
 
 _URL_RE = r"^([A-Za-z][A-Za-z0-9+.-]*)://([^/?#]*)([^?#]*)(\?[^#]*)?(#.*)?$"
-
-
-def _col(c: Column | str) -> Column:
-    return F.col(c) if isinstance(c, str) else c
 
 
 def canonical_url(

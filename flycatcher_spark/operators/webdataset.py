@@ -57,7 +57,10 @@ sample grouping AND the decoded image statistics.
 from __future__ import annotations
 
 import io
+import struct
 import tarfile
+import zipfile
+import zlib
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -80,21 +83,21 @@ __all__ = [
 ]
 
 
+def _split_key(name: str) -> tuple[str, str]:
+    """WebDataset ``(key, ext)`` of a member name: the key is
+    everything up to the FIRST dot of the basename (so ``x.seg.png``
+    is sample ``x`` with ext ``seg.png``, and dotted directory
+    prefixes like ``v1.2/x.png`` never split the key)."""
+    dot = name.find(".", name.rfind("/") + 1)
+    return (name, "") if dot < 0 else (name[:dot], name[dot + 1 :])
+
+
 def _iter_members(payload: bytes):
     with tarfile.open(fileobj=io.BytesIO(bytes(payload))) as tf:
         for m in tf:
             if not m.isfile():
                 continue
-            name = m.name
-            # WebDataset convention: the sample key is everything up
-            # to the FIRST dot of the basename (so ``x.seg.png`` is
-            # sample ``x`` with ext ``seg.png``, and dotted directory
-            # prefixes like ``v1.2/x.png`` never split the key).
-            base = name.rfind("/") + 1
-            dot = name.find(".", base)
-            key, ext = (name, "") if dot < 0 else (name[:dot], name[dot + 1 :])
-            body = tf.extractfile(m).read()
-            yield key, ext, body
+            yield (*_split_key(m.name), tf.extractfile(m).read())
 
 
 def _read_tar(payload: bytes | None) -> list[tuple[str, str, bytes]]:
@@ -290,6 +293,49 @@ def make_webdataset_payload(
 # ---------------------------------------------------------------------------
 # ZIP shards (r10) — the other archive container real datasets ship in
 # ---------------------------------------------------------------------------
+#: what a corrupt, encrypted or unsupported ZIP shard raises mid-walk
+_ZIP_ERRORS = (
+    zipfile.BadZipFile,
+    ValueError,
+    OSError,
+    EOFError,
+    NotImplementedError,  # unsupported compression
+    RuntimeError,  # encrypted member
+    zlib.error,  # corrupt DEFLATE stream mid-read
+    struct.error,  # truncated fixed-size record
+)
+
+
+def _zip_read(
+    p: bytes | None, cap: int, wanted=lambda filename: True
+) -> list[tuple[str, bytes]] | None:
+    """``(filename, body)`` of each regular member of a ZIP shard that
+    ``wanted(filename)`` accepts, in central-directory order, or
+    ``None`` for a null, unreadable or over-cap shard. Decompression
+    bombs are capped like the WARC gzip path (ADVICE r10): a member
+    whose declared ``file_size`` — which ``zipfile`` enforces as the
+    inflate output bound — exceeds ``cap``, or accepted members that
+    cumulatively exceed it, give ``None`` instead of expanding
+    unbounded into executor memory (the 42.zip shape). Callers pass
+    :data:`warc.MAX_DECODED_BYTES` as read on the driver."""
+    if p is None:
+        return None
+    members = []
+    try:
+        with zipfile.ZipFile(io.BytesIO(bytes(p))) as zf:
+            total = 0
+            for info in zf.infolist():
+                if info.is_dir() or not wanted(info.filename):
+                    continue
+                total += info.file_size
+                if info.file_size > cap or total > cap:
+                    return None
+                members.append((info.filename, zf.read(info)))
+    except _ZIP_ERRORS:
+        return None
+    return members
+
+
 def zip_samples(
     df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
 ) -> DataFrame:
@@ -301,52 +347,22 @@ def zip_samples(
     guarantee member adjacency, so samples group per archive via a
     key-ordered dict accumulation — bounded by the shard size, the
     same memory envelope as the tar walk. STORED and DEFLATED members
-    both decode (stdlib inflate); encrypted or corrupt archives yield
-    one attributable null row, never a stage failure. Decompression
-    bombs are capped like the WARC gzip path (ADVICE r10): a member
-    whose declared ``file_size`` — which ``zipfile`` enforces as the
-    inflate output bound — exceeds :data:`warc.MAX_DECODED_BYTES`,
-    or an archive whose members cumulatively exceed it, yields the
-    attributable null row instead of expanding unbounded into
-    executor memory (the 42.zip shape)."""
-    import struct
-    import zipfile
-    import zlib
-
+    both decode (stdlib inflate); encrypted, corrupt or over-cap
+    archives (the decompression-bomb cap of :func:`_zip_read`) yield
+    one attributable null row, never a stage failure. The sample key
+    is the basename up to its LAST dot."""
     from .warc import MAX_DECODED_BYTES
 
     def rows_of(p: bytes | None) -> list[tuple] | None:
-        samples: dict[str, dict] = {}
-        try:
-            if p is None:
-                raise ValueError("null payload")
-            with zipfile.ZipFile(io.BytesIO(bytes(p))) as zf:
-                total = 0
-                for info in zf.infolist():
-                    if info.is_dir():
-                        continue
-                    name = info.filename.rsplit("/", 1)[-1]
-                    if "." not in name:
-                        continue
-                    total += info.file_size
-                    if (
-                        info.file_size > MAX_DECODED_BYTES
-                        or total > MAX_DECODED_BYTES
-                    ):
-                        raise ValueError("zip decompression bomb")
-                    key, ext = name.rsplit(".", 1)
-                    samples.setdefault(key, {})[ext] = zf.read(info)
-        except (
-            zipfile.BadZipFile,
-            ValueError,
-            OSError,
-            EOFError,
-            NotImplementedError,  # unsupported compression
-            RuntimeError,  # encrypted member
-            zlib.error,  # corrupt DEFLATE stream mid-read
-            struct.error,  # truncated fixed-size record
-        ):
+        members = _zip_read(
+            p, MAX_DECODED_BYTES, lambda fn: "." in fn.rsplit("/", 1)[-1]
+        )
+        if members is None:
             return None
+        samples: dict[str, dict] = {}
+        for filename, body in members:
+            key, ext = filename.rsplit("/", 1)[-1].rsplit(".", 1)
+            samples.setdefault(key, {})[ext] = body
         return [
             (key, len(samples[key]), dict(samples[key]))
             for key in sorted(samples)
@@ -365,8 +381,6 @@ def make_zip_payload(
     with DEFLATE, even ids STORE, so both decompression arms of the
     reader genuinely run; timestamps pin to the DOS epoch for
     byte-stable output."""
-    import zipfile
-
     def build_one(i: int) -> bytes:
         comp = zipfile.ZIP_DEFLATED if i % 2 else zipfile.ZIP_STORED
         buf = io.BytesIO()
@@ -403,51 +417,15 @@ def zip_members(
     share every downstream stage. Member bodies honor the same
     decompression-bomb cap as :func:`zip_samples`; unreadable or
     over-cap shards yield a single all-null member row."""
-    import struct
-    import zipfile
-    import zlib
-
     from .warc import MAX_DECODED_BYTES
 
     def rows_of(p: bytes | None) -> list[tuple] | None:
-        members = []
-        try:
-            if p is None:
-                raise ValueError("null payload")
-            with zipfile.ZipFile(io.BytesIO(bytes(p))) as zf:
-                total = 0
-                for info in zf.infolist():
-                    if info.is_dir():
-                        continue
-                    total += info.file_size
-                    if (
-                        info.file_size > MAX_DECODED_BYTES
-                        or total > MAX_DECODED_BYTES
-                    ):
-                        raise ValueError("zip decompression bomb")
-                    name = info.filename
-                    base = name.rfind("/") + 1
-                    dot = name.find(".", base)
-                    key, ext = (
-                        (name, "")
-                        if dot < 0
-                        else (name[:dot], name[dot + 1 :])
-                    )
-                    members.append((key, ext, zf.read(info)))
-        except (
-            zipfile.BadZipFile,
-            ValueError,
-            OSError,
-            EOFError,
-            NotImplementedError,
-            RuntimeError,
-            zlib.error,  # corrupt DEFLATE stream mid-read
-            struct.error,  # truncated fixed-size record
-        ):
+        members = _zip_read(p, MAX_DECODED_BYTES)
+        if members is None:
             return None
         return [
-            (j, key, ext, len(body), body)
-            for j, (key, ext, body) in enumerate(members)
+            (j, *_split_key(name), len(body), body)
+            for j, (name, body) in enumerate(members)
         ] or None
 
     return map_payloads(df, id_col, payload_col, TAR_MEMBER_FIELDS, rows_of)
@@ -488,8 +466,6 @@ def write_zip_shards(
     corpus size. Shards past 4 GB or 65535 members get ZIP64
     records automatically (stdlib ``allowZip64`` default), which
     ``zip_samples`` / ``zip_members`` read back transparently."""
-    import zipfile
-
     comp = zipfile.ZIP_DEFLATED if compress else zipfile.ZIP_STORED
 
     def pack(pdf: pd.DataFrame) -> tuple[int, bytes]:

@@ -44,6 +44,13 @@ construction (RFC 1951 §3.2.2). Two-symbol simple codes assign code
 0/1 in transmitted symbol order; the encoder always transmits them in
 ascending symbol order, which makes transmitted order and canonical
 order coincide.
+
+The bit reader and writer and the canonical construction are the
+shared ones of :mod:`._bits`. Decoding has one path: each prefix code
+becomes flat ``(symbol, consumed_bits)`` tables indexed by the next
+``max_len`` stream bits read LSB-first — bit-reversed codes, as in
+libwebp — and both the header code-length walk and the pixel walk
+probe them with ``BitReader.peek``.
 """
 
 from __future__ import annotations
@@ -51,6 +58,8 @@ from __future__ import annotations
 import struct
 
 import numpy as np
+
+from ._bits import BitReader, BitWriter, canonical_codes, prefix_lut
 
 __all__ = [
     "parse_webp",
@@ -75,245 +84,23 @@ _MAX_CL_LEN = 7  # code-length-code lengths are 3-bit fields
 #: pixels for free, so raster size must be bounded by policy, not by
 #: input size — 64 MiB of RGBA, the same figure as warc.MAX_DECODED_BYTES
 MAX_RASTER_BYTES = 64 * 1024 * 1024
-#: above this many stream bits the lookahead-window list (~36 B/bit of
-#: transient Python ints) is skipped and decode falls back to the
-#: per-bit dict walk — ~2 MB of stream, far beyond any sane
-#: literal-only file, ~72 MB transient at the cap
-_WINDOWS_MAX_BITS = 16 * 1024 * 1024
 
-
-class _BitReader:
-    """LSB-first bit reader over the VP8L stream."""
-
-    def __init__(self, buf: bytes) -> None:
-        self.buf = buf
-        self.pos = 0  # bit position
-
-    def read(self, n: int) -> int:
-        v = 0
-        for i in range(n):
-            p = self.pos + i
-            byte = p >> 3
-            if byte >= len(self.buf):
-                raise ValueError("VP8L bitstream truncated")
-            v |= ((self.buf[byte] >> (p & 7)) & 1) << i
-        self.pos += n
-        return v
-
-    def read_bit(self) -> int:
-        p = self.pos
-        byte = p >> 3
-        if byte >= len(self.buf):
-            raise ValueError("VP8L bitstream truncated")
-        self.pos += 1
-        return (self.buf[byte] >> (p & 7)) & 1
-
-
-class _BitWriter:
-    """LSB-first bit writer (mirror of :class:`_BitReader`), buffered:
-    writes accumulate as (value, length, msb_first) triples and one
-    vectorized expansion + ``np.packbits`` renders the stream — the
-    per-bit Python loop was the encoder's hot spot (headers dominate
-    on fixture-scale rasters)."""
-
-    def __init__(self) -> None:
-        self.vals: list[int] = []
-        self.lens: list[int] = []
-        self.msb: list[int] = []
-
-    def write(self, value: int, n: int) -> None:
-        if n:
-            self.vals.append(value)
-            self.lens.append(n)
-            self.msb.append(0)
-
-    def write_code(self, code: int, length: int) -> None:
-        """Prefix-code bits go MSB-of-code first (RFC 9649 §3.7.1)."""
-        if length:
-            self.vals.append(code)
-            self.lens.append(length)
-            self.msb.append(1)
-
-    def write_codes_bulk(self, codes: np.ndarray, lengths: np.ndarray) -> None:
-        """Append whole symbol streams (MSB-first each) in one go."""
-        self.vals.extend(codes.tolist())
-        self.lens.extend(lengths.tolist())
-        self.msb.extend([1] * len(codes))
-
-    def bit_array(self) -> np.ndarray:
-        """Render to a 0/1 uint8 array (stream bit order) — one
-        ``np.repeat`` expansion instead of a max-length-bounded loop
-        of masked passes (the loop paid ~15 small-array rounds per
-        image; this is a single pass over the total bit count)."""
-        if not self.vals:
-            return np.zeros(0, dtype=np.uint8)
-        vals = np.asarray(self.vals, dtype=np.int64)
-        lens = np.asarray(self.lens, dtype=np.int64)
-        msb = np.asarray(self.msb, dtype=bool)
-        total = int(lens.sum())
-        field = np.repeat(np.arange(len(lens)), lens)
-        offs = np.arange(total) - np.repeat(
-            np.cumsum(lens) - lens, lens
-        )
-        shift = np.where(msb[field], lens[field] - 1 - offs, offs)
-        return ((vals[field] >> shift) & 1).astype(np.uint8)
-
-    def bytes(self) -> bytes:
-        return np.packbits(self.bit_array(), bitorder="little").tobytes()
-
-
-class _BitCursor:
-    """Decode-side bit reader over a pre-unpacked bit list — same
-    contract as :class:`_BitReader` but ~3x faster in the per-pixel
-    walk (plain list indexing, no per-bit method dispatch on bytes).
-    Reads past the end raise ValueError (truncated stream)."""
-
-    __slots__ = ("bits", "arr", "pos")
-
-    def __init__(self, buf: bytes) -> None:
-        self.arr = np.unpackbits(
-            np.frombuffer(buf, dtype=np.uint8), bitorder="little"
-        )
-        self.bits = self.arr.tolist()
-        self.pos = 0
-
-    def windows(self, width: int) -> list[int]:
-        """``width``-bit MSB-first lookahead at every bit position
-        (zero-padded past the end): ``windows(w)[p]`` is the integer
-        a prefix decoder would accumulate reading ``w`` bits from
-        ``p`` — the LUT walk indexes these instead of probing per
-        bit. One vectorized shift-add per lookahead bit, ``w <= 15``."""
-        n = len(self.arr)
-        ext = np.concatenate(
-            [self.arr.astype(np.int64), np.zeros(width, dtype=np.int64)]
-        )
-        w = np.zeros(n + 1, dtype=np.int64)
-        for i in range(width):
-            w += ext[i : i + n + 1] << (width - 1 - i)
-        return w.tolist()
-
-    def read(self, n: int) -> int:
-        b = self.bits
-        p = self.pos
-        if p + n > len(b):
-            raise ValueError("VP8L bitstream truncated")
-        v = 0
-        for i in range(n):
-            v |= b[p + i] << i
-        self.pos = p + n
-        return v
-
-    def read_bit(self) -> int:
-        p = self.pos
-        if p >= len(self.bits):
-            raise ValueError("VP8L bitstream truncated")
-        self.pos = p + 1
-        return self.bits[p]
-
-
-# ---------------------------------------------------------------------------
-# canonical prefix codes (RFC 1951 §3.2.2 construction)
-# ---------------------------------------------------------------------------
-def _codes_from_lengths(
-    lengths: list[int] | dict[int, int],
-) -> dict[int, tuple[int, int]]:
-    """symbol -> (code, length), canonical assignment. Raises on an
-    over-subscribed or incomplete code (single-symbol codes are the
-    caller's special case and never reach here). Accepts either a
-    dense per-symbol list (decode side: header parse yields one) or
-    a sparse symbol->length dict (encode side: skips the
-    alphabet-sized scan — canonical order only needs the nonzero
-    entries in symbol order)."""
-    if isinstance(lengths, dict):
-        nz = sorted(lengths.items())
-    else:
-        nz = [(sym, ln) for sym, ln in enumerate(lengths) if ln]
-    max_len = max(ln for _, ln in nz)
-    bl_count = [0] * (max_len + 1)
-    for _, ln in nz:
-        bl_count[ln] += 1
-    # completeness check (Kraft equality)
-    kraft = sum(bl_count[ln] << (max_len - ln) for ln in range(1, max_len + 1))
-    if kraft != (1 << max_len):
+def _complete_codes(pairs: list[tuple[int, int]]) -> dict[int, tuple[int, int]]:
+    """Canonical codes for ``(symbol, length)`` pairs in symbol order,
+    rejecting any code that is not complete (Kraft equality): VP8L
+    allows no unused prefixes. Single-symbol codes are the callers'
+    zero-bit special case and never reach here."""
+    max_len = max(ln for _, ln in pairs)
+    if sum(1 << (max_len - ln) for _, ln in pairs) != 1 << max_len:
         raise ValueError("prefix code not complete")
-    next_code = [0] * (max_len + 2)
-    code = 0
-    for ln in range(1, max_len + 1):
-        code = (code + bl_count[ln - 1]) << 1
-        next_code[ln] = code
-    out: dict[int, tuple[int, int]] = {}
-    for sym, ln in nz:
-        out[sym] = (next_code[ln], ln)
-        next_code[ln] += 1
-    return out
+    return canonical_codes(pairs)
 
 
-class _PrefixCode:
-    """Decoder-side code: walk one bit at a time, MSB-of-code first.
-
-    ``pair`` is the two-symbol simple code in TRANSMITTED order —
-    RFC 9649 assigns code 0 to the first transmitted symbol, code 1
-    to the second, regardless of numeric order (ADVICE r10: routing
-    the pair through canonical assignment would silently swap the
-    two pixel values for a spec-valid file that transmits them in
-    descending order)."""
-
-    __slots__ = ("codes", "table", "const", "max_len")
-
-    def __init__(
-        self,
-        lengths: list[int] | None,
-        const: int | None = None,
-        pair: tuple[int, int] | None = None,
-    ):
-        self.const = const
-        self.table = None  # (len, code) -> sym; built lazily by decode()
-        if const is not None:
-            self.codes = None
-            self.max_len = 0
-            return
-        if pair is not None:
-            self.codes = {pair[0]: (0, 1), pair[1]: (1, 1)}
-            self.max_len = 1
-            return
-        self.codes = _codes_from_lengths(lengths)
-        self.max_len = max(ln for _, ln in self.codes.values())
-
-    def decode(self, br: _BitReader) -> int:
-        if self.const is not None:
-            return self.const  # zero-bit code (single-symbol simple)
-        if self.table is None:
-            self.table = {
-                (ln, code): sym for sym, (code, ln) in self.codes.items()
-            }
-        acc = 0
-        for ln in range(1, _MAX_CODE_LEN + 1):
-            acc = (acc << 1) | br.read_bit()
-            sym = self.table.get((ln, acc))
-            if sym is not None:
-                return sym
-        raise ValueError("invalid prefix code in stream")
-
-    def lut(self) -> tuple[list[int], list[int]]:
-        """Flat lookup tables for the pixel walk: index the top
-        ``max_len`` bits of the stream (MSB-of-code first) and read
-        ``(symbol, consumed_bits)`` in two list probes — the r10
-        verdict's table-driven replacement for the per-bit dict walk.
-        Complete codes (Kraft equality is enforced at construction)
-        cover every index, so there is no invalid sentinel to check
-        in the hot loop. Plain-list slice fills: the tables are
-        2^max_len entries (typically ~512 for the fixture corpus's
-        dense 8-9 bit codes) where numpy's small-array overhead
-        loses to C-level list repetition."""
-        ml = self.max_len
-        sym_t = [0] * (1 << ml)
-        len_t = [0] * (1 << ml)
-        for sym, (code, ln) in self.codes.items():
-            lo = code << (ml - ln)
-            span = 1 << (ml - ln)
-            sym_t[lo : lo + span] = [sym] * span
-            len_t[lo : lo + span] = [ln] * span
-        return sym_t, len_t
+def _code_lut(codes: dict[int, tuple[int, int]]) -> tuple[list, list, int]:
+    """Decode tables ``(sym_t, len_t, width)`` probed with
+    ``BitReader.peek(width)``."""
+    width = max(ln for _, ln in codes.values())
+    return (*prefix_lut(codes, width, "lsb"), width)
 
 
 def _huffman_lengths(freqs: dict[int, int], max_len: int) -> dict[int, int]:
@@ -378,38 +165,28 @@ def _huffman_lengths(freqs: dict[int, int], max_len: int) -> dict[int, int]:
 # ---------------------------------------------------------------------------
 # prefix-code headers (RFC 9649 §3.7.1.1–3.7.1.2)
 # ---------------------------------------------------------------------------
-def _read_prefix_code(
-    br: _BitReader, alphabet_size: int, wins: list[int] | None = None
-) -> _PrefixCode:
-    """``wins``, when given (the :class:`_BitCursor` path), is the
-    stream's :meth:`_BitCursor.windows` list at ``_MAX_CODE_LEN``
-    width — the code-length symbol walk then decodes by LUT probe
-    instead of per-bit dict lookups (the header half of the r10
-    verdict's table-driven decode; headers dominate at fixture
-    image sizes)."""
-    try:
-        return _read_prefix_code_inner(br, alphabet_size, wins)
-    except IndexError:  # wins[pos] past the padded end
-        raise ValueError("VP8L bitstream truncated") from None
-
-
-def _read_prefix_code_inner(
-    br: _BitReader, alphabet_size: int, wins: list[int] | None = None
-) -> _PrefixCode:
-    if br.read_bit():  # simple code
-        num_symbols = br.read_bit() + 1
-        first_8bit = br.read_bit()
+def _read_prefix_code(br: BitReader, alphabet_size: int) -> tuple:
+    """Read one prefix-code header and return its decode tables
+    ``(sym_t, len_t, width)`` (see :func:`_code_lut`). A zero-bit
+    single-symbol code is ``([symbol], [0], 0)``: its probe reads no
+    bits and consumes none."""
+    if br.read(1):  # simple code
+        num_symbols = br.read(1) + 1
+        first_8bit = br.read(1)
         s0 = br.read(8 if first_8bit else 1)
         if num_symbols == 1:
             if s0 >= alphabet_size:
                 raise ValueError("simple-code symbol out of range")
-            return _PrefixCode(None, const=s0)
+            return [s0], [0], 0
         s1 = br.read(8)
         if s0 >= alphabet_size or s1 >= alphabet_size or s0 == s1:
             raise ValueError("bad simple-code symbols")
         # code 0 -> first TRANSMITTED symbol (RFC 9649 §3.7.1.1), not
-        # canonical ascending order — see _PrefixCode's pair note
-        return _PrefixCode(None, pair=(s0, s1))
+        # canonical ascending order (ADVICE r10: routing the pair
+        # through canonical assignment would silently swap the two
+        # pixel values for a spec-valid file that transmits them in
+        # descending order)
+        return [s0, s1], [1, 1], 1
     # normal code: lengths arrive through the code-length code
     num_cl = br.read(4) + 4
     if num_cl > len(_CODE_LENGTH_ORDER):
@@ -419,8 +196,10 @@ def _read_prefix_code_inner(
         cl_lengths[_CODE_LENGTH_ORDER[i]] = br.read(3)
     if sum(cl_lengths) == 0:
         raise ValueError("empty code-length code")
-    cl_code = _PrefixCode(cl_lengths)
-    if br.read_bit():  # explicit max_symbol cap
+    cl_sym, cl_len, cl_width = _code_lut(
+        _complete_codes([(s, ln) for s, ln in enumerate(cl_lengths) if ln])
+    )
+    if br.read(1):  # explicit max_symbol cap
         length_nbits = 2 + 2 * br.read(3)
         max_symbol = 2 + br.read(length_nbits)
     else:
@@ -428,20 +207,14 @@ def _read_prefix_code_inner(
     lengths = [0] * alphabet_size
     prev_len = 8
     i = 0
-    use_lut = wins is not None and cl_code.const is None
-    if use_lut:
-        cl_sym, cl_len = cl_code.lut()
-        cl_sh = _MAX_CODE_LEN - cl_code.max_len
+    peek = br.peek
     while i < alphabet_size:
         if max_symbol == 0:
             break  # remaining symbols keep length 0
         max_symbol -= 1
-        if use_lut:
-            idx = wins[br.pos] >> cl_sh
-            s = cl_sym[idx]
-            br.pos += cl_len[idx]
-        else:
-            s = cl_code.decode(br)
+        idx = peek(cl_width)
+        s = cl_sym[idx]
+        br.pos += cl_len[idx]
         if s < 16:
             lengths[i] = s
             i += 1
@@ -460,18 +233,18 @@ def _read_prefix_code_inner(
             i += 11 + br.read(7)
     if i > alphabet_size:
         raise ValueError("length run overflows alphabet")
-    if use_lut and br.pos > len(wins) - 1:
-        # a LUT probe that consumed zero-padding past the stream end
+    if br.pos > br.nbits:
+        # a probe that consumed zero-padding past the stream end
         # decodes garbage, never silently: pos lands beyond nbits
         raise ValueError("VP8L bitstream truncated")
-    nonzero = [s for s, ln in enumerate(lengths) if ln]
+    nonzero = [(s, ln) for s, ln in enumerate(lengths) if ln]
     if len(nonzero) == 1:
-        return _PrefixCode(None, const=nonzero[0])
-    return _PrefixCode(lengths)
+        return [nonzero[0][0]], [0], 0
+    return _code_lut(_complete_codes(nonzero))
 
 
 def _write_prefix_code(
-    bw: _BitWriter, lengths: dict[int, int], alphabet_size: int
+    bw: BitWriter, lengths: dict[int, int], alphabet_size: int
 ) -> None:
     """Emit one prefix-code header for ``lengths`` (symbol -> length;
     a single entry means the zero-bit single-symbol code)."""
@@ -547,7 +320,7 @@ def _write_prefix_code(
         pad = next(s for s in range(19) if s not in cl_lengths)
         only = next(iter(cl_lengths))
         cl_lengths = {only: 1, pad: 1}
-    cl_codes = _codes_from_lengths(cl_lengths)  # sparse-dict fast path
+    cl_codes = canonical_codes(sorted(cl_lengths.items()))
     # transmit cl lengths in _CODE_LENGTH_ORDER, covering every
     # nonzero entry (minimum 4 per spec)
     num_cl = max(
@@ -569,10 +342,9 @@ def _write_prefix_code(
         length_nbits += 2
     bw.write((length_nbits - 2) // 2, 3)
     bw.write(k, length_nbits)
-    # pass 2: map the symbol stream to codes with two listcomps,
-    # splice the few run-op extra-bits fields in (reversed, so
-    # earlier insert positions stay valid), then three extends —
-    # no per-symbol method calls
+    # pass 2: map the symbol stream to codes with two listcomps and
+    # write it in bulk runs, each cut after a run op to append that
+    # op's extra-bits field — no per-symbol method calls
     code_l = [0] * 19
     len_l = [0] * 19
     for s, (code, ln) in cl_codes.items():
@@ -580,14 +352,12 @@ def _write_prefix_code(
         len_l[s] = ln
     vals = [code_l[s] for s in syms_l]
     lens_ = [len_l[s] for s in syms_l]
-    msb = [1] * len(syms_l)
-    for idx, extra, nbits in reversed(extras):
-        vals.insert(idx + 1, extra)
-        lens_.insert(idx + 1, nbits)
-        msb.insert(idx + 1, 0)
-    bw.vals.extend(vals)
-    bw.lens.extend(lens_)
-    bw.msb.extend(msb)
+    start = 0
+    for idx, extra, nbits in extras:
+        bw.write_codes_bulk(vals[start : idx + 1], lens_[start : idx + 1])
+        bw.write(extra, nbits)
+        start = idx + 1
+    bw.write_codes_bulk(vals[start:], lens_[start:])
 
 
 # ---------------------------------------------------------------------------
@@ -601,7 +371,7 @@ def _decode_vp8l_body(data: bytes) -> tuple[int, int, int, np.ndarray]:
     outside the literal-only subset."""
     if not data or data[0] != 0x2F:
         raise ValueError("not a VP8L stream")
-    br = _BitCursor(data[1:])
+    br = BitReader(data[1:], "lsb")
     width = br.read(14) + 1
     height = br.read(14) + 1
     # raster bomb guard (r11): zero-bit constant codes decode a pixel
@@ -610,7 +380,7 @@ def _decode_vp8l_body(data: bytes) -> tuple[int, int, int, np.ndarray]:
     # VP8L analogue of the WARC gzip bomb, capped the same way
     if width * height * 4 > MAX_RASTER_BYTES:
         raise ValueError("VP8L raster exceeds the decode cap")
-    alpha_hint = br.read_bit()
+    alpha_hint = br.read(1)
     if br.read(3) != 0:
         raise ValueError("VP8L version must be 0")
     # transform chain: ONLY the subtract-green transform is in
@@ -619,126 +389,56 @@ def _decode_vp8l_body(data: bytes) -> tuple[int, int, int, np.ndarray]:
     # lookup tables, so it is verifiable offline; predictor(0),
     # color(1) and palette(3) transforms raise honestly.
     subtract_green = False
-    while br.read_bit():
+    while br.read(1):
         ttype = br.read(2)
         if ttype != 2 or subtract_green:  # 2 = subtract green
             raise ValueError("out-of-subset transform")
         subtract_green = True
-    if br.read_bit():
+    if br.read(1):
         raise ValueError("color cache: not in the subset")
-    if br.read_bit():
+    if br.read(1):
         raise ValueError("meta prefix codes: not in the subset")
-    # one lookahead-window list serves both the header length streams
-    # and the pixel walk. It costs ~36 B per stream BIT (each window
-    # value is a unique Python int), so very large literal-only
-    # streams fall back to the per-bit dict walk instead of paying
-    # gigabytes of transient list — the LUT fast path covers every
-    # realistic payload (_WINDOWS_MAX_BITS bits ≈ a 2 MB stream ≈
-    # 72 MB transient, in line with the other decode caps)
-    nbits_total = len(br.bits)
-    wins = (
-        br.windows(_MAX_CODE_LEN)
-        if nbits_total <= _WINDOWS_MAX_BITS
-        else None
-    )
-    green = _read_prefix_code(br, _GREEN_ALPHABET, wins)
-    red = _read_prefix_code(br, _ARGB_ALPHABET, wins)
-    blue = _read_prefix_code(br, _ARGB_ALPHABET, wins)
-    alpha = _read_prefix_code(br, _ARGB_ALPHABET, wins)
-    _read_prefix_code(br, _DIST_ALPHABET, wins)  # distance code (unused)
+    g_sym, g_len, g_w = _read_prefix_code(br, _GREEN_ALPHABET)
+    r_sym, r_len, r_w = _read_prefix_code(br, _ARGB_ALPHABET)
+    b_sym, b_len, b_w = _read_prefix_code(br, _ARGB_ALPHABET)
+    a_sym, a_len, a_w = _read_prefix_code(br, _ARGB_ALPHABET)
+    _read_prefix_code(br, _DIST_ALPHABET)  # distance code (unused)
     npx = width * height
-    # hot loop (r10 verdict #2): table-driven LUT decode. One shared
-    # lookahead-window list gives the next `width` stream bits at
-    # every position as a ready-made integer; each channel's complete
-    # prefix code becomes two flat lists (symbol, consumed-bits)
-    # indexed by the window's top max_len bits. A symbol costs three
-    # list probes instead of up-to-15 shift+dict.get iterations —
-    # measured ~4x on the fixture corpus, identical output (the
-    # hypothesis round-trip suite pins it). Zero-padded windows past
-    # the stream end cannot mis-decode silently: any code that
-    # consumes a padding bit leaves p > nbits, checked per pixel.
+    # hot loop: table-driven decode. Each channel's prefix code is two
+    # flat lists (symbol, consumed-bits) indexed by the next `w`
+    # stream bits, so a symbol costs one peek and two list probes (a
+    # zero-bit code skips the peek: its tables have the one entry 0).
+    # Zero bits read past the stream end cannot mis-decode silently:
+    # any code that consumes one leaves pos > nbits, checked per pixel.
     g_vals: list[int] = []
     r_vals: list[int] = []
     b_vals: list[int] = []
     a_vals: list[int] = []
-    if wins is None:
-        # big-stream slow path: per-bit dict walk (the r10 shape),
-        # same symbols, ~36 B/bit of windows list avoided
-        for _ in range(npx):
-            g = green.decode(br)
-            if g >= 256:
-                raise ValueError("LZ77 length code: not in the subset")
-            g_vals.append(g)
-            r_vals.append(red.decode(br))
-            b_vals.append(blue.decode(br))
-            a_vals.append(alpha.decode(br))
-        out = np.empty((npx, 4), dtype=np.uint8)
-        out[:, 1] = g_vals
-        out[:, 0] = r_vals
-        out[:, 2] = b_vals
-        out[:, 3] = a_vals
-        return _finish_vp8l(width, height, alpha_hint, out, subtract_green)
-    p = br.pos
-    nbits = len(br.bits)
-    chans = []  # (sym_lut, len_lut, shift, const) per channel
-    for c in (green, red, blue, alpha):
-        if c.const is not None:
-            chans.append((None, None, 0, c.const))
-        else:
-            sym_t, len_t = c.lut()
-            chans.append((sym_t, len_t, _MAX_CODE_LEN - c.max_len, None))
-    g_sym, g_len, g_sh, g_const = chans[0]
-    r_sym, r_len, r_sh, r_const = chans[1]
-    b_sym, b_len, b_sh, b_const = chans[2]
-    a_sym, a_len, a_sh, a_const = chans[3]
-    try:
-        for _ in range(npx):
-            if g_const is None:
-                i = wins[p] >> g_sh
-                g = g_sym[i]
-                p += g_len[i]
-            else:
-                g = g_const
-            g_vals.append(g)
-            if r_const is None:
-                i = wins[p] >> r_sh
-                r_vals.append(r_sym[i])
-                p += r_len[i]
-            else:
-                r_vals.append(r_const)
-            if b_const is None:
-                i = wins[p] >> b_sh
-                b_vals.append(b_sym[i])
-                p += b_len[i]
-            else:
-                b_vals.append(b_const)
-            if a_const is None:
-                i = wins[p] >> a_sh
-                a_vals.append(a_sym[i])
-                p += a_len[i]
-            else:
-                a_vals.append(a_const)
-            if p > nbits:
-                raise ValueError("VP8L bitstream truncated")
-            if g >= 256:
-                raise ValueError("LZ77 length code: not in the subset")
-    except IndexError:  # wins[p] with p far past the end
-        raise ValueError("VP8L bitstream truncated") from None
+    peek = br.peek
+    nbits = br.nbits
+    for _ in range(npx):
+        i = peek(g_w) if g_w else 0
+        g = g_sym[i]
+        br.pos += g_len[i]
+        g_vals.append(g)
+        i = peek(r_w) if r_w else 0
+        r_vals.append(r_sym[i])
+        br.pos += r_len[i]
+        i = peek(b_w) if b_w else 0
+        b_vals.append(b_sym[i])
+        br.pos += b_len[i]
+        i = peek(a_w) if a_w else 0
+        a_vals.append(a_sym[i])
+        br.pos += a_len[i]
+        if br.pos > nbits:
+            raise ValueError("VP8L bitstream truncated")
+        if g >= 256:
+            raise ValueError("LZ77 length code: not in the subset")
     out = np.empty((npx, 4), dtype=np.uint8)
     out[:, 1] = g_vals  # green
     out[:, 0] = r_vals  # red
     out[:, 2] = b_vals  # blue
     out[:, 3] = a_vals  # alpha
-    return _finish_vp8l(width, height, alpha_hint, out, subtract_green)
-
-
-def _finish_vp8l(
-    width: int,
-    height: int,
-    alpha_hint: int,
-    out: np.ndarray,
-    subtract_green: bool,
-) -> tuple[int, int, int, np.ndarray]:
     if subtract_green:
         # inverse transform: red/blue had green subtracted mod 256
         g_col = out[:, 1].astype(np.int64)
@@ -878,7 +578,7 @@ def _encode_vp8l_from_arr(
         r = (r - g) & 0xFF
         b = (b - g) & 0xFF
 
-    bw = _BitWriter()
+    bw = BitWriter("lsb")
     bw.write(width - 1, 14)
     bw.write(height - 1, 14)
     bw.write(1 if channels == 4 else 0, 1)  # alpha hint
@@ -912,7 +612,7 @@ def _encode_vp8l_from_arr(
             code_cols.append(np.zeros(n, dtype=np.int64))
             len_cols.append(np.zeros(n, dtype=np.int64))
         else:
-            table = _codes_from_lengths(lens)  # sparse-dict fast path
+            table = canonical_codes(sorted(lens.items()))
             code_lut = np.zeros(256, dtype=np.int64)
             len_lut = np.zeros(256, dtype=np.int64)
             for s, (code, ln) in table.items():
@@ -927,7 +627,7 @@ def _encode_vp8l_from_arr(
     # pixels in ONE vectorized expansion + packbits.
     code_seq = np.stack(code_cols, axis=1).reshape(-1)
     len_seq = np.stack(len_cols, axis=1).reshape(-1)
-    bw.write_codes_bulk(code_seq, len_seq)
+    bw.write_codes_bulk(code_seq.tolist(), len_seq.tolist())
     return b"\x2f" + bw.bytes()
 
 

@@ -7,8 +7,8 @@ import numpy as np
 import pytest
 
 from flycatcher_spark.operators import audio, multimodal
+from flycatcher_spark.operators._bits import BitWriter
 from flycatcher_spark.operators.flac import (
-    _BitWriter,
     crc8,
     crc16,
     encode_flac,
@@ -92,20 +92,20 @@ def _frame_bytes(bits_fn, n, bps=16, sr=8000):
     """Build a full single-frame FLAC stream whose subframe bits come
     from ``bits_fn(writer)`` — for decode paths the fixture encoder
     does not emit."""
-    bw = _BitWriter()
+    bw = BitWriter("msb")
     bw.write(0b11111111111110, 14); bw.write(0, 1); bw.write(0, 1)
     bw.write(6, 4); bw.write(0, 4); bw.write(0, 4)
     bw.write(4, 3); bw.write(0, 1); bw.write(0, 8); bw.write(n - 1, 8)
-    hdr = bw.to_bytes()
+    hdr = bw.bytes()
     hdr += bytes([crc8(hdr)])
-    body = _BitWriter()
+    body = BitWriter("msb")
     bits_fn(body)
-    frame = hdr + body.to_bytes()
+    frame = hdr + body.bytes()
     frame += crc16(frame).to_bytes(2, "big")
-    si = _BitWriter()
+    si = BitWriter("msb")
     si.write(n, 16); si.write(n, 16); si.write(0, 24); si.write(0, 24)
     si.write(sr, 20); si.write(0, 3); si.write(bps - 1, 5); si.write(n, 36)
-    meta = si.to_bytes() + bytes(16)
+    meta = si.bytes() + bytes(16)
     return b"fLaC" + bytes([0x80]) + len(meta).to_bytes(3, "big") + meta + frame
 
 
@@ -120,7 +120,7 @@ class TestHandBuiltStreams:
             bw.write(0, 2); bw.write(0, 4)                   # method/order
             bw.write(0b1111, 4); bw.write(7, 5)              # escape, 7 bits
             for v in vals:
-                bw.write_signed(v, 7)
+                bw.write(v, 7)
 
         m = parse_flac(_frame_bytes(bits, len(vals)))
         assert list(m["samples"]) == vals
@@ -131,9 +131,9 @@ class TestHandBuiltStreams:
 
         def bits(bw):
             bw.write(0, 1); bw.write(1, 6); bw.write(1, 1)  # wasted flag
-            bw.write_unary(1)                                # wasted = 2
+            bw.write(1, 2)                  # unary 1: wasted = 2
             for v in vals:
-                bw.write_signed(v >> 2, 14)
+                bw.write(v >> 2, 14)
 
         m = parse_flac(_frame_bytes(bits, len(vals)))
         assert list(m["samples"]) == vals
@@ -145,7 +145,7 @@ class TestHandBuiltStreams:
 
         def bits(bw):
             bw.write(0, 1); bw.write(9, 6); bw.write(0, 1)  # fixed1
-            bw.write_signed(int(samples[0]), 16)             # warmup
+            bw.write(int(samples[0]), 16)                    # warmup
             bw.write(0, 2); bw.write(2, 4)                   # 4 partitions
             res = [int(samples[i] - samples[i - 1]) for i in range(1, 16)]
             chunks = [res[:3], res[3:7], res[7:11], res[11:]]
@@ -153,7 +153,7 @@ class TestHandBuiltStreams:
                 bw.write(param, 4)
                 for r in chunk:
                     u = (r << 1) if r >= 0 else ((-r) << 1) - 1
-                    bw.write_unary(u >> param)
+                    bw.write(1, (u >> param) + 1)  # unary
                     bw.write(u & ((1 << param) - 1), param)
 
         m = parse_flac(_frame_bytes(bits, 16))
@@ -206,26 +206,26 @@ class TestLPC:
         # coefficient-precision code
         def bits(bw):
             bw.write(0, 1); bw.write(32, 6); bw.write(0, 1)  # lpc order 1
-            bw.write_signed(10, 16)                           # warmup
+            bw.write(10, 16)                                  # warmup
             bw.write(0b1111, 4)                               # invalid
             bw.write(0, 5)
-            bw.write_signed(1, 15)
+            bw.write(1, 15)
             bw.write(0, 2); bw.write(0, 4); bw.write(2, 4)
             for _ in range(3):
-                bw.write_unary(0); bw.write(0, 2)
+                bw.write(1, 1); bw.write(0, 2)
 
         assert parse_flac(_frame_bytes(bits, 4)) is None
 
     def test_negative_shift_rejected(self):
         def bits(bw):
             bw.write(0, 1); bw.write(32, 6); bw.write(0, 1)
-            bw.write_signed(10, 16)
+            bw.write(10, 16)
             bw.write(3, 4)                                    # precision 4
             bw.write(0b11111, 5)                              # shift -1
-            bw.write_signed(1, 4)
+            bw.write(1, 4)
             bw.write(0, 2); bw.write(0, 4); bw.write(2, 4)
             for _ in range(3):
-                bw.write_unary(0); bw.write(0, 2)
+                bw.write(1, 1); bw.write(0, 2)
 
         assert parse_flac(_frame_bytes(bits, 4)) is None
 
@@ -242,14 +242,14 @@ class TestLPC:
         def bits(bw):
             bw.write(0, 1); bw.write(33, 6); bw.write(0, 1)  # lpc order 2
             for w in warm:
-                bw.write_signed(w, 16)
+                bw.write(w, 16)
             bw.write(3, 4)                                    # precision 4
-            bw.write_signed(2, 5)                             # shift 2
-            bw.write_signed(5, 4); bw.write_signed(2, 4)
+            bw.write(2, 5)                                    # shift 2
+            bw.write(5, 4); bw.write(2, 4)
             bw.write(0, 2); bw.write(0, 4); bw.write(5, 4)
             for r in residuals:
                 u = (r << 1) if r >= 0 else ((-r) << 1) - 1
-                bw.write_unary(u >> 5); bw.write(u & 31, 5)
+                bw.write(1, (u >> 5) + 1); bw.write(u & 31, 5)
 
         m = parse_flac(_frame_bytes(bits, 6))
         assert list(m["samples"]) == expect

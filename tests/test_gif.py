@@ -5,13 +5,21 @@ from __future__ import annotations
 
 import numpy as np
 
-from flycatcher_spark.operators import multimodal
+from flycatcher_spark.operators import _bits, multimodal
 from flycatcher_spark.operators.gif import (
-    _lzw_decode,
-    _lzw_encode,
     encode_gif,
     parse_gif,
 )
+
+
+def _lzw_encode(indices, mcs):
+    """GIF variant of the shared LZW encoder."""
+    return _bits.lzw_encode(bytes(indices), mcs, "lsb", False, 4096)
+
+
+def _lzw_decode(data, mcs, n):
+    """GIF variant of the shared LZW decoder, as a list of indices."""
+    return list(_bits.lzw_decode(data, mcs, "lsb", False, n))
 
 RNG = np.random.default_rng(31)
 
@@ -238,8 +246,6 @@ class TestAnimation:
             out += bytes([r, g, b])
 
         def ok_frame(disposal):
-            from flycatcher_spark.operators.gif import _lzw_encode
-
             body = bytearray(
                 bytes([0x21, 0xF9, 0x04, (disposal & 7) << 2, 0, 0, 0, 0])
             )

@@ -7,10 +7,8 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from flycatcher_spark.operators import multimodal
+from flycatcher_spark.operators import _bits, multimodal
 from flycatcher_spark.operators.tiff import (
-    _lzw_decode_tiff,
-    _lzw_encode_tiff,
     _packbits_decode,
     _packbits_encode,
     encode_tiff,
@@ -18,6 +16,16 @@ from flycatcher_spark.operators.tiff import (
 )
 
 RNG = np.random.default_rng(41)
+
+
+def _lzw_encode_tiff(data):
+    """TIFF variant of the shared LZW encoder."""
+    return _bits.lzw_encode(data, 8, "msb", True, 4094)
+
+
+def _lzw_decode_tiff(data):
+    """TIFF variant of the shared LZW decoder."""
+    return _bits.lzw_decode(data, 8, "msb", True)
 
 PAL8 = [((j * 37) % 256, (j * 59) % 256, (j * 83) % 256)
         for j in range(8)]

@@ -12,10 +12,13 @@ import numpy as np
 import pytest
 
 from flycatcher_spark.operators import multimodal
+from flycatcher_spark.operators._bits import (
+    BitReader,
+    BitWriter,
+    canonical_codes,
+)
 from flycatcher_spark.operators.webp import (
-    _BitReader,
-    _BitWriter,
-    _codes_from_lengths,
+    _complete_codes,
     _huffman_lengths,
     encode_webp,
     parse_webp,
@@ -24,31 +27,31 @@ from flycatcher_spark.operators.webp import (
 
 class TestBitIO:
     def test_lsb_first_roundtrip(self):
-        bw = _BitWriter()
+        bw = BitWriter("lsb")
         vals = [(5, 3), (0, 1), (16383, 14), (1, 1), (170, 8)]
         for v, n in vals:
             bw.write(v, n)
-        br = _BitReader(bw.bytes())
+        br = BitReader(bw.bytes(), "lsb")
         assert [br.read(n) for _, n in vals] == [v for v, _ in vals]
 
     def test_code_bits_msb_first(self):
         # write_code emits MSB-of-code first (the DEFLATE convention)
-        bw = _BitWriter()
+        bw = BitWriter("lsb")
         bw.write_code(0b101, 3)
-        br = _BitReader(bw.bytes())
-        assert [br.read_bit() for _ in range(3)] == [1, 0, 1]
+        br = BitReader(bw.bytes(), "lsb")
+        assert [br.read(1) for _ in range(3)] == [1, 0, 1]
 
     def test_truncated_read_raises(self):
-        br = _BitReader(b"\xff")
+        br = BitReader(b"\xff", "lsb")
         br.read(8)
         with pytest.raises(ValueError):
-            br.read_bit()
+            br.read(1)
 
 
 class TestCanonicalCodes:
     def test_deflate_example(self):
         # RFC 1951 §3.2.2 worked example: lengths (3,3,3,3,3,2,4,4)
-        codes = _codes_from_lengths([3, 3, 3, 3, 3, 2, 4, 4])
+        codes = canonical_codes(enumerate([3, 3, 3, 3, 3, 2, 4, 4]))
         assert codes[5] == (0b00, 2)
         assert codes[0] == (0b010, 3)
         assert codes[6] == (0b1110, 4)
@@ -56,11 +59,11 @@ class TestCanonicalCodes:
 
     def test_incomplete_rejected(self):
         with pytest.raises(ValueError):
-            _codes_from_lengths([2, 2, 2])  # Kraft sum 3/4 < 1
+            _complete_codes(list(enumerate([2, 2, 2])))  # Kraft sum 3/4 < 1
 
     def test_oversubscribed_rejected(self):
         with pytest.raises(ValueError):
-            _codes_from_lengths([1, 1, 1])
+            canonical_codes(enumerate([1, 1, 1]))
 
     def test_huffman_lengths_kraft_equality(self):
         freqs = {i: (i % 7) + 1 for i in range(40)}
@@ -103,7 +106,7 @@ class TestRoundTrip:
         # a canonical-order decoder would swap the two pixel values.
         from flycatcher_spark.operators.webp import _chunk, _riff
 
-        bw = _BitWriter()
+        bw = BitWriter("lsb")
         bw.write(2 - 1, 14)  # width 2
         bw.write(1 - 1, 14)  # height 1
         bw.write(0, 1)  # no alpha hint
@@ -281,7 +284,7 @@ class TestSparkIntegration:
         # (64 MiB RGBA), not allocate a 1 GB array
         from flycatcher_spark.operators.webp import _chunk, _riff
 
-        bw = _BitWriter()
+        bw = BitWriter("lsb")
         bw.write(16383, 14)
         bw.write(16383, 14)
         bw.write(0, 1)
@@ -316,19 +319,6 @@ class TestSparkIntegration:
             + _chunk(b"ANMF", b"\x00" * 24)
         )
         assert parse_webp_frames(buf) is None
-
-    def test_big_stream_slow_path_decodes_identically(self, monkeypatch):
-        # force the windows-list gate shut: the per-bit fallback must
-        # produce the exact same raster as the LUT fast path
-        import flycatcher_spark.operators.webp as W
-
-        px = (np.arange(10 * 8 * 3) * 7) % 256
-        buf = encode_webp(px, 10, 8, 3)
-        fast = parse_webp(buf)
-        monkeypatch.setattr(W, "_WINDOWS_MAX_BITS", 0)
-        slow = W.parse_webp(buf)
-        assert slow is not None
-        assert list(slow["pixels"]) == list(fast["pixels"])
 
     def test_sniffer_undersized_anmf_never_reads_next_chunk(self):
         # ADVICE r10: an ANMF body shorter than 20 bytes has no

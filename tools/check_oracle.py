@@ -83,7 +83,11 @@ def compare(name, spark_pdf, duck_pdf):
 
 def main():
     args = [a for a in sys.argv[1:]]
-    sf_dir = args.pop(0) if args and args[0].startswith("/") else "/root/testdata/sf0.01"
+    sf_dir = (
+        args.pop(0)
+        if args and args[0].startswith("/")
+        else "/root/testdata/sf0.01"
+    )
     only = set(args)
 
     from flycatcher_spark.session import get_spark
